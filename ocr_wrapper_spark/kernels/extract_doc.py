@@ -6,7 +6,8 @@ ocr_wrapper.py:103-175, SURVEY.md §3.1) over page payloads:
     sniff doc type -> branch extract -> normalize -> detect & apply
     rotation -> split date-range boxes -> reading-order sort -> assemble
 
-The same function is the pytest oracle and the body of the Spark UDF.
+The same function is the pytest oracle and the body of the Spark UDF;
+``EXTRACTORS`` maps each extraction mode to its kernel.
 """
 
 from __future__ import annotations
@@ -322,3 +323,30 @@ def extract_with_aux(payload: bytes | None, lang: str | None) -> ExtractResult:
         )
     except Exception as exc:
         return _empty("error", f"{type(exc).__name__}: {exc}")
+
+
+def _single(payload, lang, text):
+    return extract_document(payload, lang)
+
+
+def _consensus2(payload, lang, text):
+    return extract_consensus(payload, lang, 2)
+
+
+def _consensus3(payload, lang, text):
+    return extract_consensus(payload, lang, 3)
+
+
+def _aux(payload, lang, text):
+    return extract_with_aux(payload, lang)
+
+
+# extraction mode -> kernel; every kernel takes (payload, lang, provider
+# text), and only ``dual`` reads the provider text
+EXTRACTORS = {
+    "single": _single,
+    "dual": extract_dual,
+    "consensus": _consensus2,
+    "consensus3": _consensus3,
+    "aux": _aux,
+}

@@ -14,15 +14,11 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame
 
-from .extract import (
-    with_aux_extraction,
-    with_consensus_extraction,
-    with_dual_extraction,
-    with_extraction,
-)
+from .extract import InvalidExtractorException, with_extraction
 
 ENV_EXTRACTOR = "SPARK_GRAFT_EXTRACTOR"
 ENV_OVERRIDE = "SPARK_GRAFT_EXTRACTOR_MAPPING"
@@ -30,15 +26,12 @@ ENV_OVERRIDE = "SPARK_GRAFT_EXTRACTOR_MAPPING"
 DEFAULT_EXTRACTOR = "single"
 
 
-class InvalidExtractorException(ValueError):
-    """Unknown extractor name (reference InvalidOcrProviderException)."""
-
-
 name2extractor: dict[str, Callable[[DataFrame], DataFrame]] = {
     "single": with_extraction,
-    "dual": with_dual_extraction,
-    "consensus": with_consensus_extraction,
-    "aux": with_aux_extraction,  # checkbox-detector merge path
+    # primary extraction enriched with the provider ``text`` column
+    "dual": partial(with_extraction, mode="dual", text_col="text"),
+    "consensus": partial(with_extraction, mode="consensus"),
+    "aux": partial(with_extraction, mode="aux"),  # checkbox-detector merge path
 }
 
 

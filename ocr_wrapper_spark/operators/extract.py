@@ -1,12 +1,18 @@
 """Extraction operators: the main Arrow UDF chain (SURVEY.md §2.12).
 
 The heavy per-document logic lives in kernels/extract_doc.py; this module
-is only the Arrow plumbing: pandas batches in, struct columns out. One
-fused UDF performs sniff -> branch extract -> normalize -> rotate ->
-date-split -> order -> assemble per document, avoiding span-array
-serialization between stages (the reference's §3.1 chain is per-doc
-sequential anyway, so fusing loses no parallelism and saves Arrow round
-trips at 10^12-row scale).
+is only the Arrow plumbing. ``_extract_columns`` is the one per-document
+loop: it runs an extraction kernel (sniff -> branch extract -> normalize
+-> rotate -> date-split -> order -> assemble) over one Arrow batch and
+returns the extraction columns as native Arrow arrays, avoiding
+span-array serialization between stages (the reference's §3.1 chain is
+per-doc sequential anyway, so fusing loses no parallelism and saves Arrow
+round trips at 10^12-row scale). Both operators are mapInArrow stages
+over it: ``with_extraction`` reads a pages table, and
+``extract_documents_fused`` synthesizes the pages from documents in the
+same batch. The extraction mode is resolved to its kernel
+(kernels/extract_doc.EXTRACTORS) once, on the driver, when the plan is
+built, so an unknown mode fails before any job runs.
 """
 
 from __future__ import annotations
@@ -21,35 +27,22 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels import bbox_core as bc
-from ..kernels.extract_doc import ExtractResult, extract_document
-from ..schema import COORD_FIELDS, SPAN_COLUMNS, SPAN_STRUCT, SPANS_ARRAY
-
-EXTRACT_STRUCT = T.StructType(
-    [
-        T.StructField("spans", SPANS_ARRAY),
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("doc_rotation", T.IntegerType()),
-        T.StructField("tilt_angle", T.DoubleType()),
-        T.StructField("n_spans", T.IntegerType()),
-        T.StructField("provider", T.StringType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("extract_ms", T.DoubleType()),
-    ]
-)
+from ..kernels.extract_doc import EXTRACTORS
+from ..schema import COORD_FIELDS, EXTRACT_STRUCT, SPAN_COLUMNS, SPANS_ARRAY
 
 
-def spans_to_records(res: ExtractResult, label: str | None = None) -> list[dict]:
-    """ExtractResult -> list of span-struct dicts (normalized coords)."""
-    coords = res.coords.tolist()
-    out = []
-    for i, row in enumerate(coords):
-        rec = dict(zip(COORD_FIELDS, row))
-        rec["in_pixels"] = False
-        rec["text"] = res.texts[i]
-        rec["label"] = label
-        rec["confidence"] = float(res.confidences[i]) if i < len(res.confidences) else None
-        out.append(rec)
-    return out
+class InvalidExtractorException(ValueError):
+    """Unknown extractor name (reference InvalidOcrProviderException)."""
+
+
+def _kernel(mode: str):
+    """Extraction mode -> kernel, or InvalidExtractorException."""
+    kernel = EXTRACTORS.get(mode)
+    if kernel is None:
+        raise InvalidExtractorException(
+            f"Unknown extraction mode {mode!r}; valid: {sorted(EXTRACTORS)}"
+        )
+    return kernel
 
 
 def records_to_arrays(spans: list[dict]) -> tuple[np.ndarray, list[str], list[float]]:
@@ -66,57 +59,9 @@ def records_to_arrays(spans: list[dict]) -> tuple[np.ndarray, list[str], list[fl
     return coords, texts, confs
 
 
-@F.pandas_udf(EXTRACT_STRUCT)
-def extract_udf(html: pd.Series, lang: pd.Series) -> pd.DataFrame:
-    """Vectorized batch driver for extract_document (no per-row Python UDFs:
-    this is one Arrow batch per call, numpy kernels inside)."""
-    spans_col, text_col, rot_col, tilt_col, n_col, prov_col, err_col, ms_col = (
-        [],
-        [],
-        [],
-        [],
-        [],
-        [],
-        [],
-        [],
-    )
-    for payload, lg in zip(html.tolist(), lang.tolist()):
-        t0 = time.perf_counter()
-        res = extract_document(payload, lg)
-        ms = (time.perf_counter() - t0) * 1000.0
-        spans_col.append(spans_to_records(res))
-        text_col.append(res.extracted_text)
-        rot_col.append(res.rotation)
-        tilt_col.append(res.tilt_angle)
-        n_col.append(len(res.texts))
-        prov_col.append(res.provider)
-        err_col.append(res.error)
-        ms_col.append(ms)
-    return pd.DataFrame(
-        {
-            "spans": spans_col,
-            "extracted_text": text_col,
-            "doc_rotation": pd.array(rot_col, dtype="int32"),
-            "tilt_angle": tilt_col,
-            "n_spans": pd.array(n_col, dtype="int32"),
-            "provider": prov_col,
-            "error": err_col,
-            "extract_ms": ms_col,
-        }
-    )
-
-
-def with_extraction_pandas(df, html_col: str = "html", lang_col: str = "lang"):
-    """pandas-UDF variant (kept for API parity / comparison benchmarks)."""
-    out = df.withColumn("_x", extract_udf(F.col(html_col), F.col(lang_col)))
-    for field in EXTRACT_STRUCT.fieldNames():
-        out = out.withColumn(field, F.col(f"_x.{field}"))
-    return out.drop("_x")
-
-
-def _extract_batch_arrow(batch, html_idx: int, lang_idx: int, text_idx: int | None = None,
-                         mode: str = "single"):
-    """One Arrow batch -> extraction columns as native Arrow arrays.
+def _extract_columns(kernel, payloads, langs, texts, with_spans: bool = True) -> dict:
+    """One batch of documents -> {field: Arrow array} in EXTRACT_STRUCT
+    order (``spans`` left out when ``with_spans`` is false).
 
     Builds the span list<struct> column zero-copy from numpy buffers
     (8 coord children from one concatenated (total_spans, 8) array)
@@ -124,13 +69,7 @@ def _extract_batch_arrow(batch, html_idx: int, lang_idx: int, text_idx: int | No
     path at 10^12 rows."""
     import pyarrow as pa
 
-    from ..kernels.extract_doc import extract_consensus, extract_dual, extract_with_aux
-
-    payloads = batch.column(html_idx).to_pylist()
-    langs = batch.column(lang_idx).to_pylist()
-    texts_in = batch.column(text_idx).to_pylist() if text_idx is not None else None
     n = len(payloads)
-
     coord_blocks: list[np.ndarray] = []
     flat_texts: list[str] = []
     flat_conf: list[float] = []
@@ -143,20 +82,13 @@ def _extract_batch_arrow(batch, html_idx: int, lang_idx: int, text_idx: int | No
     err_col: list[str | None] = []
     ms_col = np.zeros(n, dtype=np.float64)
 
-    for i in range(n):
+    for i, (payload, lang, text) in enumerate(zip(payloads, langs, texts)):
         t0 = time.perf_counter()
-        if mode == "dual":
-            res = extract_dual(payloads[i], langs[i], texts_in[i])
-        elif mode.startswith("consensus"):
-            res = extract_consensus(payloads[i], langs[i], _consensus_n(mode))
-        elif mode == "aux":
-            res = extract_with_aux(payloads[i], langs[i])
-        else:
-            res = extract_document(payloads[i], langs[i])
+        res = kernel(payload, lang, text)
         ms_col[i] = (time.perf_counter() - t0) * 1000.0
         k = len(res.texts)
         offsets[i + 1] = offsets[i] + k
-        if k:
+        if k and with_spans:
             coord_blocks.append(res.coords)
             flat_texts.extend(res.texts)
             flat_conf.extend(res.confidences)
@@ -167,26 +99,25 @@ def _extract_batch_arrow(batch, html_idx: int, lang_idx: int, text_idx: int | No
         prov_col.append(res.provider)
         err_col.append(res.error)
 
-    total = int(offsets[-1])
-    coords = np.vstack(coord_blocks) if coord_blocks else np.zeros((0, 8))
-    children = [pa.array(np.ascontiguousarray(coords[:, j])) for j in range(8)]
-    children.append(pa.array(np.zeros(total, dtype=bool)))  # in_pixels
-    children.append(pa.array(flat_texts, type=pa.string()))
-    children.append(pa.nulls(total, pa.string()))  # label
-    children.append(pa.array(np.asarray(flat_conf, dtype=np.float64)))
-    span_struct = pa.StructArray.from_arrays(children, names=SPAN_COLUMNS)
-    spans = pa.ListArray.from_arrays(pa.array(offsets), span_struct)
-
-    return [
-        spans,
-        pa.array(text_col, type=pa.string()),
-        pa.array(rot_col),
-        pa.array(tilt_col),
-        pa.array(nsp_col),
-        pa.array(prov_col, type=pa.string()),
-        pa.array(err_col, type=pa.string()),
-        pa.array(ms_col),
-    ]
+    cols = {}
+    if with_spans:
+        total = int(offsets[-1])
+        coords = np.vstack(coord_blocks) if coord_blocks else np.zeros((0, 8))
+        children = [pa.array(np.ascontiguousarray(coords[:, j])) for j in range(8)]
+        children.append(pa.array(np.zeros(total, dtype=bool)))  # in_pixels
+        children.append(pa.array(flat_texts, type=pa.string()))
+        children.append(pa.nulls(total, pa.string()))  # label
+        children.append(pa.array(np.asarray(flat_conf, dtype=np.float64)))
+        span_struct = pa.StructArray.from_arrays(children, names=SPAN_COLUMNS)
+        cols["spans"] = pa.ListArray.from_arrays(pa.array(offsets), span_struct)
+    cols["extracted_text"] = pa.array(text_col, type=pa.string())
+    cols["doc_rotation"] = pa.array(rot_col)
+    cols["tilt_angle"] = pa.array(tilt_col)
+    cols["n_spans"] = pa.array(nsp_col)
+    cols["provider"] = pa.array(prov_col, type=pa.string())
+    cols["error"] = pa.array(err_col, type=pa.string())
+    cols["extract_ms"] = pa.array(ms_col)
+    return cols
 
 
 def _prefetched(batches, depth: int = 1):
@@ -250,74 +181,43 @@ def _prefetched(batches, depth: int = 1):
                 break
 
 
-def _map_in_arrow(df, html_col: str, lang_col: str, text_col: str | None, keep_payload: bool,
-                  mode: str = "single"):
+def with_extraction(df, html_col: str = "html", lang_col: str = "lang", keep_payload: bool = False,
+                    mode: str = "single", text_col: str | None = None):
+    """Extraction via mapInArrow: non-payload input columns pass through
+    zero-copy, extraction columns appended as native Arrow arrays.
+
+    ``mode`` names the kernel (kernels/extract_doc.EXTRACTORS);
+    ``text_col`` is the provider text column that the ``dual`` kernel
+    enriches the primary extraction with. The html payload and the
+    provider text column are dropped on output (set keep_payload to
+    retain them): every output column is Arrow-decoded and row-converted
+    again JVM-side, the payload is the widest column by far, and
+    downstream consumers (cache, results, metrics) never need it."""
     import pyarrow as pa
 
-    in_schema = df.schema
-    html_idx = in_schema.fieldNames().index(html_col)
-    lang_idx = in_schema.fieldNames().index(lang_col)
-    text_idx = in_schema.fieldNames().index(text_col) if text_col else None
+    kernel = _kernel(mode)
+    names = df.schema.fieldNames()
+    html_idx = names.index(html_col)
+    lang_idx = names.index(lang_col)
+    text_idx = names.index(text_col) if text_col else None
 
-    # Do NOT pass the html payload (or the provider text column) back out
-    # of the Python stage: every output column is Arrow-decoded and
-    # row-converted again JVM-side, and the payload is the widest column
-    # by far. Downstream consumers (cache, results, metrics) never need it.
-    drop = set() if keep_payload else {html_col} | ({text_col} if text_col else set())
-    kept = [(i, f) for i, f in enumerate(in_schema.fields) if f.name not in drop]
+    drop = set() if keep_payload else {html_col, text_col}
+    kept = [(i, f) for i, f in enumerate(df.schema.fields) if f.name not in drop]
     out_schema = T.StructType([f for _, f in kept] + EXTRACT_STRUCT.fields)
-    out_names = [f.name for _, f in kept] + EXTRACT_STRUCT.fieldNames()
+    out_names = out_schema.fieldNames()
     kept_idx = [i for i, _ in kept]
 
-    import os
-
-    depth = int(os.environ.get("SPARK_GRAFT_PREFETCH_DEPTH", "1"))
-
     def op(batches):
-        for batch in _prefetched(batches, depth=depth):
-            new_cols = _extract_batch_arrow(batch, html_idx, lang_idx, text_idx, mode)
-            arrays = [batch.column(i) for i in kept_idx] + new_cols
+        for batch in _prefetched(batches):
+            texts = (batch.column(text_idx).to_pylist() if text_idx is not None
+                     else [None] * batch.num_rows)
+            cols = _extract_columns(
+                kernel, batch.column(html_idx).to_pylist(), batch.column(lang_idx).to_pylist(), texts
+            )
+            arrays = [batch.column(i) for i in kept_idx] + list(cols.values())
             yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
     return df.mapInArrow(op, schema=out_schema)
-
-
-def with_extraction(df, html_col: str = "html", lang_col: str = "lang", keep_payload: bool = False):
-    """Fused extraction via mapInArrow: non-payload input columns pass
-    through zero-copy, extraction columns appended as native Arrow
-    arrays; the html payload is dropped on output (set keep_payload to
-    retain it)."""
-    return _map_in_arrow(df, html_col, lang_col, None, keep_payload)
-
-
-def _consensus_n(mode: str) -> int:
-    """'consensus' -> 2 (reference ocr_samples default); 'consensus3' -> 3."""
-    suffix = mode[len("consensus"):]
-    return int(suffix) if suffix else 2
-
-
-def with_consensus_extraction(df, html_col: str = "html", lang_col: str = "lang",
-                              keep_payload: bool = False, n_samples: int = 2):
-    """Multi-sample consensus extraction (reference D5 flow; default 2
-    samples like ocr_samples=2, n-way supported via aggregate_samples_n)."""
-    mode = "consensus" if n_samples == 2 else f"consensus{n_samples}"
-    return _map_in_arrow(df, html_col, lang_col, None, keep_payload, mode=mode)
-
-
-def with_dual_extraction(df, html_col: str = "html", lang_col: str = "lang", text_col: str = "text",
-                         keep_payload: bool = False):
-    """Dual-provider (GoogleAzure-analogue) extraction: primary branch
-    extractor + provider-text secondary, combined per document (J2 + J4,
-    constant confidence 0.9)."""
-    return _map_in_arrow(df, html_col, lang_col, text_col, keep_payload, mode="dual")
-
-
-def with_aux_extraction(df, html_col: str = "html", lang_col: str = "lang",
-                        keep_payload: bool = False):
-    """Extraction + auxiliary checkbox spans (reference checkbox detector
-    flow: detect ☑/☐ elements, suppress overlapped words, merge in
-    reading order — kernels/checkbox_detect.py + combine.py F6/J4)."""
-    return _map_in_arrow(df, html_col, lang_col, None, keep_payload, mode="aux")
 
 
 # ---------------------------------------------------------------------------
@@ -376,58 +276,34 @@ def extract_documents_fused(spark, sf_dir: str, mode: str = "single", docs_filte
     Production reads a real pages table (see plans/pipeline.py); this is
     the fast path for the documents-derived correctness/bench queries.
     """
-    import pandas as pd
+    import pyarrow as pa
 
-    from ..kernels.extract_doc import (
-        extract_consensus,
-        extract_document,
-        extract_dual,
-        extract_with_aux,
-    )
     from ..sources.pages import build_page_rows
 
+    kernel = _kernel(mode)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if docs_filter is not None:
         docs = docs.filter(docs_filter)
-    docs = docs.repartition(spark.sparkContext.defaultParallelism * 2, "doc_id")
+    docs = docs.select("doc_id", "text", "lang").repartition(
+        spark.sparkContext.defaultParallelism * 2, "doc_id"
+    )
+    fields = [f for f in EXTRACT_STRUCT.fields if f.name not in ("spans", "extract_ms")]
+    out_schema = T.StructType(
+        [T.StructField("doc_id", T.LongType()), T.StructField("url", T.StringType())] + fields
+    )
+    out_names = out_schema.fieldNames()
 
     def op(batches):
-        for pdf in batches:
-            pages = build_page_rows(pdf)
-            out = {
-                "doc_id": pdf["doc_id"].to_numpy(dtype="int64"),
-                "url": pages["url"],
-                "extracted_text": [],
-                "n_spans": [],
-                "provider": [],
-                "doc_rotation": [],
-                "tilt_angle": [],
-                "error": [],
-            }
-            for payload, lang, text in zip(pages["html"], pages["lang"], pages["text"]):
-                if mode == "dual":
-                    res = extract_dual(payload, lang, text)
-                elif mode.startswith("consensus"):
-                    res = extract_consensus(payload, lang, _consensus_n(mode))
-                elif mode == "aux":
-                    res = extract_with_aux(payload, lang)
-                else:
-                    res = extract_document(payload, lang)
-                out["extracted_text"].append(res.extracted_text)
-                out["n_spans"].append(len(res.texts))
-                out["provider"].append(res.provider)
-                out["doc_rotation"].append(res.rotation)
-                out["tilt_angle"].append(res.tilt_angle)
-                out["error"].append(res.error)
-            yield pd.DataFrame(out)
+        for batch in batches:
+            pages = build_page_rows(batch.to_pandas())
+            cols = _extract_columns(
+                kernel, pages["html"], pages["lang"], pages["text"], with_spans=False
+            )
+            arrays = [batch.column("doc_id"), pa.array(pages["url"], type=pa.string())]
+            arrays += [cols[f.name] for f in fields]
+            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
-    return docs.mapInPandas(
-        op,
-        schema=(
-            "doc_id long, url string, extracted_text string, n_spans int, "
-            "provider string, doc_rotation int, tilt_angle double, error string"
-        ),
-    )
+    return docs.mapInArrow(op, schema=out_schema)
 
 
 @F.pandas_udf(SPANS_ARRAY)

@@ -93,10 +93,10 @@ def pipeline_dual_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     F1/F2 filters, J2 overlap anti-join, J4 ordered merge. Secondary
     geometry matches the primary's, so the combined text stays
     byte-identical to the document text."""
-    from .operators.extract import with_dual_extraction
+    from .operators.extract import with_extraction
 
     pages = _pages(spark, sf_dir).filter(~F.col("url").endswith(".pdf"))
-    out = with_dual_extraction(pages)
+    out = with_extraction(pages, mode="dual", text_col="text")
     return out.select(
         pages_src.doc_id_from_url().alias("doc_id"),
         "extracted_text",
@@ -397,14 +397,11 @@ def streaming_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from .schema import PAGES_SCHEMA
-    from .sources.pages import PAGES_FORMAT_VERSION, materialize_pages
+    from .sources.pages import materialize_pages, materialized_path
     from .streaming.dedup_stream import stream_dedup_first_seen
 
     base = materialize_pages(spark, sf_dir)
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    # derived pages copy keyed on the generator format version, like
-    # every other /tmp materialization (stale-cache invariant)
-    ddir = f"/tmp/spark_graft_stream_dedup/v{PAGES_FORMAT_VERSION}_{sf_tag}"
+    ddir = materialized_path("/tmp/spark_graft_stream_dedup", sf_dir)
     if not os.path.exists(ddir + "/_SUCCESS"):
         pages = spark.read.parquet(base)
         pages.write.mode("overwrite").parquet(ddir)

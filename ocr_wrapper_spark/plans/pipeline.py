@@ -16,7 +16,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import CACHE_SCHEMA, RESULT_SCHEMA
+from ..schema import CACHE_SCHEMA, EXTRACT_STRUCT, RESULT_SCHEMA
 from ..sources import cache as cache_tbl
 from ..sources import metrics as metrics_tbl
 from . import partitioning
@@ -54,8 +54,7 @@ def run_extraction(
     if target_partitions:
         pages = pages.repartition(target_partitions, F.xxhash64(F.col("url")))
 
-    cols = ["url", "bucket", "content_hash", "spans", "extracted_text", "doc_rotation",
-            "tilt_angle", "n_spans", "provider", "error", "extract_ms", "is_hit"]
+    cols = ["url", "bucket", "content_hash", *EXTRACT_STRUCT.fieldNames(), "is_hit"]
 
     # extractor dispatch (D1): explicit name > env > 'single'
     from ..operators.autoselect import autoselect_extractor

@@ -65,6 +65,13 @@ CACHE_SCHEMA = T.StructType(
     ]
 )
 
+# columns the extraction operator appends: the cached result fields plus
+# the per-document kernel wall time
+EXTRACT_STRUCT = T.StructType(
+    [f for f in CACHE_SCHEMA.fields if f.name != "content_hash"]
+    + [T.StructField("extract_ms", T.DoubleType(), True)]
+)
+
 # per-partition lineage / metrics rows (north_rule, SURVEY.md §2.11)
 METRICS_SCHEMA = T.StructType(
     [

@@ -32,9 +32,9 @@ from ..kernels import layout, order
 from ..schema import PAGES_SCHEMA
 
 # Bump whenever build_page_rows or any payload builder changes shape or
-# bytes: /tmp materializations (materialize_pages, warc.materialize_warc)
-# key their cache paths on it, so generator edits can never silently
-# reuse stale files.
+# bytes: /tmp materializations key their cache paths on it (through
+# materialized_path), so generator edits can never silently reuse stale
+# files.
 PAGES_FORMAT_VERSION = 5  # v2: +textract; v3: json doc uri; v4: pdf %D id; v5: outlink anchors
 
 N_HOSTS = 40
@@ -531,6 +531,22 @@ def synthesize_pages(
     return docs.mapInPandas(gen, schema=PAGES_SCHEMA)
 
 
+def materialized_path(base_dir: str, sf_dir: str, tag: str = "") -> str:
+    """Path under ``base_dir`` of a materialization derived from
+    ``sf_dir``. Keyed on PAGES_FORMAT_VERSION, the resolved sf path and
+    documents.parquet's size and mtime, so a different or rebuilt corpus
+    under the same directory name never reuses stale files; ``tag`` names
+    the variant (replication, partitioning, ...)."""
+    import hashlib
+    import os
+
+    src = os.path.realpath(sf_dir)
+    st = os.stat(os.path.join(src, "documents.parquet"))
+    key = hashlib.md5(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()[:12]
+    path = f"{base_dir}/v{PAGES_FORMAT_VERSION}_{os.path.basename(src)}_{key}"
+    return f"{path}_{tag}" if tag else path
+
+
 def materialize_pages(
     spark: SparkSession,
     sf_dir: str,
@@ -544,10 +560,9 @@ def materialize_pages(
     in-flight generator)."""
     import os
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     n_parts = partitions or 64
     fat_tag = f"_f{fat_pad}" if fat_pad else ""
-    path = f"{base_dir}/v{PAGES_FORMAT_VERSION}_{sf_tag}_r{replicate}_p{n_parts}{fat_tag}"
+    path = materialized_path(base_dir, sf_dir, f"r{replicate}_p{n_parts}{fat_tag}")
     if not os.path.exists(path + "/_SUCCESS"):
         synthesize_pages(
             spark, sf_dir, replicate=replicate, partitions=n_parts, fat_pad=fat_pad

@@ -170,10 +170,9 @@ def materialize_warc(
     the WARC path must reproduce the identical bytes."""
     import os
 
-    from .pages import PAGES_FORMAT_VERSION, build_page_rows
+    from .pages import build_page_rows, materialized_path
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"{base_dir}/v{PAGES_FORMAT_VERSION}_{sf_tag}_f{n_files}"
+    path = materialized_path(base_dir, sf_dir, f"f{n_files}")
     marker = f"{path}/_SUCCESS"
     if os.path.exists(marker):
         return path

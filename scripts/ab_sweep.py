@@ -1,9 +1,8 @@
-"""A/B sweep of the JVM<->Python exchange knobs on the extraction job.
+"""A/B sweep of the JVM<->Python exchange batch size on the extraction job.
 
-Sweeps SPARK_GRAFT_ARROW_BATCH (Arrow batch rows) x
-SPARK_GRAFT_PREFETCH_DEPTH (reader-thread queue depth) over the
-materialized pages table, one fresh pinned JVM per cell so knobs can't
-leak between runs. Every cell embeds the pure-mp host-health probe so a
+Sweeps SPARK_GRAFT_ARROW_BATCH (Arrow batch rows) over the materialized
+pages table, one fresh pinned JVM per cell so settings can't leak
+between runs. Every cell embeds the pure-mp host-health probe so a
 sweep taken in a dirty window is labeled as such; results append to
 BENCH/AB_SWEEP_HISTORY.jsonl (the round-2 lesson: never keep only the
 luckiest measurement).
@@ -15,7 +14,6 @@ the window fingerprint.
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 import subprocess
@@ -74,13 +72,10 @@ def main() -> None:
     pages_path = materialize_pages(spark, sf_dir)
     spark.stop()
 
-    cells = list(itertools.product([512, 1024, 2048], [1, 2, 4]))
     history = os.path.join(REPO, "BENCH", "AB_SWEEP_HISTORY.jsonl")
     results = []
-    for batch, depth in cells:
-        env = dict(os.environ,
-                   SPARK_GRAFT_ARROW_BATCH=str(batch),
-                   SPARK_GRAFT_PREFETCH_DEPTH=str(depth))
+    for batch in (512, 1024, 2048):
+        env = dict(os.environ, SPARK_GRAFT_ARROW_BATCH=str(batch))
         try:
             out = subprocess.run(
                 ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c", CHILD,
@@ -88,15 +83,14 @@ def main() -> None:
                 capture_output=True, text=True, timeout=1800, env=env,
             )
         except subprocess.TimeoutExpired:
-            print(f"# cell batch={batch} depth={depth} TIMEOUT", file=sys.stderr)
+            print(f"# cell batch={batch} TIMEOUT", file=sys.stderr)
             continue
         lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
         if not lines:
-            print(f"# cell batch={batch} depth={depth} FAILED", file=sys.stderr)
+            print(f"# cell batch={batch} FAILED", file=sys.stderr)
             continue
         cell = json.loads(lines[-1])
-        rec = {"arrow_batch": batch, "prefetch_depth": depth,
-               "docs_per_sec": cell["docs_per_sec"], "probe": probe(),
+        rec = {"arrow_batch": batch, "docs_per_sec": cell["docs_per_sec"], "probe": probe(),
                "sf_dir": sf_dir, "cores": cores,
                "utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())}
         results.append(rec)
@@ -106,7 +100,7 @@ def main() -> None:
 
     if results:
         best = max(results, key=lambda r: r["docs_per_sec"])
-        print(f"# best: batch={best['arrow_batch']} depth={best['prefetch_depth']} "
+        print(f"# best: batch={best['arrow_batch']} "
               f"{best['docs_per_sec']:.0f} docs/s "
               f"(probe {best['probe'].get('per_doc_ms', '?')} ms/doc)")
 

@@ -179,10 +179,9 @@ def main() -> None:
     # materialize once, 256 files: one row group per ~600 KB file gives
     # 8 balanced waves at 32 cores (64 fat files = 2 ragged waves and a
     # straggler tail that shows up as pure variance)
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    from ocr_wrapper_spark.sources.pages import PAGES_FORMAT_VERSION
+    from ocr_wrapper_spark.sources.pages import materialized_path
 
-    pages_path = f"/tmp/spark_graft_pages/v{PAGES_FORMAT_VERSION}_{sf_tag}_r{replicate}_p256"
+    pages_path = materialized_path("/tmp/spark_graft_pages", sf_dir, f"r{replicate}_p256")
     if not os.path.exists(pages_path + "/_SUCCESS"):
         mat = (
             "import sys; sys.path.insert(0, '/root/repo')\n"

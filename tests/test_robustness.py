@@ -202,12 +202,12 @@ def test_real_web_hostile_battery(spark):
 
 def test_checkbox_bomb_aux_mode(spark):
     """5000 checkbox inputs through the aux merge: linear, no crash."""
-    from ocr_wrapper_spark.operators.extract import with_aux_extraction
+    from ocr_wrapper_spark.operators.extract import with_extraction
 
     payload = ("<form>" + '<input type="checkbox">' * 5000 + "</form>"
                + "<p>" + "word " * 40 + "</p>").encode()
     df = spark.createDataFrame([_page("bomb", payload)], PAGES_SCHEMA)
-    row = with_aux_extraction(df).collect()[0]
+    row = with_extraction(df, mode="aux").collect()[0]
     assert row.error is None
     assert sum(1 for s in row.spans if s.text == "☐") == 5000
 
