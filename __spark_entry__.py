@@ -331,5 +331,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     from ocr_wrapper_spark import archive_queries, curation_queries, embedding_queries, fingerprint_queries, graph_queries, integrity_queries, media_queries, pipeline_queries, sketch_queries, text_queries, webmix_queries  # noqa: F401
     from ocr_wrapper_spark.relational import ORACLES
+    from ocr_wrapper_spark.sources.pages import _host_cdf_sql
 
-    return _ordered(dict(ORACLES))
+    # host-mapped oracles write the Zipf host CDF as a `{cdf}` placeholder
+    cdf = _host_cdf_sql()
+    return _ordered({name: sql.replace("{cdf}", cdf) for name, sql in ORACLES.items()})

@@ -23,8 +23,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .curation_queries import _HEX_A_SQL, _hex_slice_col
-from .pipeline_queries import _host_cdf_sql
+from .relational import ORACLES as _ORACLES
 from .relational import register, _t, _td
+from .sources.pages import _host_idx_col, _host_name
 from .text_queries import FP_MD5_SQL, _HOSTED_CTE_SQL, fp_md5_col
 
 # ---------------------------------------------------------------------------
@@ -205,7 +206,7 @@ def capture_revisit_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "host_concentration_profile",
     f"""
-    WITH {_HOSTED_CTE_SQL.format(cdf=_host_cdf_sql())},
+    WITH {_HOSTED_CTE_SQL},
     hc AS (SELECT host_idx, CAST(count(*) AS BIGINT) AS c
            FROM hosted GROUP BY 1),
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n_hosts,
@@ -244,8 +245,6 @@ def host_concentration_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus; everything after runs on the ~|hosts|-row counts table
     (rank window under the non-foldable constant-key idiom, three 1-row
     aggregates cross-joined — each side provably tiny)."""
-    from .text_queries import _host_idx_col
-
     d = _t(spark, sf_dir, "documents")
     # three consumers (totals, Gini rank sum, HHI square sum) — persist
     # the ~|hosts|-row counts table so the corpus host agg runs ONCE
@@ -376,7 +375,7 @@ MIRROR_PPM = 5_000  # mirror verdict threshold on paragraph-set Jaccard
 @register(
     "host_mirror_pairs",
     f"""
-    WITH {_HOSTED_CTE_SQL.format(cdf=_host_cdf_sql())},
+    WITH {_HOSTED_CTE_SQL},
     t AS (SELECT host_idx, str_split(text, ' ') AS tk,
                  len(str_split(text, ' ')) AS n
           FROM hosted WHERE text <> ''),
@@ -424,8 +423,6 @@ def host_mirror_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is ~|hosts| rows and broadcasts. The ppm division runs
     128-bit (intersections can pass int64 ppm-scaled at archive
     scale)."""
-    from .text_queries import _host_idx_col
-
     d = _t(spark, sf_dir, "documents").filter(F.col("text") != "")
     tk = F.split("text", " ")
     t = d.select(
@@ -654,7 +651,7 @@ def _frontcode_oracle() -> str:
     """
 
 
-@register("cdx_prefix_compression")  # oracle spliced below ({cdf})
+@register("cdx_prefix_compression", _frontcode_oracle())
 def cdx_prefix_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Front-coding budget for the CDX index (the pywb/OpenWayback
     zipnum trick, public): within each compressed block, every SURT
@@ -723,11 +720,6 @@ def cdx_prefix_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("lcp"),
     )
-    host = F.concat(
-        F.lit("host"),
-        F.lpad(F.col("host_idx").cast("string"), 2, "0"),
-        F.lit(".example.com"),
-    )
     return (
         lc.groupBy("host_idx")
         .agg(
@@ -737,16 +729,10 @@ def cdx_prefix_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("sum(lcp) * 1000000 div sum(raw)").alias("savings_ppm"),
         )
         .select(
-            host.alias("host"), "n_urls", "raw_bytes", "coded_bytes", "savings_ppm"
+            _host_name().alias("host"), "n_urls", "raw_bytes", "coded_bytes", "savings_ppm"
         )
     )
 
-
-from .relational import ORACLES as _ORACLES  # noqa: E402
-
-_ORACLES["cdx_prefix_compression"] = _frontcode_oracle().replace(
-    "{cdf}", _host_cdf_sql()
-)
 
 
 # ---------------------------------------------------------------------------

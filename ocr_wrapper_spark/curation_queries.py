@@ -22,12 +22,12 @@ from pyspark.sql import functions as F
 from . import graph_queries as gq
 from .operators.components import connected_components
 from .relational import ORACLES as _ORACLES
-from .relational import _td, register
+from .relational import _t, _td, register
+from .sources.pages import _host_idx_col, _host_name
 from .text_queries import (
     FP_MD5_SQL,
     _QC_SCORE_SQL,
     _qc_score_col,
-    _t,
     fp_md5_col,
 )
 
@@ -454,7 +454,7 @@ STRONG_DIV = 200
 
 @register(
     "host_components",
-    # assigned below with the {cdf} splice, like the other graph oracles
+    # oracle assigned below, after its builder
 )
 def host_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the STRONG host link graph — the
@@ -484,8 +484,8 @@ def host_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sizes = labeled.groupBy("comp").agg(F.count("*").cast("long").alias("comp_size"))
     return labeled.join(F.broadcast(sizes), "comp").select(
-        gq._host_name(F.col("v")).alias("host"),
-        gq._host_name(F.col("comp")).alias("component"),
+        _host_name(F.col("v")).alias("host"),
+        _host_name(F.col("comp")).alias("component"),
         "comp_size",
     )
 
@@ -622,7 +622,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than matching everything through a 0 >= 0 degeneracy."""
     from .operators.similarity import seed_centroids, top_clusters_pandas_udf
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     import numpy as np
 
     n_centroids = semdedup_n_centroids(e.count())
@@ -703,7 +703,7 @@ def _knuth_u_sql(k: str) -> str:
 
 @register(
     "cdx_url_index",
-    # oracle assigned below with the {cdf} splice: every field is
+    # oracle assigned below: every field is
     # reconstructed CLOSED-FORM from documents — host via the Zipf draw,
     # extension via the dialect mods, fetch time via the generator's
     # interval arithmetic — so a single wrong byte in any url the
@@ -889,7 +889,7 @@ HOST_CAP_PPM = 50_000  # no host may contribute more than 5% of kept docs
 
 @register(
     "host_downsample_cap",
-    # oracle assigned below with the {cdf} splice (host from the Zipf draw)
+    # oracle assigned below (host from the Zipf draw)
 )
 def host_downsample_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cap each host's corpus share by deterministic rate-downsampling —
@@ -910,7 +910,6 @@ def host_downsample_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1/sqrt(target) is negligible, and the verdict needs zero extra
     shuffles."""
     from .operators.sampling import knuth_u
-    from .text_queries import _host_idx_col
 
     d = _t(spark, sf_dir, "documents")
     docs = d.select("doc_id", _host_idx_col().alias("host_idx"))
@@ -926,14 +925,10 @@ def host_downsample_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     u_ppm = F.floor(knuth_u(F.col("doc_id")) * 1_000_000)
     return docs.join(F.broadcast(rates), "host_idx").select(
         "doc_id",
-        _host_name_from_idx(F.col("host_idx")).alias("host"),
+        _host_name().alias("host"),
         F.col("rate_ppm").cast("long").alias("rate_ppm"),
         (u_ppm < F.col("rate_ppm")).alias("keep"),
     )
-
-
-# one host-name formatter repo-wide: graph_queries owns it
-_host_name_from_idx = gq._host_name
 
 
 def _host_downsample_oracle() -> str:
@@ -2636,13 +2631,9 @@ def doc_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("keep", keep)
 
 
-from .pipeline_queries import _host_cdf_sql as _cdf_sql_fn  # noqa: E402
-
-_ORACLES["host_components"] = _host_components_oracle().replace("{cdf}", _cdf_sql_fn())
-_ORACLES["cdx_url_index"] = _cdx_oracle().replace("{cdf}", _cdf_sql_fn())
-_ORACLES["host_downsample_cap"] = _host_downsample_oracle().replace(
-    "{cdf}", _cdf_sql_fn()
-)
+_ORACLES["host_components"] = _host_components_oracle()
+_ORACLES["cdx_url_index"] = _cdx_oracle()
+_ORACLES["host_downsample_cap"] = _host_downsample_oracle()
 # the canonical-selection oracle nests dedup_clusters' full recursive
 # transitive-closure CTE (registered by text_queries before this module
 # imports), so the cluster definition can never drift between the two
@@ -2801,8 +2792,6 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     CDC_P), fingerprint each chunk, and report the chunks shared by two
     or more distinct documents — chunk-level storage/near-dup telemetry
     over a corpus where whole-doc fingerprints see nothing."""
-    from .text_queries import _t
-
     d = _td(spark, sf_dir).select("doc_id", "text")
     # Boundary offsets computed PER DOCUMENT inside one row (array
     # higher-order functions): no per-position row materialization, no
@@ -3407,8 +3396,7 @@ def filter_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. No windows over corpus rows, no Python."""
     from .functions import redact
     from .operators import textstats
-    from .relational import _td
-    from .text_queries import _qc_score_col
+    from .text_queries import _pii_injected_text, _qc_keep_col
 
     # Four independent branches joined on doc_id, NOT one fused
     # projection: fusing all four verdict trees into a single Project
@@ -3421,31 +3409,11 @@ def filter_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every verdict to be computed, so the single-task scan was the
     # bottleneck (8.6 -> 2.3 s). The verdict expressions are the same
     # column trees the registered component queries publish.
-    toks = F.split(F.col("text"), " ")
-    empty = F.col("text") == ""
-    q = _td(spark, sf_dir).select(
-        "doc_id",
-        F.when(empty, F.lit(True)).otherwise(_qc_score_col(toks) > 0).alias("q"),
-    )
+    q = _td(spark, sf_dir).select("doc_id", _qc_keep_col().alias("q"))
     r = textstats.with_repetition_stats(_td(spark, sf_dir)).select(
         "doc_id", F.col("keep").alias("r")
     )
-    injected = F.concat(
-        F.col("text"),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(F.lit(" reach user"), F.col("doc_id").cast("string"), F.lit("@example.org")),
-        ).otherwise(""),
-        F.when(
-            F.col("doc_id") % 4 == 1,
-            F.concat(F.lit(" node 10."), (F.col("doc_id") % 256).cast("string"), F.lit(".0.1 up")),
-        ).otherwise(""),
-        F.when(
-            F.col("doc_id") % 5 == 2,
-            F.concat(F.lit(" call +43"), (F.col("doc_id") + 1000000).cast("string")),
-        ).otherwise(""),
-    )
-    n_emails, n_ips, n_phones = redact.pii_count_cols(injected)
+    n_emails, n_ips, n_phones = redact.pii_count_cols(_pii_injected_text())
     p = _td(spark, sf_dir).select(
         "doc_id", ((n_emails + n_ips + n_phones) == 0).alias("p")
     )

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from .operators import similarity
 from .operators.similarity import _dot, _norm
-from .relational import _t, register
+from .relational import _td, register
 
 TOPK = 5
 
@@ -83,7 +83,7 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the codes via integer lookup tables in one fused mapInPandas pass.
     Same deterministic seeding idea as ann_topk_ivf's coarse
     quantizer."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -123,7 +123,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow scan emits only batch-local top-k per query before the rank
     window (partial top-k: k rows per (query, batch) shuffle, not the
     full score matrix)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") % HARDNEG_MOD == 0).select(
         F.col("vec_id").alias("query_id"), "embedding", "label"
     )
@@ -169,7 +169,7 @@ def embedding_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     has a partition spec so WindowGroupLimit caps it per-partition.
     Label cardinality is bounded (a classifier's classes), so the
     per-label window never sees a Zipf host-style monster partition."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     expl = e.select("label", F.posexplode("embedding").alias("pos", "v"))
     cent = expl.groupBy("label", "pos").agg(
         F.round(F.avg("v"), similarity.MEAN_ROUND).alias("m")
@@ -230,7 +230,7 @@ def ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     a (query, vec) equi-join between two k-row-per-query tables and a
     |queries|-row rollup: the eval adds no exchange beyond the two
     rankings it grades."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -335,7 +335,7 @@ def bitext_margin_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/similarity.py:bitext_margin_candidates for the scale
     shape (pluggable kNN: IVF/PQ at 10^12 rows; everything downstream
     is k-row-per-vector keyed joins)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     src = e.filter(F.col("label") == BITEXT_SRC_LABEL)
     tgt = e.filter(F.col("label") == BITEXT_TGT_LABEL)
     cand = similarity.bitext_margin_candidates(src, tgt, k=BITEXT_K)
@@ -382,7 +382,7 @@ def bitext_mutual_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes + one equi-join on the pair key; each direction's top-1
     table is |side|-row, so the join is keyed, never a broadcast of a
     corpus-scale side."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     src = e.filter(F.col("label") == BITEXT_SRC_LABEL)
     tgt = e.filter(F.col("label") == BITEXT_TGT_LABEL)
     f1 = similarity.cosine_topk_bruteforce(
@@ -527,7 +527,7 @@ def embedding_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     and broadcasts the new center back (whitelisted 1-row
     BroadcastNestedLoopJoins, the ann_topk_ivf_lloyd shape). The only
     data motion is the 1-row center per iteration."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = _td(spark, sf_dir, "embeddings")
     centers, _ = similarity.kcenter_greedy(emb, KCENTER_K)
     return centers
 
@@ -568,7 +568,7 @@ def coreset_coverage_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-partition top-k, k rows to the driver — never a global sort),
     one k-row broadcast fanout, and one vec_id-keyed min. The two 1-row
     stat aggregates cross-join in-plan (whitelisted)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = _td(spark, sf_dir, "embeddings")
     _, state = similarity.kcenter_greedy(emb, KCENTER_K)
     e = emb.select("vec_id", F.col("embedding").alias("v"))
     firstk = e.orderBy("vec_id").limit(KCENTER_K).select(
@@ -658,7 +658,7 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a (query, vec) equi-join of two {TOPK}-row-per-query tables
     and a |queries|-row rollup — the eval adds no exchange beyond the
     rankings it grades (same discipline as ann_pq_recall_eval)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )

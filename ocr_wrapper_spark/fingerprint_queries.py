@@ -582,7 +582,7 @@ def host_novelty_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     |hosts|-bounded agg of map-side-combinable conditional sums. Host
     assignment is the shared in-row Knuth/CDF expression — no join to
     assign hosts. No windows, no broadcast, no Python."""
-    from .text_queries import _host_idx_col
+    from .sources.pages import _host_idx_col
 
     # spread read (_td): the per-doc shingle transform + explode feeds the
     # (host_idx, shingle) group keys, so none of it is count-prunable — on
@@ -633,11 +633,9 @@ def host_novelty_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _host_novelty_oracle() -> str:
     from .text_queries import _HOSTED_CTE_SQL
-    from .pipeline_queries import _host_cdf_sql
 
-    hosted = _HOSTED_CTE_SQL.replace("{cdf}", _host_cdf_sql())
     return f"""
-    WITH {hosted},
+    WITH {_HOSTED_CTE_SQL},
     d AS (
       SELECT host_idx, str_split(text, ' ') AS w,
              len(str_split(text, ' ')) AS nl

@@ -28,9 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators.sampling import KNUTH_U_SQL
-from .relational import ORACLES as _ORACLES
-from .relational import register
+from .relational import _t, register
 from .sources import pages as pages_src
+from .sources.pages import _host_name
 
 # ---------------------------------------------------------------------------
 # host-level link graph
@@ -52,14 +52,6 @@ DAMP_PPM = 850_000  # classic d = 0.85
 N_HOSTS = pages_src.N_HOSTS
 PR_INIT_PPM = 1_000_000 // N_HOSTS
 PR_BASE_PPM = (1_000_000 - DAMP_PPM) // N_HOSTS
-
-
-def _host_name(idx_col):
-    return F.concat(
-        F.lit("host"),
-        F.lpad(idx_col.cast("string"), 2, "0"),
-        F.lit(".example.com"),
-    )
 
 
 def _host_name_sql(idx: str) -> str:
@@ -495,9 +487,7 @@ def paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew — and each window group is one duplicate cluster (tiny). At
     10^12 documents this is the same fingerprint-keyed exchange the
     exact-dedup path uses, with ~n/PARA_WORDS times the rows."""
-    from .text_queries import _t as _tt
-
-    d = _tt(spark, sf_dir, "documents").filter(F.col("text") != "")
+    d = _t(spark, sf_dir, "documents").filter(F.col("text") != "")
     toks = F.split(F.col("text"), " ")
     starts = F.sequence(F.lit(0), F.size(toks) - 1, F.lit(PARA_WORDS))
     paras = d.select(
@@ -561,7 +551,6 @@ FUSION_TOP_K = 100  # frontier head size
 
 def _fusion_oracle() -> str:
     from .text_queries import _QC_SCORE_SQL
-    from .pipeline_queries import _host_cdf_sql
 
     # nests the full crawl_pagerank oracle (identical CTE chain) plus the
     # registered quality score — the fusion provably orders by the same
@@ -578,7 +567,7 @@ def _fusion_oracle() -> str:
     scored AS (
       SELECT doc_id, CAST(host_idx AS INT) AS host_idx,
              greatest(CASE WHEN text = '' THEN CAST(0 AS BIGINT)
-                           ELSE {{qc}} END, 0) + 1 AS quality_w
+                           ELSE {_QC_SCORE_SQL} END, 0) + 1 AS quality_w
       FROM hosted),
     fused AS (
       SELECT s.doc_id, {_host_name_sql("s.host_idx")} AS host,
@@ -593,7 +582,7 @@ def _fusion_oracle() -> str:
     """
 
 
-@register("crawl_priority_fusion")  # oracle spliced below ({cdf}, {qc})
+@register("crawl_priority_fusion", _fusion_oracle())
 def crawl_priority_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frontier ordering by authority x quality (the OPIC/"crawl the
     best pages first" fusion, Abiteboul 2003 / Cho-Garcia-Molina —
@@ -612,7 +601,8 @@ def crawl_priority_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort. The only corpus-size passes are the one page scan
     inside the edge aggregation (shared with crawl_pagerank) and the
     one scored-documents scan."""
-    from .text_queries import _host_idx_col, _qc_score_col
+    from .sources.pages import _host_idx_col
+    from .text_queries import _qc_score_col
 
     from .relational import _td
 
@@ -639,20 +629,6 @@ def crawl_priority_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pr_ppm") * F.col("quality_w")).alias("priority"),
     )
     return fused.orderBy(F.col("priority").desc(), "doc_id").limit(FUSION_TOP_K)
-
-
-# splice the Zipf cdf literal into the link-graph oracles (same pattern
-# as text_queries' host-mapped oracles)
-from .pipeline_queries import _host_cdf_sql as _cdf_sql_fn  # noqa: E402
-
-for _name in ("crawl_link_graph", "crawl_pagerank", "crawl_hits", "host_degree_reciprocity"):
-    _ORACLES[_name] = _ORACLES[_name].replace("{cdf}", _cdf_sql_fn())
-
-from .text_queries import _QC_SCORE_SQL as _qc_sql  # noqa: E402
-
-_ORACLES["crawl_priority_fusion"] = (
-    _fusion_oracle().replace("{qc}", _qc_sql).replace("{cdf}", _cdf_sql_fn())
-)
 
 
 # ---------------------------------------------------------------------------
@@ -744,8 +720,3 @@ def host_colink_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             (jac >= COLINK_MIRROR_PPM).alias("mirror_candidate"),
         )
     )
-
-
-_ORACLES["host_colink_similarity"] = _ORACLES["host_colink_similarity"].replace(
-    "{cdf}", _cdf_sql_fn()
-)

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .relational import ORACLES as _ORACLES
 from .relational import _t, _td, register
 
 # ---------------------------------------------------------------------------
@@ -234,7 +235,6 @@ SIZE_BUCKET_CHARS = 256  # quasi-identifier size bucket width
 
 
 def _k_anon_oracle() -> str:
-    # {cdf} is spliced at import time below (the shared Zipf host draw)
     from .operators.sampling import KNUTH_U_SQL
 
     u = KNUTH_U_SQL.format(k="doc_id")
@@ -252,7 +252,7 @@ def _k_anon_oracle() -> str:
     """
 
 
-@register("release_k_anonymity")  # oracle spliced below ({cdf})
+@register("release_k_anonymity", _k_anon_oracle())
 def release_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity release gate: quasi-identifier tuples (host, lang,
     {SIZE_BUCKET_CHARS}-char size bucket) with fewer than {K_ANON}
@@ -269,7 +269,7 @@ def release_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is a tiny table regardless of input size, and the Zipf host
     skew is irrelevant because counting is combinable (no per-host
     window anywhere)."""
-    from .text_queries import _host_idx_col
+    from .sources.pages import _host_idx_col, _host_name
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     grouped = (
@@ -281,25 +281,13 @@ def release_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("host_idx", "lang", "size_bucket")
         .agg(F.count("*").alias("n_docs"))
     )
-    host = F.concat(
-        F.lit("host"),
-        F.lpad(F.col("host_idx").cast("string"), 2, "0"),
-        F.lit(".example.com"),
-    )
     return grouped.select(
-        host.alias("host"),
+        _host_name().alias("host"),
         "lang",
         F.col("size_bucket").cast("long").alias("size_bucket"),
         "n_docs",
         (F.col("n_docs") >= K_ANON).alias("released"),
     )
-
-
-# splice the shared host cdf into the k-anonymity oracle
-from .pipeline_queries import _host_cdf_sql as _cdf_sql_fn  # noqa: E402
-from .relational import ORACLES as _ORACLES  # noqa: E402
-
-_ORACLES["release_k_anonymity"] = _k_anon_oracle().replace("{cdf}", _cdf_sql_fn())
 
 
 # ---------------------------------------------------------------------------
@@ -451,7 +439,7 @@ def _host_split_oracle() -> str:
     """
 
 
-@register("host_disjoint_split")  # oracle spliced below ({cdf})
+@register("host_disjoint_split", _host_split_oracle())
 def host_disjoint_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-free eval split: assign WHOLE HOSTS to train/val/test
     (hash the host, not the document — the GPT-3/C4 deduplication
@@ -471,7 +459,8 @@ def host_disjoint_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew only affects split-size balance (visible in n_docs — that IS
     the telemetry), never a hot join key."""
     from .operators.sampling import knuth_u
-    from .text_queries import _host_idx_col, fp_md5_col
+    from .sources.pages import _host_idx_col
+    from .text_queries import fp_md5_col
 
     d = _t(spark, sf_dir, "documents")
     u = knuth_u(F.col("host_idx") + SPLIT_SALT)
@@ -659,7 +648,6 @@ def doc_pagination_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ORACLES["token_budget_quality_cut"] = _budget_oracle()
-_ORACLES["host_disjoint_split"] = _host_split_oracle().replace("{cdf}", _cdf_sql_fn())
 
 
 # ---------------------------------------------------------------------------
@@ -714,7 +702,7 @@ def _fair_share_oracle() -> str:
     """
 
 
-@register("host_fair_share_alloc")  # oracle spliced below ({cdf})
+@register("host_fair_share_alloc", _fair_share_oracle())
 def host_fair_share_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Max-min fair (water-filling) crawl-budget allocation: a crawl
     cycle has budget B = total_docs div {CRAWL_BUDGET_DIV} fetch slots;
@@ -742,7 +730,7 @@ def host_fair_share_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-document shuffle key."""
     from pyspark.sql import Window
 
-    from .text_queries import _host_idx_col
+    from .sources.pages import _host_idx_col, _host_name
 
     d = _t(spark, sf_dir, "documents")
     counts = d.groupBy(_host_idx_col().alias("host_idx")).agg(
@@ -791,19 +779,11 @@ def host_fair_share_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "budget",
     )
     left_over = a.agg((F.max("budget") - F.sum("alloc")).alias("leftover_slots"))
-    host = F.concat(
-        F.lit("host"),
-        F.lpad(F.col("host_idx").cast("string"), 2, "0"),
-        F.lit(".example.com"),
-    )
     return a.crossJoin(F.broadcast(left_over)).select(
-        host.alias("host"),
+        _host_name().alias("host"),
         "demand",
         "alloc",
         "saturated",
         "water_level",
         "leftover_slots",
     )
-
-
-_ORACLES["host_fair_share_alloc"] = _fair_share_oracle().replace("{cdf}", _cdf_sql_fn())

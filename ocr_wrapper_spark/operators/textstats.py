@@ -51,10 +51,6 @@ def lang_id_cols(text_col: Column) -> Column:
     return F.when((best / n).cast("long") > 0, lang_expr).otherwise(F.lit("und"))
 
 
-def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("lang_guess", lang_id_cols(F.col(text_col)))
-
-
 def quality_score_cols(text_col: Column) -> list[Column]:
     """Quality-heuristic columns (Gopher/C4-style ratios, public
     literature): length, mean word length, stopword ratio, alpha ratio,
@@ -267,15 +263,4 @@ def with_dup_span_coverage(
             .alias("dup_span_frac"),
         )
         .withColumn("keep", F.col("dup_span_frac") <= max_dup_span_frac)
-    )
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        lang_id_cols(c).alias("lang_guess"),
-        *quality_score_cols(c),
-        *token_count_cols(c),
-        fingerprint_col(c).alias("fingerprint"),
     )

@@ -491,18 +491,12 @@ def pipeline_qr_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _host_cdf_sql() -> str:
-    cdf = pages_src._host_cdf()
-    lits = ", ".join(f"{v!r}" for v in cdf.tolist())
-    return f"[{lits}]"
-
-
 def _host_oracle() -> str:
     # same Knuth-hash + Zipf-cdf mapping as sources/pages.py host_for_doc
     return f"""
     WITH hosted AS (
       SELECT doc_id,
-             len(list_filter({_host_cdf_sql()},
+             len(list_filter({{cdf}},
                  c -> c < ({_DOC_U_SQL})))
              AS host_idx
       FROM documents)
@@ -712,7 +706,7 @@ _WET_HEADER_E = _WET_HEADER.replace("\r", "\\r").replace("\n", "\\n")
     f"""
     WITH hosted AS (
       SELECT doc_id, text, lang,
-             len(list_filter({_host_cdf_sql()},
+             len(list_filter({{cdf}},
                  c -> c < ({_DOC_U_SQL})))
              AS host_idx
       FROM documents),
@@ -916,7 +910,7 @@ def extraction_block_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from .kernels.html_extract import analyze_blocks
-    from .sources.pages import materialize_pages
+    from .sources.pages import _host_name, materialize_pages
 
     pages = spark.read.parquet(materialize_pages(spark, sf_dir))
     doc_id = pages_src.doc_id_from_url()
@@ -976,20 +970,12 @@ def extraction_block_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("tn").cast("long").alias("tn"),
     )
     return agg.select(
-        F.concat(
-            F.lit("host"),
-            F.lpad(F.col("host_idx").cast("string"), 2, "0"),
-            F.lit(".example.com"),
-        ).alias("host"),
+        _host_name().alias("host"),
         "n_pages", "n_blocks", "n_content", "n_main", "tp", "fp", "fn", "tn",
         F.expr("1000000 * tp div nullif(tp + fp, 0)").alias("precision_ppm"),
         F.expr("1000000 * tp div nullif(tp + fn, 0)").alias("recall_ppm"),
     )
 
-
-ORACLES["extraction_block_eval"] = ORACLES["extraction_block_eval"].replace(
-    "{cdf}", _host_cdf_sql()
-)
 
 
 @register(

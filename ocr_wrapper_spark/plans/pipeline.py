@@ -52,7 +52,7 @@ def run_extraction(
         pages = pages.join(F.broadcast(done), "bucket", "left_anti")
 
     if target_partitions:
-        pages = pages.repartition(target_partitions, F.xxhash64(F.col("url")))
+        pages = partitioning.repartition_for_extraction(pages, target_partitions)
 
     cols = ["url", "bucket", "content_hash", *EXTRACT_STRUCT.fieldNames(), "is_hit"]
 

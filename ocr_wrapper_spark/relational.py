@@ -55,91 +55,36 @@ def money_sum(expr, alias: str, cents: int = 100):
 _SPLIT_MIN_BYTES = 256 * 1024
 
 
-# (path, mtime, size) -> planned scan splits: the .rdd conversion that
-# answers "how many tasks will this scan plan" costs a driver-side
-# analysis pass; queries composing several spread reads of the same
-# file would otherwise pay it per read.
-_SCAN_SPLITS_MEMO: dict[tuple, int] = {}
-
-
-def _scan_parallel(df: DataFrame, size_bytes: int, path: str | None = None) -> DataFrame:
-    """Scale-adaptive scan parallelism (optimization guide §2.5, "input
-    skew: one huge unsplittable file ... repartition immediately after
-    the read"). The test corpora are single parquet files with one row
-    group, so a bare scan plans ONE task and every corpus-size map
-    (explode / md5 / scoring) runs on one core regardless of cluster
-    width. When the scan plans fewer splits than the cluster has cores,
-    spread it with a round-robin exchange sized to the core count; the
-    exchange moves only the (small, by construction: few splits = few
-    row groups = bounded bytes) input once, and the branch never fires
-    at production scale where thousands of files already give the scan
-    full parallelism."""
-    if size_bytes < _SPLIT_MIN_BYTES:
-        return df
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if _planned_splits(df, path) < par:
-        df = df.repartition(par * 2)
-    return df
-
-
-def _planned_splits(df: DataFrame, path: str | None) -> int:
-    import os
-
-    if path is None:
-        return df.rdd.getNumPartitions()
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return df.rdd.getNumPartitions()
-    n = _SCAN_SPLITS_MEMO.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        _SCAN_SPLITS_MEMO[key] = n
-    return n
-
-
-# Tables whose consumers ALWAYS run heavy per-row kernels over the scan
-# (vector math on every row): for these the single-row-group input file
-# starves 31 of 32 cores and the one-time round-robin exchange pays for
-# itself many times over. `documents` is NOT spread by default — many
-# documents queries are cheap under the bench's `.count()` because
-# Catalyst prunes their expensive projections, and for those the
-# exchange is pure overhead (measured: 24 bench queries regressed
-# 1.3-4x under a blanket documents spread while 20 gained 2-12x). The
-# heavy documents consumers opt in via `_td` instead.
-_SCAN_HEAVY_TABLES = frozenset({"embeddings"})
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Bare table read: the scan plans as many tasks as the file has splits."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _td(spark: SparkSession, sf_dir: str, name: str = "documents") -> DataFrame:
+    """Spread-scan read (optimization guide §2.5, "input skew: one huge
+    unsplittable file ... repartition immediately after the read") — opt-in
+    for the queries whose per-row kernel work (per-token/char md5, shingle
+    explode, template vote, vector math) survives count-pruning and
+    dominated their runtime when the scan planned one task. The test
+    corpora are single parquet files with one row group, so a bare scan
+    plans ONE task however wide the cluster; a file at or above
+    `_SPLIT_MIN_BYTES` gets a round-robin exchange sized to twice the core
+    count. Queries whose expensive columns Catalyst prunes keep the bare
+    `_t` read: spreading every bare read measured slower on most queries
+    (sf0.1 on a 4-core host: 67 of 120 more than 10% slower, 26 faster),
+    so no size rule replaces the opt-in. A directory path never spreads
+    (its getsize is the inode size)."""
     import os
 
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
-    if name not in _SCAN_HEAVY_TABLES:
+    try:
+        size = os.path.getsize(path)
+    except OSError:
+        size = 0
+    if size < _SPLIT_MIN_BYTES:
         return df
-    try:
-        size = os.path.getsize(path)
-    except OSError:
-        size = 0
-    return _scan_parallel(df, size, path)
-
-
-def _td(spark: SparkSession, sf_dir: str, name: str = "documents") -> DataFrame:
-    """Spread-scan documents read — opt-in for the queries whose
-    per-row kernel work (per-token/char md5, shingle explode, template
-    vote) survives count-pruning and dominated their runtime when the
-    scan planned one task (guide §2.5). Queries whose expensive columns
-    Catalyst prunes keep the bare `_t` read instead."""
-    import os
-
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        size = os.path.getsize(path)
-    except OSError:
-        size = 0
-    return _scan_parallel(spark.read.parquet(path), size, path)
+    return df.repartition(2 * spark.sparkContext.defaultParallelism)
 
 
 # ---------------------------------------------------------------------------

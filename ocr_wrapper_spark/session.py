@@ -18,6 +18,11 @@ from pyspark.sql import SparkSession
 ARROW_MAX_RECORDS_PER_BATCH = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "1024"))
 
 
+def _default_driver_mem() -> str:
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2, 16 * 1024**3) // 1024**2}m"
+
+
 def get_spark(
     app_name: str = "ocr_wrapper_spark",
     master: str | None = None,
@@ -26,11 +31,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    On a real cluster the caller passes no master and spark-submit decides.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default the
+    host's core count); the driver heap to ``$SPARK_GRAFT_DRIVER_MEM``
+    (env, default half the host's physical memory, at most 16g). On a
+    real cluster the caller passes no master and spark-submit decides.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] -> N; a real cluster would size this to 2-3x total cores.
@@ -58,7 +65,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxBytesPerBatch",
             os.environ.get("SPARK_GRAFT_ARROW_BYTES", str(8 * 1024 * 1024)),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )

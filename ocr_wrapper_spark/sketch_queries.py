@@ -27,9 +27,9 @@ from pyspark.sql import functions as F
 
 from .curation_queries import _HEX_A_SQL, _HEX_B_SQL, _hex_slice_col
 from .operators.sampling import KNUTH_U_SQL
-from .pipeline_queries import _host_cdf_sql
-from .relational import _td, register
-from .text_queries import _HOST_NAME_SQL, _HOSTED_CTE_SQL, _host_idx_col, _host_name_col, _t
+from .relational import _t, _td, register
+from .sources.pages import _host_idx_col, _host_name
+from .text_queries import _HOST_NAME_SQL, _HOSTED_CTE_SQL
 
 # 60-bit md5 hashes: the canonical curation-module helpers (_HEX_A_SQL /
 # _HEX_B_SQL / _hex_slice_col) — 15 hex chars = 60 bits, below the int64
@@ -41,7 +41,7 @@ HASH_BITS = 60
 
 # Zipf host assignment + per-host distinct term hashes, shared by the
 # two cardinality sketches. (host_idx mirrors sources/pages.py
-# host_for_doc; see text_queries._host_idx_col.)
+# host_for_doc through its Spark form _host_idx_col.)
 def _host_term_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _td(spark, sf_dir)
     # distinct on (host, term) BEFORE hashing: md5 runs once per
@@ -63,7 +63,7 @@ def _host_term_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _host_term_hashes_sql() -> str:
-    return f"""{_HOSTED_CTE_SQL.format(cdf=_host_cdf_sql())},
+    return f"""{_HOSTED_CTE_SQL},
     dh AS (
       SELECT DISTINCT host_idx, {_HEX_A_SQL.format(fp="md5(term)")} AS h
       FROM (SELECT host_idx, unnest(str_split(text, ' ')) AS term
@@ -148,7 +148,7 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         est.alias("kmv_estimate"),
     )
     return joined.select(
-        _host_name_col().alias("host"),
+        _host_name().alias("host"),
         "n_distinct",
         "kth_min",
         "kmv_estimate",
@@ -254,7 +254,7 @@ def hll_register_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return out.select(
-        _host_name_col().alias("host"),
+        _host_name().alias("host"),
         "n_distinct",
         "hll_estimate",
         F.expr("abs(hll_estimate - n_distinct) * 1000000 div n_distinct").alias(
@@ -466,7 +466,7 @@ def priority_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH hosted AS (
       SELECT doc_id, source,
-             len(list_filter({_host_cdf_sql()},
+             len(list_filter({{cdf}},
                  c -> c < ({KNUTH_U_SQL.format(k="doc_id")})))
              AS host_idx
       FROM documents),
@@ -516,7 +516,7 @@ def robots_disallow_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pathed.select(
         "doc_id",
-        _host_name_col().alias("host"),
+        _host_name().alias("host"),
         "path",
         F.coalesce(F.col("disallow_prefix"), F.lit("")).alias("disallow_prefix"),
         (
@@ -691,7 +691,7 @@ def _qtile_k_expr(p: int) -> str:
     bc AS (
       SELECT b, CAST(sum(c) OVER (ORDER BY b) AS BIGINT) AS cum FROM bh),
     hosts AS (
-      SELECT len(list_filter({{cdf}}, c -> c < ({{u}}))) AS host_idx, n_chars
+      SELECT len(list_filter({{cdf}}, c -> c < ({KNUTH_U_SQL.format(k="doc_id")}))) AS host_idx, n_chars
       FROM documents),
     hb AS (
       SELECT host_idx, n_chars // {QTILE_W} AS b, CAST(count(*) AS BIGINT) AS c
@@ -717,9 +717,7 @@ def _qtile_k_expr(p: int) -> str:
            em.mstar * {QTILE_W} + {QTILE_W - 1} AS est_merged_value,
            eb.bstar * {QTILE_W} + {QTILE_W - 1} - ex.exact_value AS err
     FROM pk JOIN ex USING (p) JOIN eb USING (p) JOIN em USING (p)
-    """.format(
-        cdf=_host_cdf_sql(), u=KNUTH_U_SQL.format(k="doc_id")
-    ),
+    """,
 )
 def doclen_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-length percentiles (p25/p50/p75/p90/p99 of n_chars)

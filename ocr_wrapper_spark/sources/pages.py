@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels import layout, order
+from ..operators.sampling import knuth_u
 from ..schema import PAGES_SCHEMA
 
 # Bump whenever build_page_rows or any payload builder changes shape or
@@ -92,6 +93,48 @@ def host_for_doc(doc_id: np.ndarray) -> np.ndarray:
         np.float64
     ) / 2.0**32
     return np.searchsorted(_host_cdf(), u)
+
+
+def _host_cdf_sql() -> str:
+    """The host CDF as a DuckDB list literal. Oracles write the `{cdf}`
+    placeholder; __spark_entry__.oracle_sql() substitutes this once."""
+    lits = ", ".join(f"{v!r}" for v in _host_cdf().tolist())
+    return f"[{lits}]"
+
+
+def _cdf_count_below(u):
+    """host_idx = count of Zipf-CDF thresholds strictly below u, written
+    as an inline sum of literal comparisons instead of an
+    `F.aggregate(array(...), ...)` fold. Same integer count, same double
+    comparisons — but higher-order functions never enter whole-stage
+    codegen (ArrayAggregate.eval runs the interpreted expression tree per
+    row), and jstack'd slow sessions showed executors pinned in that
+    interpreted eval at ~20x the CPU of a JIT-settled session. The
+    comparison chain codegens into the surrounding stage, which both
+    removes the interpreter cost and the JIT-warmup lottery."""
+    terms = [F.when(F.lit(float(c)) < u, 1).otherwise(0) for c in _host_cdf()]
+    if not terms:  # np.searchsorted([], u) == 0
+        return F.lit(0)
+    total = terms[0]
+    for t in terms[1:]:
+        total = total + t
+    return total
+
+
+def _host_idx_col(key=None):
+    """Spark mirror of host_for_doc: the Zipf host index of the Knuth hash
+    of ``key`` (default the ``doc_id`` column)."""
+    u = knuth_u(F.col("doc_id") if key is None else key)  # overflow-safe at full int64 id range
+    return _cdf_count_below(u)
+
+
+def _host_name(idx_col=None):
+    """`hostNN.example.com` for a host index column (default ``host_idx``)."""
+    return F.concat(
+        F.lit("host"),
+        F.lpad((F.col("host_idx") if idx_col is None else idx_col).cast("string"), 2, "0"),
+        F.lit(".example.com"),
+    )
 
 
 _BOILER_NAV = ["home", "products", "pricing", "about", "careers", "contact", "blog", "login"]

@@ -14,13 +14,8 @@ from .operators import dedup, similarity, textstats
 from .operators.sampling import KNUTH_U_SQL
 
 _U_SQL = KNUTH_U_SQL.format(k="doc_id")
-from .relational import _td, register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .relational import _t as _rt
-
-    return _rt(spark, sf_dir, name)
+from .relational import _t, _td, register
+from .sources.pages import _host_idx_col, _host_name
 
 
 # ---------------------------------------------------------------------------
@@ -178,26 +173,28 @@ def doc_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import redact
 
     d = _t(spark, sf_dir, "documents")
-    pii = d.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat(F.lit(" reach user"), F.col("doc_id").cast("string"), F.lit("@example.org")),
-            ).otherwise(""),
-            F.when(
-                F.col("doc_id") % 4 == 1,
-                F.concat(F.lit(" node 10."), (F.col("doc_id") % 256).cast("string"), F.lit(".0.1 up")),
-            ).otherwise(""),
-            F.when(
-                F.col("doc_id") % 5 == 2,
-                F.concat(F.lit(" call +43"), (F.col("doc_id") + 1000000).cast("string")),
-            ).otherwise(""),
-        ).alias("text"),
-    )
+    pii = d.select("doc_id", _pii_injected_text().alias("text"))
     return redact.with_pii_redaction(pii).select(
         "doc_id", "redacted_text", "n_emails", "n_ips", "n_phones"
+    )
+
+
+def _pii_injected_text():
+    """`text` plus the email / IPv4 / phone PII injected from doc_id."""
+    return F.concat(
+        F.col("text"),
+        F.when(
+            F.col("doc_id") % 3 == 0,
+            F.concat(F.lit(" reach user"), F.col("doc_id").cast("string"), F.lit("@example.org")),
+        ).otherwise(""),
+        F.when(
+            F.col("doc_id") % 4 == 1,
+            F.concat(F.lit(" node 10."), (F.col("doc_id") % 256).cast("string"), F.lit(".0.1 up")),
+        ).otherwise(""),
+        F.when(
+            F.col("doc_id") % 5 == 2,
+            F.concat(F.lit(" call +43"), (F.col("doc_id") + 1000000).cast("string")),
+        ).otherwise(""),
     )
 
 
@@ -586,7 +583,7 @@ TOPK = 5
     """,
 )
 def ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -672,7 +669,7 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate nearest neighbors: seeded coarse quantizer,
     inverted lists met in a cluster-id equi-join, exact in-list rerank
     (the k-means-bucketed scale path next to the hyperplane-LSH one)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -687,7 +684,7 @@ def ann_topk_ivf_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, means rounded at 1e-6 so the DuckDB oracle recomputes the
     refined centroids exactly. Same equi-join probe/rerank tail as
     ann_topk_ivf."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -724,7 +721,7 @@ def ann_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization (floor(x*127/max|x| + 0.5)), cosine on the integer
     codes — the 4x-smaller-scan scale path. Integer dot products are
     order-exact, so the oracle mirrors every score bit-for-bit."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -733,7 +730,7 @@ def ann_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("ann_topk_lsh")  # oracle assigned below (_lsh_oracle)
 def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -938,7 +935,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batch against the broadcast normalized corpus."""
     from .operators.similarity import cosine_near_pairs
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = _td(spark, sf_dir, "embeddings")
     # explicit broadcast: the oracle is the exact all-pairs join, so the
     # auto gate's LSH fallback (recall < 1) must never kick in here — a
     # too-large corpus should RAISE, not silently diverge from the oracle
@@ -1039,12 +1036,10 @@ _ORACLES["ann_topk_lsh"] = _lsh_oracle()
 
 
 def _host_top10_oracle() -> str:
-    from .pipeline_queries import _host_cdf_sql
-
     return f"""
     WITH hosted AS (
       SELECT doc_id, lang,
-             len(list_filter({_host_cdf_sql()},
+             len(list_filter({{cdf}},
                  c -> c < ({_U_SQL})))
              AS host_idx
       FROM documents)
@@ -1513,8 +1508,9 @@ def doc_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Zipf host assignment shared by the crawl-scheduling/reputation
 # queries: host_idx = count of cdf entries below the doc's uniform
-# Knuth hash (mirrors sources/pages.py host_for_doc). One Spark
-# definition + one SQL CTE; `{cdf}` is spliced post-registration.
+# Knuth hash (mirrors sources/pages.py host_for_doc). The Spark
+# definition is pages._host_idx_col; this is the SQL CTE, whose `{cdf}`
+# oracle_sql() substitutes.
 _HOSTED_CTE_SQL = f"""hosted AS (
       SELECT doc_id, text,
              len(list_filter({{cdf}},
@@ -1522,41 +1518,6 @@ _HOSTED_CTE_SQL = f"""hosted AS (
              AS host_idx
       FROM documents)"""
 _HOST_NAME_SQL = "concat('host', lpad(CAST(host_idx AS VARCHAR), 2, '0'), '.example.com')"
-
-
-def _cdf_count_below(u):
-    """host_idx = count of Zipf-CDF thresholds strictly below u, written
-    as an inline sum of literal comparisons instead of an
-    `F.aggregate(array(...), ...)` fold. Same integer count, same double
-    comparisons — but higher-order functions never enter whole-stage
-    codegen (ArrayAggregate.eval runs the interpreted expression tree per
-    row), and jstack'd slow sessions showed executors pinned in that
-    interpreted eval at ~20x the CPU of a JIT-settled session. The
-    comparison chain codegens into the surrounding stage, which both
-    removes the interpreter cost and the JIT-warmup lottery."""
-    from .sources import pages as pages_src
-
-    cdf = pages_src._host_cdf()
-    terms = [F.when(F.lit(float(c)) < u, 1).otherwise(0) for c in cdf]
-    total = terms[0]
-    for t in terms[1:]:
-        total = total + t
-    return total
-
-
-def _host_idx_col():
-    from .operators.sampling import knuth_u
-
-    u = knuth_u(F.col("doc_id"))  # overflow-safe at full int64 id range
-    return _cdf_count_below(u)
-
-
-def _host_name_col():
-    return F.concat(
-        F.lit("host"),
-        F.lpad(F.col("host_idx").cast("string"), 2, "0"),
-        F.lit(".example.com"),
-    )
 
 
 @register(
@@ -1629,7 +1590,7 @@ def crawl_frontier_slots(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "doc_id",
-            _host_name_col().alias("host"),
+            _host_name().alias("host"),
             "fetch_rank",
             # int64 `div`, not double-divide-and-cast: at 10^15 fetch
             # ranks the double quotient can misround the boundary
@@ -1665,6 +1626,14 @@ def _qc_score_col(toks):
     return F.aggregate(
         F.transform(toks, _qc_weight_ppm), F.lit(0).cast("long"), lambda acc, v: acc + v
     )
+
+
+def _qc_keep_col(score=None):
+    """Quality verdict of doc_quality_classifier: empty docs keep, the
+    rest keep on a positive score (default: the score of `text`)."""
+    if score is None:
+        score = _qc_score_col(F.split(F.col("text"), " "))
+    return F.when(F.col("text") == "", F.lit(True)).otherwise(score > 0)
 
 
 @register(
@@ -1703,7 +1672,7 @@ def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.when(empty, F.lit(0)).otherwise(F.size(toks)).alias("n_tokens"),
         F.when(empty, F.lit(0).cast("long")).otherwise(score).alias("score_ppm"),
-        F.when(empty, F.lit(True)).otherwise(score > 0).alias("keep"),
+        _qc_keep_col(score).alias("keep"),
     )
 
 
@@ -1784,7 +1753,7 @@ def host_reputation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         hosted.join(F.broadcast(stats), "host_idx")
         .select(
             "doc_id",
-            _host_name_col().alias("host"),
+            _host_name().alias("host"),
             "host_docs",
             "host_empty",
             _host_keep_col().alias("keep"),
@@ -1890,7 +1859,7 @@ def crawl_ingest_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         n("host_cut"),
         n("kept"),
     ).select(
-        _host_name_col().alias("host"),
+        _host_name().alias("host"),
         "n_new",
         "dup_of_old",
         "dup_in_batch",
@@ -2051,7 +2020,7 @@ def streaming_watermark_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("new_host").alias("host_idx"),
         (F.unix_timestamp("new_ts") - F.unix_timestamp("recent_ts")).cast("long").alias("lag_s"),
     )
-    out = joined.select("new_id", "recent_id", _host_name_col().alias("host"), "lag_s")
+    out = joined.select("new_id", "recent_id", _host_name().alias("host"), "lag_s")
     name = f"stream_recrawl_{uuid.uuid4().hex[:10]}"
     q = out.writeStream.format("memory").queryName(name).trigger(availableNow=True).start()
     q.awaitTermination()
@@ -2390,19 +2359,6 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# host-mapped oracles need the Zipf cdf literal (same pattern as
-# pipeline_host_stats); splice it in after registration
-from .pipeline_queries import _host_cdf_sql as _cdf_sql_fn  # noqa: E402
-
-for _name in (
-    "crawl_frontier_slots",
-    "host_reputation_filter",
-    "crawl_ingest_funnel",
-    "streaming_watermark_join",
-):
-    _ORACLES[_name] = _ORACLES[_name].replace("{cdf}", _cdf_sql_fn())
-
-
 @register(
     "dedup_containment",
     f"""
@@ -2522,7 +2478,7 @@ def url_parallel_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         F.concat(
             F.lit("https://host"),
-            F.lpad(_para_host_idx().cast("string"), 2, "0"),
+            F.lpad(_host_idx_col(F.expr(f"doc_id div {PARA_GROUP}")).cast("string"), 2, "0"),
             F.lit(".example.com/"),
             F.col("lang"),
             F.lit("/page"),
@@ -2563,18 +2519,6 @@ def url_parallel_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("accepted"),
         )
     )
-
-
-def _para_host_idx():
-    from .operators.sampling import knuth_u
-
-    u = knuth_u(F.expr(f"doc_id div {PARA_GROUP}"))
-    return _cdf_count_below(u)  # codegen-able comparison chain (see _cdf_count_below)
-
-
-_ORACLES["url_parallel_candidates"] = _ORACLES["url_parallel_candidates"].replace(
-    "{cdf}", _cdf_sql_fn()
-)
 
 
 # ---------------------------------------------------------------------------
@@ -2767,7 +2711,7 @@ def wand_block_max(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # splice the shared BM25 CTE block into the WAND oracle (the CTEs carry
 # literal braces nowhere, but str.format would still trip on the score
-# SQL's parens-free placeholders — use replace, same as the cdf splice)
+# SQL's parens-free placeholders — use replace)
 _ORACLES["wand_block_max"] = (
     _ORACLES["wand_block_max"]
     .replace("{BM25_CORE}", _BM25_CORE_CTES)

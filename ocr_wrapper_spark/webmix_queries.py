@@ -29,15 +29,12 @@ from pyspark.sql import functions as F
 
 from .graph_queries import PARA_WORDS
 from .operators.sampling import KNUTH_U_SQL, knuth_u
-from .relational import ORACLES as _ORACLES
-from .relational import _td, register
+from .relational import _t, _td, register
+from .sources.pages import _host_idx_col, _host_name
 from .text_queries import (
     _HOST_NAME_SQL,
     _HOSTED_CTE_SQL,
-    _host_idx_col,
-    _host_name_col,
     _lang_id_oracle,
-    _t,
     _U_SQL,
     doc_lang_id,
 )
@@ -139,7 +136,7 @@ def host_template_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ppm = F.expr("n_template * 1000000 div n_paras")
     return agg.select(
         "doc_id",
-        _host_name_col().alias("host"),
+        _host_name().alias("host"),
         "n_paras",
         "n_template",
         ppm.alias("template_ppm"),
@@ -271,14 +268,6 @@ def langid_confusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# host-mapped oracle needs the Zipf cdf literal (same post-registration
-# splice as text_queries / graph_queries)
-from .pipeline_queries import _host_cdf_sql as _cdf_sql_fn  # noqa: E402
-
-_ORACLES["host_template_paragraphs"] = _ORACLES["host_template_paragraphs"].replace(
-    "{cdf}", _cdf_sql_fn()
-)
-
 
 # ---------------------------------------------------------------------------
 # boilerplate strip REWRITE (the RefinedWeb output stage)
@@ -384,17 +373,13 @@ def boilerplate_strip_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "doc_id",
-            _host_name_col().alias("host"),
+            _host_name().alias("host"),
             "n_paras",
             "n_kept",
             "clean_text",
         )
     )
 
-
-_ORACLES["boilerplate_strip_rewrite"] = _ORACLES["boilerplate_strip_rewrite"].replace(
-    "{cdf}", _cdf_sql_fn()
-)
 
 
 # ---------------------------------------------------------------------------
@@ -554,7 +539,7 @@ LAYOUT_GROUP = 256
 @register(
     "sort_layout_pruning_gain",
     f"""
-    WITH {{HOSTED}},
+    WITH {_HOSTED_CTE_SQL},
     cur AS (
       SELECT host_idx, count(DISTINCT doc_id // {LAYOUT_GROUP}) AS groups_unsorted,
              count(*) AS n_docs
@@ -599,8 +584,6 @@ def sort_layout_pruning_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-div; the gain division keeps a non-negative dividend
     (groups_sorted <= groups_unsorted: a contiguous run can never
     touch more groups than a scattered one of equal size)."""
-    from .text_queries import _host_idx_col
-
     d = _td(spark, sf_dir).select(
         _host_idx_col().alias("host_idx"), "doc_id"
     )
@@ -630,8 +613,3 @@ def sort_layout_pruning_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div greatest(groups_unsorted, 1) AS BIGINT)"
         ).alias("pruning_gain_ppm"),
     )
-
-
-_ORACLES["sort_layout_pruning_gain"] = _ORACLES["sort_layout_pruning_gain"].replace(
-    "{HOSTED}", _HOSTED_CTE_SQL.replace("{cdf}", _cdf_sql_fn())
-)

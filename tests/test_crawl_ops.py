@@ -205,7 +205,7 @@ def test_frontier_rank_window_carries_salt_key(spark):
     assert big_rank_specs and all("salt" in s for s in big_rank_specs), plan[:2000]
 
     got = {(r.doc_id): (r.host, r.fetch_rank, r.slot) for r in df.collect()}
-    from ocr_wrapper_spark.text_queries import POLITENESS_BATCH, _host_idx_col, _host_name_col
+    from ocr_wrapper_spark.text_queries import POLITENESS_BATCH, _host_idx_col, _host_name as _host_name_col
 
     d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     w = Window.partitionBy("host_idx").orderBy("doc_id")

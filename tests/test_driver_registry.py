@@ -48,3 +48,15 @@ def test_every_query_has_oracle():
 
     q, o = m.queries(), m.oracle_sql()
     assert set(q) == set(o), f"oracle-less queries: {set(q) - set(o)}"
+
+
+def test_host_cdf_spliced_once():
+    """Oracles write the host CDF as a `{cdf}` placeholder and
+    oracle_sql() substitutes it: none may leak the placeholder, and the
+    35 host-mapped oracles carry the literal."""
+    import __spark_entry__ as m
+    from ocr_wrapper_spark.sources.pages import _host_cdf_sql
+
+    o = m.oracle_sql()
+    assert [n for n, sql in o.items() if "{cdf}" in sql] == []
+    assert sum(_host_cdf_sql() in sql for sql in o.values()) == 35
