@@ -1,4 +1,4 @@
-"""Per-document extraction pipeline — the kernel behind the main Arrow UDF.
+"""Extraction pipeline — the kernel behind the main Arrow UDF.
 
 Reproduces the reference's single-doc dataflow (OcrWrapper.ocr,
 ocr_wrapper.py:103-175, SURVEY.md §3.1) over page payloads:
@@ -6,11 +6,18 @@ ocr_wrapper.py:103-175, SURVEY.md §3.1) over page payloads:
     sniff doc type -> branch extract -> normalize -> detect & apply
     rotation -> split date-range boxes -> reading-order sort -> assemble
 
-The same function is the pytest oracle and the body of the Spark UDF;
-``EXTRACTORS`` maps each extraction mode to its kernel.
+in two phases over a batch of documents: ``_prepare`` runs everything up
+to the sort for one document and leaves its pages; one
+``order.order_batch`` call then sorts the pages of the whole batch, and
+``_assemble`` puts each document back together. ``extract_documents`` is
+that batch kernel and ``extract_document`` a batch of one; both are the
+pytest oracle and the body of the Spark UDF. ``EXTRACTORS`` maps each
+extraction mode to its batch kernel.
 """
 
 from __future__ import annotations
+
+import time
 
 import numpy as np
 
@@ -40,7 +47,7 @@ def bidi_fix_words(words: list[str], lang: str) -> list[str]:
 class ExtractResult:
     __slots__ = (
         "coords", "texts", "confidences", "rotation", "tilt_angle",
-        "provider", "error", "width", "height",
+        "provider", "error", "width", "height", "extract_ms",
     )
 
     def __init__(self, coords, texts, confidences, rotation, tilt_angle, provider,
@@ -54,6 +61,7 @@ class ExtractResult:
         self.error = error
         self.width = width
         self.height = height
+        self.extract_ms = 0.0
 
     @property
     def extracted_text(self) -> str:
@@ -64,71 +72,46 @@ def _empty(provider: str, error: str | None = None) -> ExtractResult:
     return ExtractResult(bc.empty_boxes(), [], [], 0, 0.0, provider, error)
 
 
-def extract_html(payload: bytes, lang: str) -> ExtractResult:
+def _error(exc: Exception) -> ExtractResult:
+    """Error row, not task failure (SURVEY.md §2.10 D2)."""
+    return _empty("error", f"{type(exc).__name__}: {exc}")
+
+
+class _Pages:
+    """A document after phase 1: its pages as (coords, words, confidences)
+    awaiting reading order."""
+
+    __slots__ = ("pages", "rotation", "provider", "width", "height")
+
+    def __init__(self, pages, rotation, provider, width, height):
+        self.pages = pages
+        self.rotation = rotation
+        self.provider = provider
+        self.width = width
+        self.height = height
+
+
+def _prepare_html(payload: bytes, lang: str):
     """HTML branch: text-density boilerplate strip -> synthesized layout ->
-    normalize -> order -> assemble."""
+    normalize -> date split."""
     main_text = extract_main_text(payload)
     words = main_text.split(" ") if main_text else []
     words = bidi_fix_words(words, lang)
     if not words:
         return _empty("html")
-    rtl = lang in RTL_LANGUAGES
-    coords_px, width, height = layout.layout_words(words, rtl=rtl)
+    coords_px, width, height = layout.layout_words(words, rtl=lang in RTL_LANGUAGES)
     coords = bc.to_normalized(coords_px, width, height)
-    confidences = [HTML_CONFIDENCE] * len(words)
-    coords, words, confidences = clean.split_date_boxes(coords, words, confidences)
-    ordered, tilt, _, _ = order.order_boxes(coords, words, width, height)
-    return ExtractResult(
-        coords[ordered],
-        [words[i] for i in ordered],
-        [confidences[i] for i in ordered],
-        0,
-        tilt,
-        "html",
-        width=width,
-        height=height,
-    )
+    page = clean.split_date_boxes(coords, words, [HTML_CONFIDENCE] * len(words))
+    return _Pages([page], 0, "html", width, height)
 
 
-def extract_pdf(payload: bytes, lang: str) -> ExtractResult:
-    """PDF branch: parse layout quads -> canonicalize -> rotation detect &
-    correct (reference ocr_wrapper.py:146-151) -> date split -> order.
+def _prepare_layout(parsed, lang: str, provider: str):
+    """Layout branches: canonicalize -> rotation detect & correct
+    (reference ocr_wrapper.py:146-151) -> date split, page by page.
 
     Multi-page documents (the reference's pdf2image yields one image per
-    page) are ordered page by page; rotation is detected once across all
-    pages (a scanned document rotates as a whole)."""
-    return _extract_layout(pdf_extract.parse_pdf_payload(payload), lang, "pdf")
-
-
-def extract_json(payload: bytes, lang: str) -> ExtractResult:
-    """JSON-layout branch: third provider dialect (registry breadth —
-    reference autoselect.py:17-27 registers five providers, each with its
-    own response converter, e.g. aws.py:54-56). The converter lives in
-    kernels/json_extract.py; normalize/rotate/date-split/order are shared
-    verbatim with the PDF branch."""
-    return _extract_layout(json_extract.parse_json_payload(payload), lang, "json")
-
-
-def extract_textract(payload: bytes, lang: str) -> ExtractResult:
-    """Textract Blocks-JSON branch: fifth provider dialect (reference
-    AwsOCR converter, aws.py:51-60 — BlockType=="WORD" filter F3 on its
-    native shape, Polygon->quad flatten). Converter in
-    kernels/textract_extract.py; normalize / rotate / date-split / order
-    shared verbatim with the PDF/JSON/hOCR branches."""
-    return _extract_layout(
-        textract_extract.parse_textract_payload(payload), lang, "textract"
-    )
-
-
-def extract_hocr(payload: bytes, lang: str) -> ExtractResult:
-    """hOCR branch: fourth provider dialect (public tesseract-style
-    XHTML microformat; converter in kernels/hocr_extract.py). Integer
-    pixel word boxes, x_wconf percent confidences; normalize / rotate /
-    date-split / order shared verbatim with the PDF/JSON branches."""
-    return _extract_layout(hocr_extract.parse_hocr_payload(payload), lang, "hocr")
-
-
-def _extract_layout(parsed, lang: str, provider: str) -> ExtractResult:
+    page) are split and ordered page by page; rotation is detected once
+    across all pages (a scanned document rotates as a whole)."""
     raw, words, confidences, width, height, doc_lang, page_ids = parsed
     doc_lang = doc_lang or lang
     if raw.shape[0] == 0:
@@ -141,59 +124,146 @@ def _extract_layout(parsed, lang: str, provider: str) -> ExtractResult:
             width, height = height, width
     words = bidi_fix_words(words, doc_lang)
 
-    out_coords: list[np.ndarray] = []
-    out_words: list[str] = []
-    out_conf: list[float] = []
-    tilt = 0.0
-    for p_idx, page in enumerate(np.unique(page_ids)):
+    pages = []
+    for page in np.unique(page_ids):
         sel = np.nonzero(page_ids == page)[0]
-        p_coords = coords[sel]
-        p_words = [words[i] for i in sel]
-        p_conf = [confidences[i] for i in sel]
-        p_coords, p_words, p_conf = clean.split_date_boxes(p_coords, p_words, p_conf)
-        ordered, p_tilt, _, _ = order.order_boxes(p_coords, p_words, width, height)
-        if p_idx == 0:
-            tilt = p_tilt
-        out_coords.append(p_coords[ordered])
-        out_words.extend(p_words[i] for i in ordered)
-        out_conf.extend(p_conf[i] for i in ordered)
-
-    all_coords = np.vstack(out_coords) if out_coords else bc.empty_boxes()
-    return ExtractResult(
-        all_coords,
-        out_words,
-        out_conf,
-        rotation,
-        tilt,
-        provider,
-        width=width,
-        height=height,
-    )
+        pages.append(clean.split_date_boxes(
+            coords[sel], [words[i] for i in sel], [confidences[i] for i in sel]
+        ))
+    return _Pages(pages, rotation, provider, width, height)
 
 
-def extract_dual(payload: bytes | None, lang: str | None, provider_text: str | None) -> ExtractResult:
-    """Dual-provider extraction (GoogleAzureOCR analogue, SURVEY.md §3.2).
+# payload dialects with a word layout of their own, in sniffing order
+# (SURVEY.md §2.10 D1; HTML is the fallback): each converter mirrors one
+# reference provider's response converter (e.g. aws.py:54-60) and returns
+# the same tuple, so normalize / rotate / date-split / order are shared
+_LAYOUT_DIALECTS = (
+    (pdf_extract.is_pdf, pdf_extract.parse_pdf_payload, "pdf"),
+    (json_extract.is_json_layout, json_extract.parse_json_payload, "json"),
+    (textract_extract.is_textract, textract_extract.parse_textract_payload, "textract"),
+    (hocr_extract.is_hocr, hocr_extract.parse_hocr_payload, "hocr"),
+)
 
-    Primary = the regular branch extractor (rotation authority, like
-    Google in the reference); secondary = spans synthesized from the
-    pre-existing provider ``text`` column (enrichment source, like Azure).
-    The combine applies F1/F2 to the primary, J2 anti-join + J4 ordered
-    merge for the secondary, constant confidence 0.9
-    (google_azure_ocr.py:145-208)."""
-    from . import combine as cmb
 
+def _prepare(payload: bytes | None, lang: str | None):
+    """Phase 1 of one document: its ExtractResult when it ends here (null,
+    empty or failing payload), else its _Pages."""
     lang = lang or ""
     if payload is None:
         return _empty("none", "null payload")
     try:
-        primary = extract_document(payload, lang)
-        if primary.error is not None:
-            return primary
+        for sniff, parse, provider in _LAYOUT_DIALECTS:
+            if sniff(payload):
+                return _prepare_layout(parse(payload), lang, provider)
+        return _prepare_html(payload, lang)
+    except Exception as exc:
+        return _error(exc)
 
+
+def _assemble(doc: _Pages, ordered: list) -> ExtractResult:
+    """Phase 3: the document's pages in reading order; the first page's
+    tilt is the document's, and a page that failed to order fails it."""
+    out_coords: list[np.ndarray] = []
+    out_words: list[str] = []
+    out_conf: list[float] = []
+    tilt = 0.0
+    for p_idx, ((coords, words, conf), res) in enumerate(zip(doc.pages, ordered)):
+        if isinstance(res, Exception):
+            return _error(res)
+        idx = res[0]
+        if p_idx == 0:
+            tilt = res[1]
+        out_coords.append(coords[idx])
+        idx = idx.tolist()
+        out_words.extend(words[i] for i in idx)
+        out_conf.extend(conf[i] for i in idx)
+    all_coords = np.vstack(out_coords) if out_coords else bc.empty_boxes()
+    return ExtractResult(all_coords, out_words, out_conf, doc.rotation, tilt, doc.provider,
+                         width=doc.width, height=doc.height)
+
+
+def extract_documents(payloads: list, langs: list) -> list[ExtractResult]:
+    """The batch kernel: phase 1 per document, one reading-order pass over
+    the pages of all of them, then assembly.
+
+    Each result's ``extract_ms`` is its own phase-1 and assembly wall time
+    plus its pages' shares of their chunks' ordering time (shared by box
+    count), so the values of a batch add up to the kernel's wall time."""
+    clock = time.perf_counter
+    docs = []
+    ms = []
+    t_prev = clock()
+    for payload, lang in zip(payloads, langs):
+        docs.append(_prepare(payload, lang))
+        t = clock()
+        ms.append((t - t_prev) * 1000.0)
+        t_prev = t
+    pages = [(c, w, d.width, d.height) for d in docs if isinstance(d, _Pages) for c, w, _ in d.pages]
+    ordered, page_ms = order.order_batch(pages)
+    page_ms = page_ms.tolist()
+
+    out = []
+    k = 0
+    t_prev = clock()
+    for doc, doc_ms in zip(docs, ms):
+        if isinstance(doc, _Pages):
+            n = len(doc.pages)
+            res = _assemble(doc, ordered[k : k + n])
+            doc_ms += sum(page_ms[k : k + n])
+            k += n
+        else:
+            res = doc
+        t = clock()
+        res.extract_ms = doc_ms + (t - t_prev) * 1000.0
+        t_prev = t
+        out.append(res)
+    return out
+
+
+def extract_document(payload: bytes | None, lang: str | None) -> ExtractResult:
+    """One document through the batch kernel: dispatch on sniffed document
+    type (SURVEY.md §2.10 D1); errors are captured per-document into the
+    error field instead of failing the task (D2)."""
+    return extract_documents([payload], [lang])[0]
+
+
+def _then(results: list[ExtractResult], step) -> list[ExtractResult]:
+    """``step(i, result)`` on every result without an error, its wall time
+    added to the document's ``extract_ms``; a step that raises turns its
+    document into an error row."""
+    clock = time.perf_counter
+    out = []
+    for i, res in enumerate(results):
+        if res.error is not None:
+            out.append(res)
+            continue
+        t0 = clock()
+        try:
+            new = step(i, res)
+        except Exception as exc:
+            new = _error(exc)
+        new.extract_ms = res.extract_ms + (clock() - t0) * 1000.0
+        out.append(new)
+    return out
+
+
+def extract_dual_batch(payloads: list, langs: list, provider_texts: list) -> list[ExtractResult]:
+    """Dual-provider extraction (GoogleAzureOCR analogue, SURVEY.md §3.2).
+
+    Primary = the batch kernel's result (rotation authority, like Google
+    in the reference); secondary = spans synthesized from the pre-existing
+    provider ``text`` column (enrichment source, like Azure). The combine
+    applies F1/F2 to the primary, J2 anti-join + J4 ordered merge for the
+    secondary, constant confidence 0.9 (google_azure_ocr.py:145-208)."""
+    from . import combine as cmb
+
+    langs = [lang or "" for lang in langs]
+
+    def combine(i, primary):
+        lang, provider_text = langs[i], provider_texts[i]
         words = (provider_text or "").split(" ") if provider_text else []
         words = bidi_fix_words(words, lang)
-        rtl = lang in RTL_LANGUAGES
-        coords_px, w2, h2 = layout.layout_words(words, rtl=rtl)
+        coords_px, w2, h2 = layout.layout_words(words, rtl=lang in RTL_LANGUAGES)
         coords_s = bc.to_normalized(coords_px, w2, h2) if words else bc.empty_boxes()
 
         width = primary.width or w2
@@ -204,21 +274,17 @@ def extract_dual(payload: bytes | None, lang: str | None, provider_text: str | N
         merged, texts, confidences = cmb.combine_primary_secondary(
             primary.coords, primary.texts, coords_s, words, 0, width, height
         )
-        return ExtractResult(
-            merged,
-            texts,
-            confidences,
-            primary.rotation,
-            primary.tilt_angle,
-            "dual",
-            width=width,
-            height=height,
-        )
-    except Exception as exc:
-        return _empty("error", f"{type(exc).__name__}: {exc}")
+        return ExtractResult(merged, texts, confidences, primary.rotation, primary.tilt_angle,
+                             "dual", width=width, height=height)
+
+    return _then(extract_documents(payloads, langs), combine)
 
 
-def extract_consensus(payload: bytes | None, lang: str | None, n_samples: int = 2) -> ExtractResult:
+def extract_dual(payload: bytes | None, lang: str | None, provider_text: str | None) -> ExtractResult:
+    return extract_dual_batch([payload], [lang], [provider_text])[0]
+
+
+def extract_consensus_batch(payloads: list, langs: list, n_samples: int = 2) -> list[ExtractResult]:
     """Multi-sample consensus extraction (reference ocr_samples=2 default,
     ocr_wrapper.py:69 + aggregate_ocr_samples, SURVEY.md §2.10 D5): run the
     extractor per sample, pool with response ids, pick the
@@ -236,42 +302,32 @@ def extract_consensus(payload: bytes | None, lang: str | None, n_samples: int = 
 
     if n_samples < 1:
         raise ValueError(f"n_samples must be >= 1, got {n_samples}")
-    s1 = extract_document(payload, lang)
-    if s1.error is not None:
-        return s1
-    samples = [(s1.coords, s1.texts, s1.confidences)]
-    for _ in range(n_samples - 1):
-        s = extract_document(payload, lang)
-        samples.append((s.coords, s.texts, s.confidences))
-    coords, texts, conf = cmb.aggregate_samples_n(samples)
-    return ExtractResult(
-        coords, texts, conf, s1.rotation, s1.tilt_angle, "consensus",
-        width=s1.width, height=s1.height,
-    )
+    out = extract_documents(payloads, langs)
+    ok = [i for i, res in enumerate(out) if res.error is None]
+    extra = [
+        extract_documents([payloads[i] for i in ok], [langs[i] for i in ok])
+        for _ in range(n_samples - 1)
+    ]
+    clock = time.perf_counter
+    for j, i in enumerate(ok):
+        t0 = clock()
+        s1 = out[i]
+        samples = [(s1.coords, s1.texts, s1.confidences)]
+        samples += [(s[j].coords, s[j].texts, s[j].confidences) for s in extra]
+        coords, texts, conf = cmb.aggregate_samples_n(samples)
+        res = ExtractResult(coords, texts, conf, s1.rotation, s1.tilt_angle, "consensus",
+                            width=s1.width, height=s1.height)
+        res.extract_ms = (s1.extract_ms + sum(s[j].extract_ms for s in extra)
+                          + (clock() - t0) * 1000.0)
+        out[i] = res
+    return out
 
 
-def extract_document(payload: bytes | None, lang: str | None) -> ExtractResult:
-    """Dispatch on sniffed document type (SURVEY.md §2.10 D1): ``%PDF``
-    magic bytes -> PDF branch, else HTML. Errors are captured per-document
-    into the error field instead of failing the task (D2)."""
-    lang = lang or ""
-    if payload is None:
-        return _empty("none", "null payload")
-    try:
-        if pdf_extract.is_pdf(payload):
-            return extract_pdf(payload, lang)
-        if json_extract.is_json_layout(payload):
-            return extract_json(payload, lang)
-        if textract_extract.is_textract(payload):
-            return extract_textract(payload, lang)
-        if hocr_extract.is_hocr(payload):
-            return extract_hocr(payload, lang)
-        return extract_html(payload, lang)
-    except Exception as exc:  # error row, not task failure (SURVEY.md §2.10 D2)
-        return _empty("error", f"{type(exc).__name__}: {exc}")
+def extract_consensus(payload: bytes | None, lang: str | None, n_samples: int = 2) -> ExtractResult:
+    return extract_consensus_batch([payload], [lang], n_samples)[0]
 
 
-def extract_with_aux(payload: bytes | None, lang: str | None) -> ExtractResult:
+def extract_with_aux_batch(payloads: list, langs: list) -> list[ExtractResult]:
     """Extraction with auxiliary checkbox spans (reference checkbox flow:
     GoogleDocumentOcrCheckboxDetector produces ☑/☐ BBoxes from the page,
     google_azure_ocr.py:176-193 suppresses overlapped words then merges
@@ -287,10 +343,10 @@ def extract_with_aux(payload: bytes | None, lang: str | None) -> ExtractResult:
         detect_codes,
     )
 
-    base = extract_document(payload, lang)
-    if base.error is not None or base.provider != "html":
-        return base
-    try:
+    def merge_aux(i, base):
+        if base.provider != "html":
+            return base
+        payload = payloads[i]
         coords_cb, texts_cb, _ = detect_checkboxes(payload)
         coords_qr, texts_qr, _ = detect_codes(payload, n_checkboxes=len(texts_cb))
         coords_aux = np.vstack([coords_cb, coords_qr])
@@ -311,41 +367,38 @@ def extract_with_aux(payload: bytes | None, lang: str | None) -> ExtractResult:
             else (CODE_CONFIDENCE if t in code_texts else HTML_CONFIDENCE)
             for t in texts
         ]
-        return ExtractResult(
-            merged,
-            texts,
-            confidences,
-            base.rotation,
-            base.tilt_angle,
-            "html+aux",
-            width=width,
-            height=height,
-        )
-    except Exception as exc:
-        return _empty("error", f"{type(exc).__name__}: {exc}")
+        return ExtractResult(merged, texts, confidences, base.rotation, base.tilt_angle,
+                             "html+aux", width=width, height=height)
+
+    return _then(extract_documents(payloads, langs), merge_aux)
 
 
-def _single(payload, lang, text):
-    return extract_document(payload, lang)
+def extract_with_aux(payload: bytes | None, lang: str | None) -> ExtractResult:
+    return extract_with_aux_batch([payload], [lang])[0]
 
 
-def _consensus2(payload, lang, text):
-    return extract_consensus(payload, lang, 2)
+def _single(payloads, langs, texts):
+    return extract_documents(payloads, langs)
 
 
-def _consensus3(payload, lang, text):
-    return extract_consensus(payload, lang, 3)
+def _consensus2(payloads, langs, texts):
+    return extract_consensus_batch(payloads, langs, 2)
 
 
-def _aux(payload, lang, text):
-    return extract_with_aux(payload, lang)
+def _consensus3(payloads, langs, texts):
+    return extract_consensus_batch(payloads, langs, 3)
 
 
-# extraction mode -> kernel; every kernel takes (payload, lang, provider
-# text), and only ``dual`` reads the provider text
+def _aux(payloads, langs, texts):
+    return extract_with_aux_batch(payloads, langs)
+
+
+# extraction mode -> batch kernel; every kernel takes (payloads, langs,
+# provider texts) and returns one ExtractResult per document, and only
+# ``dual`` reads the provider texts
 EXTRACTORS = {
     "single": _single,
-    "dual": extract_dual,
+    "dual": extract_dual_batch,
     "consensus": _consensus2,
     "consensus3": _consensus3,
     "aux": _aux,

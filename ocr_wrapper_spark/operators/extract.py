@@ -1,13 +1,14 @@
 """Extraction operators: the main Arrow UDF chain (SURVEY.md §2.12).
 
 The heavy per-document logic lives in kernels/extract_doc.py; this module
-is only the Arrow plumbing. ``_extract_columns`` is the one per-document
-loop: it runs an extraction kernel (sniff -> branch extract -> normalize
--> rotate -> date-split -> order -> assemble) over one Arrow batch and
-returns the extraction columns as native Arrow arrays, avoiding
-span-array serialization between stages (the reference's §3.1 chain is
-per-doc sequential anyway, so fusing loses no parallelism and saves Arrow
-round trips at 10^12-row scale). Both operators are mapInArrow stages
+is only the Arrow plumbing. ``_extract_columns`` is the one batch loop:
+it runs an extraction kernel (sniff -> branch extract -> normalize ->
+rotate -> date-split -> order -> assemble) once over one Arrow batch, so
+the reading-order sort runs batch-at-a-time, and returns the extraction
+columns as native Arrow arrays, avoiding span-array serialization between
+stages (the reference's §3.1 chain is per-doc sequential anyway, so
+fusing loses no parallelism and saves Arrow round trips at 10^12-row
+scale). Both operators are mapInArrow stages
 over it: ``with_extraction`` reads a pages table, and
 ``extract_documents_fused`` synthesizes the pages from documents in the
 same batch. The extraction mode is resolved to its kernel
@@ -16,8 +17,6 @@ built, so an unknown mode fails before any job runs.
 """
 
 from __future__ import annotations
-
-import time
 
 import numpy as np
 import pandas as pd
@@ -60,8 +59,9 @@ def records_to_arrays(spans: list[dict]) -> tuple[np.ndarray, list[str], list[fl
 
 
 def _extract_columns(kernel, payloads, langs, texts, with_spans: bool = True) -> dict:
-    """One batch of documents -> {field: Arrow array} in EXTRACT_STRUCT
-    order (``spans`` left out when ``with_spans`` is false).
+    """One batch of documents through one call of the batch ``kernel``
+    -> {field: Arrow array} in EXTRACT_STRUCT order (``spans`` left out
+    when ``with_spans`` is false).
 
     Builds the span list<struct> column zero-copy from numpy buffers
     (8 coord children from one concatenated (total_spans, 8) array)
@@ -82,10 +82,8 @@ def _extract_columns(kernel, payloads, langs, texts, with_spans: bool = True) ->
     err_col: list[str | None] = []
     ms_col = np.zeros(n, dtype=np.float64)
 
-    for i, (payload, lang, text) in enumerate(zip(payloads, langs, texts)):
-        t0 = time.perf_counter()
-        res = kernel(payload, lang, text)
-        ms_col[i] = (time.perf_counter() - t0) * 1000.0
+    for i, res in enumerate(kernel(payloads, langs, texts)):
+        ms_col[i] = res.extract_ms
         k = len(res.texts)
         offsets[i + 1] = offsets[i] + k
         if k and with_spans:

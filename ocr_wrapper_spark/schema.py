@@ -66,7 +66,12 @@ CACHE_SCHEMA = T.StructType(
 )
 
 # columns the extraction operator appends: the cached result fields plus
-# the per-document kernel wall time
+# the per-document kernel wall time. The kernel runs batch-at-a-time, so a
+# document's ``extract_ms`` is its own wall time (sniff, parse, normalize,
+# rotate, date split, assembly) plus a share of the reading-order pass over
+# its chunk of pages, in proportion to its box count: the values of one
+# Arrow batch add up to the kernel's wall time on that batch, and a cache
+# hit reports 0.
 EXTRACT_STRUCT = T.StructType(
     [f for f in CACHE_SCHEMA.fields if f.name != "content_hash"]
     + [T.StructField("extract_ms", T.DoubleType(), True)]

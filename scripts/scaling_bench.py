@@ -32,11 +32,13 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the child programs below import this checkout's package
+_ON_PATH = f"import sys; sys.path.insert(0, {ROOT!r})\n"
 
-CHILD = r"""
+CHILD = _ON_PATH + r"""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
 cores, pages_path = sys.argv[1], sys.argv[2]
 from ocr_wrapper_spark.session import get_spark
 from ocr_wrapper_spark.plans.pipeline import run_extraction
@@ -90,9 +92,8 @@ if __name__ == "__main__":
     import time; time.sleep(36000)
 """
 
-CONTROL = r"""
+CONTROL = _ON_PATH + r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 import multiprocessing as mp
 
 def work(args):
@@ -184,8 +185,8 @@ def main() -> None:
     pages_path = materialized_path("/tmp/spark_graft_pages", sf_dir, f"r{replicate}_p256")
     if not os.path.exists(pages_path + "/_SUCCESS"):
         mat = (
-            "import sys; sys.path.insert(0, '/root/repo')\n"
-            "from ocr_wrapper_spark.session import get_spark\n"
+            _ON_PATH
+            + "from ocr_wrapper_spark.session import get_spark\n"
             "from ocr_wrapper_spark.sources.pages import synthesize_pages\n"
             "spark = get_spark(app_name='mat', extra_conf={'spark.ui.showConsoleProgress': 'false'})\n"
             f"synthesize_pages(spark, '{sf_dir}', replicate={replicate}, partitions=256)"
@@ -237,7 +238,7 @@ def main() -> None:
     line = json.dumps(out)
     print(line)
 
-    bench_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH")
+    bench_dir = os.path.join(ROOT, "BENCH")
     path = os.path.join(bench_dir, "BENCH_SCALING.json")
     hist_path = os.path.join(bench_dir, "BENCH_SCALING_HISTORY.jsonl")
     try:

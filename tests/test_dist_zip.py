@@ -6,7 +6,7 @@ from __future__ import annotations
 import pathlib
 import zipfile
 
-REPO = pathlib.Path("/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
 
 
 def test_pyfiles_zip_matches_source():
