@@ -1,1 +1,2 @@
-"""Column-level helper expressions (pure JVM built-ins)."""
+"""Column-level helper expressions (pure JVM built-ins), plus the
+stage-level span pandas UDFs in ``spans``."""

@@ -19,15 +19,13 @@ built, so an unknown mode fails before any job runs.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernels import bbox_core as bc
 from ..kernels.extract_doc import EXTRACTORS
-from ..schema import COORD_FIELDS, EXTRACT_STRUCT, SPAN_COLUMNS, SPANS_ARRAY
+from ..schema import EXTRACT_STRUCT, SPAN_COLUMNS
 
 
 class InvalidExtractorException(ValueError):
@@ -42,20 +40,6 @@ def _kernel(mode: str):
             f"Unknown extraction mode {mode!r}; valid: {sorted(EXTRACTORS)}"
         )
     return kernel
-
-
-def records_to_arrays(spans: list[dict]) -> tuple[np.ndarray, list[str], list[float]]:
-    """Span-struct dicts -> (coords (n,8), texts, confidences)."""
-    n = len(spans)
-    coords = np.empty((n, 8), dtype=np.float64)
-    texts: list[str] = []
-    confs: list[float] = []
-    for i, s in enumerate(spans):
-        for j, c in enumerate(COORD_FIELDS):
-            coords[i, j] = s[c]
-        texts.append(s["text"])
-        confs.append(s["confidence"] if s["confidence"] is not None else 0.0)
-    return coords, texts, confs
 
 
 def _extract_columns(kernel, payloads, langs, texts, with_spans: bool = True) -> dict:
@@ -218,49 +202,6 @@ def with_extraction(df, html_col: str = "html", lang_col: str = "lang", keep_pay
     return df.mapInArrow(op, schema=out_schema)
 
 
-# ---------------------------------------------------------------------------
-# stage-level UDFs (exposed for the combiner, tests, and API parity with the
-# reference's composable post-processing; same kernels, smaller scopes)
-# ---------------------------------------------------------------------------
-
-
-@F.pandas_udf(SPANS_ARRAY)
-def normalize_spans_udf(spans: pd.Series, width: pd.Series, height: pd.Series) -> pd.Series:
-    """§1.4 canonicalization + to_normalized per span array."""
-    out = []
-    for recs, w, h in zip(spans.tolist(), width.tolist(), height.tolist()):
-        if recs is None or len(recs) == 0:
-            out.append([])
-            continue
-        coords, texts, confs = records_to_arrays(recs)
-        coords = bc.to_normalized(coords, int(w), int(h))
-        res = []
-        for i, row in enumerate(coords.tolist()):
-            rec = dict(zip(COORD_FIELDS, row))
-            rec["in_pixels"] = False
-            rec["text"] = texts[i]
-            rec["label"] = recs[i].get("label")
-            rec["confidence"] = confs[i]
-            res.append(rec)
-        out.append(res)
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.ArrayType(T.IntegerType()))
-def order_spans_udf(spans: pd.Series, width: pd.Series, height: pd.Series) -> pd.Series:
-    """Reading-order index array per document (O1)."""
-    from ..kernels.order import reading_order_indices
-
-    out = []
-    for recs, w, h in zip(spans.tolist(), width.tolist(), height.tolist()):
-        if recs is None or len(recs) == 0:
-            out.append([])
-            continue
-        coords, texts, _ = records_to_arrays(recs)
-        out.append([int(i) for i in reading_order_indices(coords, texts, int(w), int(h))])
-    return pd.Series(out)
-
-
 def extract_documents_fused(spark, sf_dir: str, mode: str = "single", docs_filter=None):
     """documents.parquet -> extraction results in ONE Python stage:
     page synthesis (test scaffolding) and extraction run in the same
@@ -276,8 +217,6 @@ def extract_documents_fused(spark, sf_dir: str, mode: str = "single", docs_filte
     """
     import pyarrow as pa
 
-    from ..sources.pages import build_page_rows
-
     kernel = _kernel(mode)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if docs_filter is not None:
@@ -292,6 +231,10 @@ def extract_documents_fused(spark, sf_dir: str, mode: str = "single", docs_filte
     out_names = out_schema.fieldNames()
 
     def op(batches):
+        # page synthesis is pandas: imported here, in the worker, so that
+        # importing this module stays pandas-free
+        from ..sources.pages import build_page_rows
+
         for batch in batches:
             pages = build_page_rows(batch.to_pandas())
             cols = _extract_columns(
@@ -302,41 +245,6 @@ def extract_documents_fused(spark, sf_dir: str, mode: str = "single", docs_filte
             yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
     return docs.mapInArrow(op, schema=out_schema)
-
-
-@F.pandas_udf(SPANS_ARRAY)
-def postprocess_spans_udf(spans: pd.Series, width: pd.Series, height: pd.Series) -> pd.Series:
-    """Stage-level post-processing over a spans column (SURVEY.md §2.12
-    UDF #4): the primary-provider filters first (F1 vertical-box + F2
-    date-run, reference google_azure_ocr.py:406-440), then the date-range
-    split (C1) — the reference's order: filters clean the raw provider
-    boxes, the split then produces the canonical [date, "-", date]
-    triple (running F2 after C1 would delete what C1 just built).
-    Composable with normalize_spans_udf / order_spans_udf."""
-    from ..kernels import clean
-
-    out = []
-    for recs, w, h in zip(spans.tolist(), width.tolist(), height.tolist()):
-        if recs is None or len(recs) == 0:
-            out.append([])
-            continue
-        coords, texts, confs = records_to_arrays(recs)
-        wh_ratio = (int(w) / int(h)) if int(h) else 1.0
-        f_coords, f_texts = clean.filter_unwanted_boxes(coords, texts, wh_ratio)
-        conf_by_key = {(tuple(coords[i]), texts[i]): confs[i] for i in range(len(texts))}
-        f_confs = [conf_by_key.get((tuple(f_coords[i]), f_texts[i]), 0.0) for i in range(len(f_texts))]
-        kept_coords, kept_texts, kept_confs = clean.split_date_boxes(f_coords, f_texts, f_confs)
-        conf_map = {(tuple(kept_coords[i]), kept_texts[i]): kept_confs[i] for i in range(len(kept_texts))}
-        res = []
-        for i, row in enumerate(kept_coords.tolist()):
-            rec = dict(zip(COORD_FIELDS, row))
-            rec["in_pixels"] = False
-            rec["text"] = kept_texts[i]
-            rec["label"] = None
-            rec["confidence"] = conf_map.get((tuple(kept_coords[i]), kept_texts[i]), 0.0)
-            res.append(rec)
-        out.append(res)
-    return pd.Series(out)
 
 
 def assemble_text_col(spans_col: Column) -> Column:

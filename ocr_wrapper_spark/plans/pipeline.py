@@ -16,7 +16,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import CACHE_SCHEMA, EXTRACT_STRUCT, RESULT_SCHEMA
+from ..schema import EXTRACT_STRUCT, RESULT_SCHEMA
 from ..sources import cache as cache_tbl
 from ..sources import metrics as metrics_tbl
 from . import partitioning
@@ -41,6 +41,11 @@ def run_extraction(
     The returned frame is safe to write or aggregate further; when cache
     and metrics paths are set the function materializes once and reuses
     the result so extraction runs exactly once per miss.
+
+    The cache append writes one row per missed url, without a dedup
+    shuffle: content shared by two urls of one crawl lands twice in that
+    snapshot. ``cache.read_cache_or_none`` dedups on ``content_hash``, so
+    a later run still joins each page to one cached row.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
 
@@ -82,11 +87,8 @@ def run_extraction(
         result = result.localCheckpoint(eager=True)
 
         if cache_path:
-            new_entries = (
-                result.filter(~F.col("is_hit"))
-                .select([f.name for f in CACHE_SCHEMA.fields])
-                .dropDuplicates(["content_hash"])
-            )
+            # no dedup shuffle here: read_cache_or_none dedups on the hash
+            new_entries = result.filter(~F.col("is_hit"))
             cache_tbl.append_cache(new_entries, cache_path)
 
         if metrics_path:

@@ -9,6 +9,7 @@ Arrow enabled with a small max batch size because rows carry large
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -23,6 +24,36 @@ def _default_driver_mem() -> str:
     return f"{min(phys // 2, 16 * 1024**3) // 1024**2}m"
 
 
+DAEMON_MODULE = "ocr_wrapper_spark.worker_daemon"
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?$")
+
+
+def worker_daemon_conf(
+    master: str, extra_conf: dict[str, str] | None = None, package_file: str = __file__
+) -> dict[str, str]:
+    """The conf that runs Python workers under ``worker_daemon`` (see its
+    docstring), or {} for PySpark's stock daemon.
+
+    Only for a ``local[...]`` master whose workers can import this package
+    from the plain directory it was imported from here (not from a
+    ``--py-files`` zip): that directory goes on the workers' PYTHONPATH.
+    A caller who sets the daemon module or the workers' PYTHONPATH keeps
+    the stock daemon, or their own."""
+    pkg_dir = os.path.dirname(os.path.abspath(package_file))
+    extra = extra_conf or {}
+    if (
+        not _LOCAL_MASTER.match(master)
+        or "spark.python.daemon.module" in extra
+        or "spark.executorEnv.PYTHONPATH" in extra
+        or not os.path.isfile(os.path.join(pkg_dir, "worker_daemon.py"))
+    ):
+        return {}
+    return {
+        "spark.python.daemon.module": DAEMON_MODULE,
+        "spark.executorEnv.PYTHONPATH": os.path.dirname(pkg_dir),
+    }
+
+
 def get_spark(
     app_name: str = "ocr_wrapper_spark",
     master: str | None = None,
@@ -35,6 +66,8 @@ def get_spark(
     host's core count); the driver heap to ``$SPARK_GRAFT_DRIVER_MEM``
     (env, default half the host's physical memory, at most 16g). On a
     real cluster the caller passes no master and spark-submit decides.
+    A local session runs its Python workers under ``worker_daemon``
+    (``worker_daemon_conf``).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
@@ -69,7 +102,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**worker_daemon_conf(master, extra_conf), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -9,8 +9,10 @@ Semantics adopted from the GoogleAzure variant: the cache stores the
 Storage is an append-only parquet directory (each append writes a new
 snapshot subdir, mirroring Iceberg's append-file semantics without the
 catalog; on a real cluster this maps 1:1 onto
-``df.writeTo(tbl).append()``). Reads dedupe on content_hash so concurrent
-appends of the same document stay idempotent.
+``df.writeTo(tbl).append()``). Appends are not deduped: a run appends
+one row per missed url, so content shared by two urls of one crawl is
+stored twice, and concurrent runs can append the same hash. Reads dedupe
+on content_hash, the one place that keeps the cache 1:1 per hash.
 """
 
 from __future__ import annotations
@@ -33,7 +35,8 @@ def read_cache_or_none(spark: SparkSession, path: str | None) -> DataFrame | Non
         name.startswith("snap-") for name in os.listdir(path)
     ):
         df = spark.read.schema(CACHE_SCHEMA).parquet(f"{path}/snap-*")
-        # last writer wins per hash; results are deterministic so any row is
+        # appends keep duplicates (same content at two urls, concurrent
+        # runs); results are deterministic so any row of a hash is
         # equivalent — dropDuplicates keeps the join 1:1
         return df.dropDuplicates([CACHE_KEY])
     return None

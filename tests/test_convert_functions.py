@@ -91,12 +91,12 @@ def test_labelstudio_import_clips(spark):
 def test_stage_udfs_compose(spark):
     """normalize -> postprocess -> order -> assemble as separate column
     stages (the reference's composable post-processing surface)."""
-    from ocr_wrapper_spark.operators.extract import (
-        assemble_text_col,
+    from ocr_wrapper_spark.functions.spans import (
         normalize_spans_udf,
         order_spans_udf,
         postprocess_spans_udf,
     )
+    from ocr_wrapper_spark.operators.extract import assemble_text_col
     from ocr_wrapper_spark.kernels import layout, bbox_core as bc
     from ocr_wrapper_spark.schema import SPANS_ARRAY
     from pyspark.sql import types as T

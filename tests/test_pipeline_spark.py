@@ -76,6 +76,37 @@ def test_cache_roundtrip(spark, pages, tmp_path):
     assert t1 == t2
 
 
+def test_cache_content_shared_by_two_urls(spark, pages, tmp_path):
+    """Two urls with identical html in one crawl: the append keeps a row
+    for each, the reader dedups to one row per hash, and a rerun hits
+    both urls with exactly one result row each."""
+    from ocr_wrapper_spark.sources.cache import read_cache_or_none
+
+    cache_path = str(tmp_path / "cache")
+    head = pages.orderBy("url").limit(3)
+    twin = head.orderBy("url").limit(1).withColumn("url", F.concat("url", F.lit("?twin")))
+    crawl = head.unionByName(twin)
+    urls = sorted(r.url for r in crawl.select("url").collect())
+    assert len(urls) == 4
+
+    r1 = run_extraction(spark, crawl, cache_path=cache_path, run_id="twinA")
+    rows1 = r1.select("url", "is_hit", "extracted_text").collect()
+    assert sorted(r.url for r in rows1) == urls
+    assert not any(r.is_hit for r in rows1)
+
+    assert spark.read.parquet(f"{cache_path}/snap-*").count() == 4
+    cache = read_cache_or_none(spark, cache_path)
+    per_hash = cache.groupBy("content_hash").count().collect()
+    assert len(per_hash) == 3
+    assert all(r["count"] == 1 for r in per_hash)
+
+    r2 = run_extraction(spark, crawl, cache_path=cache_path, run_id="twinB")
+    rows2 = r2.select("url", "is_hit", "extracted_text").collect()
+    assert sorted(r.url for r in rows2) == urls
+    assert all(r.is_hit for r in rows2)
+    assert {r.url: r.extracted_text for r in rows2} == {r.url: r.extracted_text for r in rows1}
+
+
 def test_metrics_and_resume(spark, pages, tmp_path):
     metrics_path = str(tmp_path / "metrics")
     run_extraction(spark, pages, metrics_path=metrics_path, run_id="runX")
