@@ -3078,11 +3078,12 @@ _NEYMAN_ORACLE = f"""
                   // greatest(wsum, 1) AS BIGINT) AS base,
              CAST(CAST(budget AS HUGEINT) * weight
                   % greatest(wsum, 1) AS HUGEINT) AS frac,
-             budget
+             budget, wsum
       FROM w CROSS JOIN tot),
     r AS (
       SELECT *, row_number() OVER (ORDER BY frac DESC, source, lang) AS rk,
-             budget - sum(base) OVER () AS leftover
+             CASE WHEN wsum = 0 THEN 0
+                  ELSE budget - sum(base) OVER () END AS leftover
       FROM q)
     SELECT source, lang, n_docs, tokens, CAST(weight AS BIGINT) AS weight,
            CAST(base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT)
@@ -3119,7 +3120,9 @@ def neyman_sample_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     source_mix_apportionment, applied to Neyman weights). Zero-variance
     strata get weight 0 and alloc 0 (pure Neyman; the min-1-per-stratum
     practical patch is a trivial post-step), and alloc_capped floors
-    the allocation at stratum size.
+    the allocation at stratum size. When every stratum has zero variance
+    there is no weight to apportion by: every stratum gets 0, and the
+    shares sum to 0 instead of the budget.
 
     Scale shape at 10^12 docs: one (source, lang)-keyed aggregation
     with map-side combine (the ONLY corpus pass — count/sum/sum-of-
@@ -3173,6 +3176,7 @@ def neyman_sample_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(budget AS DECIMAL(38,0)) * weight % greatest(wsum, 1)"
         ).alias("frac"),
         "budget",
+        "wsum",
     )
     # tiny-table windows (|sources| x |langs| rows), same as the
     # apportionment family
@@ -3188,7 +3192,10 @@ def neyman_sample_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "weight",
         "base",
         F.row_number().over(rk_w).alias("rk"),
-        (F.col("budget") - F.sum("base").over(all_w)).alias("leftover"),
+        # no weight to apportion by: no leftover seats either
+        F.when(F.col("wsum") == 0, 0)
+        .otherwise(F.col("budget") - F.sum("base").over(all_w))
+        .alias("leftover"),
     )
     alloc = F.col("base") + F.when(F.col("rk") <= F.col("leftover"), 1).otherwise(0)
     return r.select(

@@ -66,20 +66,28 @@ def canonicalize(coords: np.ndarray, in_pixels: bool, validate: bool = True) -> 
     if validate and not in_pixels:
         validate_relative(coords)
 
-    # fast path: boxes already strictly canonical (left pair strictly left
-    # of right pair, tops strictly above bottoms) are fixed points of the
-    # corner sort and cannot have collapsed edges — the sort/expansion is
-    # the identity on them. Strict inequalities rule out tie-order effects.
-    if (
-        (coords[:, TLX] < coords[:, TRX]).all()
-        and (coords[:, BLX] < coords[:, BRX]).all()
-        and (coords[:, TLX] < coords[:, BRX]).all()
-        and (coords[:, BLX] < coords[:, TRX]).all()
-        and (coords[:, TLY] < coords[:, BLY]).all()
-        and (coords[:, TRY] < coords[:, BRY]).all()
-    ):
+    # boxes already strictly canonical (left pair strictly left of right
+    # pair, tops strictly above bottoms) are fixed points of the corner
+    # sort and cannot have collapsed edges: the sort/expansion is the
+    # identity on them, so it runs on the other rows only. Strict
+    # inequalities rule out tie-order effects; NaN rows are never canonical.
+    ok = (
+        (coords[:, TLX] < coords[:, TRX])
+        & (coords[:, BLX] < coords[:, BRX])
+        & (coords[:, TLX] < coords[:, BRX])
+        & (coords[:, BLX] < coords[:, TRX])
+        & (coords[:, TLY] < coords[:, BLY])
+        & (coords[:, TRY] < coords[:, BRY])
+    )
+    if ok.all():
         return coords  # np.maximum above already made a fresh array
+    rows = np.flatnonzero(~ok)
+    coords[rows] = _sort_corners(coords[rows], EXPAND_PIXELS if in_pixels else EXPAND_RELATIVE)
+    return coords
 
+
+def _sort_corners(coords: np.ndarray, eps: float) -> np.ndarray:
+    """Corner reassignment and collapsed-edge expansion, row by row."""
     # points stacked in the reference's pointlist order [TL, TR, BR, BL]
     # (bbox.py:174-180) so stable-sort tie-breaking matches list.sort().
     pts = coords.reshape(-1, 4, 2)  # (n, 4, 2) already TL,TR,BR,BL order
@@ -99,7 +107,6 @@ def canonicalize(coords: np.ndarray, in_pixels: bool, validate: bool = True) -> 
     out[:, BRX], out[:, BRY] = right[:, 1, 0], right[:, 1, 1]
 
     # expand collapsed edges, same pair order as the reference
-    eps = EXPAND_PIXELS if in_pixels else EXPAND_RELATIVE
     for a, b in ((TLX, TRX), (BLX, BRX), (TLY, BLY), (TRY, BRY)):
         eq = out[:, a] == out[:, b]
         out[eq, b] = out[eq, a] + eps

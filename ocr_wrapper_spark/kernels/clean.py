@@ -47,39 +47,47 @@ def split_date_boxes(
     conf = list(confidences) if had_conf else [0.0] * n
     if had_conf and len(conf) != n:
         raise ValueError("The length of the bboxes and confidences lists must be equal.")
-
-    is_range = np.zeros(n, dtype=bool)
-    for i, t in enumerate(texts):
-        if t is not None and DATE_RANGE_PATTERN.match(t):
-            is_range[i] = True
-
-    if not is_range.any():
+    new_coords, new_texts, counts = split_date_rows(coords, texts)
+    if counts is None:
         return coords.copy(), list(texts), (conf if had_conf else None)
+    out_conf = [c for c, k in zip(conf, counts.tolist()) for _ in range(k)]
+    return new_coords, new_texts, (out_conf if had_conf else None)
+
+
+def split_date_rows(coords: np.ndarray, texts: list):
+    """``split_date_boxes`` over a table of boxes from any number of pages:
+    each box whose text is a date range becomes three rows in its place,
+    the others stay as they are (the split is row by row).
+
+    Returns (coords, texts, counts): counts[i] is the number of rows box i
+    became (1 or 3), or None when no text is a date range, in which case
+    ``coords`` and ``texts`` are returned themselves."""
+    # every date range holds exactly one '-', a cheap test before the regex
+    hits = [
+        i for i, t in enumerate(texts)
+        if t is not None and "-" in t and DATE_RANGE_PATTERN.match(t)
+    ]
+    if not hits:
+        return coords, texts, None
 
     # vectorized two-stage split of all matching boxes at once
-    rng = coords[is_range]
-    b1, b2 = bc.split(rng, DATE_SPLIT_RATIO_MAIN)
+    b1, b2 = bc.split(coords[hits], DATE_SPLIT_RATIO_MAIN)
     b1_2, b2_2 = bc.split(b2, DATE_SPLIT_RATIO_DASH)
+    counts = np.ones(coords.shape[0], dtype=np.int64)
+    counts[hits] = 3
+    out = np.repeat(coords, counts, axis=0)
+    first = (np.cumsum(counts) - counts)[hits]
+    out[first], out[first + 1], out[first + 2] = b1, b1_2, b2_2
 
-    out_coords: list[np.ndarray] = []
     out_texts: list[str] = []
-    out_conf: list[float] = []
-    k = 0
-    for i in range(n):
-        if is_range[i]:
-            date1, date2 = texts[i].split("-")
-            date1, date2 = date1.strip(), date2.strip()
-            out_coords.extend([b1[k], b1_2[k], b2_2[k]])
-            out_texts.extend([date1, "-", date2])
-            out_conf.extend([conf[i]] * 3)
-            k += 1
-        else:
-            out_coords.append(coords[i])
-            out_texts.append(texts[i])
-            out_conf.append(conf[i])
-
-    new_coords = np.vstack(out_coords) if out_coords else bc.empty_boxes()
-    return new_coords, out_texts, (out_conf if had_conf else None)
+    prev = 0
+    for i in hits:
+        date1, date2 = texts[i].split("-")
+        out_texts.extend(texts[prev:i])
+        out_texts.extend((date1.strip(), "-", date2.strip()))
+        prev = i + 1
+    out_texts.extend(texts[prev:])
+    return out, out_texts, counts
 
 
 def box_height(coords: np.ndarray) -> np.ndarray:

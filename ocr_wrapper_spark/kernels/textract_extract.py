@@ -29,9 +29,9 @@ The converter returns the exact tuple shape of
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
+
+from .json_extract import decode_with
 
 TEXTRACT_MAGIC = b'{"DocumentMetadata"'
 
@@ -48,25 +48,33 @@ def parse_textract_payload(payload: bytes):
     4-vertex Polygon are dropped like the JSON dialect's malformed
     spans. Confidences are percent (aws Confidence field), scaled to
     [0, 1]."""
-    doc = json.loads(payload.decode("utf-8", errors="replace"))
+    return decode_with(payload, _convert)
+
+
+def _convert(doc, text):
     size = doc.get("ImageSize") or {}
     width = int(size.get("Width") or 1224)
     height = int(size.get("Height") or 1584)
-    lang = str(doc.get("Lang") or "")
+    lang = text(doc.get("Lang") or "")
     quads: list[list[float]] = []
     words: list[str] = []
     confs: list[float] = []
     pages: list[int] = []
-    for block in doc.get("Blocks") or []:
+    blocks = doc.get("Blocks") or []
+    # containers: the document, its image size, the blocks list and blocks,
+    # and of each WORD block kept its geometry, polygon and four vertices
+    visited = 1 + bool(size) + bool(blocks) + len(blocks)
+    for block in blocks:
         if block.get("BlockType") != "WORD":  # F3 on its native shape
             continue
         poly = (block.get("Geometry") or {}).get("Polygon")
-        text = block.get("Text")
-        if poly is None or text is None or len(poly) != 4:
+        t = block.get("Text")
+        if poly is None or t is None or len(poly) != 4:
             continue
         quads.append([c for v in poly for c in (v["X"], v["Y"])])  # aws.py:57
-        words.append(str(text))
+        words.append(text(t))
         confs.append(float(block.get("Confidence") or 0.0) / 100.0)
         pages.append(int(block.get("Page") or 1) - 1)
     coords = np.asarray(quads, dtype=np.float64).reshape(-1, 8)
-    return coords, words, confs, width, height, lang, np.asarray(pages, dtype=np.int64)
+    visited += 6 * len(quads)
+    return (coords, words, confs, width, height, lang, np.asarray(pages, dtype=np.int64)), visited

@@ -48,54 +48,45 @@ def _extract_columns(kernel, payloads, langs, texts, with_spans: bool = True) ->
     when ``with_spans`` is false).
 
     Builds the span list<struct> column zero-copy from numpy buffers
-    (8 coord children from one concatenated (total_spans, 8) array)
-    instead of per-span Python dicts — this is the serialization hot
-    path at 10^12 rows."""
+    (8 coord children of the kernel's (total_spans, 8) span table,
+    ``Extracted.spans``) instead of per-span Python dicts — this is the
+    serialization hot path at 10^12 rows."""
     import pyarrow as pa
 
-    n = len(payloads)
-    coord_blocks: list[np.ndarray] = []
-    flat_texts: list[str] = []
-    flat_conf: list[float] = []
+    results = kernel(payloads, langs, texts)
+    n = len(results)
     offsets = np.zeros(n + 1, dtype=np.int32)
     text_col: list[str] = []
     rot_col = np.zeros(n, dtype=np.int32)
     tilt_col = np.zeros(n, dtype=np.float64)
-    nsp_col = np.zeros(n, dtype=np.int32)
     prov_col: list[str] = []
     err_col: list[str | None] = []
     ms_col = np.zeros(n, dtype=np.float64)
-
-    for i, res in enumerate(kernel(payloads, langs, texts)):
+    for i, res in enumerate(results):
         ms_col[i] = res.extract_ms
-        k = len(res.texts)
-        offsets[i + 1] = offsets[i] + k
-        if k and with_spans:
-            coord_blocks.append(res.coords)
-            flat_texts.extend(res.texts)
-            flat_conf.extend(res.confidences)
+        offsets[i + 1] = offsets[i] + len(res.texts)
         text_col.append(res.extracted_text)
         rot_col[i] = res.rotation
         tilt_col[i] = res.tilt_angle
-        nsp_col[i] = k
         prov_col.append(res.provider)
         err_col.append(res.error)
 
     cols = {}
     if with_spans:
+        # the batch's spans end to end, in document order: one table
+        coords, flat_texts, flat_conf = results.spans
         total = int(offsets[-1])
-        coords = np.vstack(coord_blocks) if coord_blocks else np.zeros((0, 8))
         children = [pa.array(np.ascontiguousarray(coords[:, j])) for j in range(8)]
         children.append(pa.array(np.zeros(total, dtype=bool)))  # in_pixels
         children.append(pa.array(flat_texts, type=pa.string()))
         children.append(pa.nulls(total, pa.string()))  # label
-        children.append(pa.array(np.asarray(flat_conf, dtype=np.float64)))
+        children.append(pa.array(flat_conf))
         span_struct = pa.StructArray.from_arrays(children, names=SPAN_COLUMNS)
         cols["spans"] = pa.ListArray.from_arrays(pa.array(offsets), span_struct)
     cols["extracted_text"] = pa.array(text_col, type=pa.string())
     cols["doc_rotation"] = pa.array(rot_col)
     cols["tilt_angle"] = pa.array(tilt_col)
-    cols["n_spans"] = pa.array(nsp_col)
+    cols["n_spans"] = pa.array(np.diff(offsets))
     cols["provider"] = pa.array(prov_col, type=pa.string())
     cols["error"] = pa.array(err_col, type=pa.string())
     cols["extract_ms"] = pa.array(ms_col)

@@ -83,8 +83,10 @@ def run_extraction(
     if cache_path or metrics_path:
         # materialize once so cache append + metrics + the returned frame
         # share a single extraction pass (on a cluster: write the results
-        # table and read it back; localCheckpoint is the local-mode analogue)
-        result = result.localCheckpoint(eager=True)
+        # table and read it back; localCheckpoint is the local-mode analogue).
+        # Lazily: the first side-table write computes and checkpoints the
+        # result, instead of a count job of its own before it
+        result = result.localCheckpoint(eager=False)
 
         if cache_path:
             # no dedup shuffle here: read_cache_or_none dedups on the hash

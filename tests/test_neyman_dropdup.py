@@ -34,7 +34,8 @@ def _neyman_replica(rows):
     budget = sum(n for n, _, _ in stats.values()) // NEYMAN_DIV
     base = {k: budget * w // wsum for k, (_, _, w) in stats.items()}
     frac = {k: budget * w % wsum for k, (_, _, w) in stats.items()}
-    leftover = budget - sum(base.values())
+    # all-zero weights: nothing to apportion by, so no leftover seats
+    leftover = budget - sum(base.values()) if any(w for _, _, w in stats.values()) else 0
     ranked = sorted(stats, key=lambda k: (-frac[k], k))
     out = {}
     for i, k in enumerate(ranked):
@@ -86,6 +87,26 @@ def test_neyman_budget_follows_variance(spark, tmp_path):
     # weight = isqrt(N*sum(x^2) - sum(x)^2) computed from the plant
     xs = [98 + 1 if i % 2 else 1 for i in range(50)]
     assert got["noisy"].weight == math.isqrt(50 * sum(x * x for x in xs) - sum(xs) ** 2)
+
+
+def test_neyman_all_zero_variance_allocates_nothing(spark, tmp_path):
+    """Every stratum constant: every weight is 0, so there is no weight to
+    apportion the budget by, and no stratum gets a seat (none from the
+    largest-remainder leftover either)."""
+    from ocr_wrapper_spark.curation_queries import neyman_sample_alloc
+
+    rows = [(i, " ".join(["w"] * (5 if i < 40 else 7)), "en", "a" if i < 40 else "b")
+            for i in range(100)]
+    pdf = pd.DataFrame(rows, columns=["doc_id", "text", "lang", "source"])
+    pdf["n_chars"] = pdf["text"].str.len()
+    pdf.to_parquet(tmp_path / "documents.parquet")
+    got = neyman_sample_alloc(spark, str(tmp_path)).collect()
+    assert sorted((r.source, r.weight, r.alloc_docs, r.alloc_capped) for r in got) == [
+        ("a", 0, 0, 0), ("b", 0, 0, 0)
+    ]
+    expect = _neyman_replica([(source, lang, text) for _, text, lang, source in rows])
+    assert {(r.source, r.lang): (r.n_docs, r.tokens, r.weight, r.alloc_docs, r.alloc_capped)
+            for r in got} == expect
 
 
 def test_isqrt_expression_exact(spark):

@@ -147,3 +147,28 @@ def test_results_parquet_roundtrip(spark, pages, tmp_path):
         .collect()
     }
     assert confs <= {0.9, 0.95, 0.97, 0.96, 0.93}  # html/pdf/json/hocr/textract dialect confidences
+
+
+def test_side_tables_materialize_the_result_once(spark, pages, tmp_path):
+    """With both side tables, the cache append is the job that computes
+    and checkpoints the result: no standalone checkpoint count job, and
+    the returned frame reads the checkpoint, so extraction runs once per
+    miss."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("side_tables", "run_extraction with cache and metrics")
+    try:
+        result = run_extraction(spark, pages, cache_path=str(tmp_path / "cache"),
+                                metrics_path=str(tmp_path / "metrics"), run_id="once")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    stage_names = [
+        tracker.getStageInfo(s).name
+        for j in tracker.getJobIdsForGroup("side_tables")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    # the cache snapshot write, the metrics aggregate and the metrics write
+    assert len(tracker.getJobIdsForGroup("side_tables")) == 3
+    assert not [n for n in stage_names if n.startswith("localCheckpoint")]
+    assert "MapInArrow" not in result._jdf.queryExecution().executedPlan().toString()
+    assert result.count() == pages.count()
