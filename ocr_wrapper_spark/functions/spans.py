@@ -60,7 +60,7 @@ def normalize_spans_udf(spans: pd.Series, width: pd.Series, height: pd.Series) -
 @F.pandas_udf(T.ArrayType(T.IntegerType()))
 def order_spans_udf(spans: pd.Series, width: pd.Series, height: pd.Series) -> pd.Series:
     """Reading-order index array per document (O1)."""
-    from ..kernels.order import reading_order_indices
+    from ..kernels.order import order_boxes
 
     out = []
     for recs, w, h in zip(spans.tolist(), width.tolist(), height.tolist()):
@@ -68,7 +68,7 @@ def order_spans_udf(spans: pd.Series, width: pd.Series, height: pd.Series) -> pd
             out.append([])
             continue
         coords, texts, _ = records_to_arrays(recs)
-        out.append([int(i) for i in reading_order_indices(coords, texts, int(w), int(h))])
+        out.append([int(i) for i in order_boxes(coords, texts, int(w), int(h))[0]])
     return pd.Series(out)
 
 

@@ -211,7 +211,7 @@ def merge_span_lists(
     """Ordered merge of two span lists (reference
     merge_bbox_lists_with_confidences, bbox_utils.py:202-234): A keeps its
     order, B slots in according to a global reading-order sort of A+B."""
-    from .order import reading_order_indices
+    from .order import order_boxes
 
     na, nb = coords_a.shape[0], coords_b.shape[0]
     idx_a = list(range(na))
@@ -219,6 +219,6 @@ def merge_span_lists(
     merged = np.vstack([coords_a, coords_b]) if na + nb else bc.empty_boxes()
     merged_texts = list(texts_a) + list(texts_b)
     merged_conf = list(conf_a) + list(conf_b)
-    sorted_idx = reading_order_indices(merged, merged_texts, document_width, document_height).tolist()
+    sorted_idx = order_boxes(merged, merged_texts, document_width, document_height)[0].tolist()
     final = merge_idx_lists(idx_a, idx_b, sorted_idx)
     return merged[final], [merged_texts[i] for i in final], [merged_conf[i] for i in final]

@@ -3,13 +3,15 @@
 Reproduces, per document:
 
 * the GoogleAzure combiner flow (reference google_azure_ocr.py:83-219,
-  SURVEY.md §3.2): rotate secondary by primary's rotation -> date-split
-  secondary -> F1/F2 filter primary -> anti-join secondary vs primary by
-  overlap (J2) -> ordered merge (J4) -> constant confidence 0.9;
-* the 2-sample consensus (reference aggregate_multiple_responses.py:122-190,
-  SURVEY.md §2.10 D5): pool spans with response ids -> cross-response
-  AND-overlap grouping -> best-mean-confidence response -> enrich with
-  non-overlapping singletons.
+  SURVEY.md §3.2): date-split secondary -> F1/F2 filter primary ->
+  anti-join secondary vs primary by overlap (J2) -> ordered merge (J4)
+  -> constant confidence 0.9; the reference first rotates the secondary
+  by the primary's rotation, but here the secondary is always upright;
+* the multi-sample consensus (reference
+  aggregate_multiple_responses.py:122-190, SURVEY.md §2.10 D5): pool
+  spans with response ids -> cross-response AND-overlap grouping ->
+  best-mean-confidence response -> enrich with non-overlapping
+  singletons.
 """
 
 from __future__ import annotations
@@ -47,18 +49,12 @@ def combine_primary_secondary(
     texts_p: list[str],
     coords_s: np.ndarray,
     texts_s: list[str],
-    rotation: int,
     document_width: int,
     document_height: int,
 ):
     """The GoogleAzure combine (google_azure_ocr.py:145-208). Inputs are
-    normalized spans of the primary (already rotated upright) and the
-    secondary (not yet rotated). Returns (coords, texts, confidences)."""
-    if rotation:
-        coords_s = bc.rotate(coords_s, rotation)
-        if rotation in (90, 270):
-            document_width, document_height = document_height, document_width
-
+    normalized, upright spans of the primary and the secondary. Returns
+    (coords, texts, confidences)."""
     coords_s, texts_s, _ = clean.split_date_boxes(coords_s, texts_s, None)
 
     wh_ratio = document_width / document_height
@@ -152,22 +148,6 @@ def overall_confidence(confidences: list[float]) -> float:
     if len(confidences) == 0:
         return 0.0
     return sum(confidences) / len(confidences)
-
-
-def aggregate_samples(
-    coords_1: np.ndarray,
-    texts_1: list[str],
-    conf_1: list[float],
-    coords_2: np.ndarray,
-    texts_2: list[str],
-    conf_2: list[float],
-):
-    """2-sample consensus (aggregate_multiple_responses.py:158-190):
-    best-confidence response enriched with singleton boxes from the pooled
-    cross-response grouping whose overlap vs the best response < 0.5."""
-    return aggregate_samples_n(
-        [(coords_1, texts_1, conf_1), (coords_2, texts_2, conf_2)]
-    )
 
 
 def aggregate_samples_n(

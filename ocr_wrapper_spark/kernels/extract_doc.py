@@ -21,6 +21,7 @@ batch of one; both are the pytest oracle and the body of the Spark UDF.
 from __future__ import annotations
 
 import time
+from functools import partial
 
 import numpy as np
 
@@ -265,10 +266,12 @@ def _phase1(docs: list):
     return coords, words, conf, row_doc, page_starts, errors
 
 
-def extract_documents(payloads: list, langs: list) -> Extracted:
+def extract_documents(payloads: list, langs: list, texts: list | None = None) -> Extracted:
     """The batch kernel: each document parsed on its own, then phase 1 over
     one box table of all of them, one reading-order pass over their pages,
-    and one gather of the table into reading order.
+    and one gather of the table into reading order. ``texts`` (the
+    provider text column) is not read: it is there so that every
+    ``EXTRACTORS`` kernel takes the same arguments.
 
     Each result's ``extract_ms`` is its own parse and result wall time,
     plus its share of the batch stages (by box count) and its pages'
@@ -405,7 +408,7 @@ def extract_dual_batch(payloads: list, langs: list, provider_texts: list) -> Ext
         # is needed (the reference rotates Azure boxes because Azure saw
         # the still-rotated image)
         merged, texts, confidences = cmb.combine_primary_secondary(
-            primary.coords, primary.texts, coords_s, words, 0, width, height
+            primary.coords, primary.texts, coords_s, words, width, height
         )
         return ExtractResult(merged, texts, confidences, primary.rotation, primary.tilt_angle,
                              "dual", width=width, height=height)
@@ -413,11 +416,8 @@ def extract_dual_batch(payloads: list, langs: list, provider_texts: list) -> Ext
     return _then(extract_documents(payloads, langs), combine)
 
 
-def extract_dual(payload: bytes | None, lang: str | None, provider_text: str | None) -> ExtractResult:
-    return extract_dual_batch([payload], [lang], [provider_text])[0]
-
-
-def extract_consensus_batch(payloads: list, langs: list, n_samples: int = 2) -> Extracted:
+def extract_consensus_batch(payloads: list, langs: list, texts: list | None = None,
+                            n_samples: int = 2) -> Extracted:
     """Multi-sample consensus extraction (reference ocr_samples=2 default,
     ocr_wrapper.py:69 + aggregate_ocr_samples, SURVEY.md §2.10 D5): run the
     extractor per sample, pool with response ids, pick the
@@ -430,6 +430,7 @@ def extract_consensus_batch(payloads: list, langs: list, n_samples: int = 2) -> 
     n_samples > 2 is supported via the n-way generalization in
     ``combine.aggregate_samples_n`` (the reference raises
     NotImplementedError there, aggregate_multiple_responses.py:188).
+    ``texts`` is not read.
     """
     from . import combine as cmb
 
@@ -456,18 +457,15 @@ def extract_consensus_batch(payloads: list, langs: list, n_samples: int = 2) -> 
     return Extracted(out)
 
 
-def extract_consensus(payload: bytes | None, lang: str | None, n_samples: int = 2) -> ExtractResult:
-    return extract_consensus_batch([payload], [lang], n_samples)[0]
-
-
-def extract_with_aux_batch(payloads: list, langs: list) -> Extracted:
+def extract_with_aux_batch(payloads: list, langs: list, texts: list | None = None) -> Extracted:
     """Extraction with auxiliary checkbox spans (reference checkbox flow:
     GoogleDocumentOcrCheckboxDetector produces ☑/☐ BBoxes from the page,
     google_azure_ocr.py:176-193 suppresses overlapped words then merges
     the aux spans in reading order — F6 + J4 in kernels/combine.py).
 
     The detector input here is the HTML page itself (the image analogue);
-    PDF/JSON-layout documents pass through unchanged."""
+    PDF/JSON-layout documents pass through unchanged. ``texts`` is not
+    read."""
     from . import combine as cmb
     from .checkbox_detect import (
         CHECKBOX_CONFIDENCE,
@@ -506,33 +504,13 @@ def extract_with_aux_batch(payloads: list, langs: list) -> Extracted:
     return _then(extract_documents(payloads, langs), merge_aux)
 
 
-def extract_with_aux(payload: bytes | None, lang: str | None) -> ExtractResult:
-    return extract_with_aux_batch([payload], [lang])[0]
-
-
-def _single(payloads, langs, texts):
-    return extract_documents(payloads, langs)
-
-
-def _consensus2(payloads, langs, texts):
-    return extract_consensus_batch(payloads, langs, 2)
-
-
-def _consensus3(payloads, langs, texts):
-    return extract_consensus_batch(payloads, langs, 3)
-
-
-def _aux(payloads, langs, texts):
-    return extract_with_aux_batch(payloads, langs)
-
-
 # extraction mode -> batch kernel; every kernel takes (payloads, langs,
 # provider texts) and returns one ExtractResult per document, and only
 # ``dual`` reads the provider texts
 EXTRACTORS = {
-    "single": _single,
+    "single": extract_documents,
     "dual": extract_dual_batch,
-    "consensus": _consensus2,
-    "consensus3": _consensus3,
-    "aux": _aux,
+    "consensus": extract_consensus_batch,
+    "consensus3": partial(extract_consensus_batch, n_samples=3),
+    "aux": extract_with_aux_batch,
 }

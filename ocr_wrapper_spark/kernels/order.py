@@ -466,14 +466,6 @@ def order_boxes(
     return order_segments([(coords, texts, document_width, document_height)])[0]
 
 
-def reading_order_indices(
-    coords: np.ndarray, texts: list[str], document_width: int, document_height: int
-) -> np.ndarray:
-    """Reference get_ordered_bboxes_idxs equivalent (bbox_order.py:371-382)."""
-    idx, _, _, _ = order_boxes(coords, texts, document_width, document_height)
-    return idx
-
-
 def assemble_text(texts_in_order: list[str]) -> str:
     """The byte-identity column: space-joined ordered span texts
     (reference ocr_wrapper.py:283-289 / tests/test_googleocr.py:56-57)."""

@@ -2,8 +2,9 @@
 
 Mirrors the reference's autoselect semantics (autoselect.py:17-71):
 
-* a name -> extractor mapping (here: extraction *modes* of the fused
-  Arrow operator instead of provider client classes);
+* a name -> extractor mapping (here: one ``with_extraction`` operator
+  per extraction mode of kernels/extract_doc.EXTRACTORS instead of
+  provider client classes);
 * ``EXTRACTOR_OVERRIDE`` env var with the reference's "a=b,c=d" override
   syntax (reference env var OCR_PROVIDER_MAPPING, _parse_override
   :53-62);
@@ -18,6 +19,7 @@ from functools import partial
 
 from pyspark.sql import DataFrame
 
+from ..kernels.extract_doc import EXTRACTORS
 from .extract import InvalidExtractorException, with_extraction
 
 ENV_EXTRACTOR = "SPARK_GRAFT_EXTRACTOR"
@@ -26,12 +28,10 @@ ENV_OVERRIDE = "SPARK_GRAFT_EXTRACTOR_MAPPING"
 DEFAULT_EXTRACTOR = "single"
 
 
+# ``dual`` enriches the primary extraction with the provider ``text`` column
 name2extractor: dict[str, Callable[[DataFrame], DataFrame]] = {
-    "single": with_extraction,
-    # primary extraction enriched with the provider ``text`` column
-    "dual": partial(with_extraction, mode="dual", text_col="text"),
-    "consensus": partial(with_extraction, mode="consensus"),
-    "aux": partial(with_extraction, mode="aux"),  # checkbox-detector merge path
+    mode: partial(with_extraction, mode=mode, text_col="text" if mode == "dual" else None)
+    for mode in EXTRACTORS
 }
 
 

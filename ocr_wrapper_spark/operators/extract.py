@@ -93,67 +93,6 @@ def _extract_columns(kernel, payloads, langs, texts, with_spans: bool = True) ->
     return cols
 
 
-def _prefetched(batches, depth: int = 1):
-    """Wrap the Arrow batch iterator with a reader thread + bounded queue
-    so the JVM can produce batch n+1 (socket I/O, parquet decode) while
-    Python computes batch n. The reader blocks in the socket read with
-    the GIL released; measured ~62% worker duty without it at 32 cores
-    (BENCH/BASELINE.md §1). depth=1 bounds per-task memory to two
-    in-flight batches (at 100 KB real-web pages: ~200 MB/task upper
-    bound with 1024-row batches — tune SPARK_GRAFT_ARROW_BATCH down for
-    fatter pages)."""
-    import queue
-    import threading
-
-    q: "queue.Queue" = queue.Queue(maxsize=depth)
-    _END = object()
-    stop = threading.Event()
-
-    def reader():
-        # timeout-based put + stop event so an abandoned consumer (task
-        # kill, downstream exception) releases this thread and the
-        # underlying Arrow stream instead of blocking in q.put forever
-        # in a reused daemon worker
-        try:
-            for b in batches:
-                while not stop.is_set():
-                    try:
-                        q.put(b, timeout=0.5)
-                        break
-                    except queue.Full:
-                        continue
-                if stop.is_set():
-                    return
-            q.put(_END)
-        except BaseException as exc:  # propagate into the consumer
-            # retry until delivered or the consumer is gone — dropping
-            # the exception would leave the consumer blocked in q.get()
-            # forever (no _END ever arrives)
-            while not stop.is_set():
-                try:
-                    q.put(exc, timeout=0.5)
-                    break
-                except queue.Full:
-                    continue
-
-    threading.Thread(target=reader, daemon=True).start()
-    try:
-        while True:
-            item = q.get()
-            if item is _END:
-                return
-            if isinstance(item, BaseException):
-                raise item
-            yield item
-    finally:
-        stop.set()
-        while not q.empty():  # unblock a reader waiting on a full queue
-            try:
-                q.get_nowait()
-            except queue.Empty:
-                break
-
-
 def with_extraction(df, html_col: str = "html", lang_col: str = "lang", keep_payload: bool = False,
                     mode: str = "single", text_col: str | None = None):
     """Extraction via mapInArrow: non-payload input columns pass through
@@ -181,7 +120,7 @@ def with_extraction(df, html_col: str = "html", lang_col: str = "lang", keep_pay
     kept_idx = [i for i, _ in kept]
 
     def op(batches):
-        for batch in _prefetched(batches):
+        for batch in batches:
             texts = (batch.column(text_idx).to_pylist() if text_idx is not None
                      else [None] * batch.num_rows)
             cols = _extract_columns(

@@ -47,8 +47,3 @@ def salted_host_counts(pages: DataFrame, n_salts: int = DEFAULT_SALT) -> DataFra
         .agg(F.sum("partial_n").alias("n_docs"))
     )
 
-
-def repartition_for_extraction(pages: DataFrame, target_partitions: int) -> DataFrame:
-    """Repartition by url hash so extraction work is uniform even when the
-    input files are host-clustered (Common-Crawl WARCs usually are)."""
-    return pages.repartition(target_partitions, F.xxhash64(F.col("url")))

@@ -32,7 +32,6 @@ def run_extraction(
     run_id: str | None = None,
     n_buckets: int = partitioning.DEFAULT_BUCKETS,
     resume: bool = False,
-    target_partitions: int | None = None,
     extractor: str | None = None,
 ) -> DataFrame:
     """Returns the result DataFrame (lazy). Side tables (cache, metrics)
@@ -55,9 +54,6 @@ def run_extraction(
     if resume and metrics_path:
         done = metrics_tbl.completed_buckets(spark, metrics_path, run_id)
         pages = pages.join(F.broadcast(done), "bucket", "left_anti")
-
-    if target_partitions:
-        pages = partitioning.repartition_for_extraction(pages, target_partitions)
 
     cols = ["url", "bucket", "content_hash", *EXTRACT_STRUCT.fieldNames(), "is_hit"]
 

@@ -14,9 +14,13 @@ import re
 from pyspark.sql import SparkSession
 
 # Large html blobs: keep Arrow batches small so a batch of pages stays well
-# under executor memory (at Common-Crawl sizes html averages ~100 KB ->
-# 1024 rows/batch ~ 100 MB upper bound; tune down via env for fatter pages).
-ARROW_MAX_RECORDS_PER_BATCH = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "1024"))
+# under executor memory. The bytes cap makes the batch size adapt to the
+# page size: thin synthetic pages run full 1024-row batches, 70KB+ real-web
+# pages get cut to ~100 rows (measured 2.7x on fat pages; oversized batches
+# stall the JVM<->worker pipeline and bloat task memory). ``extra_conf``
+# overrides either.
+ARROW_MAX_RECORDS_PER_BATCH = 1024
+ARROW_MAX_BYTES_PER_BATCH = 8 * 1024 * 1024
 
 
 def _default_driver_mem() -> str:
@@ -86,18 +90,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(ARROW_MAX_RECORDS_PER_BATCH),
-        )
-        # bytes cap makes the batch size adapt to the page size: thin
-        # synthetic pages run full 1024-row batches, 70KB+ real-web pages
-        # get cut to ~100 rows (measured 2.7x on fat pages; oversized
-        # batches stall the JVM<->worker pipeline and bloat task memory)
-        .config(
-            "spark.sql.execution.arrow.maxBytesPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BYTES", str(8 * 1024 * 1024)),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS_PER_BATCH))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES_PER_BATCH))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")

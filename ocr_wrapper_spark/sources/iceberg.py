@@ -6,11 +6,15 @@ fall back to the snapshot-directory parquet layout in cache.py/metrics.py
 (append-only snapshots, dedup-on-read — the same semantics MERGE/append
 give on real Iceberg).
 
-When the jar is present (`spark.jars.packages` or on the cluster
-classpath), `iceberg_session_conf` returns the session config that makes
-`df.writeTo(tbl).append()` and `MERGE INTO` available, and
-`is_iceberg_available` flips the pipeline's table paths to catalog
-identifiers. No cluster-only APIs: the same pipeline code runs on both.
+`iceberg_session_conf` returns the session config that makes
+`df.writeTo(tbl).append()` and `MERGE INTO` available when the jar is
+present (`spark.jars.packages` or on the cluster classpath);
+`is_iceberg_available` probes the JVM classpath for it; and
+`append_or_merge` uses that probe to write one frame either by an
+Iceberg `MERGE INTO` or by a snapshot append through cache.py. The
+pipeline (plans/pipeline.py, cache.py, metrics.py) does not call this
+module: its tables stay snapshot-directory parquet whether or not the
+jar is present.
 """
 
 from __future__ import annotations

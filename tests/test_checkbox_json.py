@@ -13,10 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_wrapper_spark.kernels.checkbox_detect import detect_checkboxes
-from ocr_wrapper_spark.kernels.extract_doc import (
-    extract_document,
-    extract_with_aux,
-)
+from ocr_wrapper_spark.kernels.extract_doc import extract_document, extract_with_aux_batch
 from ocr_wrapper_spark.sources.pages import build_html, build_json
 
 
@@ -47,7 +44,7 @@ def test_aux_merge_full_pipeline():
     text = "alpha beta gamma delta epsilon zeta eta theta " * 8
     text = text.strip()
     html = build_html(10, text, "en")  # 10 % 6 = 4 boxes, checked at (10+i)%3==0
-    res = extract_with_aux(html, "en")
+    res = extract_with_aux_batch([html], ["en"])[0]
     assert res.provider == "html+aux"
     assert sum(t == "☑" for t in res.texts) == 1   # i=2 only
     assert sum(t == "☐" for t in res.texts) == 3
@@ -106,7 +103,7 @@ def test_aux_mode_decodes_generator_qr():
     text = "alpha beta gamma delta epsilon zeta " * 10
     text = text.strip()
     html = build_html(22, text, "en")  # 22 % 4 == 2 -> QR carrier
-    res = extract_with_aux(html, "en")
+    res = extract_with_aux_batch([html], ["en"])[0]
     assert "QRCODE[[DOC22]]" in res.texts
     i = res.texts.index("QRCODE[[DOC22]]")
     assert res.confidences[i] == 1.0

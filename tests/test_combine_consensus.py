@@ -8,7 +8,7 @@ import pytest
 
 from ocr_wrapper_spark.kernels import bbox_core as bc
 from ocr_wrapper_spark.kernels import clean, combine, layout, order
-from ocr_wrapper_spark.kernels.extract_doc import extract_document, extract_dual
+from ocr_wrapper_spark.kernels.extract_doc import extract_document, extract_dual_batch
 from ocr_wrapper_spark.sources.pages import build_html
 
 WORDS = (
@@ -25,7 +25,7 @@ def _spans(words, **kw):
 def test_combine_identical_secondary_adds_nothing():
     coords, w, h = _spans(WORDS)
     merged, texts, conf = combine.combine_primary_secondary(
-        coords, WORDS, coords.copy(), list(WORDS), 0, w, h
+        coords, WORDS, coords.copy(), list(WORDS), w, h
     )
     assert texts == WORDS
     assert conf == [combine.COMBINED_CONFIDENCE] * len(WORDS)
@@ -39,7 +39,7 @@ def test_combine_secondary_enriches_gap():
     primary_coords = coords[keep]
     primary_texts = [WORDS[i] for i in keep]
     merged, texts, _ = combine.combine_primary_secondary(
-        primary_coords, primary_texts, coords.copy(), list(WORDS), 0, w, h
+        primary_coords, primary_texts, coords.copy(), list(WORDS), w, h
     )
     assert texts == WORDS
 
@@ -50,7 +50,7 @@ def test_combine_applies_unwanted_filter_to_primary():
     tall = bc.from_xywh(0.95, 0.1, 0.005, 0.5)
     pc = np.vstack([coords, tall])
     pt = WORDS + ["123456"]
-    merged, texts, _ = combine.combine_primary_secondary(pc, pt, bc.empty_boxes(), [], 0, w, h)
+    merged, texts, _ = combine.combine_primary_secondary(pc, pt, bc.empty_boxes(), [], w, h)
     assert "123456" not in texts
     assert texts == WORDS
 
@@ -87,7 +87,7 @@ def test_aggregate_samples_best_response_wins():
     c2 = np.vstack([coords, extra])
     t2 = WORDS[:12] + ["unique"]
     conf2 = [0.5] * 13
-    mc, mt, mconf = combine.aggregate_samples(c1, t1, conf1, c2, t2, conf2)
+    mc, mt, mconf = combine.aggregate_samples_n([(c1, t1, conf1), (c2, t2, conf2)])
     # best = sample 1 (higher mean confidence), enriched with the singleton
     assert mt[:12] == WORDS[:12]
     assert "unique" in mt
@@ -101,7 +101,7 @@ def test_aggregate_samples_overlapping_extra_not_added():
     c2 = np.vstack([coords, coords[0:1]])
     t2 = WORDS[:12] + ["dup"]
     conf2 = [0.5] * 13
-    mc, mt, _ = combine.aggregate_samples(c1, t1, conf1, c2, t2, conf2)
+    mc, mt, _ = combine.aggregate_samples_n([(c1, t1, conf1), (c2, t2, conf2)])
     assert "dup" not in mt
     assert len(mt) == 12
 
@@ -122,7 +122,7 @@ def test_qr_style_aux_merge_reading_order():
 def test_extract_dual_byte_identity():
     text = " ".join(WORDS * 3)
     html = build_html(11, text, "en")
-    res = extract_dual(html, "en", text)
+    res = extract_dual_batch([html], ["en"], [text])[0]
     assert res.error is None
     assert res.provider == "dual"
     assert res.extracted_text == text
@@ -137,7 +137,7 @@ def test_extract_dual_disjoint_secondary_tail():
     # with existing ones are suppressed — geometry decides, exactly like
     # two providers looking at the same image.
     text_page = " ".join(WORDS)
-    res = extract_dual(build_html(3, text_page, "en"), "en", text_page)
+    res = extract_dual_batch([build_html(3, text_page, "en")], ["en"], [text_page])[0]
     assert res.extracted_text == text_page  # identical geometry -> no dupes
 
 
@@ -160,19 +160,6 @@ def test_aggregate_samples_n_three_way_best_and_enrichment():
     assert mc.shape[0] == len(mt) == len(mconf) == 13
 
 
-def test_aggregate_samples_n_matches_two_sample_path():
-    """For n == 2 the n-way kernel is byte-identical to aggregate_samples."""
-    coords, w, h = _spans(WORDS[:12])
-    extra = bc.from_xywh(0.8, 0.9, 0.05, 0.01)
-    c2 = np.vstack([coords, extra])
-    t2 = WORDS[:12] + ["unique"]
-    a = combine.aggregate_samples(coords, WORDS[:12], [0.9] * 12, c2, t2, [0.5] * 13)
-    b = combine.aggregate_samples_n(
-        [(coords, WORDS[:12], [0.9] * 12), (c2, t2, [0.5] * 13)]
-    )
-    assert np.array_equal(a[0], b[0]) and a[1] == b[1] and a[2] == b[2]
-
-
 def test_aggregate_samples_n_single_and_empty():
     coords, w, h = _spans(WORDS[:3])
     mc, mt, mconf = combine.aggregate_samples_n([(coords, WORDS[:3], [0.5] * 3)])
@@ -188,7 +175,7 @@ def test_extract_consensus_three_samples_matches_base():
 
     payload = build_html(7, " ".join(WORDS), "en")
     base = ed.extract_document(payload, "en")
-    cons = ed.extract_consensus(payload, "en", n_samples=3)
+    cons = ed.EXTRACTORS["consensus3"]([payload], ["en"], [None])[0]
     assert cons.error is None
     assert cons.texts == base.texts
     assert np.array_equal(cons.coords, base.coords)

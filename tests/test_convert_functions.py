@@ -50,13 +50,13 @@ def test_labelstudio_values(spark, spans_df):
 
 
 def test_consensus_kernel_identity():
-    from ocr_wrapper_spark.kernels.extract_doc import extract_consensus, extract_document
+    from ocr_wrapper_spark.kernels.extract_doc import extract_consensus_batch, extract_document
     from ocr_wrapper_spark.sources.pages import build_html
 
     text = "the quick brown fox jumps over the lazy dog again and again today"
     html = build_html(5, text, "en")
     single = extract_document(html, "en")
-    cons = extract_consensus(html, "en")
+    cons = extract_consensus_batch([html], ["en"])[0]
     assert cons.provider == "consensus"
     assert cons.extracted_text == single.extracted_text == text
     assert len(cons.texts) == len(single.texts)

@@ -1,6 +1,6 @@
 """The single extraction path: every mode runs through the same batch
-loop from both operators, unknown modes fail on the driver, and each
-autoselect name keeps its output schema."""
+loop from both operators and through ``run_extraction``, unknown modes
+fail on the driver, and each autoselect name keeps its output schema."""
 
 from __future__ import annotations
 
@@ -8,12 +8,13 @@ import pandas as pd
 import pytest
 
 from ocr_wrapper_spark.kernels.extract_doc import EXTRACTORS
-from ocr_wrapper_spark.operators.autoselect import name2extractor
+from ocr_wrapper_spark.operators.autoselect import ENV_OVERRIDE, autoselect_extractor, name2extractor
 from ocr_wrapper_spark.operators.extract import (
     InvalidExtractorException,
     extract_documents_fused,
     with_extraction,
 )
+from ocr_wrapper_spark.plans.pipeline import run_extraction
 from ocr_wrapper_spark.schema import PAGES_SCHEMA
 from ocr_wrapper_spark.sources.pages import build_page_rows, doc_id_from_url
 
@@ -34,6 +35,7 @@ AUTOSELECT_SCHEMAS = {
     "single": f"struct<url:string,warc_ts:timestamp,text:string,lang:string,{_EXTRACTED}>",
     "dual": f"struct<url:string,warc_ts:timestamp,lang:string,{_EXTRACTED}>",
     "consensus": f"struct<url:string,warc_ts:timestamp,text:string,lang:string,{_EXTRACTED}>",
+    "consensus3": f"struct<url:string,warc_ts:timestamp,text:string,lang:string,{_EXTRACTED}>",
     "aux": f"struct<url:string,warc_ts:timestamp,text:string,lang:string,{_EXTRACTED}>",
 }
 
@@ -71,3 +73,14 @@ def test_autoselect_output_schema(spark, smoke_pages, name):
     assert sorted(name2extractor) == sorted(AUTOSELECT_SCHEMAS)
     out = name2extractor[name](smoke_pages.limit(0))
     assert out.schema.simpleString() == AUTOSELECT_SCHEMAS[name]
+
+
+@pytest.mark.parametrize("mode", sorted(EXTRACTORS))
+def test_every_mode_selectable_in_run_extraction(spark, smoke_pages, monkeypatch, mode):
+    """Each kernel mode is an autoselect name, and ``run_extraction`` runs
+    it over every page."""
+    monkeypatch.delenv(ENV_OVERRIDE, raising=False)
+    assert autoselect_extractor(mode) is name2extractor[mode]
+    rows = run_extraction(spark, smoke_pages, extractor=mode).select("url", "error").collect()
+    assert sorted(r.url for r in rows) == sorted(r.url for r in smoke_pages.select("url").collect())
+    assert not any(r.error for r in rows)

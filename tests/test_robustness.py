@@ -213,8 +213,8 @@ def test_checkbox_bomb_aux_mode(spark):
 
 
 def test_hostile_payloads_all_extractor_modes(spark):
-    """Every registered extractor mode (single/dual/consensus/aux) must
-    preserve all rows and confine failures to the error column."""
+    """Every registered extractor mode (each of EXTRACTORS) must preserve
+    all rows and confine failures to the error column."""
     from ocr_wrapper_spark.operators.autoselect import name2extractor
 
     df = spark.createDataFrame(HOSTILE, PAGES_SCHEMA)
