@@ -2326,7 +2326,7 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text_queries import NGRAM_MAX_DF
 
     d = _t(spark, sf_dir, "documents")
-    shingled = _dd._doc_shingles(d, "doc_id", "text", _dd.SHINGLE_K)
+    shingled = _dd._doc_shingles(d)
     exploded = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
     dfreq = exploded.groupBy("shingle").agg(F.count("*").alias("_df"))
     kept = exploded.join(

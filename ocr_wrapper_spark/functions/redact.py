@@ -55,8 +55,8 @@ def pii_count_cols(text_col: Column) -> list[Column]:
     return cols
 
 
-def with_pii_redaction(df, text_col: str = "text"):
-    c = F.col(text_col)
+def with_pii_redaction(df):
+    c = F.col("text")
     return df.select(
         "*",
         redacted_col(c).alias("redacted_text"),

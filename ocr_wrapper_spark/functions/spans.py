@@ -90,18 +90,16 @@ def postprocess_spans_udf(spans: pd.Series, width: pd.Series, height: pd.Series)
             continue
         coords, texts, confs = records_to_arrays(recs)
         wh_ratio = (int(w) / int(h)) if int(h) else 1.0
-        f_coords, f_texts = clean.filter_unwanted_boxes(coords, texts, wh_ratio)
-        conf_by_key = {(tuple(coords[i]), texts[i]): confs[i] for i in range(len(texts))}
-        f_confs = [conf_by_key.get((tuple(f_coords[i]), f_texts[i]), 0.0) for i in range(len(f_texts))]
+        f_coords, f_texts, kept = clean.filter_unwanted_boxes(coords, texts, wh_ratio)
+        f_confs = [confs[i] for i in kept]
         kept_coords, kept_texts, kept_confs = clean.split_date_boxes(f_coords, f_texts, f_confs)
-        conf_map = {(tuple(kept_coords[i]), kept_texts[i]): kept_confs[i] for i in range(len(kept_texts))}
         res = []
         for i, row in enumerate(kept_coords.tolist()):
             rec = dict(zip(COORD_FIELDS, row))
             rec["in_pixels"] = False
             rec["text"] = kept_texts[i]
             rec["label"] = None
-            rec["confidence"] = conf_map.get((tuple(kept_coords[i]), kept_texts[i]), 0.0)
+            rec["confidence"] = kept_confs[i]
             res.append(rec)
         out.append(res)
     return pd.Series(out)

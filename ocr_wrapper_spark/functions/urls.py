@@ -58,16 +58,16 @@ def canonical_url_col(url_col: Column) -> Column:
     return F.when(scheme == "", url_col).otherwise(canon)
 
 
-def with_canonical_url(df, url_col: str = "url", out_col: str = "canonical_url"):
-    return df.withColumn(out_col, canonical_url_col(F.col(url_col)))
+def with_canonical_url(df):
+    return df.withColumn("canonical_url", canonical_url_col(F.col("url")))
 
 
-def canonical_dedup(df, url_col: str = "url", id_col: str = "doc_id"):
-    """Group by canonical URL: keeper = lowest id, plus duplicate count.
-    One hash-aggregate shuffle keyed on the canonical string — map-side
-    combinable, scale-safe at crawl size."""
+def canonical_dedup(df):
+    """Group by canonical URL: keeper = lowest doc_id, plus duplicate
+    count. One hash-aggregate shuffle keyed on the canonical string —
+    map-side combinable, scale-safe at crawl size."""
     return (
-        with_canonical_url(df, url_col)
+        with_canonical_url(df)
         .groupBy("canonical_url")
-        .agg(F.min(id_col).alias("keeper"), F.count("*").alias("n_dupes"))
+        .agg(F.min("doc_id").alias("keeper"), F.count("*").alias("n_dupes"))
     )

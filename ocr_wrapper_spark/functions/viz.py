@@ -260,7 +260,6 @@ def draw_bboxes(
     fill_opacities=0.0,
     fontsize: int = 10,
     max_augment: float = 0.0,
-    text_goal_brightness: float | None = None,
 ) -> np.ndarray:
     """Draw normalized span quads on a raster (ref: bbox.py:647-744).
 
@@ -312,10 +311,7 @@ def draw_bboxes(
 
         text = texts[i]
         if text:
-            tcolor = colors[i]
-            if text_goal_brightness is not None:
-                tcolor = get_color_with_defined_brightness(tcolor, text_goal_brightness)
-            trgb = parse_color(tcolor)
+            trgb = parse_color(colors[i])
             if trgb is not None:
                 # label bar at the reference's text anchor (no TTF here)
                 tx = int(quad[0::2].min()) + 10

@@ -224,8 +224,8 @@ def area(coords: np.ndarray) -> np.ndarray:
     return 0.5 * np.abs(np.sum(x * y2 - x2 * y, axis=1))
 
 
-def _is_axis_aligned(coords: np.ndarray, tol: float = 1e-12) -> bool:
-    c = coords
+def _is_axis_aligned(coords: np.ndarray) -> bool:
+    c, tol = coords, 1e-12
     return bool(
         np.all(np.abs(c[:, TLY] - c[:, TRY]) <= tol)
         and np.all(np.abs(c[:, BLY] - c[:, BRY]) <= tol)

@@ -114,16 +114,15 @@ def is_vertically_aligned(coords: np.ndarray, width_height_ratio: float) -> np.n
     return width < height
 
 
-def filter_date_boxes(
-    coords: np.ndarray, texts: list[str], max_boxes_range: int = 10
-) -> tuple[np.ndarray, list[str]]:
-    """Drop runs of consecutive boxes whose concatenated text matches the
-    slash date-range pattern; recurse until no match
-    (reference google_azure_ocr.py:371-403)."""
+def filter_date_boxes(coords: np.ndarray, texts: list[str]) -> tuple[np.ndarray, list[str], np.ndarray]:
+    """Drop runs of up to 10 consecutive boxes whose concatenated text
+    matches the slash date-range pattern; recurse until no match
+    (reference google_azure_ocr.py:371-403). Returns the kept boxes,
+    their texts and their row indices."""
     items = list(range(coords.shape[0]))
 
     def run(keep: list[int]) -> list[int]:
-        m = min(max_boxes_range, len(keep))
+        m = min(10, len(keep))
         for r in range(m, 1, -1):
             for s in range(0, len(keep) - r + 1):
                 window = keep[s : s + r]
@@ -133,20 +132,21 @@ def filter_date_boxes(
                     return run(rest)
         return keep
 
-    kept = run(items)
-    return coords[kept], [texts[i] for i in kept]
+    kept = np.asarray(run(items), dtype=np.int64)
+    return coords[kept], [texts[i] for i in kept], kept
 
 
 def filter_unwanted_boxes(
     coords: np.ndarray, texts: list[str], width_height_ratio: float
-) -> tuple[np.ndarray, list[str]]:
+) -> tuple[np.ndarray, list[str], np.ndarray]:
     """The primary-provider span filter (reference
     _filter_unwanted_google_bboxes, google_azure_ocr.py:406-440): drop
     boxes taller than 1.05x the median height AND vertically aligned,
-    unless the text is a single character; then the date-box run filter."""
+    unless the text is a single character; then the date-box run filter.
+    Returns the kept boxes, their texts and their row indices."""
     n = coords.shape[0]
     if n == 0:
-        return coords.copy(), list(texts)
+        return coords.copy(), list(texts), np.zeros(0, dtype=np.int64)
     med = median_box_height(coords)
     tall = box_height(coords) > med * MEDIAN_HEIGHT_SLACK
     vertical = is_vertically_aligned(coords, width_height_ratio)
@@ -155,7 +155,8 @@ def filter_unwanted_boxes(
     )
     drop = tall & vertical & ~single_char
     keep = np.nonzero(~drop)[0]
-    return filter_date_boxes(coords[keep], [texts[i] for i in keep])
+    f_coords, f_texts, kept = filter_date_boxes(coords[keep], [texts[i] for i in keep])
+    return f_coords, f_texts, keep[kept]
 
 
 def merge_idx_lists(raw_a: list[int], raw_b: list[int], sorted_ab: list[int]) -> list[int]:
@@ -201,16 +202,15 @@ def merge_idx_lists(raw_a: list[int], raw_b: list[int], sorted_ab: list[int]) ->
 def merge_span_lists(
     coords_a: np.ndarray,
     texts_a: list[str],
-    conf_a: list[float],
     coords_b: np.ndarray,
     texts_b: list[str],
-    conf_b: list[float],
     document_width: int,
     document_height: int,
 ):
     """Ordered merge of two span lists (reference
     merge_bbox_lists_with_confidences, bbox_utils.py:202-234): A keeps its
-    order, B slots in according to a global reading-order sort of A+B."""
+    order, B slots in according to a global reading-order sort of A+B.
+    Returns (coords, texts); every caller sets its own confidences."""
     from .order import order_boxes
 
     na, nb = coords_a.shape[0], coords_b.shape[0]
@@ -218,7 +218,6 @@ def merge_span_lists(
     idx_b = list(range(na, na + nb))
     merged = np.vstack([coords_a, coords_b]) if na + nb else bc.empty_boxes()
     merged_texts = list(texts_a) + list(texts_b)
-    merged_conf = list(conf_a) + list(conf_b)
     sorted_idx = order_boxes(merged, merged_texts, document_width, document_height)[0].tolist()
     final = merge_idx_lists(idx_a, idx_b, sorted_idx)
-    return merged[final], [merged_texts[i] for i in final], [merged_conf[i] for i in final]
+    return merged[final], [merged_texts[i] for i in final]

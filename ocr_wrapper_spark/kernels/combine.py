@@ -58,7 +58,7 @@ def combine_primary_secondary(
     coords_s, texts_s, _ = clean.split_date_boxes(coords_s, texts_s, None)
 
     wh_ratio = document_width / document_height
-    coords_p, texts_p = clean.filter_unwanted_boxes(coords_p, texts_p, wh_ratio)
+    coords_p, texts_p, _ = clean.filter_unwanted_boxes(coords_p, texts_p, wh_ratio)
 
     # J2: secondary boxes with zero overlapping primary boxes
     keep_s = ~overlapping_any(coords_s, coords_p)
@@ -66,15 +66,8 @@ def combine_primary_secondary(
     texts_add = [t for t, k in zip(texts_s, keep_s) if k]
 
     # J4: ordered merge, primary order authoritative
-    merged, texts, _ = clean.merge_span_lists(
-        coords_p,
-        texts_p,
-        [0.0] * len(texts_p),
-        coords_add,
-        texts_add,
-        [0.0] * len(texts_add),
-        document_width,
-        document_height,
+    merged, texts = clean.merge_span_lists(
+        coords_p, texts_p, coords_add, texts_add, document_width, document_height
     )
     confidences = [COMBINED_CONFIDENCE] * len(texts)
     return merged, texts, confidences
@@ -87,25 +80,16 @@ def suppress_then_merge_aux(
     texts_aux: list[str],
     document_width: int,
     document_height: int,
-    suppress_threshold: float = CHECKBOX_OVERLAP,
 ):
     """Checkbox-style auxiliary merge (google_azure_ocr.py:176-193): drop
-    combined boxes overlapping an aux box above threshold (F6), then
-    ordered-merge the aux boxes in (J4)."""
-    keep = ~overlapping_any(coords, coords_aux, suppress_threshold)
+    combined boxes overlapping an aux box above CHECKBOX_OVERLAP (F6),
+    then ordered-merge the aux boxes in (J4)."""
+    keep = ~overlapping_any(coords, coords_aux, CHECKBOX_OVERLAP)
     coords_kept = coords[keep]
     texts_kept = [t for t, k in zip(texts, keep) if k]
-    merged, out_texts, _ = clean.merge_span_lists(
-        coords_kept,
-        texts_kept,
-        [0.0] * len(texts_kept),
-        coords_aux,
-        texts_aux,
-        [0.0] * len(texts_aux),
-        document_width,
-        document_height,
+    return clean.merge_span_lists(
+        coords_kept, texts_kept, coords_aux, texts_aux, document_width, document_height
     )
-    return merged, out_texts
 
 
 def group_overlapping(

@@ -419,13 +419,14 @@ def extract_dual_batch(payloads: list, langs: list, provider_texts: list) -> Ext
 def extract_consensus_batch(payloads: list, langs: list, texts: list | None = None,
                             n_samples: int = 2) -> Extracted:
     """Multi-sample consensus extraction (reference ocr_samples=2 default,
-    ocr_wrapper.py:69 + aggregate_ocr_samples, SURVEY.md §2.10 D5): run the
-    extractor per sample, pool with response ids, pick the
-    best-mean-confidence response, enrich with non-overlapping singletons.
+    ocr_wrapper.py:69 + aggregate_ocr_samples, SURVEY.md §2.10 D5): pool
+    the samples with response ids, pick the best-mean-confidence response,
+    enrich with non-overlapping singletons.
 
-    Page extraction is deterministic (no provider noise), so samples are
-    identical and consensus must return the base response unchanged — the
-    grouping/enrichment machinery still runs end to end.
+    Page extraction is deterministic (no provider noise), so every sample
+    equals the first: the batch is extracted once and that sample is
+    pooled ``n_samples`` times. Consensus must return the base response
+    unchanged — the grouping/enrichment machinery still runs end to end.
 
     n_samples > 2 is supported via the n-way generalization in
     ``combine.aggregate_samples_n`` (the reference raises
@@ -436,25 +437,14 @@ def extract_consensus_batch(payloads: list, langs: list, texts: list | None = No
 
     if n_samples < 1:
         raise ValueError(f"n_samples must be >= 1, got {n_samples}")
-    out = list(extract_documents(payloads, langs))
-    ok = [i for i, res in enumerate(out) if res.error is None]
-    extra = [
-        extract_documents([payloads[i] for i in ok], [langs[i] for i in ok])
-        for _ in range(n_samples - 1)
-    ]
-    clock = time.perf_counter
-    for j, i in enumerate(ok):
-        t0 = clock()
-        s1 = out[i]
-        samples = [(s1.coords, s1.texts, s1.confidences)]
-        samples += [(s[j].coords, s[j].texts, s[j].confidences) for s in extra]
-        coords, texts, conf = cmb.aggregate_samples_n(samples)
-        res = ExtractResult(coords, texts, conf, s1.rotation, s1.tilt_angle, "consensus",
-                            width=s1.width, height=s1.height)
-        res.extract_ms = (s1.extract_ms + sum(s[j].extract_ms for s in extra)
-                          + (clock() - t0) * 1000.0)
-        out[i] = res
-    return Extracted(out)
+
+    def pool(i, base):
+        sample = (base.coords, base.texts, base.confidences)
+        coords, texts, conf = cmb.aggregate_samples_n([sample] * n_samples)
+        return ExtractResult(coords, texts, conf, base.rotation, base.tilt_angle, "consensus",
+                             width=base.width, height=base.height)
+
+    return _then(extract_documents(payloads, langs), pool)
 
 
 def extract_with_aux_batch(payloads: list, langs: list, texts: list | None = None) -> Extracted:

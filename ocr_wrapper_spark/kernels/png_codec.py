@@ -42,7 +42,7 @@ def _chunk(tag: bytes, body: bytes) -> bytes:
     )
 
 
-def encode_png(img: np.ndarray, level: int = 6) -> bytes:
+def encode_png(img: np.ndarray) -> bytes:
     """uint8 array (H,W) grey or (H,W,3) RGB -> PNG bytes. Filter 0 on
     every scanline and a fixed zlib level keep the output byte-stable
     across runs/workers (the content-hash cache requires it)."""
@@ -61,7 +61,7 @@ def encode_png(img: np.ndarray, level: int = 6) -> bytes:
     raw = np.empty((h, 1 + w * channels), dtype=np.uint8)
     raw[:, 0] = 0
     raw[:, 1:] = a.reshape(h, w * channels)
-    idat = zlib.compress(raw.tobytes(), level)
+    idat = zlib.compress(raw.tobytes(), 6)
     return (
         PNG_MAGIC
         + _chunk(b"IHDR", ihdr)

@@ -80,11 +80,10 @@ def qr_matrix(data: str) -> np.ndarray:
     return g
 
 
-def render_qr(img: np.ndarray, data: str, x0: int, y0: int,
-              module_px: int = QR_MODULE_PX) -> tuple[int, int]:
+def render_qr(img: np.ndarray, data: str, x0: int, y0: int) -> tuple[int, int]:
     """Draw the symbol at (x0, y0); returns (width, height) in pixels."""
     g = qr_matrix(data)
-    px = np.repeat(np.repeat(g, module_px, axis=0), module_px, axis=1)
+    px = np.repeat(np.repeat(g, QR_MODULE_PX, axis=0), QR_MODULE_PX, axis=1)
     h, w = px.shape
     img[y0 : y0 + h, x0 : x0 + w] = np.maximum(img[y0 : y0 + h, x0 : x0 + w], px)
     return w, h
@@ -106,16 +105,15 @@ def barcode_widths(digits: str) -> list[int]:
     return [BC_EDGE_MODULES] + [2 if b else 1 for b in bits] + [BC_EDGE_MODULES]
 
 
-def render_barcode(img: np.ndarray, digits: str, x0: int, y0: int,
-                   module_px: int = BC_MODULE_PX, height: int = BC_BAR_H) -> tuple[int, int]:
+def render_barcode(img: np.ndarray, digits: str, x0: int, y0: int) -> tuple[int, int]:
     """Draw the bar symbol at (x0, y0); returns (width, height) in pixels."""
     x = x0
     for w_mod in barcode_widths(digits):
-        w_px = w_mod * module_px
-        img[y0 : y0 + height, x : x + w_px] = 1.0
-        x += w_px + module_px  # 1-module gap
-    x -= module_px  # no gap after the stop bar
-    return x - x0, height
+        w_px = w_mod * BC_MODULE_PX
+        img[y0 : y0 + BC_BAR_H, x : x + w_px] = 1.0
+        x += w_px + BC_MODULE_PX  # 1-module gap
+    x -= BC_MODULE_PX  # no gap after the stop bar
+    return x - x0, BC_BAR_H
 
 
 # ---------------------------------------------------------------------------

@@ -71,14 +71,14 @@ def _convolve5x5_valid(img: np.ndarray, kernel: np.ndarray) -> np.ndarray:
     return out
 
 
-def downsize_raster(image: np.ndarray, nb_pixel: int = NB_PIXEL) -> np.ndarray:
+def downsize_raster(image: np.ndarray) -> np.ndarray:
     """Reference nb_pixel cap (tilt_correction_numpy.py:186-198): any
-    raster above ``nb_pixel`` pixels is NEAREST-resampled down so
+    raster above NB_PIXEL pixels is NEAREST-resampled down so
     detection cost is bounded by the cap, not the scan resolution.
     Implemented as index sampling — exactly PIL's NEAREST mapping
     (output pixel (i, j) reads input (floor(i/rf), floor(j/rf)))."""
     h, w = image.shape
-    rf = (nb_pixel / (w * h)) ** 0.5
+    rf = (NB_PIXEL / (w * h)) ** 0.5
     if rf >= 1:
         return image
     yi = np.minimum((np.arange(int(h * rf)) / rf).astype(np.int64), h - 1)

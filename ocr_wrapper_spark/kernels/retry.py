@@ -41,20 +41,15 @@ GOOGLE_POLICY = RetryPolicy(retries=2, delay_s=1.0, backoff=1.0, jitter=0.0)
 AZURE_POLICY = RetryPolicy(retries=5, delay_s=1.0, backoff=2.0, jitter=0.1)
 
 
-def with_retries(
-    fn: Callable,
-    policy: RetryPolicy,
-    retryable: tuple[type[BaseException], ...] = (Exception,),
-    rng: random.Random | None = None,
-    sleep: Callable[[float], None] = time.sleep,
-):
-    """Run fn(); on a retryable exception sleep per the policy and retry.
-    The final failure propagates (the caller turns it into an error row)."""
-    delays = policy.delays(rng)
+def with_retries(fn: Callable, policy: RetryPolicy, sleep: Callable[[float], None] = time.sleep):
+    """Run fn(); on an exception sleep per the policy (unjittered) and
+    retry. The final failure propagates (the caller turns it into an
+    error row)."""
+    delays = policy.delays()
     for attempt, delay in enumerate([*delays, None]):
         try:
             return fn()
-        except retryable:
+        except Exception:
             if delay is None:
                 raise
             sleep(delay)

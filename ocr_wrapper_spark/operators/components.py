@@ -19,12 +19,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iterations: int = 20,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
+# Safety bound on label-propagation rounds; pointer jumping converges in
+# O(log diameter) rounds, far below it on every registered query.
+MAX_ITERATIONS = 20
+
+
+def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """(id_a, id_b) edges -> (node, component) where component is the
     minimum node id reachable from ``node``."""
     edges = (
@@ -42,7 +42,7 @@ def connected_components(
         .withColumn("component", F.col("node"))
     )
 
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")

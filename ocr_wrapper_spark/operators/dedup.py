@@ -34,11 +34,11 @@ MERSENNE = (1 << 61) - 1
 SHINGLE_K = 3  # token 3-grams
 
 
-def _perm_params(n_perm: int = N_PERM) -> tuple[np.ndarray, np.ndarray]:
+def _perm_params() -> tuple[np.ndarray, np.ndarray]:
     """Deterministic permutation coefficients (seeded, odd a)."""
     rng = np.random.RandomState(42)
-    a = rng.randint(1, MERSENNE, size=n_perm, dtype=np.int64) | 1
-    b = rng.randint(0, MERSENNE, size=n_perm, dtype=np.int64)
+    a = rng.randint(1, MERSENNE, size=N_PERM, dtype=np.int64) | 1
+    b = rng.randint(0, MERSENNE, size=N_PERM, dtype=np.int64)
     return a, b
 
 
@@ -79,15 +79,16 @@ def _token_hashes(tokens: list[str]) -> np.ndarray:
     return out
 
 
-def _shingle_hashes(text: str, k: int = SHINGLE_K) -> np.ndarray:
-    """Stable 64-bit hashes of token k-shingles. Tokens are hashed once
+def _shingle_hashes(text: str) -> np.ndarray:
+    """Stable 64-bit hashes of token SHINGLE_K-shingles. Tokens are hashed once
     (first 8 bytes of md5, big-endian — DuckDB reproduces it exactly as
     ('0x' || left(md5(t),16))::UBIGINT) and combined per shingle with the
     SHINGLE_P polynomial mod 2^64 — one vectorized numpy pass instead of
-    one Python md5 call per shingle. Documents shorter than k tokens fall
-    back to md5 of the whole text (one call)."""
+    one Python md5 call per shingle. Documents shorter than SHINGLE_K
+    tokens fall back to md5 of the whole text (one call)."""
     from hashlib import md5
 
+    k = SHINGLE_K
     tokens = text.split(" ") if text else []
     if len(tokens) < k:
         joined = " ".join(tokens)
@@ -117,8 +118,8 @@ def minhash_udf(text: pd.Series) -> pd.Series:
     return text.fillna("").map(lambda t: minhash_signature(t).tolist())
 
 
-def with_minhash(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("minhash", minhash_udf(F.col(text_col)))
+def with_minhash(df: DataFrame) -> DataFrame:
+    return df.withColumn("minhash", minhash_udf(F.col("text")))
 
 
 # Default cap on LSH bucket size before the candidate self-join. One
@@ -129,29 +130,26 @@ def with_minhash(df: DataFrame, text_col: str = "text") -> DataFrame:
 MAX_BUCKET = 256
 
 
-def _cap_buckets(bands: DataFrame, keys: list[str], max_bucket: int | None) -> DataFrame:
-    """Drop rows in over-populated buckets (count per key > max_bucket)
+def _cap_buckets(bands: DataFrame, keys: list[str]) -> DataFrame:
+    """Drop rows in over-populated buckets (count per key > MAX_BUCKET)
     via a window count over the bucket key. A window (not a second
     aggregate branch) matters twice over: the signature UDF upstream is
     the expensive stage and a second branch would re-evaluate it, and the
     window's shuffle is on the SAME key the candidate self-join uses, so
     the exchange is reused."""
-    if max_bucket is None:
-        return bands
     w = Window.partitionBy(*keys)
     return (
         bands.withColumn("_bn", F.count("*").over(w))
-        .filter(F.col("_bn") <= max_bucket)
+        .filter(F.col("_bn") <= MAX_BUCKET)
         .drop("_bn")
     )
 
 
-def lsh_dropped_buckets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                        max_bucket: int = MAX_BUCKET) -> DataFrame:
+def lsh_dropped_buckets(df: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
     """Monitoring twin of lsh_candidate_pairs: the (band_id, band_hash)
     buckets whose size exceeds the cap, with member counts — what a crawl
     operator alerts on (dropped candidates are countable as n*(n-1)/2)."""
-    bands = _minhash_bands(df, id_col, text_col)
+    bands = _minhash_bands(df)
     return (
         bands.groupBy("band_id", "band_hash")
         .agg(F.count("*").alias("bucket_size"))
@@ -159,47 +157,40 @@ def lsh_dropped_buckets(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     )
 
 
-def _minhash_bands(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    sig = with_minhash(df.select(id_col, text_col), text_col)
+def _minhash_bands(df: DataFrame) -> DataFrame:
+    sig = with_minhash(df.select("doc_id", "text"))
     return sig.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
                 lambda b: F.slice(F.col("minhash"), b * ROWS_PER_BAND + 1, ROWS_PER_BAND),
             )
         ).alias("band_id", "band_rows"),
-    ).select(id_col, "band_id", F.xxhash64(F.col("band_rows").cast("array<string>")).alias("band_hash"))
+    ).select("doc_id", "band_id", F.xxhash64(F.col("band_rows").cast("array<string>")).alias("band_hash"))
 
 
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket: int | None = MAX_BUCKET,
-) -> DataFrame:
+def lsh_candidate_pairs(df: DataFrame) -> DataFrame:
     """MinHash + LSH banding: candidate near-duplicate pairs (id_a < id_b).
 
     Shape: signature UDF -> explode bands -> groupBy-free *equi-join* on
     (band_id, band_hash) -> distinct pairs. At cluster scale the join key
     is uniformly distributed (hash buckets); buckets larger than
-    ``max_bucket`` are dropped before the self-join so one degenerate band
+    MAX_BUCKET are dropped before the self-join so one degenerate band
     value cannot fan out quadratically (the DuckDB oracle mirrors the cut).
     """
-    bands = _cap_buckets(
-        _minhash_bands(df, id_col, text_col), ["band_id", "band_hash"], max_bucket
-    )
+    bands = _cap_buckets(_minhash_bands(df), ["band_id", "band_hash"])
 
     a = bands.alias("a")
     b = bands.alias("b")
     pairs = (
         a.join(
             b,
-            (F.col(f"a.band_id") == F.col(f"b.band_id"))
-            & (F.col(f"a.band_hash") == F.col(f"b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
     return pairs
@@ -231,42 +222,36 @@ def simhash_udf(text: pd.Series) -> pd.Series:
     return text.fillna("").map(simhash)
 
 
-def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("simhash", simhash_udf(F.col(text_col)))
+def with_simhash(df: DataFrame) -> DataFrame:
+    return df.withColumn("simhash", simhash_udf(F.col("text")))
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    max_bucket: int | None = MAX_BUCKET,
-) -> DataFrame:
+def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash: block on 16-bit chunks (any doc pair
     within Hamming distance 3 of 64 bits shares at least one of 4 exact
     16-bit chunks — pigeonhole), verify with JVM bit_count. Chunk buckets
-    over ``max_bucket`` members are dropped before the self-join (same
+    over MAX_BUCKET members are dropped before the self-join (same
     degenerate-bucket guard as lsh_candidate_pairs, mirrored in the oracle)."""
-    sh = with_simhash(df.select(id_col, text_col), text_col)
+    sh = with_simhash(df.select("doc_id", "text"))
     chunks = sh.select(
-        id_col,
+        "doc_id",
         "simhash",
         F.posexplode(
             F.array(*[F.shiftrightunsigned(F.col("simhash"), k * 16).bitwiseAND(F.lit(0xFFFF)) for k in range(4)])
         ).alias("chunk_id", "chunk"),
     )
-    chunks = _cap_buckets(chunks, ["chunk_id", "chunk"], max_bucket)
+    chunks = _cap_buckets(chunks, ["chunk_id", "chunk"])
     a, b = chunks.alias("a"), chunks.alias("b")
     cand = (
         a.join(
             b,
             (F.col("a.chunk_id") == F.col("b.chunk_id"))
             & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
             F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
         )
         .distinct()
@@ -279,39 +264,33 @@ def simhash_near_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _doc_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(id, shingles) — distinct token k-shingles per doc, whole-text
-    fallback below k tokens. The single definition both the Jaccard cut
+def _doc_shingles(df: DataFrame) -> DataFrame:
+    """(doc_id, shingles) — distinct token SHINGLE_K-shingles per doc,
+    whole-text fallback below SHINGLE_K tokens. The single definition both the Jaccard cut
     and its monitoring twin use: they MUST see the same shingle set."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_distinct(
             F.when(
-                F.size(toks) >= k,
+                F.size(toks) >= SHINGLE_K,
                 F.transform(
-                    F.sequence(F.lit(0), F.size(toks) - k),
-                    lambda i: F.array_join(F.slice(toks, i + 1, k), " "),
+                    F.sequence(F.lit(0), F.size(toks) - SHINGLE_K),
+                    lambda i: F.array_join(F.slice(toks, i + 1, SHINGLE_K), " "),
                 ),
-            ).otherwise(F.array(F.col(text_col)))
+            ).otherwise(F.array(F.col("text")))
         ).alias("shingles"),
     )
 
 
-def ngram_dropped_shingles(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = SHINGLE_K,
-    max_df: int = 30,
-) -> DataFrame:
+def ngram_dropped_shingles(df: DataFrame, max_df: int = 30) -> DataFrame:
     """Monitoring twin of ngram_jaccard_pairs' stop-shingle cut (same
     role lsh_dropped_buckets plays for MinHash): which shingles exceed
     ``max_df`` and in how many documents — each dropped shingle forfeits
     df*(df-1)/2 intersection rows, so a crawl operator watches this to
     tune the cut. One map-side-combinable aggregate on the shingle."""
     return (
-        _doc_shingles(df, id_col, text_col, k)
+        _doc_shingles(df)
         .select(F.explode("shingles").alias("shingle"))
         .groupBy("shingle")
         .agg(F.count("*").alias("doc_freq"))
@@ -319,15 +298,8 @@ def ngram_dropped_shingles(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = SHINGLE_K,
-    threshold: float = 0.8,
-    max_df: int | None = None,
-) -> DataFrame:
-    """Exact Jaccard over token k-shingles, relationally:
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8, max_df: int | None = None) -> DataFrame:
+    """Exact Jaccard over token SHINGLE_K-shingles, relationally:
 
     explode distinct shingles -> self-equi-join on shingle -> count
     intersections -> Jaccard = inter / (|A| + |B| - inter).
@@ -339,7 +311,7 @@ def ngram_jaccard_pairs(
     standard stop-shingle cut — Jaccard over the discriminative shingle
     set). The DuckDB oracles mirror the same cut exactly.
     """
-    scored = _shingle_pair_intersections(df, id_col, text_col, k, max_df)
+    scored = _shingle_pair_intersections(df, max_df)
     return (
         scored.select(
             "id_a",
@@ -350,65 +322,51 @@ def ngram_jaccard_pairs(
     )
 
 
-def _shingle_pair_intersections(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    max_df: int | None,
-) -> DataFrame:
+def _shingle_pair_intersections(df: DataFrame, max_df: int | None) -> DataFrame:
     """Shared pipeline under both shingle dedup operators: explode
-    distinct k-shingles, apply the max_df stop-shingle cut, self-join on
+    distinct shingles, apply the max_df stop-shingle cut, self-join on
     the shingle key, and return (id_a, id_b, n_inter, n_a, n_b) — the
     intersection counts every set-similarity score derives from. One
     shuffle on the shingle key; a change to the cut or the join lands in
     Jaccard AND containment at once."""
-    shingled = _doc_shingles(df, id_col, text_col, k)
-    exploded = shingled.select(id_col, F.explode("shingles").alias("shingle"))
+    shingled = _doc_shingles(df)
+    exploded = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
     if max_df is not None:
         dfreq = exploded.groupBy("shingle").agg(F.count("*").alias("_df"))
         exploded = (
             exploded.join(dfreq.filter(F.col("_df") <= max_df), "shingle")
-            .select(id_col, "shingle")
+            .select("doc_id", "shingle")
         )
-        sizes = exploded.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
+        sizes = exploded.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     else:
-        sizes = shingled.select(id_col, F.size("shingles").alias("n_shingles"))
+        sizes = shingled.select("doc_id", F.size("shingles").alias("n_shingles"))
 
     a, b = exploded.alias("a"), exploded.alias("b")
     inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count("*").alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("n_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_shingles").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_shingles").alias("n_b"))
     return inter.join(sa, "id_a").join(sb, "id_b")
 
 
-def ngram_containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = SHINGLE_K,
-    containment_ppm: int = 900_000,
-    jaccard_bar_ppm: int = 800_000,
-    max_df: int | None = None,
-) -> DataFrame:
+def ngram_containment_pairs(df: DataFrame, max_df: int | None = None) -> DataFrame:
     """Asymmetric containment pairs: containment(A in B) = |A∩B| / |A|
-    over token k-shingles. Catches partial scrapes and long quotes —
+    over token SHINGLE_K-shingles. Catches partial scrapes and long quotes —
     a small doc wholly contained in a large one has high containment
     but LOW Jaccard (the union is dominated by the big doc), so
     symmetric Jaccard dedup misses exactly these pairs; this operator
-    returns pairs where either direction's containment clears
-    ``containment_ppm``, flagging ``jaccard_missed`` for the ones a
-    Jaccard pass at ``jaccard_bar_ppm`` would not catch.
+    returns pairs where either direction's containment clears 900 000
+    ppm, flagging ``jaccard_missed`` for the ones a Jaccard pass at
+    800 000 ppm would not catch.
 
     All scores are exact integer ppm (floor division) — no doubles, so
     the DuckDB oracle matches bit for bit. Same single shingle-keyed
     shuffle and max_df stop-shingle cut as ``ngram_jaccard_pairs``.
     """
-    scored = _shingle_pair_intersections(df, id_col, text_col, k, max_df).select(
+    scored = _shingle_pair_intersections(df, max_df).select(
         "id_a",
         "id_b",
         "n_inter",
@@ -417,5 +375,5 @@ def ngram_containment_pairs(
         F.expr("n_inter * 1000000 div (n_a + n_b - n_inter)").alias("jaccard_ppm"),
     )
     return scored.filter(
-        F.greatest("cont_a_ppm", "cont_b_ppm") >= containment_ppm
-    ).withColumn("jaccard_missed", F.col("jaccard_ppm") < jaccard_bar_ppm)
+        F.greatest("cont_a_ppm", "cont_b_ppm") >= 900_000
+    ).withColumn("jaccard_missed", F.col("jaccard_ppm") < 800_000)

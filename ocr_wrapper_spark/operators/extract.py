@@ -93,27 +93,27 @@ def _extract_columns(kernel, payloads, langs, texts, with_spans: bool = True) ->
     return cols
 
 
-def with_extraction(df, html_col: str = "html", lang_col: str = "lang", keep_payload: bool = False,
-                    mode: str = "single", text_col: str | None = None):
-    """Extraction via mapInArrow: non-payload input columns pass through
-    zero-copy, extraction columns appended as native Arrow arrays.
+def with_extraction(df, mode: str = "single", text_col: str | None = None):
+    """Extraction via mapInArrow over a pages table (``html`` payload,
+    ``lang``): non-payload input columns pass through zero-copy,
+    extraction columns appended as native Arrow arrays.
 
     ``mode`` names the kernel (kernels/extract_doc.EXTRACTORS);
     ``text_col`` is the provider text column that the ``dual`` kernel
     enriches the primary extraction with. The html payload and the
-    provider text column are dropped on output (set keep_payload to
-    retain them): every output column is Arrow-decoded and row-converted
-    again JVM-side, the payload is the widest column by far, and
-    downstream consumers (cache, results, metrics) never need it."""
+    provider text column are dropped on output: every output column is
+    Arrow-decoded and row-converted again JVM-side, the payload is the
+    widest column by far, and downstream consumers (cache, results,
+    metrics) never need it."""
     import pyarrow as pa
 
     kernel = _kernel(mode)
     names = df.schema.fieldNames()
-    html_idx = names.index(html_col)
-    lang_idx = names.index(lang_col)
+    html_idx = names.index("html")
+    lang_idx = names.index("lang")
     text_idx = names.index(text_col) if text_col else None
 
-    drop = set() if keep_payload else {html_col, text_col}
+    drop = {"html", text_col}
     kept = [(i, f) for i, f in enumerate(df.schema.fields) if f.name not in drop]
     out_schema = T.StructType([f for _, f in kept] + EXTRACT_STRUCT.fields)
     out_names = out_schema.fieldNames()

@@ -131,7 +131,7 @@ def _decode_image(payload: bytes, fake: bool = True) -> np.ndarray:
     return (base % np.uint64(256)).astype(np.uint8).reshape(side, side)
 
 
-def with_media_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def with_media_meta(df: DataFrame) -> DataFrame:
     """Typed metadata column from the payload header (Arrow-batched)."""
 
     @F.pandas_udf(META_STRUCT)
@@ -139,7 +139,7 @@ def with_media_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         rows = [parse_media_header(v) or dict.fromkeys(META_STRUCT.fieldNames()) for v in p]
         return pd.DataFrame(rows)
 
-    return df.withColumn("meta", meta_udf(F.col(payload_col)))
+    return df.withColumn("meta", meta_udf(F.col("payload")))
 
 
 def resize_dims(width, height, max_size: int = 1024):
@@ -200,7 +200,7 @@ def fake_feature_vector(payload: bytes) -> list[float]:
     ]
 
 
-def detect_raster_tilt(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def detect_raster_tilt(df: DataFrame) -> DataFrame:
     """Pixel-space tilt detection over image payloads (reference
     tilt_correction_numpy.py:109-320 via kernels/raster_tilt.py): decode
     the embedded raster, optional denoise, scatter-add gain scan. Runs
@@ -214,7 +214,7 @@ def detect_raster_tilt(df: DataFrame, payload_col: str = "payload") -> DataFrame
         memo: dict[bytes, float] = {}
         for pdf in batches:
             angles = []
-            for payload in pdf[payload_col]:
+            for payload in pdf["payload"]:
                 key = _md5(payload).digest()
                 a = memo.get(key)
                 if a is None:
@@ -226,13 +226,12 @@ def detect_raster_tilt(df: DataFrame, payload_col: str = "payload") -> DataFrame
             out["tilt_deg"] = np.asarray(angles)
             yield out
 
-    return df.select("media_id", payload_col).mapInPandas(
+    return df.select("media_id", "payload").mapInPandas(
         op, schema="media_id long, tilt_deg double"
     )
 
 
-def detect_raster_codes(df: DataFrame, id_col: str = "scan_id",
-                        payload_col: str = "payload") -> DataFrame:
+def detect_raster_codes(df: DataFrame) -> DataFrame:
     """Pixel-space QR/barcode detection over image payloads (reference
     qr_barcodes.py:55-76 via kernels/raster_codes.py): decode the raster,
     binarize, locate + decode the symbol, emit one row per code with
@@ -244,12 +243,12 @@ def detect_raster_codes(df: DataFrame, id_col: str = "scan_id",
     def op(batches):
         for pdf in batches:
             rows = {k: [] for k in
-                    (id_col, "code_type", "code_data", "code_span",
+                    ("scan_id", "code_type", "code_data", "code_span",
                      "px_x0", "px_y0", "px_x1", "px_y1")}
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for mid, payload in zip(pdf["scan_id"], pdf["payload"]):
                 raster = _decode_image(payload).astype(np.float32) / 255.0
                 for ctype, data, x0, y0, x1, y1 in decode_codes(raster):
-                    rows[id_col].append(mid)
+                    rows["scan_id"].append(mid)
                     rows["code_type"].append(ctype)
                     rows["code_data"].append(data)
                     rows["code_span"].append(code_span_text(ctype, data))
@@ -259,30 +258,30 @@ def detect_raster_codes(df: DataFrame, id_col: str = "scan_id",
                     rows["px_y1"].append(y1)
             yield pd.DataFrame(rows)
 
-    return df.select(id_col, payload_col).mapInPandas(
+    return df.select("scan_id", "payload").mapInPandas(
         op,
-        schema=f"{id_col} long, code_type string, code_data string, "
+        schema="scan_id long, code_type string, code_data string, "
         "code_span string, px_x0 int, px_y0 int, px_x1 int, px_y1 int",
     )
 
 
-def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Per-media feature vector via mapInPandas (Arrow batches): the fake
     extractor hashes the payload header; a real model slots into the same
     batch signature (payload bytes in, float array out)."""
 
     def op(batches):
         for pdf in batches:
-            feats = [fake_feature_vector(p) for p in pdf[payload_col]]
+            feats = [fake_feature_vector(p) for p in pdf["payload"]]
             yield pd.DataFrame({"media_id": pdf["media_id"], "features": feats})
 
-    return df.select("media_id", payload_col).mapInPandas(
+    return df.select("media_id", "payload").mapInPandas(
         op, schema="media_id long, features array<double>"
     )
 
 
-def image_ahash(img: np.ndarray, grid: int = 8) -> int:
-    """Average hash (aHash, public pHash-family heuristic): grid x grid
+def image_ahash(img: np.ndarray) -> int:
+    """Average hash (aHash, public pHash-family heuristic): 8 x 8
     block means thresholded at their overall mean, packed row-major into
     a signed 64-bit int. Robust to resolution changes, sensitive to
     content — the standard cheap image near-dup key. Rasters smaller
@@ -290,7 +289,7 @@ def image_ahash(img: np.ndarray, grid: int = 8) -> int:
     image still hashes) instead of crashing the task."""
     a = img.astype(np.float64)
     h, w = a.shape
-    g = max(1, min(grid, h, w))
+    g = max(1, min(8, h, w))
     bh, bw = h // g, w // g
     blocks = a[: bh * g, : bw * g].reshape(g, bh, g, bw).mean(axis=(1, 3))
     bits = (blocks > blocks.mean()).ravel()
@@ -302,7 +301,7 @@ def image_ahash(img: np.ndarray, grid: int = 8) -> int:
     return v
 
 
-def with_image_phash(df: DataFrame, payload_col: str = "payload", grid: int = 8) -> DataFrame:
+def with_image_phash(df: DataFrame) -> DataFrame:
     """Perceptual-hash column over image payloads (Arrow batches): decode
     the embedded raster, aHash it. Identical rasters get identical
     hashes at any partitioning — the dedup key for image corpora.
@@ -313,19 +312,19 @@ def with_image_phash(df: DataFrame, payload_col: str = "payload", grid: int = 8)
     def op(batches):
         for pdf in batches:
             hashes = []
-            for p in pdf[payload_col]:
+            for p in pdf["payload"]:
                 try:
                     # fake=False: an undecodable payload must yield a
                     # NULL phash (never merged) — the degrade-to-fake
                     # raster path would hand corrupt payloads a real,
                     # groupable hash
-                    hashes.append(image_ahash(_decode_image(p, fake=False), grid))
+                    hashes.append(image_ahash(_decode_image(p, fake=False)))
                 except Exception:
                     hashes.append(None)
-            out = pdf.drop(columns=[payload_col]).copy()
+            out = pdf.drop(columns=["payload"]).copy()
             out["phash"] = pd.Series(hashes, dtype="Int64", index=pdf.index)
             yield out
 
-    fields = [f for f in df.schema.fields if f.name != payload_col]
+    fields = [f for f in df.schema.fields if f.name != "payload"]
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields) + ", phash long"
     return df.mapInPandas(op, schema=schema)

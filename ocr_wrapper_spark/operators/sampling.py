@@ -55,24 +55,15 @@ KNUTH_U_SQL = (
 )
 
 
-def _u(id_col):
-    return knuth_u(F.col(id_col))
-
-
-def stratified_sample(
-    df: DataFrame,
-    rates: dict[str, float],
-    default_rate: float = 1.0,
-    strat_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Rows of ``df`` repeated per the stratum's rate; ``epoch`` column
-    numbers the copies (1-based). Zero-shuffle: filter + explode only."""
+def stratified_sample(df: DataFrame, rates: dict[str, float], default_rate: float = 1.0) -> DataFrame:
+    """Rows of ``df`` repeated per the rate of their ``source`` stratum,
+    keyed by ``doc_id``; ``epoch`` column numbers the copies (1-based).
+    Zero-shuffle: filter + explode only."""
     mapping = F.create_map(
         *[x for k, v in sorted(rates.items()) for x in (F.lit(k), F.lit(float(v)))]
     )
-    rate = F.coalesce(mapping[F.col(strat_col)], F.lit(float(default_rate)))
-    u = _u(id_col)
+    rate = F.coalesce(mapping[F.col("source")], F.lit(float(default_rate)))
+    u = knuth_u(F.col("doc_id"))
     n_copies = F.floor(rate).cast("int") + (u < (rate - F.floor(rate))).cast("int")
     return (
         df.withColumn("_n", n_copies)
@@ -82,17 +73,11 @@ def stratified_sample(
     )
 
 
-def source_mix_summary(
-    df: DataFrame,
-    rates: dict[str, float],
-    default_rate: float = 1.0,
-    strat_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def source_mix_summary(df: DataFrame, rates: dict[str, float], default_rate: float = 1.0) -> DataFrame:
     """Per-stratum monitoring rollup of the sample: total rows emitted
     (epochs included) and unique docs kept."""
-    sampled = stratified_sample(df, rates, default_rate, strat_col, id_col)
-    return sampled.groupBy(strat_col).agg(
+    sampled = stratified_sample(df, rates, default_rate)
+    return sampled.groupBy("source").agg(
         F.count("*").alias("n_samples"),
-        F.countDistinct(id_col).alias("n_unique"),
+        F.countDistinct("doc_id").alias("n_unique"),
     )

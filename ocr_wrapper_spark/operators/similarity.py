@@ -1,7 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
-* brute-force cosine top-k — the exact baseline, pure built-ins
-  (zip_with/aggregate dot products on the JVM, no Python in the loop);
+Every operator reads the embeddings schema: a corpus of
+(vec_id long, embedding array) rows, queries keyed by query_id, and a
+label column where an operator needs one.
+
+* brute-force cosine top-k — the exact baseline, one numpy matmul per
+  Arrow batch;
 * LSH-bucketed variant (random hyperplane signatures) — the scale path:
   candidates meet in an equi-join on (plane-signature prefix) buckets,
   turning the N x Q cross product into bucket-local work.
@@ -30,53 +34,29 @@ def _norm(a):
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
 
 
-def cosine_scores(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_digits: int = 6,
-) -> DataFrame:
-    """All (query, corpus) cosine scores. Broadcast the (small) query side;
-    dot product / norms as JVM array expressions — no Python in the loop."""
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("_qvec"), _norm(F.col(vec_col)).alias("_qnorm")
-    )
-    c = corpus.select(
-        F.col(id_col), F.col(vec_col).alias("_cvec"), _norm(F.col(vec_col)).alias("_cnorm")
-    )
-    return c.crossJoin(F.broadcast(q)).select(
-        query_id_col,
-        id_col,
-        F.round(
-            _dot(F.col("_cvec"), F.col("_qvec")) / (F.col("_cnorm") * F.col("_qnorm")), round_digits
-        ).alias("cosine"),
-    )
+def _topk(scored: DataFrame, k: int, score: str) -> DataFrame:
+    """Per-query top-k of (query_id, vec_id, score) rows: score desc, id
+    asc — the tie-break every oracle mirrors for cross-engine determinism."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def cosine_scores_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_digits: int = 6,
+def cosine_topk_bruteforce(
+    corpus: DataFrame, queries: DataFrame, k: int = 5, round_digits: int = 6
 ) -> DataFrame:
-    """All (query, corpus) cosine scores via one numpy matmul per Arrow
-    batch — the fast path (~50x the per-pair JVM expression for dim-64
+    """Exact top-k neighbors per query by cosine similarity; rank computed
+    on the rounded score. All (query, corpus) scores come from one numpy
+    matmul per Arrow batch (~50x the per-pair JVM expression for dim-64
     vectors). The query side is collected to the driver (it is the small
     side by construction) and shipped in the task closure."""
-    import pandas as pd
-
-    q_rows = queries.select(query_id_col, vec_col).collect()
+    q_rows = queries.select("query_id", "embedding").collect()
     q_ids = [r[0] for r in q_rows]
     Q = np.asarray([r[1] for r in q_rows], dtype=np.float64)
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
 
     def score(batches):
         for pdf in batches:
-            C = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            C = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
             if C.size == 0:
                 continue
             Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
@@ -85,37 +65,16 @@ def cosine_scores_arrow(
             b = len(pdf)
             yield pd.DataFrame(
                 {
-                    query_id_col: np.repeat(np.asarray(q_ids, dtype=np.int64), b),
-                    id_col: np.tile(pdf[id_col].to_numpy(dtype=np.int64), m),
+                    "query_id": np.repeat(np.asarray(q_ids, dtype=np.int64), b),
+                    "vec_id": np.tile(pdf["vec_id"].to_numpy(dtype=np.int64), m),
                     "cosine": S.T.reshape(-1),
                 }
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(
-        score, schema=f"{query_id_col} long, {id_col} long, cosine double"
+    scored = corpus.select("vec_id", "embedding").mapInPandas(
+        score, schema="query_id long, vec_id long, cosine double"
     )
-
-
-def cosine_topk_bruteforce(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_digits: int = 6,
-    impl: str = "arrow",
-) -> DataFrame:
-    """Exact top-k neighbors per query by cosine similarity; rank computed
-    on the rounded score with id tie-break for cross-engine determinism.
-    impl='arrow' uses the numpy-matmul batch scorer; impl='sql' the pure
-    JVM expression variant."""
-    if impl == "arrow":
-        scored = cosine_scores_arrow(corpus, queries, id_col, vec_col, query_id_col, round_digits)
-    else:
-        scored = cosine_scores(corpus, queries, id_col, vec_col, query_id_col, round_digits)
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, k, "cosine")
 
 
 ZERO_NORM_EPS = 1e-100  # below this max|v| a vector counts as zero
@@ -134,15 +93,7 @@ def _quantize_i8(V: np.ndarray) -> np.ndarray:
     return np.where(zero, 0, codes)
 
 
-def cosine_topk_int8(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_digits: int = 6,
-) -> DataFrame:
+def cosine_topk_int8(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Quantized brute-force top-k: vectors scalar-quantized to int8
     (per-vector symmetric scale), cosine computed on the integer codes.
     The scale cancels in the cosine, so this approximates the float
@@ -151,7 +102,7 @@ def cosine_topk_int8(
     corpus is 4x smaller (int8 SIMD dot on real hardware). Integer dot
     products are order-exact, which is what makes the DuckDB oracle an
     exact mirror rather than a tolerance check."""
-    q_rows = queries.select(query_id_col, vec_col).collect()
+    q_rows = queries.select("query_id", "embedding").collect()
     q_ids = [r[0] for r in q_rows]
     Q = _quantize_i8(np.asarray([r[1] for r in q_rows], dtype=np.float64)).astype(np.int64)
     qnorm = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
@@ -160,7 +111,7 @@ def cosine_topk_int8(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = _quantize_i8(np.asarray(pdf[vec_col].tolist(), dtype=np.float64)).astype(np.int64)
+            C = _quantize_i8(np.asarray(pdf["embedding"].tolist(), dtype=np.float64)).astype(np.int64)
             cnorm = np.sqrt((C * C).sum(axis=1).astype(np.float64))
             # integer dot products are order-exact; only the final
             # divide + round touch floats, so DuckDB reproduces every
@@ -168,22 +119,21 @@ def cosine_topk_int8(
             # vectors at cosine 0 instead of 0/0 NaN (oracle mirrors it).
             D = (C @ Q.T).astype(np.float64)
             denom = np.maximum(cnorm[:, None] * qnorm[None, :], ZERO_NORM_EPS)
-            S = np.round(D / denom, round_digits)
+            S = np.round(D / denom, 6)
             m = len(q_ids)
             b = len(pdf)
             yield pd.DataFrame(
                 {
-                    query_id_col: np.repeat(np.asarray(q_ids, dtype=np.int64), b),
-                    id_col: np.tile(pdf[id_col].to_numpy(dtype=np.int64), m),
+                    "query_id": np.repeat(np.asarray(q_ids, dtype=np.int64), b),
+                    "vec_id": np.tile(pdf["vec_id"].to_numpy(dtype=np.int64), m),
                     "cosine": S.T.reshape(-1),
                 }
             )
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, schema=f"{query_id_col} long, {id_col} long, cosine double"
+    scored = corpus.select("vec_id", "embedding").mapInPandas(
+        score, schema="query_id long, vec_id long, cosine double"
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, k, "cosine")
 
 
 # Above this corpus size the broadcast-matmul near-pairs path would
@@ -194,9 +144,6 @@ BROADCAST_LIMIT = 200_000
 def cosine_near_pairs(
     corpus: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
     strategy: str = "auto",
     broadcast_limit: int = BROADCAST_LIMIT,
 ) -> DataFrame:
@@ -219,7 +166,7 @@ def cosine_near_pairs(
     if strategy not in ("auto", "broadcast", "lsh"):
         raise ValueError(f"unknown strategy {strategy!r}")
     if strategy != "lsh":
-        n = corpus.select(id_col).count()
+        n = corpus.select("vec_id").count()
         if n > broadcast_limit:
             if strategy == "broadcast":
                 raise ValueError(
@@ -230,9 +177,9 @@ def cosine_near_pairs(
         else:
             strategy = "broadcast"
     if strategy == "lsh":
-        return cosine_near_pairs_lsh(corpus, threshold, id_col, vec_col, round_digits)
+        return cosine_near_pairs_lsh(corpus, threshold)
 
-    rows = corpus.select(id_col, vec_col).collect()
+    rows = corpus.select("vec_id", "embedding").collect()
     ids = np.asarray([r[0] for r in rows], dtype=np.int64)
     M = np.asarray([r[1] for r in rows], dtype=np.float64)
     Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
@@ -246,12 +193,12 @@ def cosine_near_pairs(
     def op(batches):
         all_ids, all_m = b_ids.value, b_m.value
         for pdf in batches:
-            A = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            A = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
             if A.size == 0:
                 continue
             An = A / np.linalg.norm(A, axis=1, keepdims=True)
-            a_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            S = np.round(An @ all_m.T, round_digits)
+            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            S = np.round(An @ all_m.T, 4)
             ii, jj = np.nonzero((S >= threshold) & (a_ids[:, None] < all_ids[None, :]))
             yield pd.DataFrame(
                 {
@@ -261,7 +208,7 @@ def cosine_near_pairs(
                 }
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(
+    return corpus.select("vec_id", "embedding").mapInPandas(
         op, schema="id_a long, id_b long, cosine double"
     )
 
@@ -310,14 +257,12 @@ def top_clusters_pandas_udf(Cn: np.ndarray, n_centroids: int, n_top: int):
     return udf
 
 
-def seed_centroids(
-    corpus: DataFrame, n_centroids: int = N_CENTROIDS, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> np.ndarray:
+def seed_centroids(corpus: DataFrame, n_centroids: int = N_CENTROIDS) -> np.ndarray:
     """The deterministic centroid seeds (first n_centroids corpus
     vectors by id) as a float64 matrix — n_centroids x dim, driver-side
     by construction."""
     seeds = sorted(
-        corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col).collect(),
+        corpus.filter(F.col("vec_id") < n_centroids).select("vec_id", "embedding").collect(),
         key=lambda r: r[0],
     )
     return np.asarray([r[1] for r in seeds], dtype=np.float64)
@@ -328,12 +273,7 @@ MEAN_ROUND = 6  # Lloyd centroid means rounded at 1e-6 so the float64
 # order) can never reach the value the oracle recomputes
 
 
-def lloyd_refine(
-    corpus: DataFrame,
-    C: np.ndarray,
-    n_iter: int = 1,
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def lloyd_refine(corpus: DataFrame, C: np.ndarray, n_iter: int = 1) -> np.ndarray:
     """Distributed Lloyd iteration(s) over the coarse centroids.
 
     Each iteration: assign every corpus vector to its best centroid
@@ -361,7 +301,7 @@ def lloyd_refine(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+                V = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
                 Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
                 codes = _cluster_code_matrix(Vn, Cn, n_centroids)
                 best = np.argmax(codes, axis=1)
@@ -377,7 +317,7 @@ def lloyd_refine(
                     }
                 )
 
-        parts = corpus.select(vec_col).mapInPandas(
+        parts = corpus.select("embedding").mapInPandas(
             partials, schema="cluster int, cnt long, vsum array<double>"
         )
         summed = (
@@ -398,24 +338,13 @@ def lloyd_refine(
     return C
 
 
-def ivf_topk_cosine(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = N_CENTROIDS,
-    n_probe: int = N_PROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_digits: int = 4,
-    lloyd_iters: int = 0,
-) -> DataFrame:
+def ivf_topk_cosine(corpus: DataFrame, queries: DataFrame, k: int = 5, lloyd_iters: int = 0) -> DataFrame:
     """IVF (inverted-file) approximate top-k: corpus vectors are
     assigned to their best coarse centroid once (the inverted lists);
-    each query probes its ``n_probe`` closest centroids and reranks
+    each query probes its N_PROBE closest centroids and reranks
     exactly inside those lists only. The candidate set meets in an
     equi-join on cluster id — corpus stays partitioned, nothing large on
-    the driver (centroids are n_centroids x dim).
+    the driver (centroids are N_CENTROIDS x dim).
 
     ``lloyd_iters`` > 0 refines the seeded centroids with distributed
     k-means iterations (lloyd_refine) before building the lists —
@@ -423,53 +352,51 @@ def ivf_topk_cosine(
     import pandas as pd
     from pyspark.sql import types as T
 
-    C = seed_centroids(corpus, n_centroids, id_col, vec_col)
+    C = seed_centroids(corpus)
     if lloyd_iters:
-        C = lloyd_refine(corpus, C, n_iter=lloyd_iters, vec_col=vec_col)
+        C = lloyd_refine(corpus, C, n_iter=lloyd_iters)
     Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
 
     def top_clusters_udf(n_top: int):
-        return top_clusters_pandas_udf(Cn, n_centroids, n_top)
+        return top_clusters_pandas_udf(Cn, N_CENTROIDS, n_top)
 
     # norms are computed ONCE per corpus row / per probe row and carried
     # through the join as scalars; per-candidate work is then a single
     # dot-product fold instead of three O(dim) array folds (the norm of
     # a vector does not depend on the candidate pair).
     assigned = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        _norm(F.col(vec_col)).alias("_cnorm"),
-        F.element_at(top_clusters_udf(1)(F.col(vec_col)), 1).alias("cluster"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        _norm(F.col("embedding")).alias("_cnorm"),
+        F.element_at(top_clusters_udf(1)(F.col("embedding")), 1).alias("cluster"),
     )
     probes = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("_qvec"),
-        _norm(F.col(vec_col)).alias("_qnorm"),
-        F.explode(top_clusters_udf(n_probe)(F.col(vec_col))).alias("cluster"),
+        F.col("query_id"),
+        F.col("embedding").alias("_qvec"),
+        _norm(F.col("embedding")).alias("_qnorm"),
+        F.explode(top_clusters_udf(N_PROBE)(F.col("embedding"))).alias("cluster"),
     )
     cand = assigned.join(F.broadcast(probes), "cluster").select(
-        query_id_col,
-        id_col,
-        F.col(vec_col).alias("_cvec"),
+        "query_id",
+        "vec_id",
+        F.col("embedding").alias("_cvec"),
         "_qvec",
         "_cnorm",
         "_qnorm",
     )
     scored = cand.select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         F.round(
-            _dot(F.col("_cvec"), F.col("_qvec")) / (F.col("_cnorm") * F.col("_qnorm")),
-            round_digits,
+            _dot(F.col("_cvec"), F.col("_qvec")) / (F.col("_cnorm") * F.col("_qnorm")), 4
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, k, "cosine")
 
 
-def _random_planes(dim: int, n_planes: int = N_PLANES) -> np.ndarray:
+def _random_planes(dim: int) -> np.ndarray:
     rng = np.random.RandomState(7)
-    return rng.standard_normal((n_planes, dim)).astype(np.float64)
+    return rng.standard_normal((N_PLANES, dim)).astype(np.float64)
 
 
 # near-pair LSH: 64 planes in 8 bands of 8 bits. For a true near-dup
@@ -481,13 +408,13 @@ N_PAIR_PLANES = 64
 N_PAIR_BANDS = 8
 
 
-def _band_buckets_udf(planes: np.ndarray, n_bands: int):
+def _band_buckets_udf(planes: np.ndarray):
     """Arrow-batched band-bucket signature: one numpy matmul per batch
     (not 16 x dim literal JVM expressions — no plan bloat at dim 768).
     Returns array<long> of per-band bucket values."""
     from pyspark.sql import types as T
 
-    per_band = planes.shape[0] // n_bands
+    per_band = planes.shape[0] // N_PAIR_BANDS
     weights = (np.int64(1) << np.arange(per_band, dtype=np.int64)).astype(np.int64)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -497,7 +424,7 @@ def _band_buckets_udf(planes: np.ndarray, n_bands: int):
         V = np.asarray(vecs.tolist(), dtype=np.float64)
         B = (V @ planes.T >= 0).astype(np.int64)  # (n, n_planes)
         buckets = np.stack(
-            [B[:, b * per_band : (b + 1) * per_band] @ weights for b in range(n_bands)],
+            [B[:, b * per_band : (b + 1) * per_band] @ weights for b in range(N_PAIR_BANDS)],
             axis=1,
         )
         return pd.Series([row.tolist() for row in buckets])
@@ -505,25 +432,14 @@ def _band_buckets_udf(planes: np.ndarray, n_bands: int):
     return udf
 
 
-def cosine_near_pairs_lsh(
-    corpus: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-    n_bands: int = N_PAIR_BANDS,
-    max_bucket: int | None = None,
-) -> DataFrame:
+def cosine_near_pairs_lsh(corpus: DataFrame, threshold: float) -> DataFrame:
     """Near-duplicate pairs at corpus scale: hyperplane-LSH buckets
     generate candidates in a distributed equi-join (nothing collected to
     the driver), then an exact Arrow-batched cosine verifies each
-    candidate with the same numpy rounding as the broadcast path.
-
-    ``max_bucket`` optionally drops degenerate buckets (all-identical
-    embeddings) before the self-join, like lsh_candidate_pairs."""
+    candidate with the same numpy rounding as the broadcast path."""
     import pandas as pd
 
-    head = corpus.select(vec_col).head()
+    head = corpus.select("embedding").head()
     if head is None:
         return corpus.sparkSession.createDataFrame(
             [], schema="id_a long, id_b long, cosine double"
@@ -532,32 +448,25 @@ def cosine_near_pairs_lsh(
     rng = np.random.RandomState(11)
     planes = rng.standard_normal((N_PAIR_PLANES, dim)).astype(np.float64)
 
-    sig = corpus.select(id_col, vec_col).withColumn(
-        "_buckets", _band_buckets_udf(planes, n_bands)(F.col(vec_col))
+    sig = corpus.select("vec_id", "embedding").withColumn(
+        "_buckets", _band_buckets_udf(planes)(F.col("embedding"))
     )
     bands = sig.select(
-        id_col, vec_col, F.posexplode("_buckets").alias("band_id", "bucket")
+        "vec_id", "embedding", F.posexplode("_buckets").alias("band_id", "bucket")
     )
-    if max_bucket is not None:
-        counts = bands.groupBy("band_id", "bucket").agg(F.count("*").alias("_bn"))
-        bands = bands.join(
-            F.broadcast(counts.filter(F.col("_bn") > max_bucket)),
-            ["band_id", "bucket"],
-            "left_anti",
-        )
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
             b,
             (F.col("a.band_id") == F.col("b.band_id"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{vec_col}").alias("_va"),
-            F.col(f"b.{vec_col}").alias("_vb"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
+            F.col("a.embedding").alias("_va"),
+            F.col("b.embedding").alias("_vb"),
         )
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -571,7 +480,7 @@ def cosine_near_pairs_lsh(
             cos = np.round(
                 (A * B).sum(axis=1)
                 / (np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)),
-                round_digits,
+                4,
             )
             keep = cos >= threshold
             yield pd.DataFrame(
@@ -600,27 +509,19 @@ def hyperplane_signature_col(vec_col, planes: np.ndarray):
     return out
 
 
-def cosine_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    dim: int = 32,
-    n_bands: int = 4,
-) -> DataFrame:
+def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 5, dim: int = 32) -> DataFrame:
     """Approximate top-k: random-hyperplane LSH bucketing + exact rerank
-    inside buckets. Bands of 4 planes each; candidates = bucket collisions
-    in any band (union via posexplode of band keys)."""
+    inside buckets. 4 bands of 4 planes each; candidates = bucket
+    collisions in any band (union via posexplode of band keys)."""
     planes = _random_planes(dim)
+    n_bands = 4
     per_band = N_PLANES // n_bands
 
     def banded(df, idc):
-        sig = df.withColumn("_sig", hyperplane_signature_col(F.col(vec_col), planes))
+        sig = df.withColumn("_sig", hyperplane_signature_col(F.col("embedding"), planes))
         return sig.select(
             F.col(idc),
-            F.col(vec_col),
+            F.col("embedding"),
             F.posexplode(
                 F.array(
                     *[
@@ -633,8 +534,8 @@ def cosine_topk_lsh(
             ).alias("band_id", "bucket"),
         )
 
-    cb = banded(corpus.select(id_col, vec_col), id_col)
-    qb = banded(queries.select(query_id_col, vec_col), query_id_col)
+    cb = banded(corpus.select("vec_id", "embedding"), "vec_id")
+    qb = banded(queries.select("query_id", "embedding"), "query_id")
 
     cand = (
         cb.alias("c")
@@ -643,22 +544,21 @@ def cosine_topk_lsh(
             (F.col("c.band_id") == F.col("q.band_id")) & (F.col("c.bucket") == F.col("q.bucket")),
         )
         .select(
-            F.col(f"q.{query_id_col}").alias(query_id_col),
-            F.col(f"c.{id_col}").alias(id_col),
-            F.col(f"c.{vec_col}").alias("_cvec"),
-            F.col(f"q.{vec_col}").alias("_qvec"),
+            F.col("q.query_id").alias("query_id"),
+            F.col("c.vec_id").alias("vec_id"),
+            F.col("c.embedding").alias("_cvec"),
+            F.col("q.embedding").alias("_qvec"),
         )
-        .dropDuplicates([query_id_col, id_col])
+        .dropDuplicates(["query_id", "vec_id"])
     )
     scored = cand.select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         F.round(
             _dot(F.col("_cvec"), F.col("_qvec")) / (_norm(F.col("_cvec")) * _norm(F.col("_qvec"))), 6
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, k, "cosine")
 
 
 # ---------------------------------------------------------------------------
@@ -681,27 +581,20 @@ PQ_K = 16
 _PQ_OFFSET = 4_000_000
 
 
-def pq_codebook(
-    corpus: DataFrame,
-    n_codewords: int = PQ_K,
-    m_subspaces: int = PQ_M,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def pq_codebook(corpus: DataFrame) -> np.ndarray:
     """Seeded PQ codebook (M, K, ds): subvectors of the first K corpus
     vectors. K rows collected — a provably tiny side at any corpus
     scale (like seed_centroids); a production variant would Lloyd-refine
     per subspace exactly as lloyd_refine does for IVF."""
-    rows = corpus.filter(F.col(id_col) < n_codewords).select(id_col, vec_col).collect()
+    rows = corpus.filter(F.col("vec_id") < PQ_K).select("vec_id", "embedding").collect()
     rows.sort(key=lambda r: r[0])
     V = np.asarray([r[1] for r in rows], dtype=np.float64)  # (K, dim)
-    if V.shape[0] != n_codewords:
-        raise ValueError(f"need {n_codewords} seed vectors, found {V.shape[0]}")
+    if V.shape[0] != PQ_K:
+        raise ValueError(f"need {PQ_K} seed vectors, found {V.shape[0]}")
     dim = V.shape[1]
-    if dim % m_subspaces:
-        raise ValueError(f"dim {dim} not divisible by {m_subspaces} subspaces")
-    ds = dim // m_subspaces
-    return V.reshape(n_codewords, m_subspaces, ds).transpose(1, 0, 2).copy()
+    if dim % PQ_M:
+        raise ValueError(f"dim {dim} not divisible by {PQ_M} subspaces")
+    return V.reshape(PQ_K, PQ_M, dim // PQ_M).transpose(1, 0, 2).copy()
 
 
 def pq_encode_batch(Vm: np.ndarray, C: np.ndarray) -> np.ndarray:
@@ -736,16 +629,7 @@ def pq_query_lut(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
     return np.rint(np.round(D, 6) * 1e6).astype(np.int64)
 
 
-def pq_topk_adc(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    m_subspaces: int = PQ_M,
-    n_codewords: int = PQ_K,
-) -> DataFrame:
+def pq_topk_adc(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """PQ top-k via asymmetric distance computation: one fused
     mapInPandas pass encodes each Arrow batch to 4-bit codes and scores
     the codes against per-query integer LUTs (a table lookup + int sum
@@ -753,47 +637,37 @@ def pq_topk_adc(
     K-row codebook travel in the closure; the corpus is read once and
     never shuffles until the per-query top-k window (which Spark caps
     per-partition via WindowGroupLimit)."""
-    C = pq_codebook(corpus, n_codewords, m_subspaces, id_col, vec_col)
-    q_rows = queries.select(query_id_col, vec_col).collect()
+    C = pq_codebook(corpus)
+    q_rows = queries.select("query_id", "embedding").collect()
     q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
     Q = np.asarray([r[1] for r in q_rows], dtype=np.float64)
     lut = pq_query_lut(Q, C)  # (nq, M, K)
-    m_idx = np.arange(m_subspaces)
+    m_idx = np.arange(PQ_M)
 
     def scan(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = pq_encode_batch(V.reshape(len(pdf), m_subspaces, -1), C)
+            V = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
+            codes = pq_encode_batch(V.reshape(len(pdf), PQ_M, -1), C)
             # gather (nq, b, M) LUT entries and sum subspaces: int64-exact
             adc = lut[:, np.broadcast_to(m_idx, codes.shape), codes].sum(axis=2)
             b = len(pdf)
             yield pd.DataFrame(
                 {
-                    query_id_col: np.repeat(q_ids, b),
-                    id_col: np.tile(pdf[id_col].to_numpy(dtype=np.int64), len(q_ids)),
+                    "query_id": np.repeat(q_ids, b),
+                    "vec_id": np.tile(pdf["vec_id"].to_numpy(dtype=np.int64), len(q_ids)),
                     "adc_micros": adc.reshape(-1),
                 }
             )
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        scan, schema=f"{query_id_col} long, {id_col} long, adc_micros long"
+    scored = corpus.select("vec_id", "embedding").mapInPandas(
+        scan, schema="query_id long, vec_id long, adc_micros long"
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("adc_micros").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, k, "adc_micros")
 
 
-def hard_negative_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    query_id_col: str = "query_id",
-    round_digits: int = 4,
-) -> DataFrame:
+def hard_negative_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Contrastive hard-negative mining: per query, the k most
     cosine-similar corpus vectors whose label DIFFERS from the query's —
     the pairs a contrastive trainer wants. Each Arrow batch emits only
@@ -801,7 +675,7 @@ def hard_negative_topk(
     union of batch-local top-k's under the same (cosine desc, id asc)
     order), so the rank window shuffles k rows per (query, batch), not
     the full score matrix."""
-    q_rows = queries.select(query_id_col, vec_col, label_col).collect()
+    q_rows = queries.select("query_id", "embedding", "label").collect()
     q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
     Q = np.asarray([r[1] for r in q_rows], dtype=np.float64)
     q_lab = np.asarray([int(r[2]) for r in q_rows], dtype=np.int64)
@@ -811,11 +685,11 @@ def hard_negative_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Cv = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            Cv = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
             Cn = Cv / np.linalg.norm(Cv, axis=1, keepdims=True)
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_lab = pdf[label_col].to_numpy(dtype=np.int64)
-            S = np.round(Cn @ Qn.T, round_digits)  # (b, nq)
+            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            c_lab = pdf["label"].to_numpy(dtype=np.int64)
+            S = np.round(Cn @ Qn.T, 4)  # (b, nq)
             frames = []
             for qi in range(len(q_ids)):
                 mask = c_lab != q_lab[qi]
@@ -826,9 +700,9 @@ def hard_negative_topk(
                 frames.append(
                     pd.DataFrame(
                         {
-                            query_id_col: np.full(len(order), q_ids[qi]),
+                            "query_id": np.full(len(order), q_ids[qi]),
                             "query_label": np.full(len(order), q_lab[qi], dtype=np.int32),
-                            id_col: ids[order],
+                            "vec_id": ids[order],
                             "neg_label": labs[order].astype(np.int32),
                             "cosine": s[order],
                         }
@@ -837,12 +711,11 @@ def hard_negative_topk(
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    scored = corpus.select(id_col, vec_col, label_col).mapInPandas(
+    scored = corpus.select("vec_id", "embedding", "label").mapInPandas(
         score,
-        schema=f"{query_id_col} long, query_label int, {id_col} long, neg_label int, cosine double",
+        schema="query_id long, query_label int, vec_id long, neg_label int, cosine double",
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, k, "cosine")
 
 
 # ---------------------------------------------------------------------------
@@ -859,15 +732,7 @@ def _cos_ticks(cos_col):
     return F.round(cos_col * BITEXT_COS_SCALE).cast("long")
 
 
-def bitext_margin_candidates(
-    src: DataFrame,
-    tgt: DataFrame,
-    k: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-    knn=None,
-) -> DataFrame:
+def bitext_margin_candidates(src: DataFrame, tgt: DataFrame, k: int = 4) -> DataFrame:
     """Margin-based bitext candidate scoring (Artetxe & Schwenk 2019,
     the CCMatrix mining criterion): for every source vector x, score its
     k nearest target vectors y by
@@ -878,34 +743,31 @@ def bitext_margin_candidates(
     avg_bwd(y) the mean cosine of y's k nearest sources — the ratio
     penalizes "hub" vectors that are near everything.
 
-    Exactness: cosines are rounded to `round_digits` then scaled to
-    int64 ticks; the margin is published as ONE IEEE division of two
+    Exactness: cosines are rounded to 4 digits then scaled to int64
+    ticks; the margin is published as ONE IEEE division of two
     exactly-representable int64s (2*k*cos_ticks / (sum_fwd + sum_bwd)),
     bit-identical across engines — no libm, no float accumulation.
     A non-positive denominator (degenerate geometry: the kNN shells sum
     to <= 0) yields NULL margin.
 
-    Scale shape: the kNN stage is pluggable (`knn`; defaults to the
-    exact arrow scorer with batch-local partial top-k). At 10^12 rows
-    both language sides are corpus-scale, so the kNN swaps to the
-    IVF/PQ path (ivf_topk_cosine / pq_topk_adc) exactly like the ann_*
+    Scale shape: the kNN stage is the exact arrow scorer
+    (cosine_topk_bruteforce). At 10^12 rows both language sides are
+    corpus-scale, so the kNN would swap to the IVF/PQ path (ivf_topk_cosine / pq_topk_adc) exactly like the ann_*
     family — everything downstream of the kNN is k-row-per-vector
     tables: two keyed sums of |src| and |tgt| rows and two equi-joins
     back onto the k*|src|-row candidate set. Nothing below this line
     ever touches the |src| x |tgt| score matrix.
     """
-    if knn is None:
-        knn = cosine_topk_bruteforce
-    s_q = src.select(F.col(id_col).alias("query_id"), vec_col)
-    t_q = tgt.select(F.col(id_col).alias("query_id"), vec_col)
-    fwd = knn(tgt, s_q, k=k, id_col=id_col, vec_col=vec_col, round_digits=round_digits).select(
+    s_q = src.select(F.col("vec_id").alias("query_id"), "embedding")
+    t_q = tgt.select(F.col("vec_id").alias("query_id"), "embedding")
+    fwd = cosine_topk_bruteforce(tgt, s_q, k=k, round_digits=4).select(
         F.col("query_id").alias("src_id"),
-        F.col(id_col).alias("tgt_id"),
+        F.col("vec_id").alias("tgt_id"),
         "cosine",
     )
-    bwd = knn(src, t_q, k=k, id_col=id_col, vec_col=vec_col, round_digits=round_digits).select(
+    bwd = cosine_topk_bruteforce(src, t_q, k=k, round_digits=4).select(
         F.col("query_id").alias("tgt_id"),
-        F.col(id_col).alias("src_id"),
+        F.col("vec_id").alias("src_id"),
         "cosine",
     )
     sum_fwd = fwd.groupBy("src_id").agg(F.sum(_cos_ticks(F.col("cosine"))).alias("sum_fwd"))
@@ -933,20 +795,15 @@ def bitext_margin_candidates(
 # ---------------------------------------------------------------------------
 
 
-def _cos_dist_ticks(a, b, round_digits: int = 4):
+def _cos_dist_ticks(a, b):
     """Cosine distance in int64 ticks: 10^4 * (1 - round(cos, 4)) — the
     same round-then-scale grain every ANN/bitext oracle uses, so both
     engines agree bit-for-bit (a vector's distance to itself is 0)."""
-    cos = F.round(_dot(a, b) / (_norm(a) * _norm(b)), round_digits)
+    cos = F.round(_dot(a, b) / (_norm(a) * _norm(b)), 4)
     return F.lit(BITEXT_COS_SCALE) - _cos_ticks(cos)
 
 
-def kcenter_greedy(
-    vectors: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
+def kcenter_greedy(vectors: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
     """Gonzalez greedy k-center over cosine distance: seed with the
     lowest id (the 2-approximation guarantee holds for ANY seed), then
     repeatedly pick the vector farthest from its nearest selected
@@ -973,7 +830,9 @@ def kcenter_greedy(
     both engines, asserted by the degeneracy test."""
     from pyspark import StorageLevel
 
-    e = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")).persist(
+    # the vec_id alias keeps this cached projection from standing in for
+    # the caller's own (vec_id, embedding AS v) projections of the table
+    e = vectors.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("v")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     seed = e.agg(F.min_by(F.struct("vec_id", "v"), F.col("vec_id")).alias("c")).select(

@@ -106,17 +106,11 @@ def fingerprint_col(text_col: Column) -> Column:
     return F.xxhash64(normalized)
 
 
-def with_repetition_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_dup_word_frac: float = 0.9,
-    max_top_bigram_frac: float = 0.10,
-) -> DataFrame:
+def with_repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021 §A1.1, public
     literature): duplicate-word fraction, top-unigram coverage, and
-    top-bigram coverage, plus the keep/cut decision at the given
-    thresholds.
+    top-bigram coverage, plus the keep/cut decision (keep while
+    dup_word_frac <= 0.9 and top_bigram_frac <= 0.10).
 
     The n-gram modes are computed relationally — explode n-grams,
     count per (doc, gram), max per doc — so both shuffles are keyed by
@@ -131,8 +125,8 @@ def with_repetition_stats(
     # produce no grams — they re-enter via a right join against a
     # doc_id-only scan (column-pruned, reads none of the text).
     wdf = (
-        df.filter(F.col(text_col) != "")
-        .select(F.col(id_col), F.split(F.col(text_col), " ").alias("_w"))
+        df.filter(F.col("text") != "")
+        .select(F.col("doc_id"), F.split(F.col("text"), " ").alias("_w"))
     )
     # sequence(0, n-2) flips to a descending [0, -1] when n < 2 (Spark
     # auto-negates the step), so the bigram arm must be gated explicitly
@@ -144,7 +138,7 @@ def with_repetition_stats(
         ),
     ).otherwise(F.expr("array()").cast("array<struct<typ:int,gram:string>>"))
     grams = wdf.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.concat(
                 F.transform(
@@ -154,20 +148,20 @@ def with_repetition_stats(
                 bigram_structs,
             )
         ).alias("g"),
-    ).select(id_col, F.col("g.typ").alias("typ"), F.col("g.gram").alias("gram"))
+    ).select("doc_id", F.col("g.typ").alias("typ"), F.col("g.gram").alias("gram"))
 
-    per_gram = grams.groupBy(id_col, "typ", "gram").agg(F.count("*").alias("c"))
-    per_doc = per_gram.groupBy(id_col).agg(
+    per_gram = grams.groupBy("doc_id", "typ", "gram").agg(F.count("*").alias("c"))
+    per_doc = per_gram.groupBy("doc_id").agg(
         F.sum(F.when(F.col("typ") == 1, F.col("c"))).cast("long").alias("_nw"),
         F.count(F.when(F.col("typ") == 1, True)).alias("_nd"),
         F.max(F.when(F.col("typ") == 1, F.col("c"))).alias("_top1"),
         F.max(F.when(F.col("typ") == 2, F.col("c"))).alias("_top2"),
     )
     stats = (
-        df.select(id_col)
-        .join(per_doc, id_col, "left")
+        df.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("_nw"), F.lit(0)).cast("int").alias("n_words"),
             F.when(
                 F.coalesce(F.col("_nw"), F.lit(0)) > 0,
@@ -193,23 +187,17 @@ def with_repetition_stats(
     # trip a fixed threshold below n = 2/threshold words
     return stats.withColumn(
         "keep",
-        (F.col("dup_word_frac") <= max_dup_word_frac)
-        & ((F.col("top_bigram_frac") <= max_top_bigram_frac) | (F.col("_top2c") < 2)),
+        (F.col("dup_word_frac") <= 0.9)
+        & ((F.col("top_bigram_frac") <= 0.10) | (F.col("_top2c") < 2)),
     ).drop("_top2c")
 
 
-def with_dup_span_coverage(
-    df: DataFrame,
-    window: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_dup_span_frac: float = 0.2,
-) -> DataFrame:
+def with_dup_span_coverage(df: DataFrame, window: int = 8) -> DataFrame:
     """Exact-substring duplication coverage (the Lee et al. 2022
     "Deduplicating Training Data" shape, windowed for Spark): a token
     position is duplicated if any ``window``-gram covering it occurs in
     more than one document; emit the covered fraction per doc plus the
-    keep/cut decision.
+    keep/cut decision (keep while dup_span_frac <= 0.2).
 
     Plan shape: one explode of stride-1 windows, a map-side-combinable
     distinct-doc count per gram, an equi-join back on the gram, and a
@@ -218,41 +206,41 @@ def with_dup_span_coverage(
     would be md5'd to narrow the exchange; kept raw here so the oracle
     joins on the same bytes.
     """
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     # empty/null docs stay in the output (n_tokens=0, frac=0, keep) —
     # a curation filter must emit a verdict for every input doc, like
     # with_repetition_stats does
     t = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         toks.alias("_tk"),
-        F.when(F.coalesce(F.col(text_col), F.lit("")) == "", F.lit(0))
+        F.when(F.coalesce(F.col("text"), F.lit("")) == "", F.lit(0))
         .otherwise(F.size(toks))
         .alias("n_tokens"),
     )
     wins = t.filter(F.col("n_tokens") >= window).select(
-        id_col,
+        "doc_id",
         F.explode(F.sequence(F.lit(0), F.col("n_tokens") - window)).alias("i"),
         "_tk",
     ).select(
-        id_col, "i", F.array_join(F.slice("_tk", F.col("i") + 1, window), " ").alias("gram")
+        "doc_id", "i", F.array_join(F.slice("_tk", F.col("i") + 1, window), " ").alias("gram")
     )
     dup_grams = (
         wins.groupBy("gram")
-        .agg(F.countDistinct(id_col).alias("nd"))
+        .agg(F.countDistinct("doc_id").alias("nd"))
         .filter(F.col("nd") >= 2)
         .select("gram")
     )
     covered = (
         wins.join(dup_grams, "gram")
-        .select(id_col, F.explode(F.sequence(F.col("i"), F.col("i") + window - 1)).alias("p"))
-        .groupBy(id_col)
+        .select("doc_id", F.explode(F.sequence(F.col("i"), F.col("i") + window - 1)).alias("p"))
+        .groupBy("doc_id")
         .agg(F.countDistinct("p").alias("_cov"))
     )
     return (
-        t.select(id_col, "n_tokens")
-        .join(covered, id_col, "left")
+        t.select("doc_id", "n_tokens")
+        .join(covered, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             F.when(F.col("n_tokens") == 0, F.lit(0.0))
             .otherwise(
@@ -262,5 +250,5 @@ def with_dup_span_coverage(
             )
             .alias("dup_span_frac"),
         )
-        .withColumn("keep", F.col("dup_span_frac") <= max_dup_span_frac)
+        .withColumn("keep", F.col("dup_span_frac") <= 0.2)
     )

@@ -22,9 +22,9 @@ DEFAULT_BUCKETS = 1024
 DEFAULT_SALT = 16
 
 
-def with_url_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS, url_col: str = "url") -> DataFrame:
-    """Stable lineage bucket for every page."""
-    return df.withColumn("bucket", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_buckets)).cast("int"))
+def with_url_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+    """Stable lineage bucket for every page, from its ``url``."""
+    return df.withColumn("bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int"))
 
 
 def host_of(url_col) -> F.Column:
@@ -32,14 +32,14 @@ def host_of(url_col) -> F.Column:
     return F.parse_url(url_col, F.lit("HOST"))
 
 
-def salted_host_counts(pages: DataFrame, n_salts: int = DEFAULT_SALT) -> DataFrame:
+def salted_host_counts(pages: DataFrame) -> DataFrame:
     """Two-phase skew-safe count per host: salt the hot key space, partial
     aggregate per (host, salt), then merge. The partial agg is map-side
     combinable so no single reducer ever sees a whole monster host."""
     return (
         pages.select(
             host_of(F.col("url")).alias("host"),
-            F.pmod(F.xxhash64(F.col("url")), F.lit(n_salts)).alias("salt"),
+            F.pmod(F.xxhash64(F.col("url")), F.lit(DEFAULT_SALT)).alias("salt"),
         )
         .groupBy("host", "salt")
         .agg(F.count("*").alias("partial_n"))

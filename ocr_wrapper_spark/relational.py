@@ -37,17 +37,17 @@ def register(name: str, oracle: str | None = None):
 
 
 
-def money_sum(expr, alias: str, cents: int = 100):
+def money_sum(expr, alias: str):
     """Order-independent money aggregation: round each row to integer
     cents, sum exactly in int64, scale back. round(sum(double), 2)
     differs between engines when float summation ORDER pushes the sum
     across a half-cent boundary (measured: 3 of 11k q3 groups at sf0.1);
     per-row rounding makes the aggregation associative — any ordering,
     any partitioning, same result. SQL mirror (inlined in each oracle):
-    CAST(sum(CAST(round((expr) * cents) AS BIGINT)) AS DOUBLE) / cents.
+    CAST(sum(CAST(round((expr) * 100) AS BIGINT)) AS DOUBLE) / 100.
     round-to-INTEGER is the only cross-engine-safe rounding; int64 holds
     9.2e16 cents per group (~9e14 dollars), far above any group."""
-    return (F.sum(F.round(expr * cents, 0).cast("long")) / float(cents)).alias(alias)
+    return (F.sum(F.round(expr * 100, 0).cast("long")) / 100.0).alias(alias)
 
 
 # Parallelize-on-read floor: below this input size the per-row compute a

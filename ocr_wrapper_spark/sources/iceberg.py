@@ -47,7 +47,7 @@ def iceberg_session_conf(warehouse: str) -> dict[str, str]:
 MERGE_SOURCE_VIEW = "_incoming"
 
 
-def merge_statement(table: str, key: str, source_view: str = MERGE_SOURCE_VIEW) -> str:
+def merge_statement(table: str, key: str) -> str:
     """The cache-upsert MERGE (reference ocr_wrapper.py:335-342 shelve
     set-if-absent semantics): insert rows whose key is not cached yet.
     Kept as a pure function so tests can validate it through Spark's SQL
@@ -55,7 +55,7 @@ def merge_statement(table: str, key: str, source_view: str = MERGE_SOURCE_VIEW) 
     accepts MERGE INTO catalog-independently)."""
     return (
         f"MERGE INTO {ICEBERG_CATALOG}.{table} t "
-        f"USING {source_view} s ON t.{key} = s.{key} "
+        f"USING {MERGE_SOURCE_VIEW} s ON t.{key} = s.{key} "
         "WHEN NOT MATCHED THEN INSERT *"
     )
 

@@ -181,11 +181,12 @@ def _pad_words(doc_id: int, salt: int, n_bytes: int) -> str:
     return " ".join(out)
 
 
-def _paragraphs(words: list[str], size: int = 40, min_tail: int = 15) -> list[list[str]]:
-    """Chunk words into paragraphs; merge a short tail into the previous
-    chunk so every paragraph clears the extractor's MIN_BLOCK_CHARS."""
-    chunks = [words[i : i + size] for i in range(0, len(words), size)]
-    if len(chunks) > 1 and len(chunks[-1]) < min_tail:
+def _paragraphs(words: list[str]) -> list[list[str]]:
+    """Chunk words into 40-word paragraphs; merge a tail under 15 words
+    into the previous chunk so every paragraph clears the extractor's
+    MIN_BLOCK_CHARS."""
+    chunks = [words[i : i + 40] for i in range(0, len(words), 40)]
+    if len(chunks) > 1 and len(chunks[-1]) < 15:
         chunks[-2].extend(chunks[-1])
         chunks.pop()
     return chunks

@@ -46,15 +46,15 @@ def stream_extraction(
     )
 
 
-def streaming_session_windows(spark: SparkSession, events_dir: str, gap: str = "30 minutes") -> DataFrame:
-    """Per-user session windows with a dynamic gap (session_window):
+def streaming_session_windows(spark: SparkSession, events_dir: str) -> DataFrame:
+    """Per-user session windows with a 30-minute gap (session_window):
     the streaming twin of the batch sessionize_events query."""
     schema = spark.read.parquet(events_dir).schema
     stream = spark.readStream.schema(schema).parquet(events_dir)
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp_ltz"))
     return (
         stream.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",

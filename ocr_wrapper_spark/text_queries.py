@@ -2887,11 +2887,7 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no text filter: the shared bands CTE (and dedup_minhash_lsh) band
     # EVERY doc — empty docs collapse into one bucket the cap drops
     d = _td(spark, sf_dir)
-    bands = dedup._cap_buckets(
-        dedup._minhash_bands(d, "doc_id", "text"),
-        ["band_id", "band_hash"],
-        dedup.MAX_BUCKET,
-    )
+    bands = dedup._cap_buckets(dedup._minhash_bands(d), ["band_id", "band_hash"])
     ev = bands.filter(F.col("doc_id") % EVAL_MOD == EVAL_REM).select(
         F.col("doc_id").alias("eval_id"), "band_id", "band_hash"
     )

@@ -9,22 +9,25 @@ python scripts/make_pyfiles_zip.py
 
 WORK=${1:-/tmp/submit_test}
 mkdir -p "$WORK"
+# sized to the host like get_spark: local[$SPARK_GRAFT_CPUS or all cores],
+# shuffle partitions max(8, cores)
+CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
 
 python - <<EOF
 import sys
 sys.path.insert(0, ".")
 from ocr_wrapper_spark.session import get_spark
 from ocr_wrapper_spark.sources.pages import synthesize_pages
-spark = get_spark(app_name="prep", master="local[8]")
+spark = get_spark(app_name="prep")
 synthesize_pages(spark, "/root/testdata/sf0.001").write.mode("overwrite").parquet("$WORK/pages")
 EOF
 
 /opt/spark/bin/spark-submit \
-  --master 'local[8]' \
+  --master "local[$CPUS]" \
   --py-files dist/ocr_wrapper_spark.zip \
   --conf spark.ui.enabled=false \
   --conf spark.sql.session.timeZone=UTC \
-  --conf spark.sql.shuffle.partitions=8 \
+  --conf spark.sql.shuffle.partitions=$(( CPUS > 8 ? CPUS : 8 )) \
   scripts/extract_job.py \
   --input "$WORK/pages" --output "$WORK/results" \
   --cache "$WORK/cache" --metrics "$WORK/metrics" \

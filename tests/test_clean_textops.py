@@ -85,18 +85,20 @@ def test_filter_unwanted_boxes_drops_tall_vertical():
     tall_single = bc.from_xywh(0.95, 0.1, 0.01, 0.5)[0]
     coords = np.vstack(normal + [tall_multi, tall_single])
     texts = [f"w{i}" for i in range(8)] + ["123456", "1"]
-    out_coords, out_texts = clean.filter_unwanted_boxes(coords, texts, width_height_ratio=1.0)
+    out_coords, out_texts, kept = clean.filter_unwanted_boxes(coords, texts, width_height_ratio=1.0)
     assert "123456" not in out_texts
     assert "1" in out_texts
     assert out_coords.shape[0] == 9
+    assert kept.tolist() == [0, 1, 2, 3, 4, 5, 6, 7, 9]
 
 
 def test_filter_date_boxes_consecutive_runs():
     # boxes spelling "03/01/2016 - 03/01/2017" across 3 boxes get removed
     texts = ["keep1", "03/01/2016", "-", "03/01/2017", "keep2"]
     coords = np.vstack([bc.from_xywh(0.1 * i, 0.1, 0.05, 0.02)[0] for i in range(5)])
-    out_coords, out_texts = clean.filter_date_boxes(coords, texts)
+    out_coords, out_texts, kept = clean.filter_date_boxes(coords, texts)
     assert out_texts == ["keep1", "keep2"]
+    assert kept.tolist() == [0, 4]
 
 
 def test_has_arabic_text():

@@ -107,15 +107,13 @@ def test_aggregate_samples_overlapping_extra_not_added():
 
 
 def test_qr_style_aux_merge_reading_order():
-    """Reference ocr_wrapper.py:157-169: QR spans (TYPE[[DATA]], conf 1.0)
-    merged in reading order via merge_bbox_lists_with_confidences."""
+    """Reference ocr_wrapper.py:157-169: QR spans (TYPE[[DATA]]) merged in
+    reading order via merge_bbox_lists_with_confidences."""
     coords, w, h = _spans(WORDS[:10])
     qr = bc.from_xywh(0.45, 0.9, 0.1, 0.05)  # bottom of the page
-    mc, mt, mconf = clean.merge_span_lists(
-        coords, WORDS[:10], [0.9] * 10, qr, ["QRCODE[[hello]]"], [1.0], w, h
-    )
+    mc, mt = clean.merge_span_lists(coords, WORDS[:10], qr, ["QRCODE[[hello]]"], w, h)
     assert mt[-1] == "QRCODE[[hello]]"
-    assert mconf[-1] == 1.0
+    assert np.array_equal(mc[-1], qr[0])
     assert mt[:10] == WORDS[:10]
 
 
@@ -179,3 +177,22 @@ def test_extract_consensus_three_samples_matches_base():
     assert cons.error is None
     assert cons.texts == base.texts
     assert np.array_equal(cons.coords, base.coords)
+
+
+def test_consensus3_extracts_the_batch_once(monkeypatch):
+    """The kernel is deterministic, so consensus pools one extraction n
+    times instead of extracting the same payloads n times."""
+    from ocr_wrapper_spark.kernels import extract_doc as ed
+
+    calls = []
+    real = ed.extract_documents
+
+    def counting(payloads, langs, texts=None):
+        calls.append(len(payloads))
+        return real(payloads, langs, texts)
+
+    monkeypatch.setattr(ed, "extract_documents", counting)
+    payloads = [build_html(i, " ".join(WORDS), "en") for i in range(3)]
+    out = ed.EXTRACTORS["consensus3"](payloads, ["en"] * 3, [None] * 3)
+    assert calls == [3]
+    assert [r.provider for r in out] == ["consensus"] * 3

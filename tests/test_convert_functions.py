@@ -62,6 +62,25 @@ def test_consensus_kernel_identity():
     assert len(cons.texts) == len(single.texts)
 
 
+def test_postprocess_keeps_confidences_of_duplicate_boxes():
+    """Two spans with the same box and text keep their own confidences
+    through the filters and the date split."""
+    import pandas as pd
+
+    from ocr_wrapper_spark.functions.spans import postprocess_spans_udf
+
+    def span(x, conf):
+        return {
+            "TLx": x, "TLy": 0.2, "TRx": x + 0.1, "TRy": 0.2,
+            "BRx": x + 0.1, "BRy": 0.25, "BLx": x, "BLy": 0.25,
+            "in_pixels": False, "text": "w", "label": None, "confidence": conf,
+        }
+
+    spans = [span(0.1, 0.2), span(0.1, 0.8), span(0.4, 0.5)]
+    out = postprocess_spans_udf.func(pd.Series([spans]), pd.Series([1000]), pd.Series([1000]))
+    assert [r["confidence"] for r in out[0]] == [0.2, 0.8, 0.5]
+
+
 def test_labelstudio_roundtrip(spark, spans_df):
     from ocr_wrapper_spark.functions.convert import labelstudio_to_bbox_coords
 
