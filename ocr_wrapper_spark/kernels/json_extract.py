@@ -25,6 +25,7 @@ payload parses, or fails, as under the stdlib decoder alone.
 from __future__ import annotations
 
 import json
+import re
 
 import numpy as np
 import orjson
@@ -41,9 +42,20 @@ _NOT_OPENER = bytes(sorted(set(range(256)) - set(b"[{")))
 # a payload may hold this many containers that its converter does not
 # visit; past it the document goes to the stdlib decoder. Visited
 # containers sit at most 7 deep, so the document nests at most 7 + this
-# deep, far under the depth where json.loads raises RecursionError (about
-# the recursion limit), which orjson never raises.
+# deep, far under MAX_NESTING, which orjson never enforces.
 MAX_UNVISITED = 64
+# Containers nested deeper than this fail the page with the RecursionError
+# json.loads raises. The stdlib's own point of failure is the worker's
+# current recursion limit less its stack depth, so a fixed bound keeps the
+# verdict a function of the payload: half CPython's default limit (1000)
+# leaves the decoder room under that limit at any stack depth a worker
+# reaches.
+MAX_NESTING = 500
+_NESTING_ERROR = {
+    ord(c): f"maximum recursion depth exceeded while decoding a JSON {kind} from a unicode string"
+    for c, kind in (("[", "array"), ("{", "object"))
+}
+_JSON_STRING = re.compile(r'"(?:[^"\\]|\\.)*"', re.DOTALL)
 # orjson decodes an int past the int64/uint64 range as a float, correctly
 # rounded, where json.loads keeps the exact int: the same number to a float
 # conversion, a different one to int() once it reaches 2^63 in magnitude
@@ -74,7 +86,8 @@ def decode_with(payload: bytes, convert):
     count too) goes to the stdlib; and ints past 2^64 come back as floats,
     so a text field must be a str and the page size under 2^63. Page ids
     past 2^63 overflow int64 either way, and coordinates and confidences
-    are floats either way."""
+    are floats either way. Nesting past MAX_NESTING raises the stdlib's
+    RecursionError whatever the recursion limit."""
     try:
         parsed, visited = convert(orjson.loads(payload), exact_text)
         if (
@@ -85,7 +98,21 @@ def decode_with(payload: bytes, convert):
             return parsed
     except Exception:  # whatever fails here, the stdlib pass below decides
         pass
-    return convert(json.loads(payload.decode("utf-8", errors="replace")), str)[0]
+    text = payload.decode("utf-8", errors="replace")
+    _check_nesting(text)
+    return convert(json.loads(text), str)[0]
+
+
+def _check_nesting(text: str) -> None:
+    """Raise json.loads' RecursionError, with its text, at the first
+    container nested deeper than MAX_NESTING (brackets inside strings do
+    not nest)."""
+    brackets = np.frombuffer(_JSON_STRING.sub("", text).encode(), dtype=np.uint8)
+    step = np.isin(brackets, (ord("["), ord("{"))).astype(np.int64)
+    step -= np.isin(brackets, (ord("]"), ord("}")))
+    deep = np.flatnonzero(np.cumsum(step) > MAX_NESTING)
+    if deep.size:
+        raise RecursionError(_NESTING_ERROR[brackets[deep[0]]])
 
 
 def parse_json_payload(payload: bytes):

@@ -25,28 +25,34 @@ KNUTH = 2654435761
 MOD = 4294967296
 
 
-def knuth_u(key):
-    """Uniform-in-[0,1) Knuth multiplicative hash of a long column,
-    overflow-safe for the full int64 id range.
+def knuth_hash(key):
+    """The Knuth multiplicative hash ``(key * 2654435761) mod 2^32`` of an
+    integral column as an exact long in [0, 2^32), for the full int64 id
+    range.
 
-    (x * K) mod 2^32 computed directly overflows int64 once x >= ~3.47e9
-    (Spark 4's default ANSI mode throws, non-ANSI wraps negative), so
-    reduce x mod 2^32 first and split the multiply into 16-bit halves:
-    (lo*K + ((hi*K) mod 2^32) * 2^16) mod 2^32 — every intermediate stays
-    below 2^49. Identical values to the naive form wherever that form
-    doesn't overflow; the SQL oracles mirror this decomposition.
+    (x * K) computed directly overflows int64 once x >= ~3.47e9 (Spark
+    4's default ANSI mode throws, non-ANSI wraps negative), so split the
+    key's low 32 bits (two's complement: key mod 2^32) into 16-bit halves
+    with bit operations: (lo*K + ((hi*K) mod 2^16) * 2^16) mod 2^32 —
+    every intermediate stays below 2^49, and the key appears twice in
+    the expression. The SQL oracles compute the same value with
+    arithmetic mods (KNUTH_U_SQL).
     """
-    x = F.pmod(key, F.lit(MOD))
-    lo = x % 65536
-    hi = ((x - lo) / 65536).cast("long")  # exact: x < 2^32, power-of-two divisor
-    h = F.pmod(lo * KNUTH + F.pmod(hi * KNUTH, F.lit(MOD)) * 65536, F.lit(MOD))
-    return h.cast("double") / float(MOD)
+    lo = key.bitwiseAND(0xFFFF)
+    hi = F.shiftright(key, 16).bitwiseAND(0xFFFF)
+    return (lo * KNUTH + F.shiftleft((hi * KNUTH).bitwiseAND(0xFFFF), 16)).bitwiseAND(MOD - 1)
+
+
+def knuth_u(key):
+    """Uniform-in-[0,1) Knuth hash of an integral column:
+    ``knuth_hash(key) / 2^32``, an exact dyadic rational."""
+    return knuth_hash(key).cast("double") / float(MOD)
 
 
 # SQL mirror of knuth_u for DuckDB oracles — format with the key
 # expression, e.g. KNUTH_U_SQL.format(k="doc_id"). The double-% mod
 # mirrors Spark's pmod for negative keys too (DuckDB % keeps the
-# dividend sign); intermediate bounds are the same as knuth_u's.
+# dividend sign); every intermediate stays below 2^49, as in knuth_hash.
 _NONNEG = "((({k}) % 4294967296 + 4294967296) % 4294967296)"
 KNUTH_U_SQL = (
     f"(({_NONNEG} % 65536) * 2654435761 "

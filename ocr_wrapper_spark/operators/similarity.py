@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 N_PLANES = 16
+LSH_DIM = 64  # embedding width the random hyperplanes of cosine_topk_lsh span
 
 
 def _dot(a, b):
@@ -394,9 +395,9 @@ def ivf_topk_cosine(corpus: DataFrame, queries: DataFrame, k: int = 5, lloyd_ite
     return _topk(scored, k, "cosine")
 
 
-def _random_planes(dim: int) -> np.ndarray:
+def _random_planes() -> np.ndarray:
     rng = np.random.RandomState(7)
-    return rng.standard_normal((N_PLANES, dim)).astype(np.float64)
+    return rng.standard_normal((N_PLANES, LSH_DIM)).astype(np.float64)
 
 
 # near-pair LSH: 64 planes in 8 bands of 8 bits. For a true near-dup
@@ -509,11 +510,11 @@ def hyperplane_signature_col(vec_col, planes: np.ndarray):
     return out
 
 
-def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 5, dim: int = 32) -> DataFrame:
+def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Approximate top-k: random-hyperplane LSH bucketing + exact rerank
     inside buckets. 4 bands of 4 planes each; candidates = bucket
     collisions in any band (union via posexplode of band keys)."""
-    planes = _random_planes(dim)
+    planes = _random_planes()
     n_bands = 4
     per_band = N_PLANES // n_bands
 

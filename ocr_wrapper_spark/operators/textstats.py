@@ -192,10 +192,13 @@ def with_repetition_stats(df: DataFrame) -> DataFrame:
     ).drop("_top2c")
 
 
-def with_dup_span_coverage(df: DataFrame, window: int = 8) -> DataFrame:
+DUP_SPAN_WINDOW = 8  # tokens per shared span window (with_dup_span_coverage)
+
+
+def with_dup_span_coverage(df: DataFrame) -> DataFrame:
     """Exact-substring duplication coverage (the Lee et al. 2022
     "Deduplicating Training Data" shape, windowed for Spark): a token
-    position is duplicated if any ``window``-gram covering it occurs in
+    position is duplicated if any DUP_SPAN_WINDOW-gram covering it occurs in
     more than one document; emit the covered fraction per doc plus the
     keep/cut decision (keep while dup_span_frac <= 0.2).
 
@@ -217,12 +220,12 @@ def with_dup_span_coverage(df: DataFrame, window: int = 8) -> DataFrame:
         .otherwise(F.size(toks))
         .alias("n_tokens"),
     )
-    wins = t.filter(F.col("n_tokens") >= window).select(
+    wins = t.filter(F.col("n_tokens") >= DUP_SPAN_WINDOW).select(
         "doc_id",
-        F.explode(F.sequence(F.lit(0), F.col("n_tokens") - window)).alias("i"),
+        F.explode(F.sequence(F.lit(0), F.col("n_tokens") - DUP_SPAN_WINDOW)).alias("i"),
         "_tk",
     ).select(
-        "doc_id", "i", F.array_join(F.slice("_tk", F.col("i") + 1, window), " ").alias("gram")
+        "doc_id", "i", F.array_join(F.slice("_tk", F.col("i") + 1, DUP_SPAN_WINDOW), " ").alias("gram")
     )
     dup_grams = (
         wins.groupBy("gram")
@@ -232,7 +235,7 @@ def with_dup_span_coverage(df: DataFrame, window: int = 8) -> DataFrame:
     )
     covered = (
         wins.join(dup_grams, "gram")
-        .select("doc_id", F.explode(F.sequence(F.col("i"), F.col("i") + window - 1)).alias("p"))
+        .select("doc_id", F.explode(F.sequence(F.col("i"), F.col("i") + DUP_SPAN_WINDOW - 1)).alias("p"))
         .groupBy("doc_id")
         .agg(F.countDistinct("p").alias("_cov"))
     )

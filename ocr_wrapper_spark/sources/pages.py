@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels import layout, order
-from ..operators.sampling import knuth_u
+from ..operators.sampling import MOD, knuth_hash
 from ..schema import PAGES_SCHEMA
 
 # Bump whenever build_page_rows or any payload builder changes shape or
@@ -102,30 +102,43 @@ def _host_cdf_sql() -> str:
     return f"[{lits}]"
 
 
-def _cdf_count_below(u):
-    """host_idx = count of Zipf-CDF thresholds strictly below u, written
-    as an inline sum of literal comparisons instead of an
-    `F.aggregate(array(...), ...)` fold. Same integer count, same double
-    comparisons — but higher-order functions never enter whole-stage
-    codegen (ArrayAggregate.eval runs the interpreted expression tree per
-    row), and jstack'd slow sessions showed executors pinned in that
-    interpreted eval at ~20x the CPU of a JIT-settled session. The
-    comparison chain codegens into the surrounding stage, which both
-    removes the interpreter cost and the JIT-warmup lottery."""
-    terms = [F.when(F.lit(float(c)) < u, 1).otherwise(0) for c in _host_cdf()]
-    if not terms:  # np.searchsorted([], u) == 0
-        return F.lit(0)
-    total = terms[0]
-    for t in terms[1:]:
-        total = total + t
-    return total
+def _cdf_table(cdf: np.ndarray) -> tuple[int, list[int]]:
+    """The host CDF as a constant-size lookup on the integer Knuth key k.
+
+    ``c < k / 2^32`` holds exactly when ``floor(c * 2^32) < k`` (k is an
+    integer and the scale is a power of two), so the host index is the
+    count of integer thresholds ``t = floor(c * 2^32)`` below k. The key
+    range splits into ``2^(32 - shift)`` cells by k's top bits, as few as
+    leave at most one threshold per cell. For a key in cell j,
+    ``(k + table[j]) >> 32`` is that count: ``table[j] = (b + 1) * 2^32 -
+    1 - t``, with b the thresholds below the cell and t the cell's own
+    threshold (2^32 - 1, which no key exceeds, when it has none), carries
+    into bit 32 exactly when k > t. Returns ``(shift, table)``."""
+    t = np.floor(np.asarray(cdf, dtype=np.float64) * float(MOD))
+    vals = np.sort(t[(t >= 0) & (t < MOD - 1)]).astype(np.int64)
+    if np.any(np.diff(vals) == 0):
+        raise ValueError("host CDF has a host with an empty key range")
+    shift = 32
+    while np.any(np.diff(vals >> shift) == 0):
+        shift -= 1
+    n_cells = 1 << (32 - shift)
+    thr = np.full(n_cells, MOD - 1, dtype=np.int64)
+    thr[vals >> shift] = vals
+    below = np.count_nonzero(t < 0) + np.searchsorted(vals, np.arange(n_cells, dtype=np.int64) << shift)
+    return shift, ((below + 1) * MOD - 1 - thr).tolist()
 
 
 def _host_idx_col(key=None):
     """Spark mirror of host_for_doc: the Zipf host index of the Knuth hash
-    of ``key`` (default the ``doc_id`` column)."""
-    u = knuth_u(F.col("doc_id") if key is None else key)  # overflow-safe at full int64 id range
-    return _cdf_count_below(u)
+    of ``key`` (default the ``doc_id`` column), i.e. the count of CDF
+    thresholds strictly below ``knuth_u(key)``, read from ``_cdf_table``
+    with one array lookup. The hash appears twice in the expression
+    however many hosts the CDF has, so every stage that carries it stays
+    small enough for whole-stage codegen."""
+    k = knuth_hash(F.col("doc_id") if key is None else key)  # overflow-safe at full int64 id range
+    shift, table = _cdf_table(_host_cdf())
+    lookup = F.element_at(F.array(*map(F.lit, table)), F.shiftright(k, shift).cast("int") + 1)
+    return F.shiftright(k + lookup, 32).cast("int")
 
 
 def _host_name(idx_col=None):

@@ -409,7 +409,7 @@ def doc_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(""),
         ).alias("text"),
     )
-    return textstats.with_dup_span_coverage(m, window=8)
+    return textstats.with_dup_span_coverage(m)
 
 
 @register(
@@ -734,7 +734,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return similarity.cosine_topk_lsh(e, queries, k=TOPK, dim=64)
+    return similarity.cosine_topk_lsh(e, queries, k=TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -990,7 +990,7 @@ def _lsh_oracle() -> str:
     """Mirror the hyperplane-LSH candidate generation + rerank in SQL:
     identical plane literals, identical in-order float64 dot products,
     so signatures match bit for bit."""
-    planes = similarity._random_planes(64)
+    planes = similarity._random_planes()
     per_band = similarity.N_PLANES // 4
     dot_terms = []
     for i, plane in enumerate(planes):

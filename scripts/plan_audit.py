@@ -18,6 +18,13 @@ small-SF timing:
   InferWindowGroupLimit only fires when the window HAS a partition
   spec, so a top-k that looks declarative can still sort everything
   in one task (how corpus_vocabulary was caught).
+* whole-stage code that does not compile — Janino rejects a method past
+  64 KB ("Code grows beyond 64 KB") and Spark silently runs that stage
+  interpreted instead (spark.sql.codegen.fallback). Each stage is
+  compiled through Spark's `debug.codegenStringSeq`, which needs a
+  non-adaptive plan, so the audit session runs with AQE off. The
+  largest method of each flagged stage is printed in bytes; Janino
+  gives none for a stage it rejects, so that one reads "> 64 KB".
 
 Exit 0 = no unexplained flags. Prints one line per flagged query.
 Usage: python scripts/plan_audit.py [sf_dir] [query ...]
@@ -123,6 +130,35 @@ def audit_plan(name: str, plan: str) -> list[str]:
     return flags
 
 
+# A compiled method longer than this falls back to interpreted execution
+# (spark.sql.codegen.hugeMethodLimit's default, the JVM's own limit).
+HUGE_METHOD_BYTES = 65535
+
+
+def codegen_stages(spark, plan) -> list[tuple[int, int]]:
+    """(stage id, largest compiled method in bytes) per whole-stage
+    codegen subtree of an executed (non-adaptive) plan; -1 bytes when the
+    stage does not compile."""
+    dbg = getattr(spark._jvm.org.apache.spark.sql.execution.debug, "package$").__getattr__("MODULE$")
+    out = []
+    it = dbg.codegenStringSeq(plan).iterator()
+    while it.hasNext():
+        subtree = it.next()  # (plan text "*(id) ...", source, byte-code stats)
+        stage = int(re.match(r"\*\((\d+)\)", subtree._1()).group(1))
+        out.append((stage, subtree._3().maxMethodCodeSize()))
+    return out
+
+
+def codegen_flags(stages: list[tuple[int, int]]) -> list[str]:
+    """One flag per stage that Spark would run interpreted."""
+    return [
+        f"codegen fallback in stage {sid} (largest method "
+        + ("> 64 KB, does not compile)" if size < 0 else f"{size} bytes)")
+        for sid, size in stages
+        if size < 0 or size > HUGE_METHOD_BYTES
+    ]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -131,8 +167,13 @@ def main() -> int:
     from ocr_wrapper_spark.session import get_spark
 
     spark = get_spark(
-        app_name="plan_audit", extra_conf={"spark.ui.showConsoleProgress": "false"}
+        app_name="plan_audit",
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            "spark.sql.adaptive.enabled": "false",  # codegen stages exist up front
+        },
     )
+    spark.sparkContext.setLogLevel("OFF")  # Janino's rejection dumps the whole source
     qs = entrymod.queries()
 
     hard = 0
@@ -143,12 +184,13 @@ def main() -> int:
         n_run += 1
         try:
             df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = df._jdf.queryExecution().executedPlan()
+            stages = codegen_stages(spark, plan)
         except Exception as exc:  # noqa: BLE001 — audit must visit every query
             print(f"ERROR {name}: {type(exc).__name__}: {exc}")
             hard += 1
             continue
-        flags = audit_plan(name, plan)
+        flags = audit_plan(name, plan.toString()) + codegen_flags(stages)
         if not flags:
             continue
         if name in WHITELIST:

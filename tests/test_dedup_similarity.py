@@ -75,7 +75,7 @@ def test_lsh_ann_recall_vs_bruteforce(spark):
     }
     approx = {
         (r.query_id, r.vec_id)
-        for r in cosine_topk_lsh(e, queries, k=5, dim=64).select("query_id", "vec_id").collect()
+        for r in cosine_topk_lsh(e, queries, k=5).select("query_id", "vec_id").collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, f"LSH recall too low: {recall:.2f}"
@@ -441,7 +441,7 @@ def test_dup_span_coverage_marks_shared_windows(spark):
         (3, "m n o p q r s m n o p q r s"),  # repeats inside one doc only
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in with_dup_span_coverage(df, window=8).collect()}
+    out = {r["doc_id"]: r for r in with_dup_span_coverage(df).collect()}
     assert abs(out[0]["dup_span_frac"] - round(8 / 12, 6)) < 1e-9
     assert abs(out[1]["dup_span_frac"] - round(8 / 12, 6)) < 1e-9
     assert out[2]["dup_span_frac"] == 0.0 and out[2]["keep"]

@@ -1,9 +1,12 @@
 """The JSON-layout and Textract converters decode with orjson and fall back
 to the stdlib decoder: on every edge input they return what the stdlib
-decoder alone gives, or raise its error with its text."""
+decoder alone gives at CPython's default recursion limit, or raise its
+error with its text — and nesting past json_extract.MAX_NESTING fails
+whatever the limit."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import sys
 
@@ -54,9 +57,21 @@ EDGES = {
 PARSERS = {"json": json_extract, "textract": textract_extract}
 
 
+@contextlib.contextmanager
+def _recursion_limit(limit: int):
+    old = sys.getrecursionlimit()
+    sys.setrecursionlimit(limit)
+    try:
+        yield
+    finally:
+        sys.setrecursionlimit(old)
+
+
 def _stdlib(module, payload: bytes):
-    """The converter over the stdlib decoder alone."""
-    return module._convert(json.loads(payload.decode("utf-8", errors="replace")), str)[0]
+    """The converter over the stdlib decoder alone, at the default
+    recursion limit (other code in the process may have raised it)."""
+    with _recursion_limit(1000):
+        return module._convert(json.loads(payload.decode("utf-8", errors="replace")), str)[0]
 
 
 def _outcome(fn, payload: bytes):
@@ -79,18 +94,40 @@ def test_edge_inputs_decode_as_the_stdlib(dialect, edge):
 
 def test_edge_inputs_cover_both_outcomes():
     """The stdlib parses some edge inputs that orjson rejects and rejects
-    some that orjson parses, so a converter without the fallback fails.
-    Where the stdlib's RecursionError sets in depends on the recursion
-    limit, which other code may raise: this document nests past it."""
-    outcomes = {edge: _outcome(lambda p: _stdlib(json_extract, p), pair[0])[0]
+    some that orjson parses, so a converter without the fallback fails."""
+    outcomes = {edge: _outcome(lambda p: _stdlib(json_extract, p), pair[0])
                 for edge, pair in EDGES.items()}
-    assert outcomes["nan_quad"] == outcomes["overflow_float"] == "ok"
-    assert outcomes["bom"] == "error"
-    depth = sys.getrecursionlimit() + 100
-    deeper = _layout(extra=',"pad":' + "[" * depth + "]" * depth)
-    stdlib = _outcome(lambda p: _stdlib(json_extract, p), deeper)
-    assert stdlib[:2] == ("error", "RecursionError")
-    assert _outcome(json_extract.parse_json_payload, deeper) == stdlib
+    assert outcomes["nan_quad"][0] == outcomes["overflow_float"][0] == "ok"
+    assert outcomes["bom"][0] == "error"
+    assert outcomes["deep_2000"][:2] == ("error", "RecursionError")
+
+
+@pytest.mark.parametrize("dialect", sorted(PARSERS))
+@pytest.mark.parametrize("opener, closer", [("[", "]"), ('{"a":', "}")])
+def test_nesting_verdict_ignores_the_recursion_limit(dialect, opener, closer):
+    """A page nested exactly MAX_NESTING deep parses, and one level deeper
+    or 2 000 deep fails with the stdlib's RecursionError text, under the
+    default recursion limit and under a raised one (with which the stdlib
+    alone parses all three)."""
+    parse = json_extract.parse_json_payload if dialect == "json" else textract_extract.parse_textract_payload
+    build = _layout if dialect == "json" else _textract
+    fill = "0" if opener == "[" else "1"
+
+    def nested(depth: int) -> bytes:  # the document itself is level 1
+        n = depth - 1
+        return build(extra=',"pad":' + opener * n + fill + closer * n)
+
+    kind = "array" if opener == "[" else "object"
+    limit_error = f"maximum recursion depth exceeded while decoding a JSON {kind} from a unicode string"
+    verdicts = []
+    depths = (json_extract.MAX_NESTING, json_extract.MAX_NESTING + 1, 2000)
+    for limit in (1000, 20_000):
+        with _recursion_limit(limit):
+            verdicts.append([_outcome(parse, nested(d)) for d in depths])
+    assert verdicts[0] == verdicts[1]
+    fits, *too_deep = verdicts[0]
+    assert fits[0] == "ok"
+    assert too_deep == [("error", "RecursionError", limit_error)] * 2
 
 
 @pytest.mark.parametrize("dialect", sorted(PARSERS))

@@ -1,7 +1,7 @@
 """plan_audit.py guarantees: the pattern detectors catch the known
 100x-killers, and the tricky registered plans stay clean/whitelisted.
 
-The full 102-query sweep runs via `python scripts/plan_audit.py`
+The full 206-query sweep runs via `python scripts/plan_audit.py`
 (round evidence, BENCH/PLAN_AUDIT_r*.log); the pytest keeps a fast
 representative slice so a regression fails the suite, not just the
 round log."""
@@ -15,7 +15,7 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
 
-from plan_audit import WHITELIST, audit_plan  # noqa: E402
+from plan_audit import WHITELIST, audit_plan, codegen_flags, codegen_stages  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -79,3 +79,30 @@ def test_detects_unreduced_single_partition_exchange():
         "   +- HashAggregate(keys=[], functions=[partial_sum(v#1)])\n"
     )
     assert audit_plan("x", good) == []
+
+
+def test_codegen_flags_name_each_fallback_stage():
+    assert codegen_flags([(1, 900), (2, -1), (3, 70_000)]) == [
+        "codegen fallback in stage 2 (largest method > 64 KB, does not compile)",
+        "codegen fallback in stage 3 (largest method 70000 bytes)",
+    ]
+
+
+@pytest.mark.parametrize("name", ["url_parallel_candidates", "kmv_distinct_sketch"])
+def test_host_index_stages_compile_under_the_jit_limit(spark, name):
+    """Every whole-stage method of the host-index queries compiles, and
+    stays under HotSpot's 8 000-byte limit for JIT-compiling a method
+    (url_parallel_candidates' two stages did not compile at all while
+    the index summed one comparison per host)."""
+    import __spark_entry__ as entrymod
+
+    key = "spark.sql.adaptive.enabled"  # codegen stages exist up front
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        plan = entrymod.queries()[name](spark, SF)._jdf.queryExecution().executedPlan()
+        stages = codegen_stages(spark, plan)
+    finally:
+        spark.conf.set(key, old)
+    assert stages and codegen_flags(stages) == []
+    assert max(size for _, size in stages) < 8000, stages

@@ -243,6 +243,6 @@ def test_repetition_and_dupspan_survive_monster_doc(spark):
     assert rep[0]["dup_word_frac"] > 0.99 and not rep[0]["keep"]
     assert rep[1]["keep"]
 
-    cov = {r["doc_id"]: r for r in with_dup_span_coverage(df, window=8).collect()}
+    cov = {r["doc_id"]: r for r in with_dup_span_coverage(df).collect()}
     # the monster's 8-gram repeats only within itself -> cross-doc frac 0
     assert cov[0]["dup_span_frac"] == 0.0
