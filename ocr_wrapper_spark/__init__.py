@@ -9,10 +9,12 @@ Layout:
     kernels/    pure numpy/pandas kernels (test oracles; run inside Arrow UDFs)
     operators/  Spark DataFrame operators (extraction chain, dedup, similarity,
                 text stats) built on pandas UDFs / built-in functions
-    sources/    page synthesis + cache / metrics / lineage tables
-    functions/  column-level helper expressions (JVM-side built-ins only)
+    sources/    page / media / WARC sources + cache and metrics tables
+    functions/  column-level helper expressions (JVM-side built-ins only):
+                URL canonicalization, PII redaction, LayoutLM export
     plans/      end-to-end job assembly (cache join, dispatch, salting, resume)
-    streaming/  Structured Streaming variant of the pipeline
+    streaming/  Structured Streaming event windows and keyed-state dedup
+                (the streaming extraction is a registered query)
 
 Nothing in here imports from the reference; all heavy per-document logic is
 vectorized numpy inside Arrow-batched UDFs (no per-row Python UDFs).

@@ -2856,10 +2856,8 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # inverse). All arithmetic is plain int64 (halves < 2^31, xor of
 # non-negatives, one multiply < 2^62) — identical on both engines.
 SHUFFLE_HALF_BITS = 31
-SHUFFLE_MASK = (1 << SHUFFLE_HALF_BITS) - 1
 SHUFFLE_ROUNDS = 4
 SHUFFLE_EPOCHS = 3
-SHUFFLE_SHARDS = 64  # shard = top-6 bits of perm_pos: an exact bit slice
 
 
 def _feistel_f_sql(r: str, rnd: int) -> str:

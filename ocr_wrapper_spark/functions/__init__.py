@@ -1,2 +1,1 @@
-"""Column-level helper expressions (pure JVM built-ins), plus the
-stage-level span pandas UDFs in ``spans``."""
+"""Column-level helper expressions (pure JVM built-ins)."""

@@ -1,9 +1,9 @@
-"""Span export-format conversions (SURVEY.md §2.7 C15) as JVM expressions.
+"""Span export-format conversion (SURVEY.md §2.7 C15) as a JVM expression.
 
 LayoutLM format: axis-aligned [x1, y1, x2, y2] ints scaled to [0, 1000]
-(reference bbox.py:439-457). LabelStudio rectangle values: percentages of
-page size (reference bbox.py:459-519, from_labelstudio_coords :266-292).
-No UDFs — pure `transform` arithmetic over the span array.
+(reference bbox.py:439-457), the format the registered
+``spans_layoutlm_export`` writes. No UDFs — pure `transform` arithmetic
+over the span array.
 """
 
 from __future__ import annotations
@@ -38,90 +38,3 @@ def spans_to_layoutlm(spans_col: Column) -> Column:
 
     return F.transform(spans_col, one)
 
-
-def spans_to_labelstudio(spans_col: Column) -> Column:
-    """array<struct<x,y,width,height,rotation>> in percent (bbox.py:466-476)."""
-
-    def one(s):
-        x = F.array_min(_xs(s)) * 100
-        y = F.array_min(_ys(s)) * 100
-        w = F.array_max(_xs(s)) * 100 - x
-        h = F.array_max(_ys(s)) * 100 - y
-        return F.struct(
-            F.round(x, 6).alias("x"),
-            F.round(y, 6).alias("y"),
-            F.round(w, 6).alias("width"),
-            F.round(h, 6).alias("height"),
-            F.lit(0).alias("rotation"),
-        )
-
-    return F.transform(spans_col, one)
-
-
-def labelstudio_to_bbox_coords(ls_col: Column) -> Column:
-    """Inverse of spans_to_labelstudio: percent rect structs -> 8-corner
-    coords, clipped into [0,1] (reference from_labelstudio_coords,
-    bbox.py:266-292 — "values are sometimes minimally above 1.0 or below
-    0.0, so we have to clip")."""
-
-    def clip(v):
-        return F.greatest(F.least(v, F.lit(1.0)), F.lit(0.0))
-
-    def one(r):
-        x = r["x"] / 100.0
-        y = r["y"] / 100.0
-        x2 = (r["x"] + r["width"]) / 100.0
-        y2 = (r["y"] + r["height"]) / 100.0
-        return F.array(clip(x), clip(y), clip(x2), clip(y), clip(x2), clip(y2), clip(x), clip(y2))
-
-    return F.transform(ls_col, one)
-
-
-def layoutlm_to_bbox_coords(ll_col: Column) -> Column:
-    """Inverse of spans_to_layoutlm: [x1,y1,x2,y2]/1000 -> 8-corner coords
-    (reference BBox.from_layoutlm, bbox.py:256-258)."""
-
-    def one(b):
-        x1 = b[0] / 1000.0
-        y1 = b[1] / 1000.0
-        x2 = b[2] / 1000.0
-        y2 = b[3] / 1000.0
-        return F.array(x1, y1, x2, y1, x2, y2, x1, y2)
-
-    return F.transform(ll_col, one)
-
-
-def spans_augmented(spans_col: Column, seed_col: Column, max_augment: float) -> Column:
-    """Deterministic twin of the reference's BBox.get_augmented
-    (bbox.py:547-556, the one viz-only reference feature round 2 skipped):
-    every corner coordinate gets + u * max_augment with u in [0, 1).
-
-    The reference draws u from the global `random()`; here u is the
-    Knuth multiplicative hash of (seed, span index, coordinate index) so
-    the augmentation is reproducible across runs, partitionings, and
-    cluster sizes — the property a training-data augmentation pipeline
-    actually needs (re-running a shard must regenerate the same jitter).
-    Pure JVM expressions; text/label/confidence pass through."""
-    from ..operators.sampling import knuth_u
-    from ..schema import COORD_FIELDS
-
-    u = knuth_u
-
-    # reduce the seed mod 2^32 BEFORE scaling: seed * 131071 alone
-    # overflows int64 for seeds >= ~7e13, upstream of knuth_u's own guard
-    seed32 = F.pmod(seed_col, F.lit(4294967296))
-
-    def one(s, i):
-        jittered = [
-            (s[c] + u(seed32 * 131071 + i * 8 + j) * max_augment).alias(c)
-            for j, c in enumerate(COORD_FIELDS)
-        ]
-        return F.struct(
-            *jittered,
-            s["in_pixels"].alias("in_pixels"),
-            s["text"].alias("text"),
-            s["label"].alias("label"),
-            s["confidence"].alias("confidence"),
-        )
-
-    return F.transform(spans_col, one)

@@ -7,7 +7,6 @@ Python) the invariants of the reference's ``BBox`` dataclass:
   collapsed-edge expansion (reference bbox.py:129-217, SURVEY.md §1.4)
 * to_pixels / to_normalized (bbox.py:389-437)
 * rotate by k*90 deg CCW about the origin (bbox.py:604-643)
-* combine/hull with text concat (bbox.py:558-596)
 * split along the longer edge at a ratio (bbox_utils.py:25-91)
 * polygon area + pairwise intersection-area ratio (bbox.py:521-545,
   bbox_utils.py:94-109)
@@ -162,17 +161,6 @@ def rotate(coords: np.ndarray, angle: int) -> np.ndarray:
     for _ in range(angle // 90):
         out = rotate90_ccw(out)
     return out
-
-
-def combine(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Axis-aligned hull of paired boxes (reference bbox.py:558-596)."""
-    a = np.asarray(a, dtype=np.float64).reshape(-1, 8)
-    b = np.asarray(b, dtype=np.float64).reshape(-1, 8)
-    xs = np.concatenate([a[:, 0::2], b[:, 0::2]], axis=1)
-    ys = np.concatenate([a[:, 1::2], b[:, 1::2]], axis=1)
-    min_x, max_x = xs.min(axis=1), xs.max(axis=1)
-    min_y, max_y = ys.min(axis=1), ys.max(axis=1)
-    return np.stack([min_x, min_y, max_x, min_y, max_x, max_y, min_x, max_y], axis=1)
 
 
 def split(coords: np.ndarray, ratio: float) -> tuple[np.ndarray, np.ndarray]:

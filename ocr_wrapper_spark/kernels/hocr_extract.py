@@ -74,7 +74,8 @@ def parse_hocr_payload(payload: bytes):
     if rtl:
         x0, x1 = x1, x0
     coords = np.stack([x0, y0, x1, y0, x1, y1, x0, y1], axis=1)
-    # clamp-on-import (same policy as the labelstudio C15 importer):
+    # clamp-on-import (the reference's LabelStudio import policy,
+    # bbox.py:278-280):
     # hostile integer boxes far outside the page must not blow up the
     # downstream scatter-add kernels
     np.clip(coords, 0.0, 1.0, out=coords)

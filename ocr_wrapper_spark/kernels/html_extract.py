@@ -33,7 +33,6 @@ _RE_STRIP = re.compile(
 _RE_BLOCK_SPLIT = re.compile(rf"<\s*/?\s*(?:{BLOCK_TAGS})\b[^>]*>", re.IGNORECASE)
 _RE_A = re.compile(r"<\s*a\b[^>]*>(.*?)<\s*/\s*a\s*>", re.IGNORECASE | re.DOTALL)
 _RE_TAG = re.compile(r"<[^>]+>")
-_RE_WS = re.compile(r"\s+")
 
 MIN_BLOCK_CHARS = 25
 MAX_LINK_DENSITY = 0.33

@@ -21,8 +21,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from .textops import has_arabic_text
-
 PDF_MAGIC = b"%PDF"
 
 # language codes treated as right-to-left (subset of reference

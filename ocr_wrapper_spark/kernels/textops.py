@@ -4,16 +4,10 @@ from __future__ import annotations
 
 import re
 
-# Arabic codepoint ranges (reference utils.py:22-36)
-ARABIC_RANGES = (
-    (0x0600, 0x06FF),  # Arabic
-    (0x0750, 0x077F),  # Arabic Supplement
-    (0x08A0, 0x08FF),  # Arabic Extended-A
-    (0xFB50, 0xFDFF),  # Arabic Presentation Forms-A
-    (0xFE70, 0xFEFF),  # Arabic Presentation Forms-B
-)
-
-# same ranges as a regex char class, for the JVM-side F.regexp_like twin
+# Arabic codepoint ranges (reference utils.py:22-36) as a regex char
+# class, also the JVM-side F.regexp_like twin: Arabic U+0600-06FF,
+# Supplement U+0750-077F, Extended-A U+08A0-08FF, Presentation Forms-A
+# U+FB50-FDFF and -B U+FE70-FEFF
 ARABIC_REGEX = "[؀-ۿݐ-ݿࢠ-ࣿﭐ-﷿ﹰ-﻿]"
 
 _ARABIC_RE = re.compile(ARABIC_REGEX)
@@ -42,14 +36,3 @@ def flip_number_blocks(input_string: str) -> str:
             result.append(part)
     return "".join(result)
 
-
-def discretize_angle_to_90_deg(angle: float) -> int:
-    """((angle+45)//90*90)%360 (reference azure.py:19-21)."""
-    return int(((angle + 45) // 90 * 90) % 360)
-
-
-def closest_90_degree_distance(angle: float) -> float:
-    """Signed distance to the nearest multiple of 90 deg; negative below,
-    positive above (reference tilt_correction.py:28-37)."""
-    nearest_multiple_of_90 = round(angle / 90) * 90
-    return angle - nearest_multiple_of_90

@@ -87,16 +87,3 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
 
     return labels
 
-
-def dedup_keepers(pairs: DataFrame, all_ids: DataFrame, id_col: str) -> DataFrame:
-    """Corpus-level dedup decision: every id mapped to its cluster
-    representative (min id of its component; singletons map to
-    themselves)."""
-    comps = connected_components(pairs)
-    return (
-        all_ids.join(comps, all_ids[id_col] == comps.node, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("keeper_id"),
-        )
-    )

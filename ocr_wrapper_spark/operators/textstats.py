@@ -1,5 +1,5 @@
-"""Text-analysis operators: language ID, quality scoring, token counting,
-document fingerprinting (training-data-pipeline additions).
+"""Text-analysis operators: language ID, quality scoring, token counting
+(training-data-pipeline additions).
 
 Everything here is pure JVM expression (built-in functions) — no UDFs —
 so the hot path stays inside whole-stage codegen and every operator has
@@ -93,17 +93,6 @@ def token_count_cols(text_col: Column) -> list[Column]:
         .cast("long")
         .alias("bpe_pretokens"),
     ]
-
-
-def fingerprint_col(text_col: Column) -> Column:
-    """64-bit document fingerprint: xxhash64 of the normalized text
-    (lowercased, whitespace collapsed) — content-defined identity for
-    shard-stable dedup keys. The whitespace class matches
-    text_queries.FP_WS_RE (written out because Java \\s includes \\x0B,
-    RE2 \\s does not) so the xxhash64 and md5 fingerprints agree on
-    what "same content" means."""
-    normalized = F.lower(F.regexp_replace(F.trim(text_col), r"[ \t\n\x0B\f\r]+", " "))
-    return F.xxhash64(normalized)
 
 
 def with_repetition_stats(df: DataFrame) -> DataFrame:

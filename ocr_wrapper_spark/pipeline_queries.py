@@ -317,9 +317,11 @@ def streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     a complete-mode memory sink — must equal the batch hourly rollup."""
     import uuid
 
-    from .streaming.stream import streaming_event_window_counts
+    from .streaming.stream import streaming_event_counts
 
-    agg = streaming_event_window_counts(spark, _events_stream_dir(spark, sf_dir))
+    agg = streaming_event_counts(
+        spark, _events_stream_dir(spark, sf_dir), F.window("ts", "1 hour")
+    )
     name = f"stream_windows_{uuid.uuid4().hex[:10]}"
     q = (
         agg.writeStream.format("memory")
@@ -365,9 +367,11 @@ def streaming_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-static / stream-stream."""
     import uuid
 
-    from .streaming.stream import streaming_event_sliding_counts
+    from .streaming.stream import streaming_event_counts
 
-    agg = streaming_event_sliding_counts(spark, _events_stream_dir(spark, sf_dir))
+    agg = streaming_event_counts(
+        spark, _events_stream_dir(spark, sf_dir), F.window("ts", "10 minutes", "5 minutes")
+    )
     name = f"stream_sliding_{uuid.uuid4().hex[:10]}"
     q = (
         agg.writeStream.format("memory")

@@ -1,9 +1,10 @@
 """Canonical schemas of the engine.
 
-The span struct mirrors the reference's v1 OCR record
+The span struct is the reference's v1 OCR record
 (``{"bbox": BBox, "text": str, "confidence": float}``, reference
 compat.py:9-23) with the 8-corner BBox flattened in
-(reference bbox.py:94-110).
+(reference bbox.py:94-110). The engine adopts v1 directly (SURVEY.md
+§1.1): no v0 record is read or written.
 """
 
 from __future__ import annotations

@@ -20,12 +20,10 @@ to skipped records, never failed tasks.
 from __future__ import annotations
 
 import gzip
-import io
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 CRLF = b"\r\n"
 

@@ -2279,7 +2279,6 @@ _PHRASE_ROWS: list[tuple[int, int, str, int]] = [
     for slot, term in enumerate(phrase.split(" "))
 ]
 _PHRASE_TERMS = sorted({t for _, _, t, _ in _PHRASE_ROWS})
-_PHRASE_TERM_LITS = ", ".join(f"'{t}'" for t in _PHRASE_TERMS)
 _PHRASE_VALUES = ", ".join(
     f"({p}, {s}, '{t}', {n})" for p, s, t, n in _PHRASE_ROWS
 )

@@ -1,10 +1,8 @@
-"""Autoselect registry matrix (mirrors reference tests/test_autoselect.py)
-and v0/v1 compat round trip."""
+"""Autoselect registry matrix (mirrors reference tests/test_autoselect.py)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_wrapper_spark.operators import autoselect as asel
 
@@ -50,30 +48,6 @@ def test_bad_override_entries(monkeypatch):
     monkeypatch.setenv(asel.ENV_OVERRIDE, "a=unknown_target")
     with pytest.raises(asel.InvalidExtractorException):
         asel.autoselect_extractor("single")
-
-
-def test_compat_round_trip(spark):
-    from ocr_wrapper_spark.functions.compat import spans_to_v0, v0_to_spans
-    from ocr_wrapper_spark.schema import SPANS_ARRAY
-    from pyspark.sql import types as T
-
-    span = {
-        "TLx": 0.1, "TLy": 0.2, "TRx": 0.3, "TRy": 0.2,
-        "BRx": 0.3, "BRy": 0.25, "BLx": 0.1, "BLy": 0.25,
-        "in_pixels": False, "text": "w0", "label": "L", "confidence": 0.75,
-    }
-    span2 = dict(span, text="w1", confidence=0.5, label=None)
-    schema = T.StructType([T.StructField("spans", SPANS_ARRAY)])
-    df = spark.createDataFrame([([span, span2],)], schema)
-
-    bboxes, confs = spans_to_v0(F.col("spans"))
-    out = df.select(
-        F.col("spans").alias("orig"),
-        v0_to_spans(bboxes, confs).alias("roundtrip"),
-        confs.alias("confidences"),
-    ).collect()[0]
-    assert out.confidences == [0.75, 0.5]
-    assert [r.asDict() for r in out.roundtrip] == [r.asDict() for r in out.orig]
 
 
 def test_aux_mode_registered(monkeypatch):

@@ -74,13 +74,6 @@ def test_to_pixels_to_normalized_roundtrip():
     assert np.allclose(back, bc.canonicalize(b, False), atol=1e-12)
 
 
-def test_combine_hull():
-    a = boxes_from_xywh(0.0, 0.0, 0.1, 0.1)
-    b = boxes_from_xywh(0.5, 0.5, 0.1, 0.1)
-    hull = bc.combine(a, b)
-    assert list(hull[0]) == [0.0, 0.0, 0.6, 0.0, 0.6, 0.6, 0.0, 0.6]
-
-
 def test_split_along_top():
     b = boxes_from_xywh(0.0, 0.0, 0.4, 0.1)
     b1, b2 = bc.split(b, 0.5)

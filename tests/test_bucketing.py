@@ -44,28 +44,3 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS orders_b")
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
-def test_training_shards_deterministic_membership(spark, tmp_path):
-    """Shard membership is a pure function of doc_id: same directories,
-    same per-shard id sets, regardless of input partitioning; every
-    shard directory holds <= docs_per_shard rows."""
-    from ocr_wrapper_spark.sources.shards import write_training_shards
-
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
-    write_training_shards(d.repartition(3), p1, docs_per_shard=64)
-    write_training_shards(d.repartition(11), p2, docs_per_shard=64)
-
-    r1 = spark.read.parquet(p1).groupBy("shard_id").agg(
-        F.count("*").alias("n"), F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    ).collect()
-    r2 = {r["shard_id"]: r for r in spark.read.parquet(p2).groupBy("shard_id").agg(
-        F.count("*").alias("n"), F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    ).collect()}
-    assert len(r1) == len(r2) > 1
-    for r in r1:
-        o = r2[r["shard_id"]]
-        assert (r["n"], r["lo"], r["hi"]) == (o["n"], o["lo"], o["hi"])
-        assert r["n"] <= 64
-        assert r["lo"] // 64 == r["shard_id"] and r["hi"] // 64 == r["shard_id"]

@@ -110,56 +110,3 @@ def test_flip_number_blocks():
     assert textops.flip_number_blocks("12-34-56") == "56-34-12"
     assert textops.flip_number_blocks("abc") == "abc"
     assert textops.flip_number_blocks("1a2b3") == "3a2b1"
-
-
-def test_discretize_angle():
-    assert textops.discretize_angle_to_90_deg(44) == 0
-    assert textops.discretize_angle_to_90_deg(46) == 90
-    assert textops.discretize_angle_to_90_deg(300) == 270
-    assert textops.discretize_angle_to_90_deg(350) == 0
-
-
-def test_closest_90_degree_distance():
-    """Reference tests/test_tilt_correction.py analytic cases."""
-    assert textops.closest_90_degree_distance(89) == -1
-    assert textops.closest_90_degree_distance(91) == 1
-    assert textops.closest_90_degree_distance(44) == 44
-    assert textops.closest_90_degree_distance(-2) == -2
-    assert textops.closest_90_degree_distance(182) == 2
-
-
-def test_retry_policies_match_reference():
-    """D2: Google = 2 fixed 1 s retries; Azure = 5 retries, exp x2, 10%
-    jitter (google_ocr.py:229,244; azure.py:108-129)."""
-    import random
-    from ocr_wrapper_spark.kernels.retry import AZURE_POLICY, GOOGLE_POLICY, with_retries
-
-    assert GOOGLE_POLICY.delays() == [1.0, 1.0]
-    az = AZURE_POLICY.delays()
-    assert len(az) == 5
-    base = [1.0, 2.0, 4.0, 8.0, 16.0]
-    for got, expect in zip(az, base):
-        assert got == expect  # jitter=0 without an rng
-    jittered = AZURE_POLICY.delays(random.Random(1))
-    for got, expect in zip(jittered, base):
-        assert abs(got - expect) <= expect * 0.1 + 1e-9
-        assert got != expect
-
-    calls = {"n": 0}
-    slept: list[float] = []
-
-    def flaky():
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise TimeoutError("transient")
-        return "ok"
-
-    assert with_retries(flaky, GOOGLE_POLICY, sleep=slept.append) == "ok"
-    assert calls["n"] == 3 and slept == [1.0, 1.0]
-
-    def always_fails():
-        raise TimeoutError("permanent")
-
-    import pytest as _pytest
-    with _pytest.raises(TimeoutError):
-        with_retries(always_fails, GOOGLE_POLICY, sleep=slept.append)

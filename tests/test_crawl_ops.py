@@ -40,22 +40,6 @@ def test_fp_md5_engine_exact_on_hostile_whitespace(spark):
     assert got == _duckdb_fp(HOSTILE_TEXTS)
 
 
-def test_xxhash_and_md5_fingerprints_share_normalization(spark):
-    """Docs equal under one fingerprint must be equal under the other."""
-    from ocr_wrapper_spark.operators.textstats import fingerprint_col
-    from ocr_wrapper_spark.text_queries import fp_md5_col
-
-    texts = HOSTILE_TEXTS + ["a b", "a\x0bb\tc", "a b\tc"]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(
-        fp_md5_col(F.col("text")).alias("md5fp"),
-        fingerprint_col(F.col("text")).alias("xxfp"),
-    ).collect()
-    md5_to_xx = {}
-    for r in rows:
-        assert md5_to_xx.setdefault(r.md5fp, r.xxfp) == r.xxfp
-
-
 def test_frontier_slot_division_exact_at_large_ranks(spark):
     """`div` must match Python // where a double quotient misrounds."""
     from ocr_wrapper_spark.text_queries import POLITENESS_BATCH

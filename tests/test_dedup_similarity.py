@@ -101,9 +101,9 @@ def test_quality_scores_match_python(spark, docs):
 
 
 def test_fingerprint_stable_and_dedup_consistent(spark, docs):
-    from ocr_wrapper_spark.operators.textstats import fingerprint_col
+    from ocr_wrapper_spark.text_queries import fp_md5_col
 
-    fp = docs.select("doc_id", "text", fingerprint_col(F.col("text")).alias("fp"))
+    fp = docs.select("doc_id", "text", fp_md5_col(F.col("text")).alias("fp"))
     # same text -> same fingerprint; distinct fingerprints == distinct texts
     n_texts = docs.select("text").distinct().count()
     n_fp = fp.select("fp").distinct().count()
@@ -111,7 +111,7 @@ def test_fingerprint_stable_and_dedup_consistent(spark, docs):
 
 
 def test_connected_components_clusters(spark):
-    from ocr_wrapper_spark.operators.components import connected_components, dedup_keepers
+    from ocr_wrapper_spark.operators.components import connected_components
 
     # two triangles + a chain + a singleton edge
     pairs = spark.createDataFrame(
@@ -123,12 +123,6 @@ def test_connected_components_clusters(spark):
     assert comps[10] == comps[11] == comps[12] == 10
     assert comps[20] == comps[21] == 20
     assert comps[30] == comps[33] == 30
-
-    ids = spark.createDataFrame([(i,) for i in [1, 2, 3, 10, 11, 12, 20, 21, 30, 31, 32, 33, 99]], "doc_id long")
-    keepers = {r.doc_id: r.keeper_id for r in dedup_keepers(pairs, ids, "doc_id").collect()}
-    assert keepers[99] == 99  # singleton keeps itself
-    assert keepers[33] == 30
-    assert keepers[2] == 1
 
 
 def test_lsh_bucket_cap_prevents_quadratic_blowup(spark):
@@ -463,20 +457,6 @@ def test_knuth_u_overflow_safe_and_equivalent(spark):
         assert got[i] == expect, i
 
 
-def test_spans_augmented_large_seed_no_overflow(spark):
-    """Reproduces the reviewed crash: seed >= ~26.5k overflowed the old
-    inline hash under ANSI mode; knuth_u keeps it finite and bounded."""
-    from ocr_wrapper_spark.functions.convert import spans_augmented
-    from ocr_wrapper_spark.schema import SPANS_ARRAY
-
-    row = [(9999999999, [tuple([0.1] * 8) + (False, "w", None, 0.9)])]
-    df = spark.createDataFrame(row, f"doc_id long, spans {SPANS_ARRAY.simpleString()}")
-    out = df.select(spans_augmented(F.col("spans"), F.col("doc_id"), 0.05).alias("a")).collect()
-    s = out[0]["a"][0]
-    for c in ("TLx", "TLy", "TRx", "TRy", "BRx", "BRy", "BLx", "BLy"):
-        assert 0.1 <= s[c] < 0.1 + 0.05
-
-
 def test_int8_zero_vector_quantizes_to_zero_codes(spark):
     """(Near-)zero embeddings get all-zero codes and cosine 0 — no NaN,
     matching the oracle's m < eps branch."""
@@ -491,17 +471,6 @@ def test_int8_zero_vector_quantizes_to_zero_codes(spark):
     out = sim.cosine_topk_int8(df, q, k=3).collect()
     by_vec = {r["vec_id"]: r["cosine"] for r in out}
     assert by_vec[0] == 0.0 and by_vec[1] == 1.0
-
-
-def test_shard_id_integer_division_beyond_2_53(spark):
-    """shard_id must be exact integer floor-division even past 2^53,
-    where a double quotient rounds."""
-    from ocr_wrapper_spark.sources.shards import with_shard_id
-
-    big = (2**53 + 1)
-    df = spark.createDataFrame([(big,)], "doc_id long")
-    r = with_shard_id(df, 64).collect()[0]
-    assert r["shard_id"] == big // 64
 
 
 def test_canonical_url_fragment_question_mark(spark):

@@ -94,3 +94,15 @@ def test_image_ahash_groups_by_content(spark):
     assert all(len(s) == 1 for s in by_class.values())  # same class -> same hash
     distinct = {next(iter(s)) for s in by_class.values()}
     assert len(distinct) == len(by_class)  # different class -> different hash
+
+
+def test_phash_null_for_corrupt_png_payload(spark):
+    """Undecodable image payloads must get a NULL phash (never merged),
+    even when the body sniffs as PNG but is corrupt."""
+    good = build_media_payload(6)
+    corrupt = b"MM01 image 160 120 0 0 1\n\x89PNG\r\n\x1a\ngarbage"
+    df = spark.createDataFrame(
+        [(1, bytearray(good)), (2, bytearray(corrupt))], "media_id long, payload binary"
+    )
+    rows = {r.media_id: r.phash for r in mm.with_image_phash(df).collect()}
+    assert rows[1] is not None and rows[2] is None

@@ -6,45 +6,16 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_wrapper_spark.sources.pages import synthesize_pages
-
 SF = "/root/testdata/sf0.001"
 
 
-def test_stream_extraction_matches_batch(spark, tmp_path):
-    from ocr_wrapper_spark.streaming.stream import stream_extraction
-
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    synthesize_pages(spark, SF).repartition(4).write.parquet(pages_dir)
-
-    q = stream_extraction(spark, pages_dir, out_dir, ckpt, max_files_per_trigger=2)
-    q.processAllAvailable()
-    q.stop()
-
-    got = spark.read.parquet(out_dir)
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    assert got.count() == docs.count()
-    joined = got.join(
-        synthesize_pages(spark, SF).select("url", F.col("text").alias("expect")), "url"
-    )
-    assert joined.filter(F.col("extracted_text") != F.col("expect")).count() == 0
-
-    # restart on the same checkpoint: no new files -> no duplicate output
-    q2 = stream_extraction(spark, pages_dir, out_dir, ckpt)
-    q2.processAllAvailable()
-    q2.stop()
-    assert spark.read.parquet(out_dir).count() == docs.count()
-
-
 def test_streaming_event_windows(spark, tmp_path):
-    from ocr_wrapper_spark.streaming.stream import streaming_event_window_counts
+    from ocr_wrapper_spark.streaming.stream import streaming_event_counts
 
     # file-stream source needs a directory of parquet files
     events_dir = str(tmp_path / "events")
     spark.read.parquet(f"{SF}/events.parquet").write.parquet(events_dir)
-    agg = streaming_event_window_counts(spark, events_dir)
+    agg = streaming_event_counts(spark, events_dir, F.window("ts", "1 hour"))
     q = (
         agg.writeStream.format("memory")
         .queryName("evt_windows")
@@ -97,30 +68,6 @@ def test_stateful_stream_dedup(spark, tmp_path):
     out = spark.sql("select content_hash from dedup_out").collect()
     assert len(out) == 4
     assert len({r.content_hash for r in out}) == 4
-
-
-def test_streaming_session_windows_match_batch(spark, tmp_path):
-    """session_window streaming agg: total session count equals the batch
-    sessionization query's total."""
-    from ocr_wrapper_spark.streaming.stream import streaming_session_windows
-    from ocr_wrapper_spark.relational import QUERIES
-
-    events_dir = str(tmp_path / "events_sw")
-    spark.read.parquet(f"{SF}/events.parquet").write.parquet(events_dir)
-    q = (
-        streaming_session_windows(spark, events_dir)
-        .writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("complete")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    stream_sessions = spark.sql("select count(*) n from sess_out").collect()[0].n
-    batch_sessions = (
-        QUERIES["sessionize_events"](spark, SF).agg(F.sum("n_sessions")).collect()[0][0]
-    )
-    assert stream_sessions == batch_sessions
 
 
 def test_stateful_dedup_on_rocksdb_state_store(spark, tmp_path):
