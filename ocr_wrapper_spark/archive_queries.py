@@ -607,10 +607,10 @@ CDX_ZIP_BLOCK = 64  # front-coding restarts every 64 ids (the zipnum block)
 
 
 def _frontcode_oracle() -> str:
-    from .curation_queries import _knuth_u_sql
+    from .operators.sampling import DOC_U_SQL
     from .sources import pages as pages_src
 
-    host_idx = f"len(list_filter({{cdf}}, c -> c < ({_knuth_u_sql('doc_id')})))"
+    host_idx = f"len(list_filter({{cdf}}, c -> c < ({DOC_U_SQL})))"
     ext = f"""CASE
         WHEN doc_id % {pages_src.PDF_MOD} = 3 THEN 'pdf'
         WHEN doc_id % {pages_src.PDF_MOD} = {pages_src.JSON_REM} THEN 'json'

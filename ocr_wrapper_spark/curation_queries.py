@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from . import graph_queries as gq
 from .operators.components import connected_components
+from .operators.sampling import DOC_U_SQL
 from .relational import ORACLES as _ORACLES
 from .relational import _t, _td, register
 from .sources.pages import _host_idx_col, _host_name
@@ -695,12 +696,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 CDX_SHARD_HOSTS = 8  # hosts per index shard
 
 
-def _knuth_u_sql(k: str) -> str:
-    from .operators.sampling import KNUTH_U_SQL
-
-    return KNUTH_U_SQL.format(k=k)
-
-
 @register(
     "cdx_url_index",
     # oracle assigned below: every field is
@@ -762,7 +757,7 @@ def cdx_url_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cdx_oracle() -> str:
     from .sources import pages as pages_src
 
-    host_idx = f"len(list_filter({{cdf}}, c -> c < ({_knuth_u_sql('doc_id')})))"
+    host_idx = f"len(list_filter({{cdf}}, c -> c < ({DOC_U_SQL})))"
     ext = f"""CASE
         WHEN doc_id % {pages_src.PDF_MOD} = 3 THEN 'pdf'
         WHEN doc_id % {pages_src.PDF_MOD} = {pages_src.JSON_REM} THEN 'json'
@@ -932,7 +927,7 @@ def host_downsample_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _host_downsample_oracle() -> str:
-    host_idx = f"len(list_filter({{cdf}}, c -> c < ({_knuth_u_sql('doc_id')})))"
+    host_idx = f"len(list_filter({{cdf}}, c -> c < ({DOC_U_SQL})))"
     return f"""
     WITH h AS (SELECT doc_id, CAST({host_idx} AS INT) AS host_idx FROM documents),
     counts AS (SELECT host_idx, CAST(count(*) AS BIGINT) AS n_docs FROM h GROUP BY 1),
@@ -946,7 +941,7 @@ def _host_downsample_oracle() -> str:
            ('host' || CASE WHEN h.host_idx < 10 THEN '0' || CAST(h.host_idx AS VARCHAR)
                            ELSE CAST(h.host_idx AS VARCHAR) END || '.example.com') AS host,
            CAST(rate_ppm AS BIGINT) AS rate_ppm,
-           (CAST(floor(({_knuth_u_sql('doc_id')}) * 1000000) AS BIGINT) < rate_ppm)
+           (CAST(floor(({DOC_U_SQL}) * 1000000) AS BIGINT) < rate_ppm)
              AS keep
     FROM h JOIN rates USING (host_idx)
     """
@@ -2757,8 +2752,8 @@ CDC_W = 6  # gram width (chars)
 CDC_P = 16  # boundary divisor -> expected chunk ~16 chars
 
 
-def _cdc_gram_hash_sql(text: str, i: str) -> str:
-    return _HEX_A_SQL.format(fp=f"md5(substr({text}, {i}-{CDC_W}+1, {CDC_W}))")
+# the rolling gram hash of the CDC_W characters ending at text position i
+_CDC_GRAM_HASH_SQL = _HEX_A_SQL.format(fp=f"md5(substr(text, i-{CDC_W}+1, {CDC_W}))")
 
 
 @register(
@@ -2769,7 +2764,7 @@ def _cdc_gram_hash_sql(text: str, i: str) -> str:
       FROM documents),
     bnd AS (
       SELECT doc_id, i FROM pos
-      WHERE {_cdc_gram_hash_sql("text", "i")} % {CDC_P} = 0),
+      WHERE {_CDC_GRAM_HASH_SQL} % {CDC_P} = 0),
     cuts AS (SELECT doc_id, list(i ORDER BY i) AS cuts FROM bnd GROUP BY doc_id),
     edges AS (
       SELECT d.doc_id, d.text,
@@ -2860,9 +2855,10 @@ SHUFFLE_ROUNDS = 4
 SHUFFLE_EPOCHS = 3
 
 
-def _feistel_f_sql(r: str, rnd: int) -> str:
+def _feistel_f_sql(rnd: int) -> str:
+    """Round ``rnd``'s keyed hash of the right half ``r``."""
     return (
-        f"CAST(CAST(('0x' || substr(md5(CAST({r} AS VARCHAR) || '|{rnd}|' ||"
+        f"CAST(CAST(('0x' || substr(md5(CAST(r AS VARCHAR) || '|{rnd}|' ||"
         f" CAST(epoch AS VARCHAR)), 1, 15)) AS UBIGINT) AS BIGINT)"
         f" % {1 << SHUFFLE_HALF_BITS}"
     )
@@ -2876,7 +2872,7 @@ def _feistel_cte_sql() -> str:
     for i in range(SHUFFLE_ROUNDS):
         steps.append(
             f"r{i + 1} AS (SELECT doc_id, epoch, r AS l,"
-            f" xor(l, {_feistel_f_sql('r', i)}) AS r FROM r{i})"
+            f" xor(l, {_feistel_f_sql(i)}) AS r FROM r{i})"
         )
     steps.append(
         f"permuted AS (SELECT doc_id, epoch,"

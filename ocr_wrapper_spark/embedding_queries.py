@@ -234,7 +234,7 @@ def ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    truth = similarity.cosine_topk_bruteforce(e, queries, k=TOPK, round_digits=4)
+    truth = similarity.cosine_topk_bruteforce(e, queries, k=TOPK)
     pq = similarity.pq_topk_adc(e, queries, k=TOPK).select(
         "query_id", "vec_id", F.lit(1).alias("hit")
     )
@@ -389,13 +389,11 @@ def bitext_mutual_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
         tgt,
         src.select(F.col("vec_id").alias("query_id"), "embedding"),
         k=1,
-        round_digits=4,
     ).select(F.col("query_id").alias("src_id"), F.col("vec_id").alias("tgt_id"), "cosine")
     b1 = similarity.cosine_topk_bruteforce(
         src,
         tgt.select(F.col("vec_id").alias("query_id"), "embedding"),
         k=1,
-        round_digits=4,
     ).select(F.col("vec_id").alias("src_id"), F.col("query_id").alias("tgt_id"))
     return f1.join(b1, ["src_id", "tgt_id"])
 
@@ -466,9 +464,10 @@ def bitext_mine_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 KCENTER_K = 6  # centers selected by the greedy sweep
 
 
-def _kc_dist_sql(a: str, b: str) -> str:
+def _kc_dist_sql(a: str) -> str:
+    """Cosine-tick distance from vector ``a`` to the center ``c.v``."""
     s = similarity.BITEXT_COS_SCALE
-    return f"{s} - CAST(round(round(list_cosine_similarity({a}, {b}), 4)*{s}) AS BIGINT)"
+    return f"{s} - CAST(round(round(list_cosine_similarity({a}, c.v), 4)*{s}) AS BIGINT)"
 
 
 def _kcenter_ctes() -> str:
@@ -480,14 +479,14 @@ def _kcenter_ctes() -> str:
     sql = f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     c1 AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 1),
-    d1 AS (SELECT e.vec_id, e.v, {_kc_dist_sql('e.v', 'c.v')} AS mind
+    d1 AS (SELECT e.vec_id, e.v, {_kc_dist_sql('e.v')} AS mind
            FROM e, c1 c)"""
     for it in range(2, KCENTER_K + 1):
         sql += f""",
     c{it} AS (SELECT vec_id, v, mind FROM d{it - 1}
               ORDER BY mind DESC, vec_id LIMIT 1),
     d{it} AS (SELECT d.vec_id, d.v,
-                     least(d.mind, {_kc_dist_sql('d.v', 'c.v')}) AS mind
+                     least(d.mind, {_kc_dist_sql('d.v')}) AS mind
               FROM d{it - 1} d, c{it} c)"""
     return sql
 
@@ -538,7 +537,7 @@ def _kcenter_eval_oracle() -> str:
         _kcenter_ctes()
         + f""",
     fk AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT {k}),
-    fd AS (SELECT e.vec_id, min({_kc_dist_sql('e.v', 'c.v')}) AS mind
+    fd AS (SELECT e.vec_id, min({_kc_dist_sql('e.v')}) AS mind
            FROM e, fk c GROUP BY e.vec_id),
     kcs AS (SELECT max(mind) AS radius_kcenter_ticks,
                    CAST(sum(mind) AS BIGINT) AS sum_kcenter_ticks,
@@ -662,12 +661,12 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    truth = similarity.cosine_topk_bruteforce(e, queries, k=TOPK, round_digits=4)
+    truth = similarity.cosine_topk_bruteforce(e, queries, k=TOPK)
     e16 = e.select("vec_id", F.slice("embedding", 1, MRL_DIMS).alias("embedding"))
     q16 = queries.select(
         "query_id", F.slice("embedding", 1, MRL_DIMS).alias("embedding")
     )
-    trunc = similarity.cosine_topk_bruteforce(e16, q16, k=TOPK, round_digits=4)
+    trunc = similarity.cosine_topk_bruteforce(e16, q16, k=TOPK)
     joined = truth.alias("t").join(
         trunc.alias("p"),
         (F.col("t.query_id") == F.col("p.query_id"))

@@ -461,6 +461,50 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Chao1 / Good-Turing vocabulary richness (the growth curve's asymptote)
 # ---------------------------------------------------------------------------
 
+# The frequency spectrum's cells over a (.., c) table of per-type counts,
+# and the Chao1 / Good-Turing estimates from them, one source per engine
+# for both queries. chao1_types = D + f1^2 // (2 f2), or D + f1 (f1 - 1)
+# // 2 when f2 = 0, with 128-bit intermediates; past 2^63 both engines
+# raise instead of wrapping. Spark's ``div`` returns a BIGINT that wraps
+# silently, so its quotient is the exact DECIMAL (a - a % b) / b, which an
+# ANSI cast to BIGINT rejects when it does not fit; DuckDB's HUGEINT ``//``
+# meets the same BIGINT cast.
+_SPECTRUM_SQL = """CAST(count(*) AS BIGINT) AS d_types,
+           CAST(sum(c) AS BIGINT) AS n_occurrences,
+           CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
+           CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2"""
+_CHAO1_SQL = """CAST(d_types + CASE WHEN f2 > 0
+               THEN CAST(f1 AS HUGEINT) * f1 // (2 * f2)
+               ELSE CAST(f1 AS HUGEINT) * (f1 - 1) // 2
+             END AS BIGINT) AS chao1_types,
+           CAST(CAST(f1 AS HUGEINT) * 1000000 // n_occurrences AS BIGINT) AS unseen_mass_ppm"""
+
+
+def _spectrum_aggs() -> list:
+    f1 = F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("long")
+    f2 = F.sum(F.when(F.col("c") == 2, 1).otherwise(0)).cast("long")
+    return [
+        F.count("*").cast("long").alias("d_types"),
+        F.sum("c").cast("long").alias("n_occurrences"),
+        f1.alias("f1"),
+        f2.alias("f2"),
+    ]
+
+
+def _chao1_cols() -> list:
+    sq = "CAST(f1 AS DECIMAL(38,0)) * f1"
+    return [
+        F.expr(
+            "CAST(d_types + CASE WHEN f2 > 0"
+            f" THEN ({sq} - {sq} % (2 * f2)) / (2 * f2)"
+            " ELSE CAST(f1 AS DECIMAL(38,0)) * (f1 - 1) / 2 END AS BIGINT)"
+        ).alias("chao1_types"),
+        F.expr(
+            "CAST(CAST(f1 AS DECIMAL(38,0)) * 1000000 div n_occurrences AS BIGINT)"
+        ).alias("unseen_mass_ppm"),
+    ]
+
+
 _CHAO1_ORACLE = f"""
     WITH d AS (
       SELECT doc_id, str_split(text, ' ') AS w,
@@ -470,22 +514,11 @@ _CHAO1_ORACLE = f"""
       SELECT unnest(list_transform(range(0, nl - {GROWTH_SHINGLE - 1}),
                i -> w[i + 1] || ' ' || w[i + 2] || ' ' || w[i + 3])) AS shingle
       FROM d WHERE nl >= {GROWTH_SHINGLE}),
-    df AS (SELECT shingle, count(*) AS c FROM sh GROUP BY shingle)
-    SELECT CAST(count(*) AS BIGINT) AS d_types,
-           CAST(sum(c) AS BIGINT) AS n_occurrences,
-           CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
-           CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2,
-           CAST(count(*) +
-             CASE WHEN sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) > 0
-               THEN CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS HUGEINT)
-                    * sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)
-                    // (2 * sum(CASE WHEN c = 2 THEN 1 ELSE 0 END))
-               ELSE CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS HUGEINT)
-                    * (sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) - 1) // 2
-             END AS BIGINT) AS chao1_types,
-           CAST(CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS HUGEINT)
-                * 1000000 // sum(c) AS BIGINT) AS unseen_mass_ppm
-    FROM df
+    df AS (SELECT shingle, count(*) AS c FROM sh GROUP BY shingle),
+    cells AS (SELECT {_SPECTRUM_SQL} FROM df)
+    SELECT d_types, n_occurrences, f1, f2,
+           {_CHAO1_SQL}
+    FROM cells
     """
 
 
@@ -530,29 +563,8 @@ def vocab_chao1_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("shingle")
     )
     df = sh.groupBy("shingle").agg(F.count("*").alias("c"))
-    f1 = F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("long")
-    f2 = F.sum(F.when(F.col("c") == 2, 1).otherwise(0)).cast("long")
-    agg = df.agg(
-        F.count("*").cast("long").alias("d_types"),
-        F.sum("c").cast("long").alias("n_occurrences"),
-        f1.alias("f1"),
-        f2.alias("f2"),
-    )
-    chao1 = F.expr(
-        "CAST(d_types + CASE WHEN f2 > 0"
-        " THEN CAST(f1 AS DECIMAL(38,0)) * f1 div (2 * f2)"
-        " ELSE CAST(f1 AS DECIMAL(38,0)) * (f1 - 1) div 2 END AS BIGINT)"
-    )
-    return agg.select(
-        "d_types",
-        "n_occurrences",
-        "f1",
-        "f2",
-        chao1.alias("chao1_types"),
-        F.expr(
-            "CAST(CAST(f1 AS DECIMAL(38,0)) * 1000000 div n_occurrences AS BIGINT)"
-        ).alias("unseen_mass_ppm"),
-    )
+    agg = df.agg(*_spectrum_aggs())
+    return agg.select("d_types", "n_occurrences", "f1", "f2", *_chao1_cols())
 
 
 # ---------------------------------------------------------------------------
@@ -607,27 +619,13 @@ def host_novelty_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("shingle"),
     )
     spec = sh.groupBy("host_idx", "shingle").agg(F.count("*").alias("c"))
-    f1 = F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("long")
-    f2 = F.sum(F.when(F.col("c") == 2, 1).otherwise(0)).cast("long")
-    agg = spec.groupBy("host_idx").agg(
-        F.count("*").cast("long").alias("d_types"),
-        F.sum("c").cast("long").alias("n_occurrences"),
-        f1.alias("f1"),
-        f2.alias("f2"),
-    )
+    agg = spec.groupBy("host_idx").agg(*_spectrum_aggs())
     return agg.select(
         F.col("host_idx").cast("int").alias("host_idx"),
         "d_types",
         "n_occurrences",
         "f1",
-        F.expr(
-            "CAST(d_types + CASE WHEN f2 > 0"
-            " THEN CAST(f1 AS DECIMAL(38,0)) * f1 div (2 * f2)"
-            " ELSE CAST(f1 AS DECIMAL(38,0)) * (f1 - 1) div 2 END AS BIGINT)"
-        ).alias("chao1_types"),
-        F.expr(
-            "CAST(CAST(f1 AS DECIMAL(38,0)) * 1000000 div n_occurrences AS BIGINT)"
-        ).alias("unseen_mass_ppm"),
+        *_chao1_cols(),
     )
 
 
@@ -647,22 +645,11 @@ def _host_novelty_oracle() -> str:
       FROM d WHERE nl >= {GROWTH_SHINGLE}),
     spec AS (
       SELECT host_idx, shingle, count(*) AS c
-      FROM sh GROUP BY host_idx, shingle)
-    SELECT CAST(host_idx AS INT) AS host_idx,
-           CAST(count(*) AS BIGINT) AS d_types,
-           CAST(sum(c) AS BIGINT) AS n_occurrences,
-           CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
-           CAST(count(*) +
-             CASE WHEN sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) > 0
-               THEN CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS HUGEINT)
-                    * sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)
-                    // (2 * sum(CASE WHEN c = 2 THEN 1 ELSE 0 END))
-               ELSE CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS HUGEINT)
-                    * (sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) - 1) // 2
-             END AS BIGINT) AS chao1_types,
-           CAST(CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS HUGEINT)
-                * 1000000 // sum(c) AS BIGINT) AS unseen_mass_ppm
-    FROM spec GROUP BY host_idx
+      FROM sh GROUP BY host_idx, shingle),
+    cells AS (SELECT host_idx, {_SPECTRUM_SQL} FROM spec GROUP BY host_idx)
+    SELECT CAST(host_idx AS INT) AS host_idx, d_types, n_occurrences, f1,
+           {_CHAO1_SQL}
+    FROM cells
     """
 
 

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .operators.sampling import KNUTH_U_SQL
+from .operators.sampling import DOC_U_SQL, KNUTH_U_SQL
 from .relational import _t, register
 from .sources import pages as pages_src
 from .sources.pages import _host_name
@@ -96,7 +96,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LINKS_CTE_SQL = f"""links AS (
       SELECT doc_id,
-             len(list_filter({{cdf}}, c -> c < ({KNUTH_U_SQL.format(k="doc_id")})))
+             len(list_filter({{cdf}}, c -> c < ({DOC_U_SQL})))
                AS src_host,
              len(list_filter({{cdf}}, c -> c < (
                {KNUTH_U_SQL.format(k=_LINK_KEY_SQL.format(d="doc_id", k="k"))})))

@@ -235,9 +235,8 @@ SIZE_BUCKET_CHARS = 256  # quasi-identifier size bucket width
 
 
 def _k_anon_oracle() -> str:
-    from .operators.sampling import KNUTH_U_SQL
+    from .operators.sampling import DOC_U_SQL as u
 
-    u = KNUTH_U_SQL.format(k="doc_id")
     return f"""
     WITH h AS (
       SELECT doc_id, lang, n_chars // {SIZE_BUCKET_CHARS} AS size_bucket,

@@ -4,9 +4,10 @@ Analogue of the reference's GoogleDocumentOcrCheckboxDetector
 (google_document_ocr_checkbox_detector.py:54-124): the reference calls a
 DocumentAI processor on the page image and converts each visual element
 into a BBox whose text is "☑" (filled_checkbox) or "☐"
-(unfilled_checkbox) plus a confidence; duplicates are removed
+(unfilled_checkbox) plus a confidence, and removes duplicates
 (`list(set(result))` — the service "generally returns exactly the same
-checkbox twice"). Downstream, the spans merge via suppress-then-merge
+checkbox twice"). Here every element gets its own grid cell, so no two
+boxes are equal and there is nothing to remove. Downstream, the spans merge via suppress-then-merge
 (google_azure_ocr.py:176-193, F6/J4 in kernels/combine.py).
 
 For web pages the "visual elements" are ``<input type=checkbox>``
@@ -53,83 +54,53 @@ _CODE_GRID_Y0 = 1.6  # below-page band floor; see _code_band_y0 for the
 # code boxes into the checkbox run in reading order
 
 
-def _code_band_y0(raw: str, n_checkboxes: int | None = None) -> float:
+def _as_text(html_bytes: bytes | str) -> str:
+    if isinstance(html_bytes, (bytes, bytearray)):
+        return html_bytes.decode("utf-8", errors="replace")
+    return html_bytes
+
+
+def _grid(n: int, y0: float) -> np.ndarray:
+    """(n, 8) normalized squares, one per element in source order,
+    _GRID_COLS to a row, rows growing down from ``y0``."""
+    i = np.arange(n)
+    x0 = _MARGIN + (i % _GRID_COLS) * _STEP_X
+    top = y0 + (i // _GRID_COLS) * _STEP_Y
+    x1, y1 = x0 + _BOX_W, top + _BOX_H
+    return np.stack([x0, top, x1, top, x1, y1, x0, y1], axis=1)
+
+
+def _code_band_y0(n_checkboxes: int) -> float:
     """Start of the code band: past the last checkbox row (plus margin),
     never below the 1.6 floor — keeps codes AFTER checkboxes in reading
-    order at any checkbox count. Pass ``n_checkboxes`` when the caller
-    already ran detect_checkboxes to avoid a second full-page input scan
-    (the aux hot path does)."""
-    if n_checkboxes is None:
-        n_checkboxes = sum(
-            1 for m in _RE_INPUT.finditer(raw) if _RE_TYPE_CHECKBOX.search(m.group(0))
-        )
+    order at any checkbox count."""
     rows = (n_checkboxes + _GRID_COLS - 1) // _GRID_COLS
     return max(_CODE_GRID_Y0, _CHECKBOX_GRID_Y0 + rows * _STEP_Y + _MARGIN)
 
 
-def detect_codes(html_bytes: bytes | str, n_checkboxes: int | None = None):
+def detect_codes(html_bytes: bytes | str, n_checkboxes: int):
     """QR/barcode spans from the page (C11 analogue): the reference
     decodes QR/barcodes into ``TYPE[[DATA]]`` spans with confidence 1.0
     merged via the aux path (tests/test_google_azure_ocr.py:65-82,
     expected text e.g. CODE39[[WIKIPEDIA]]). For web pages the carrier is
     an ``<img data-code="TYPE[[DATA]]">`` element; boxes are synthesized
-    on a grid band below the checkbox band."""
-    raw = (
-        html_bytes.decode("utf-8", errors="replace")
-        if isinstance(html_bytes, (bytes, bytearray))
-        else html_bytes
-    )
+    on a grid band below the page's ``n_checkboxes`` checkboxes."""
     texts: list[str] = []
-    for m in _RE_IMG.finditer(raw):
+    for m in _RE_IMG.finditer(_as_text(html_bytes)):
         code = _RE_DATA_CODE.search(m.group(0))
         if code and code.group(1):
             texts.append(code.group(1))
     n = len(texts)
-    band_y0 = _code_band_y0(raw, n_checkboxes)
-    coords = np.empty((n, 8), dtype=np.float64)
-    for i in range(n):
-        col, row = i % _GRID_COLS, i // _GRID_COLS
-        x0 = _MARGIN + col * _STEP_X
-        y0 = band_y0 + row * _STEP_Y
-        x1, y1 = x0 + _BOX_W, y0 + _BOX_H
-        coords[i] = (x0, y0, x1, y0, x1, y1, x0, y1)
-    return coords, texts, [CODE_CONFIDENCE] * n
+    return _grid(n, _code_band_y0(n_checkboxes)), texts, [CODE_CONFIDENCE] * n
 
 
 def detect_checkboxes(html_bytes: bytes | str):
-    """HTML page -> (coords (n,8) normalized, texts, confidences).
-
-    Elements appear in source order; exact-duplicate boxes are removed
-    like the reference's `list(set(result))` dedup (C11/A9 family)."""
-    raw = (
-        html_bytes.decode("utf-8", errors="replace")
-        if isinstance(html_bytes, (bytes, bytearray))
-        else html_bytes
-    )
+    """HTML page -> (coords (n,8) normalized, texts, confidences), in
+    source order."""
     glyphs: list[str] = []
-    for m in _RE_INPUT.finditer(raw):
+    for m in _RE_INPUT.finditer(_as_text(html_bytes)):
         attrs = m.group(0)
-        if not _RE_TYPE_CHECKBOX.search(attrs):
-            continue
-        glyphs.append(CHECKED_GLYPH if _RE_CHECKED.search(attrs) else UNCHECKED_GLYPH)
-
+        if _RE_TYPE_CHECKBOX.search(attrs):
+            glyphs.append(CHECKED_GLYPH if _RE_CHECKED.search(attrs) else UNCHECKED_GLYPH)
     n = len(glyphs)
-    coords = np.empty((n, 8), dtype=np.float64)
-    for i in range(n):
-        col, row = i % _GRID_COLS, i // _GRID_COLS
-        x0 = _MARGIN + col * _STEP_X
-        y0 = _CHECKBOX_GRID_Y0 + row * _STEP_Y
-        x1, y1 = x0 + _BOX_W, y0 + _BOX_H
-        coords[i] = (x0, y0, x1, y0, x1, y1, x0, y1)
-
-    # reference dedup: identical (box, text) pairs collapse to one
-    if n:
-        keyed = {}
-        for i in range(n):
-            keyed.setdefault((tuple(coords[i]), glyphs[i]), i)
-        keep = sorted(keyed.values())
-        coords = coords[keep]
-        glyphs = [glyphs[i] for i in keep]
-        n = len(glyphs)
-
-    return coords, glyphs, [CHECKBOX_CONFIDENCE] * n
+    return _grid(n, _CHECKBOX_GRID_Y0), glyphs, [CHECKBOX_CONFIDENCE] * n

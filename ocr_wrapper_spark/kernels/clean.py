@@ -114,11 +114,10 @@ def is_vertically_aligned(coords: np.ndarray, width_height_ratio: float) -> np.n
     return width < height
 
 
-def filter_date_boxes(coords: np.ndarray, texts: list[str]) -> tuple[np.ndarray, list[str], np.ndarray]:
+def filter_date_boxes(coords: np.ndarray, texts: list[str]) -> tuple[np.ndarray, list[str]]:
     """Drop runs of up to 10 consecutive boxes whose concatenated text
     matches the slash date-range pattern; recurse until no match
-    (reference google_azure_ocr.py:371-403). Returns the kept boxes,
-    their texts and their row indices."""
+    (reference google_azure_ocr.py:371-403)."""
     items = list(range(coords.shape[0]))
 
     def run(keep: list[int]) -> list[int]:
@@ -132,21 +131,20 @@ def filter_date_boxes(coords: np.ndarray, texts: list[str]) -> tuple[np.ndarray,
                     return run(rest)
         return keep
 
-    kept = np.asarray(run(items), dtype=np.int64)
-    return coords[kept], [texts[i] for i in kept], kept
+    kept = run(items)
+    return coords[kept], [texts[i] for i in kept]
 
 
 def filter_unwanted_boxes(
     coords: np.ndarray, texts: list[str], width_height_ratio: float
-) -> tuple[np.ndarray, list[str], np.ndarray]:
+) -> tuple[np.ndarray, list[str]]:
     """The primary-provider span filter (reference
     _filter_unwanted_google_bboxes, google_azure_ocr.py:406-440): drop
     boxes taller than 1.05x the median height AND vertically aligned,
-    unless the text is a single character; then the date-box run filter.
-    Returns the kept boxes, their texts and their row indices."""
+    unless the text is a single character; then the date-box run filter."""
     n = coords.shape[0]
     if n == 0:
-        return coords.copy(), list(texts), np.zeros(0, dtype=np.int64)
+        return coords.copy(), list(texts)
     med = median_box_height(coords)
     tall = box_height(coords) > med * MEDIAN_HEIGHT_SLACK
     vertical = is_vertically_aligned(coords, width_height_ratio)
@@ -155,8 +153,7 @@ def filter_unwanted_boxes(
     )
     drop = tall & vertical & ~single_char
     keep = np.nonzero(~drop)[0]
-    f_coords, f_texts, kept = filter_date_boxes(coords[keep], [texts[i] for i in keep])
-    return f_coords, f_texts, keep[kept]
+    return filter_date_boxes(coords[keep], [texts[i] for i in keep])
 
 
 def merge_idx_lists(raw_a: list[int], raw_b: list[int], sorted_ab: list[int]) -> list[int]:
@@ -202,15 +199,18 @@ def merge_idx_lists(raw_a: list[int], raw_b: list[int], sorted_ab: list[int]) ->
 def merge_span_lists(
     coords_a: np.ndarray,
     texts_a: list[str],
+    conf_a: list[float],
     coords_b: np.ndarray,
     texts_b: list[str],
+    conf_b: list[float],
     document_width: int,
     document_height: int,
 ):
     """Ordered merge of two span lists (reference
     merge_bbox_lists_with_confidences, bbox_utils.py:202-234): A keeps its
     order, B slots in according to a global reading-order sort of A+B.
-    Returns (coords, texts); every caller sets its own confidences."""
+    Returns (coords, texts, confidences), each span keeping its own
+    confidence."""
     from .order import order_boxes
 
     na, nb = coords_a.shape[0], coords_b.shape[0]
@@ -220,4 +220,5 @@ def merge_span_lists(
     merged_texts = list(texts_a) + list(texts_b)
     sorted_idx = order_boxes(merged, merged_texts, document_width, document_height)[0].tolist()
     final = merge_idx_lists(idx_a, idx_b, sorted_idx)
-    return merged[final], [merged_texts[i] for i in final]
+    merged_conf = list(conf_a) + list(conf_b)
+    return merged[final], [merged_texts[i] for i in final], [merged_conf[i] for i in final]

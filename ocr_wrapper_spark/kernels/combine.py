@@ -58,61 +58,58 @@ def combine_primary_secondary(
     coords_s, texts_s, _ = clean.split_date_boxes(coords_s, texts_s, None)
 
     wh_ratio = document_width / document_height
-    coords_p, texts_p, _ = clean.filter_unwanted_boxes(coords_p, texts_p, wh_ratio)
+    coords_p, texts_p = clean.filter_unwanted_boxes(coords_p, texts_p, wh_ratio)
 
     # J2: secondary boxes with zero overlapping primary boxes
     keep_s = ~overlapping_any(coords_s, coords_p)
     coords_add = coords_s[keep_s]
     texts_add = [t for t, k in zip(texts_s, keep_s) if k]
 
-    # J4: ordered merge, primary order authoritative
-    merged, texts = clean.merge_span_lists(
-        coords_p, texts_p, coords_add, texts_add, document_width, document_height
+    # J4: ordered merge, primary order authoritative; every span carries
+    # the combined confidence
+    return clean.merge_span_lists(
+        coords_p, texts_p, [COMBINED_CONFIDENCE] * len(texts_p),
+        coords_add, texts_add, [COMBINED_CONFIDENCE] * len(texts_add),
+        document_width, document_height,
     )
-    confidences = [COMBINED_CONFIDENCE] * len(texts)
-    return merged, texts, confidences
 
 
 def suppress_then_merge_aux(
     coords: np.ndarray,
     texts: list[str],
+    conf: list[float],
     coords_aux: np.ndarray,
     texts_aux: list[str],
+    conf_aux: list[float],
     document_width: int,
     document_height: int,
 ):
     """Checkbox-style auxiliary merge (google_azure_ocr.py:176-193): drop
     combined boxes overlapping an aux box above CHECKBOX_OVERLAP (F6),
-    then ordered-merge the aux boxes in (J4)."""
+    then ordered-merge the aux boxes in (J4). Returns (coords, texts,
+    confidences)."""
     keep = ~overlapping_any(coords, coords_aux, CHECKBOX_OVERLAP)
-    coords_kept = coords[keep]
-    texts_kept = [t for t, k in zip(texts, keep) if k]
     return clean.merge_span_lists(
-        coords_kept, texts_kept, coords_aux, texts_aux, document_width, document_height
+        coords[keep],
+        [t for t, k in zip(texts, keep) if k],
+        [c for c, k in zip(conf, keep) if k],
+        coords_aux, texts_aux, conf_aux, document_width, document_height,
     )
 
 
-def group_overlapping(
-    coords: np.ndarray,
-    threshold: float,
-    response_ids: np.ndarray | None = None,
-) -> list[list[int]]:
-    """Greedy FIFO overlap grouping.
-
-    response_ids None -> OR-overlap semantics (bbox_utils.py:134-172 J3);
-    response_ids given -> AND-overlap + cross-response-only semantics
-    (aggregate_multiple_responses.py:14-73). Groups are seed + direct
+def group_overlapping(coords: np.ndarray, threshold: float, response_ids: np.ndarray) -> list[list[int]]:
+    """Greedy FIFO overlap grouping with AND-overlap, cross-response-only
+    semantics (aggregate_multiple_responses.py:14-73): two boxes are
+    neighbors when each covers more than ``threshold`` of the other and
+    they come from different responses. Groups are seed + direct
     neighbors still unclaimed, exactly like the reference's rtree loop.
     """
     n = coords.shape[0]
     if n == 0:
         return []
     r = bc.intersection_area_ratio_matrix(coords, coords)
-    if response_ids is None:
-        over = (r > threshold) | (r.T > threshold)
-    else:
-        over = (r > threshold) & (r.T > threshold)
-        over &= response_ids[:, None] != response_ids[None, :]
+    over = (r > threshold) & (r.T > threshold)
+    over &= response_ids[:, None] != response_ids[None, :]
     np.fill_diagonal(over, False)
 
     alive = np.ones(n, dtype=bool)

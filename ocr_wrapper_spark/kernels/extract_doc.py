@@ -457,37 +457,26 @@ def extract_with_aux_batch(payloads: list, langs: list, texts: list | None = Non
     PDF/JSON-layout documents pass through unchanged. ``texts`` is not
     read."""
     from . import combine as cmb
-    from .checkbox_detect import (
-        CHECKBOX_CONFIDENCE,
-        CODE_CONFIDENCE,
-        detect_checkboxes,
-        detect_codes,
-    )
+    from .checkbox_detect import detect_checkboxes, detect_codes
 
     def merge_aux(i, base):
         if base.provider != "html":
             return base
         payload = payloads[i]
-        coords_cb, texts_cb, _ = detect_checkboxes(payload)
-        coords_qr, texts_qr, _ = detect_codes(payload, n_checkboxes=len(texts_cb))
-        coords_aux = np.vstack([coords_cb, coords_qr])
-        texts_aux = texts_cb + texts_qr
+        coords_cb, texts_cb, conf_cb = detect_checkboxes(payload)
+        coords_qr, texts_qr, conf_qr = detect_codes(payload, len(texts_cb))
         width = base.width or layout.PAGE_WIDTH
         height = base.height or layout.PAGE_HEIGHT
-        if len(texts_aux) == 0:
-            merged, texts = base.coords, base.texts
+        if not texts_cb and not texts_qr:
+            merged, texts, confidences = base.coords, base.texts, base.confidences
         else:
-            merged, texts = cmb.suppress_then_merge_aux(
-                base.coords, base.texts, coords_aux, texts_aux, width, height
+            # each span keeps its source's confidence: the page's words,
+            # the checkbox detector's or the code decoder's
+            merged, texts, confidences = cmb.suppress_then_merge_aux(
+                base.coords, base.texts, base.confidences,
+                np.vstack([coords_cb, coords_qr]), texts_cb + texts_qr, conf_cb + conf_qr,
+                width, height,
             )
-        glyphs = {"☑", "☐"}
-        code_texts = set(texts_qr)
-        confidences = [
-            CHECKBOX_CONFIDENCE
-            if t in glyphs
-            else (CODE_CONFIDENCE if t in code_texts else HTML_CONFIDENCE)
-            for t in texts
-        ]
         return ExtractResult(merged, texts, confidences, base.rotation, base.tilt_angle,
                              "html+aux", width=width, height=height)
 

@@ -45,7 +45,7 @@ TILT_ANGLES = [float(np.arctan(float(tf)) / DEGREE2RADIAN) for tf in TILT_FRACTI
 # bidi class -> dominance code; lowest code wins within a box
 # (reference bbox_order.py:27-40)
 TYPE_CODES = {"ON": 5, "ET": 4, "AN": 3, "EN": 2, "R": 1, "AL": 1, "L": 0}
-_CODE_L, _CODE_R, _CODE_EN, _CODE_AN, _CODE_ET, _CODE_ON = 0, 1, 2, 3, 4, 5
+_CODE_L, _CODE_R, _CODE_ON = 0, 1, 5
 
 # cutoff for reliable word statistics (reference bbox_order.py:194)
 MIN_WORDS_FOR_STATS = 10
@@ -104,27 +104,6 @@ def token_props(text: str) -> tuple[int, bool]:
     return props
 
 
-class DocumentGeometry:
-    """Derived per-page values (reference DocumentProperties,
-    bbox_order.py:55-73) — intermediate only, never materialized as columns."""
-
-    __slots__ = (
-        "full_width",
-        "full_height",
-        "half_width",
-        "median_height",
-        "writing_direction",
-        "is_bidirectional",
-        "tilt_factor",
-    )
-
-    def __init__(self):
-        self.median_height = None
-        self.writing_direction = "ltr"
-        self.is_bidirectional = False
-        self.tilt_factor = 0.0
-
-
 def _per(values: list, index: np.ndarray):
     """Per-page scalars as an operand over elements mapped to pages by
     ``index``: one gather, or the scalar itself when there is one page, so
@@ -150,7 +129,7 @@ def order_segments(segments: list) -> list:
     """Reading order of several pages in one vectorized pass.
 
     ``segments`` holds one (coords (n,8) normalized, texts, width, height)
-    per page. Returns one (ordered_idx, tilt_angle_deg, line_ids, geom) per
+    per page. Returns one (ordered_idx, tilt_angle_deg, line_ids) per
     page: ``ordered_idx[k]`` is the page-local index of the k-th box in
     reading order (reference get_ordered_bboxes_idxs, bbox_order.py:371-382)
     and ``line_ids`` its line. Each page's result is the one it gets when
@@ -161,7 +140,7 @@ def order_segments(segments: list) -> list:
         if seg[0].shape[0]:
             live.append(i)
         else:
-            out[i] = (np.zeros(0, dtype=np.int64), 0.0, np.zeros(0, dtype=np.int64), DocumentGeometry())
+            out[i] = (np.zeros(0, dtype=np.int64), 0.0, np.zeros(0, dtype=np.int64))
     if live:
         for i, res in zip(live, _order_pages([segments[i] for i in live])):
             out[i] = res
@@ -218,8 +197,6 @@ def _order_pages(pages: list) -> list:
 
     # writing-direction majority vote (bbox_order.py:198-208)
     rtl = type_count[:, _CODE_R] > type_count[:, _CODE_L]
-    n_ltr = type_count[:, _CODE_L] + type_count[:, _CODE_EN] + type_count[:, _CODE_ET]
-    bidi = np.minimum(n_ltr, type_count[:, _CODE_R]) > 1
 
     # one stable sort by (page, x) — x negated on rtl pages — frees us
     # from per-line sorts (bbox_order.py:210-218); pages stay contiguous
@@ -379,20 +356,8 @@ def _order_pages(pages: list) -> list:
     ordered_idx = order[within] - first[seg]
     line_ids = box_line[within]
 
-    out = []
-    for s in range(n_pages):
-        geom = DocumentGeometry()
-        geom.full_width = full_width[s]
-        geom.full_height = full_height[s]
-        geom.half_width = half_width[s]
-        if has_stats[s]:
-            geom.median_height = float(median_height[s])
-        geom.writing_direction = "rtl" if rtl[s] else "ltr"
-        geom.is_bidirectional = bool(bidi[s])
-        geom.tilt_factor = float(tilt_factor[s])
-        a, b = first[s], first[s] + counts[s]
-        out.append((ordered_idx[a:b], TILT_ANGLES[best[s]], line_ids[a:b], geom))
-    return out
+    ends = first + counts
+    return [(ordered_idx[a:b], TILT_ANGLES[t], line_ids[a:b]) for a, b, t in zip(first, ends, best)]
 
 
 def _cells(width, height) -> int:
@@ -422,7 +387,7 @@ def order_batch(pages: list) -> tuple[list, np.ndarray]:
     """``order_segments`` over all pages of a batch, chunk by chunk.
 
     Returns (results, ms): per page its (ordered_idx, tilt_angle_deg,
-    line_ids, geom) or the exception ordering it raised, and its share of
+    line_ids) or the exception ordering it raised, and its share of
     its chunk's wall time in ms, in proportion to its box count. A chunk
     that raises is re-run one page at a time, so only the failing page
     carries the exception."""
@@ -456,10 +421,10 @@ def order_boxes(
     texts: list[str],
     document_width: int,
     document_height: int,
-) -> tuple[np.ndarray, float, np.ndarray, DocumentGeometry]:
+) -> tuple[np.ndarray, float, np.ndarray]:
     """Full reading-order computation of one page.
 
-    Returns (ordered_idx, tilt_angle_deg, line_id_per_ordered_box, geom):
+    Returns (ordered_idx, tilt_angle_deg, line_id_per_ordered_box):
     ``ordered_idx[k]`` is the original index of the k-th box in reading
     order (reference get_ordered_bboxes_idxs, bbox_order.py:371-382).
     """

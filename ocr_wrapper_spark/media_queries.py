@@ -64,7 +64,7 @@ def media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def media_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C8 resize semantics (utils.py:62-73) as a pure-JVM dims contract."""
     m = _media(spark, sf_dir).filter(F.col("meta.kind") != "audio")
-    return mm.resize_plan(m, max_size=1024)
+    return mm.resize_plan(m)
 
 
 @register(
@@ -81,7 +81,7 @@ def media_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return mm.sample_frames(_media(spark, sf_dir), every_ms=1000)
+    return mm.sample_frames(_media(spark, sf_dir))
 
 
 @register(

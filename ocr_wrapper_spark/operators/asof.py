@@ -18,22 +18,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    ts: str,
-    right_value_cols: list[str],
-) -> DataFrame:
-    """Returns left columns + ``asof_<col>`` for each right value column."""
+KEY = "user_id"  # both sides' join key
+TS = "ts"  # both sides' event time
+
+
+def asof_join(left: DataFrame, right: DataFrame, right_value_cols: list[str]) -> DataFrame:
+    """Returns left columns + ``asof_<col>`` for each right value column,
+    matching on KEY and TS."""
     l_tag = left.select(
         *left.columns,
         F.lit(1).alias("_origin"),
         *[F.lit(None).cast(right.schema[c].dataType).alias(f"_rv_{c}") for c in right_value_cols],
     )
     r_tag = right.select(
-        key,
-        ts,
+        KEY,
+        TS,
         F.lit(0).alias("_origin"),
         *[F.col(c).alias(f"_rv_{c}") for c in right_value_cols],
     )
@@ -46,8 +45,8 @@ def asof_join(
     # right rows sort before left rows at equal ts (origin 0 < 1), so a
     # right row at exactly left.ts is visible to that left row
     w = (
-        Window.partitionBy(key)
-        .orderBy(ts, "_origin")
+        Window.partitionBy(KEY)
+        .orderBy(TS, "_origin")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     out = unioned

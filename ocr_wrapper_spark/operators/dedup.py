@@ -226,7 +226,10 @@ def with_simhash(df: DataFrame) -> DataFrame:
     return df.withColumn("simhash", simhash_udf(F.col("text")))
 
 
-def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
+SIMHASH_MAX_HAMMING = 3  # near-dup radius in bits of the 64-bit SimHash
+
+
+def simhash_near_pairs(df: DataFrame) -> DataFrame:
     """Near-dup pairs by SimHash: block on 16-bit chunks (any doc pair
     within Hamming distance 3 of 64 bits shares at least one of 4 exact
     16-bit chunks — pigeonhole), verify with JVM bit_count. Chunk buckets
@@ -256,7 +259,7 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
         )
         .distinct()
     )
-    return cand.filter(F.col("hamming") <= max_hamming)
+    return cand.filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
 
 
 # ---------------------------------------------------------------------------

@@ -142,27 +142,30 @@ def with_media_meta(df: DataFrame) -> DataFrame:
     return df.withColumn("meta", meta_udf(F.col("payload")))
 
 
-def resize_dims(width, height, max_size: int = 1024):
-    """Aspect-preserving cap on the longest side — exact reference
-    semantics incl. int truncation (utils.py:62-73). Pure JVM expressions
-    so the DuckDB oracle can recompute them."""
-    w, h = F.col(width) if isinstance(width, str) else width, F.col(height) if isinstance(height, str) else height
+RESIZE_MAX_SIZE = 1024  # longest side after resizing (reference utils.py:62)
+FRAME_EVERY_MS = 1000  # video frame sampling stride
+
+
+def resize_dims(w, h):
+    """Aspect-preserving cap of the longest side at RESIZE_MAX_SIZE —
+    exact reference semantics incl. int truncation (utils.py:62-73).
+    Pure JVM expressions so the DuckDB oracle can recompute them."""
     new_w = F.when(
-        (w > max_size) | (h > max_size),
-        F.when(w > h, F.lit(max_size)).otherwise((F.lit(max_size) * w / h).cast("int")),
+        (w > RESIZE_MAX_SIZE) | (h > RESIZE_MAX_SIZE),
+        F.when(w > h, F.lit(RESIZE_MAX_SIZE)).otherwise((F.lit(RESIZE_MAX_SIZE) * w / h).cast("int")),
     ).otherwise(w)
     new_h = F.when(
-        (w > max_size) | (h > max_size),
-        F.when(w > h, (F.lit(max_size) * h / w).cast("int")).otherwise(F.lit(max_size)),
+        (w > RESIZE_MAX_SIZE) | (h > RESIZE_MAX_SIZE),
+        F.when(w > h, (F.lit(RESIZE_MAX_SIZE) * h / w).cast("int")).otherwise(F.lit(RESIZE_MAX_SIZE)),
     ).otherwise(h)
     return new_w, new_h
 
 
-def resize_plan(df: DataFrame, max_size: int = 1024) -> DataFrame:
+def resize_plan(df: DataFrame) -> DataFrame:
     """(media_id, width, height) -> resized dims (no pixel work: the
     raster op is executor-local in the real pipeline; the dims contract
     is what downstream layout math consumes)."""
-    new_w, new_h = resize_dims(F.col("meta.width"), F.col("meta.height"), max_size)
+    new_w, new_h = resize_dims(F.col("meta.width"), F.col("meta.height"))
     return df.select(
         "media_id",
         F.col("meta.kind").alias("kind"),
@@ -173,14 +176,14 @@ def resize_plan(df: DataFrame, max_size: int = 1024) -> DataFrame:
     )
 
 
-def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
+def sample_frames(df: DataFrame) -> DataFrame:
     """Video frame sampling: deterministic frame indices at a fixed time
     stride (JVM sequence; one row per sampled frame)."""
     fps_num = F.col("meta.n_frames") * 1000.0 / F.col("meta.duration_ms")
     idx = F.sequence(
         F.lit(0),
         F.col("meta.n_frames") - 1,
-        F.greatest(F.floor(fps_num * every_ms / 1000.0).cast("long"), F.lit(1)),
+        F.greatest(F.floor(fps_num * FRAME_EVERY_MS / 1000.0).cast("long"), F.lit(1)),
     )
     return (
         df.filter(F.col("meta.kind") == "video")

@@ -59,16 +59,22 @@ KNUTH_U_SQL = (
     f"+ ({_NONNEG} // 65536 * 2654435761) % 4294967296 * 65536) "
     "% 4294967296 / 4294967296.0"
 )
+# the per-document draw; a naive doc_id * 2654435761 overflows BIGINT in
+# DuckDB once doc_id >= ~3.47e9, the replica id regime
+DOC_U_SQL = KNUTH_U_SQL.format(k="doc_id")
 
 
-def stratified_sample(df: DataFrame, rates: dict[str, float], default_rate: float = 1.0) -> DataFrame:
+DEFAULT_RATE = 0.5  # rate of a source that ``rates`` does not name
+
+
+def stratified_sample(df: DataFrame, rates: dict[str, float]) -> DataFrame:
     """Rows of ``df`` repeated per the rate of their ``source`` stratum,
     keyed by ``doc_id``; ``epoch`` column numbers the copies (1-based).
     Zero-shuffle: filter + explode only."""
     mapping = F.create_map(
         *[x for k, v in sorted(rates.items()) for x in (F.lit(k), F.lit(float(v)))]
     )
-    rate = F.coalesce(mapping[F.col("source")], F.lit(float(default_rate)))
+    rate = F.coalesce(mapping[F.col("source")], F.lit(DEFAULT_RATE))
     u = knuth_u(F.col("doc_id"))
     n_copies = F.floor(rate).cast("int") + (u < (rate - F.floor(rate))).cast("int")
     return (
@@ -79,10 +85,10 @@ def stratified_sample(df: DataFrame, rates: dict[str, float], default_rate: floa
     )
 
 
-def source_mix_summary(df: DataFrame, rates: dict[str, float], default_rate: float = 1.0) -> DataFrame:
+def source_mix_summary(df: DataFrame, rates: dict[str, float]) -> DataFrame:
     """Per-stratum monitoring rollup of the sample: total rows emitted
     (epochs included) and unique docs kept."""
-    sampled = stratified_sample(df, rates, default_rate)
+    sampled = stratified_sample(df, rates)
     return sampled.groupBy("source").agg(
         F.count("*").alias("n_samples"),
         F.countDistinct("doc_id").alias("n_unique"),

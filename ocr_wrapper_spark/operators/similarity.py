@@ -42,11 +42,9 @@ def _topk(scored: DataFrame, k: int, score: str) -> DataFrame:
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def cosine_topk_bruteforce(
-    corpus: DataFrame, queries: DataFrame, k: int = 5, round_digits: int = 6
-) -> DataFrame:
+def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k neighbors per query by cosine similarity; rank computed
-    on the rounded score. All (query, corpus) scores come from one numpy
+    on the score rounded to 4 digits, the grain the oracles round to. All (query, corpus) scores come from one numpy
     matmul per Arrow batch (~50x the per-pair JVM expression for dim-64
     vectors). The query side is collected to the driver (it is the small
     side by construction) and shipped in the task closure."""
@@ -61,7 +59,7 @@ def cosine_topk_bruteforce(
             if C.size == 0:
                 continue
             Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            S = np.round(Cn @ Qn.T, round_digits)  # (batch, m)
+            S = np.round(Cn @ Qn.T, 4)  # (batch, m)
             m = len(q_ids)
             b = len(pdf)
             yield pd.DataFrame(
@@ -137,50 +135,25 @@ def cosine_topk_int8(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataF
     return _topk(scored, k, "cosine")
 
 
-# Above this corpus size the broadcast-matmul near-pairs path would
-# collect too much to the driver; the LSH candidate path takes over.
+# Above this corpus size collecting the corpus for the broadcast matmul
+# would exhaust driver memory; cosine_near_pairs raises instead.
 BROADCAST_LIMIT = 200_000
+NEAR_PAIR_THRESHOLD = 0.4  # the synthetic embeddings are near-orthogonal
 
 
-def cosine_near_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.95,
-    strategy: str = "auto",
-    broadcast_limit: int = BROADCAST_LIMIT,
-) -> DataFrame:
+def cosine_near_pairs(corpus: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >=
-    threshold).
-
-    strategy='broadcast': one numpy matmul per Arrow batch against the
-    broadcast corpus matrix — exact, O(n) driver memory, fine while the
-    corpus is small (dim-64 float64 is 0.5 KB/row).
-    strategy='lsh': random-hyperplane LSH buckets generate candidates in
-    an equi-join (corpus stays partitioned, nothing on the driver), then
-    the exact cosine verifies each candidate — the 100 TB path; recall
-    <1 for borderline pairs but ~1 for true near-dups (see
-    cosine_near_pairs_lsh).
-    strategy='auto': count the id column (cheap, column-pruned scan) and
-    pick: <= broadcast_limit -> broadcast, else lsh.
-    """
-    import pandas as pd
-
-    if strategy not in ("auto", "broadcast", "lsh"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy != "lsh":
-        n = corpus.select("vec_id").count()
-        if n > broadcast_limit:
-            if strategy == "broadcast":
-                raise ValueError(
-                    f"corpus has {n} rows > broadcast_limit {broadcast_limit}; "
-                    "use strategy='lsh' (collect+broadcast would exhaust driver memory)"
-                )
-            strategy = "lsh"
-        else:
-            strategy = "broadcast"
-    if strategy == "lsh":
-        return cosine_near_pairs_lsh(corpus, threshold)
-
-    rows = corpus.select("vec_id", "embedding").collect()
+    NEAR_PAIR_THRESHOLD): one numpy matmul per Arrow batch against the
+    broadcast corpus matrix — exact, O(n) driver memory (dim-64 float64
+    is 0.5 KB/row). The corpus is collected while the query is built, in
+    one job that also enforces the driver-memory guard: a corpus over
+    BROADCAST_LIMIT rows raises."""
+    rows = corpus.select("vec_id", "embedding").limit(BROADCAST_LIMIT + 1).collect()
+    if len(rows) > BROADCAST_LIMIT:
+        raise ValueError(
+            f"corpus has more than broadcast_limit {BROADCAST_LIMIT} rows "
+            "(collect+broadcast would exhaust driver memory)"
+        )
     ids = np.asarray([r[0] for r in rows], dtype=np.int64)
     M = np.asarray([r[1] for r in rows], dtype=np.float64)
     Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
@@ -200,7 +173,7 @@ def cosine_near_pairs(
             An = A / np.linalg.norm(A, axis=1, keepdims=True)
             a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             S = np.round(An @ all_m.T, 4)
-            ii, jj = np.nonzero((S >= threshold) & (a_ids[:, None] < all_ids[None, :]))
+            ii, jj = np.nonzero((S >= NEAR_PAIR_THRESHOLD) & (a_ids[:, None] < all_ids[None, :]))
             yield pd.DataFrame(
                 {
                     "id_a": a_ids[ii],
@@ -398,101 +371,6 @@ def ivf_topk_cosine(corpus: DataFrame, queries: DataFrame, k: int = 5, lloyd_ite
 def _random_planes() -> np.ndarray:
     rng = np.random.RandomState(7)
     return rng.standard_normal((N_PLANES, LSH_DIM)).astype(np.float64)
-
-
-# near-pair LSH: 64 planes in 8 bands of 8 bits. For a true near-dup
-# (cosine >= 0.99) the per-band collision probability is
-# (1 - theta/pi)^8 ~ 0.69, so missing all 8 bands is ~1e-4; borderline
-# pairs at exactly the threshold have lower recall — the documented
-# approximation of the scale path.
-N_PAIR_PLANES = 64
-N_PAIR_BANDS = 8
-
-
-def _band_buckets_udf(planes: np.ndarray):
-    """Arrow-batched band-bucket signature: one numpy matmul per batch
-    (not 16 x dim literal JVM expressions — no plan bloat at dim 768).
-    Returns array<long> of per-band bucket values."""
-    from pyspark.sql import types as T
-
-    per_band = planes.shape[0] // N_PAIR_BANDS
-    weights = (np.int64(1) << np.arange(per_band, dtype=np.int64)).astype(np.int64)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def udf(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        V = np.asarray(vecs.tolist(), dtype=np.float64)
-        B = (V @ planes.T >= 0).astype(np.int64)  # (n, n_planes)
-        buckets = np.stack(
-            [B[:, b * per_band : (b + 1) * per_band] @ weights for b in range(N_PAIR_BANDS)],
-            axis=1,
-        )
-        return pd.Series([row.tolist() for row in buckets])
-
-    return udf
-
-
-def cosine_near_pairs_lsh(corpus: DataFrame, threshold: float) -> DataFrame:
-    """Near-duplicate pairs at corpus scale: hyperplane-LSH buckets
-    generate candidates in a distributed equi-join (nothing collected to
-    the driver), then an exact Arrow-batched cosine verifies each
-    candidate with the same numpy rounding as the broadcast path."""
-    import pandas as pd
-
-    head = corpus.select("embedding").head()
-    if head is None:
-        return corpus.sparkSession.createDataFrame(
-            [], schema="id_a long, id_b long, cosine double"
-        )
-    dim = len(head[0])
-    rng = np.random.RandomState(11)
-    planes = rng.standard_normal((N_PAIR_PLANES, dim)).astype(np.float64)
-
-    sig = corpus.select("vec_id", "embedding").withColumn(
-        "_buckets", _band_buckets_udf(planes)(F.col("embedding"))
-    )
-    bands = sig.select(
-        "vec_id", "embedding", F.posexplode("_buckets").alias("band_id", "bucket")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            F.col("a.embedding").alias("_va"),
-            F.col("b.embedding").alias("_vb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-    def verify(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.asarray(pdf["_va"].tolist(), dtype=np.float64)
-            B = np.asarray(pdf["_vb"].tolist(), dtype=np.float64)
-            cos = np.round(
-                (A * B).sum(axis=1)
-                / (np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)),
-                4,
-            )
-            keep = cos >= threshold
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].to_numpy()[keep],
-                    "id_b": pdf["id_b"].to_numpy()[keep],
-                    "cosine": cos[keep],
-                }
-            )
-
-    return cand.mapInPandas(verify, schema="id_a long, id_b long, cosine double")
 
 
 def hyperplane_signature_col(vec_col, planes: np.ndarray):
@@ -761,12 +639,12 @@ def bitext_margin_candidates(src: DataFrame, tgt: DataFrame, k: int = 4) -> Data
     """
     s_q = src.select(F.col("vec_id").alias("query_id"), "embedding")
     t_q = tgt.select(F.col("vec_id").alias("query_id"), "embedding")
-    fwd = cosine_topk_bruteforce(tgt, s_q, k=k, round_digits=4).select(
+    fwd = cosine_topk_bruteforce(tgt, s_q, k=k).select(
         F.col("query_id").alias("src_id"),
         F.col("vec_id").alias("tgt_id"),
         "cosine",
     )
-    bwd = cosine_topk_bruteforce(src, t_q, k=k, round_digits=4).select(
+    bwd = cosine_topk_bruteforce(src, t_q, k=k).select(
         F.col("query_id").alias("tgt_id"),
         F.col("vec_id").alias("src_id"),
         "cosine",

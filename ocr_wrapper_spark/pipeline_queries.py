@@ -16,16 +16,11 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.sampling import DOC_U_SQL
 from .plans.pipeline import run_extraction
 from .plans.partitioning import salted_host_counts
 from .relational import ORACLES, QUERIES, register
 from .sources import pages as pages_src
-from .operators.sampling import KNUTH_U_SQL
-
-# overflow-safe Knuth draw for doc_id (naive doc_id * 2654435761 raises
-# a BIGINT out-of-range in DuckDB once doc_id >= ~3.47e9 — the replica
-# id regime)
-_DOC_U_SQL = KNUTH_U_SQL.format(k="doc_id")
 
 
 def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -501,7 +496,7 @@ def _host_oracle() -> str:
     WITH hosted AS (
       SELECT doc_id,
              len(list_filter({{cdf}},
-                 c -> c < ({_DOC_U_SQL})))
+                 c -> c < ({DOC_U_SQL})))
              AS host_idx
       FROM documents)
     SELECT concat('host', lpad(CAST(host_idx AS VARCHAR), 2, '0'), '.example.com') AS host,
@@ -711,7 +706,7 @@ _WET_HEADER_E = _WET_HEADER.replace("\r", "\\r").replace("\n", "\\n")
     WITH hosted AS (
       SELECT doc_id, text, lang,
              len(list_filter({{cdf}},
-                 c -> c < ({_DOC_U_SQL})))
+                 c -> c < ({DOC_U_SQL})))
              AS host_idx
       FROM documents),
     u AS (
@@ -860,7 +855,7 @@ def html_text_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH h AS (
       SELECT doc_id, {_RNG63_SQL} AS rng,
-             len(list_filter({{cdf}}, c -> c < ({_DOC_U_SQL}))) AS host_idx,
+             len(list_filter({{cdf}}, c -> c < ({DOC_U_SQL}))) AS host_idx,
              CASE WHEN text = '' THEN 0 ELSE len(str_split(text, ' ')) END AS n
       FROM documents WHERE {_HTML_SLICE_SQL}),
     m AS (

@@ -1244,10 +1244,7 @@ def asof_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
-    out = asof_join(
-        purchases, clicks, key="user_id", ts="ts",
-        right_value_cols=["click_event_id", "click_ts"],
-    )
+    out = asof_join(purchases, clicks, ["click_event_id", "click_ts"])
     ts_fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     matched = F.col("asof_click_event_id").isNotNull()
     return out.select(

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .curation_queries import _HEX_A_SQL, _HEX_B_SQL, _hex_slice_col
-from .operators.sampling import KNUTH_U_SQL
+from .operators.sampling import DOC_U_SQL, KNUTH_U_SQL
 from .relational import _t, _td, register
 from .sources.pages import _host_idx_col, _host_name
 from .text_queries import _HOST_NAME_SQL, _HOSTED_CTE_SQL
@@ -467,7 +467,7 @@ def priority_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH hosted AS (
       SELECT doc_id, source,
              len(list_filter({{cdf}},
-                 c -> c < ({KNUTH_U_SQL.format(k="doc_id")})))
+                 c -> c < ({DOC_U_SQL})))
              AS host_idx
       FROM documents),
     pathed AS (
@@ -691,7 +691,7 @@ def _qtile_k_expr(p: int) -> str:
     bc AS (
       SELECT b, CAST(sum(c) OVER (ORDER BY b) AS BIGINT) AS cum FROM bh),
     hosts AS (
-      SELECT len(list_filter({{cdf}}, c -> c < ({KNUTH_U_SQL.format(k="doc_id")}))) AS host_idx, n_chars
+      SELECT len(list_filter({{cdf}}, c -> c < ({DOC_U_SQL}))) AS host_idx, n_chars
       FROM documents),
     hb AS (
       SELECT host_idx, n_chars // {QTILE_W} AS b, CAST(count(*) AS BIGINT) AS c
@@ -948,8 +948,6 @@ BOOT_CDF = [
 
 
 def _bootstrap_oracle() -> str:
-    from .operators.sampling import KNUTH_U_SQL
-
     u = KNUTH_U_SQL.format(k=f"(doc_id % 4294967296) * {BOOT_KEY_MULT} + replicate")
     cases = " ".join(
         f"WHEN u < {t} THEN {k}" for k, t in enumerate(BOOT_CDF)

@@ -28,18 +28,28 @@ from ..schema import CACHE_SCHEMA
 CACHE_KEY = "content_hash"
 
 
+def read_snapshots(spark: SparkSession, path: str | None, schema) -> DataFrame | None:
+    """Every snapshot of the append-only table at ``path``; None when it
+    has none yet."""
+    if path and os.path.isdir(path) and any(name.startswith("snap-") for name in os.listdir(path)):
+        return spark.read.schema(schema).parquet(f"{path}/snap-*")
+    return None
+
+
+def append_snapshot(df: DataFrame, path: str, schema) -> None:
+    """Write ``df``'s ``schema`` columns as a new snapshot of the table."""
+    snap = f"{path}/snap-{uuid.uuid4().hex[:12]}"
+    df.select([f.name for f in schema.fields]).write.mode("overwrite").parquet(snap)
+
+
 def read_cache_or_none(spark: SparkSession, path: str | None) -> DataFrame | None:
     """Cache table as a DataFrame; None when the table has no snapshots yet
     (lets the pipeline skip the cache join entirely on first runs)."""
-    if path and os.path.isdir(path) and any(
-        name.startswith("snap-") for name in os.listdir(path)
-    ):
-        df = spark.read.schema(CACHE_SCHEMA).parquet(f"{path}/snap-*")
-        # appends keep duplicates (same content at two urls, concurrent
-        # runs); results are deterministic so any row of a hash is
-        # equivalent — dropDuplicates keeps the join 1:1
-        return df.dropDuplicates([CACHE_KEY])
-    return None
+    df = read_snapshots(spark, path, CACHE_SCHEMA)
+    # appends keep duplicates (same content at two urls, concurrent
+    # runs); results are deterministic so any row of a hash is
+    # equivalent — dropDuplicates keeps the join 1:1
+    return None if df is None else df.dropDuplicates([CACHE_KEY])
 
 
 def read_cache(spark: SparkSession, path: str | None) -> DataFrame:
@@ -49,9 +59,8 @@ def read_cache(spark: SparkSession, path: str | None) -> DataFrame:
 
 
 def append_cache(df: DataFrame, path: str) -> None:
-    """Append rows (already in CACHE_SCHEMA order) as a new snapshot."""
-    snap = f"{path}/snap-{uuid.uuid4().hex[:12]}"
-    df.select([f.name for f in CACHE_SCHEMA.fields]).write.mode("overwrite").parquet(snap)
+    """Append rows as a new snapshot."""
+    append_snapshot(df, path, CACHE_SCHEMA)
 
 
 def split_hits_misses(

@@ -9,28 +9,22 @@ snapshots, same pattern as the cache table.
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import METRICS_SCHEMA
+from .cache import append_snapshot, read_snapshots
 
 STATUS_DONE = "done"
 
 
 def read_metrics(spark: SparkSession, path: str | None) -> DataFrame:
-    if path and os.path.isdir(path) and any(
-        name.startswith("snap-") for name in os.listdir(path)
-    ):
-        return spark.read.schema(METRICS_SCHEMA).parquet(f"{path}/snap-*")
-    return spark.createDataFrame([], METRICS_SCHEMA)
+    df = read_snapshots(spark, path, METRICS_SCHEMA)
+    return df if df is not None else spark.createDataFrame([], METRICS_SCHEMA)
 
 
 def append_metrics(df: DataFrame, path: str) -> None:
-    snap = f"{path}/snap-{uuid.uuid4().hex[:12]}"
-    df.select([f.name for f in METRICS_SCHEMA.fields]).write.mode("overwrite").parquet(snap)
+    append_snapshot(df, path, METRICS_SCHEMA)
 
 
 def completed_buckets(spark: SparkSession, path: str | None, run_id: str) -> DataFrame:

@@ -11,9 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators import dedup, similarity, textstats
-from .operators.sampling import KNUTH_U_SQL
-
-_U_SQL = KNUTH_U_SQL.format(k="doc_id")
+from .operators.sampling import DOC_U_SQL, KNUTH_U_SQL
 from .relational import _t, _td, register
 from .sources.pages import _host_idx_col, _host_name
 
@@ -271,7 +269,7 @@ def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH s AS (
       SELECT doc_id, source,
-             {_U_SQL} AS u,
+             {DOC_U_SQL} AS u,
              CASE source WHEN 'src0' THEN 2.5 WHEN 'src1' THEN 0.25 ELSE 0.5 END AS rate
       FROM documents),
     c AS (
@@ -295,7 +293,7 @@ def corpus_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sampling import source_mix_summary
 
     d = _t(spark, sf_dir, "documents")
-    return source_mix_summary(d, {"src0": 2.5, "src1": 0.25}, default_rate=0.5)
+    return source_mix_summary(d, {"src0": 2.5, "src1": 0.25})
 
 
 @register(
@@ -508,7 +506,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("dedup_simhash")  # oracle assigned below (_simhash_oracle)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _td(spark, sf_dir)
-    return dedup.simhash_near_pairs(d, max_hamming=3)
+    return dedup.simhash_near_pairs(d)
 
 
 # Monitoring threshold for the dropped-bucket query: deliberately far
@@ -588,7 +586,7 @@ def ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     # 4dp rounding before ranking on both engines -> identical ties
-    return similarity.cosine_topk_bruteforce(e, queries, k=TOPK, round_digits=4)
+    return similarity.cosine_topk_bruteforce(e, queries, k=TOPK)
 
 
 def _ivf_oracle(lloyd: bool = False) -> str:
@@ -765,7 +763,7 @@ def asof_purchase_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = e.filter(F.col("event_type") == "click").select(
         "user_id", "ts", F.col("event_id").alias("click_event_id")
     )
-    out = asof_join(purchases, clicks, key="user_id", ts="ts", right_value_cols=["click_event_id"])
+    out = asof_join(purchases, clicks, ["click_event_id"])
     return out.select(
         F.col("event_id").alias("purchase_id"),
         "user_id",
@@ -878,7 +876,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE n_tokens BETWEEN 20 AND 1000 AND alpha_ratio >= 0.7),
     split AS (
       SELECT *, CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val' ELSE 'test' END AS split
-      FROM (SELECT *, {_U_SQL} AS u
+      FROM (SELECT *, {DOC_U_SQL} AS u
             FROM kept WHERE rn = 1))
     SELECT lang, split, count(*) AS n_docs, round(avg(n_tokens), 4) AS avg_tokens
     FROM split GROUP BY lang, split
@@ -935,11 +933,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batch against the broadcast normalized corpus."""
     from .operators.similarity import cosine_near_pairs
 
-    e = _td(spark, sf_dir, "embeddings")
-    # explicit broadcast: the oracle is the exact all-pairs join, so the
-    # auto gate's LSH fallback (recall < 1) must never kick in here — a
-    # too-large corpus should RAISE, not silently diverge from the oracle
-    return cosine_near_pairs(e, threshold=0.4, strategy="broadcast")
+    # exact like the oracle's all-pairs join; a corpus too large to
+    # broadcast raises rather than diverging from it
+    return cosine_near_pairs(_td(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -1040,7 +1036,7 @@ def _host_top10_oracle() -> str:
     WITH hosted AS (
       SELECT doc_id, lang,
              len(list_filter({{cdf}},
-                 c -> c < ({_U_SQL})))
+                 c -> c < ({DOC_U_SQL})))
              AS host_idx
       FROM documents)
     SELECT concat('host', lpad(CAST(host_idx AS VARCHAR), 2, '0'), '.example.com') AS host,
@@ -1368,7 +1364,7 @@ def corpus_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     SELECT CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val' ELSE 'test' END AS split,
            count(*) AS n_docs
-    FROM (SELECT {_U_SQL} AS u FROM documents)
+    FROM (SELECT {DOC_U_SQL} AS u FROM documents)
     GROUP BY 1
     """,
 )
@@ -1514,7 +1510,7 @@ def doc_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HOSTED_CTE_SQL = f"""hosted AS (
       SELECT doc_id, text,
              len(list_filter({{cdf}},
-                 c -> c < ({_U_SQL})))
+                 c -> c < ({DOC_U_SQL})))
              AS host_idx
       FROM documents)"""
 _HOST_NAME_SQL = "concat('host', lpad(CAST(host_idx AS VARCHAR), 2, '0'), '.example.com')"

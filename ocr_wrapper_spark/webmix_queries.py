@@ -28,14 +28,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .graph_queries import PARA_WORDS
-from .operators.sampling import KNUTH_U_SQL, knuth_u
+from .operators.sampling import DOC_U_SQL, KNUTH_U_SQL, knuth_u
 from .relational import _t, _td, register
 from .sources.pages import _host_idx_col, _host_name
 from .text_queries import (
     _HOST_NAME_SQL,
     _HOSTED_CTE_SQL,
     _lang_id_oracle,
-    _U_SQL,
     doc_lang_id,
 )
 
@@ -172,7 +171,7 @@ LANG_ALPHA_RATE_SQL = (
                AS rate_ppm
       FROM counts)
     SELECT r.lang, r.n_docs, r.rate_ppm,
-           CAST(sum(CASE WHEN ({_U_SQL}) * 1000000 < CAST(r.rate_ppm AS DOUBLE)
+           CAST(sum(CASE WHEN ({DOC_U_SQL}) * 1000000 < CAST(r.rate_ppm AS DOUBLE)
                     THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled
     FROM documents d JOIN rated r USING (lang)
     GROUP BY r.lang, r.n_docs, r.rate_ppm

@@ -113,9 +113,7 @@ def test_asof_operator_matches_pandas_merge_asof(spark):
         asof_join(
             spark.createDataFrame(left),
             spark.createDataFrame(right),
-            key="user_id",
-            ts="ts",
-            right_value_cols=["val"],
+            ["val"],
         )
         .toPandas()
         .sort_values("event_id")

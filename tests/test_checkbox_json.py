@@ -91,7 +91,7 @@ def test_code_detector_reference_payload():
     html = ('<img data-code="CODE39[[WIKIPEDIA]]" src="/b.png">'
             "<img src='/plain.png'>"
             '<img class="qr" data-code="QRCODE[[HELLO]]"/>')
-    coords, texts, confs = detect_codes(html)
+    coords, texts, confs = detect_codes(html, 0)
     assert texts == ["CODE39[[WIKIPEDIA]]", "QRCODE[[HELLO]]"]
     assert confs == [1.0, 1.0]
     assert coords.shape == (2, 8)
@@ -109,6 +109,20 @@ def test_aux_mode_decodes_generator_qr():
     assert res.confidences[i] == 1.0
     # plain mode never sees the code and keeps byte identity
     assert extract_document(html, "en").extracted_text == text
+
+
+def test_aux_confidence_follows_the_span_source():
+    """A page word equal to a decoded code keeps the page's confidence:
+    only the span the code decoder added carries the code confidence."""
+    from ocr_wrapper_spark.kernels.checkbox_detect import CODE_CONFIDENCE
+    from ocr_wrapper_spark.kernels.extract_doc import HTML_CONFIDENCE
+
+    code = "QRCODE[[DOC22]]"
+    text = " ".join(["alpha", code, "beta", code, "gamma", code] + ["delta epsilon zeta"] * 5)
+    html = build_html(22, text, "en")  # 22 % 4 == 2 -> carries DOC22's QR code
+    res = extract_with_aux_batch([html], ["en"])[0]
+    got = [c for t, c in zip(res.texts, res.confidences) if t == code]
+    assert got == [HTML_CONFIDENCE] * 3 + [CODE_CONFIDENCE]
 
 
 def test_hocr_dialect_byte_identity_and_dispatch():

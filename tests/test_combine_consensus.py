@@ -60,22 +60,25 @@ def test_aux_suppress_then_merge_checkbox_semantics():
     # one checkbox right on top of word index 3 -> that word is suppressed,
     # checkbox glyph merged in
     aux = coords[3:4].copy()
-    merged, texts = combine.suppress_then_merge_aux(coords, WORDS, aux, ["☐"], w, h)
+    merged, texts, conf = combine.suppress_then_merge_aux(
+        coords, WORDS, [0.5] * len(WORDS), aux, ["☐"], [0.9], w, h
+    )
     assert "☐" in texts
     assert WORDS[3] not in texts
     assert len(texts) == len(WORDS)  # one dropped, one added
+    assert conf[texts.index("☐")] == 0.9 and conf.count(0.5) == len(WORDS) - 1
 
 
-def test_group_overlapping_or_vs_and():
+def test_group_overlapping_cross_response_only():
     a = bc.from_xywh(0.1, 0.1, 0.10, 0.10)
     b = bc.from_xywh(0.11, 0.11, 0.10, 0.10)  # mutual heavy overlap
     c = bc.from_xywh(0.5, 0.5, 0.10, 0.10)
     coords = np.vstack([a, b, c])
-    groups_or = combine.group_overlapping(coords, 0.1)
-    assert sorted(map(sorted, groups_or)) == [[0, 1], [2]]
+    # across responses the overlapping pair groups
+    groups = combine.group_overlapping(coords, 0.1, np.array([0, 1, 1]))
+    assert sorted(map(sorted, groups)) == [[0, 1], [2]]
     # same-response pairs are excluded under consensus semantics
-    rid = np.array([0, 0, 1])
-    groups_same = combine.group_overlapping(coords, 0.1, rid)
+    groups_same = combine.group_overlapping(coords, 0.1, np.array([0, 0, 1]))
     assert sorted(map(sorted, groups_same)) == [[0], [1], [2]]
 
 
@@ -111,8 +114,11 @@ def test_qr_style_aux_merge_reading_order():
     reading order via merge_bbox_lists_with_confidences."""
     coords, w, h = _spans(WORDS[:10])
     qr = bc.from_xywh(0.45, 0.9, 0.1, 0.05)  # bottom of the page
-    mc, mt = clean.merge_span_lists(coords, WORDS[:10], qr, ["QRCODE[[hello]]"], w, h)
+    mc, mt, mconf = clean.merge_span_lists(
+        coords, WORDS[:10], [0.9] * 10, qr, ["QRCODE[[hello]]"], [1.0], w, h
+    )
     assert mt[-1] == "QRCODE[[hello]]"
+    assert mconf == [0.9] * 10 + [1.0]
     assert np.array_equal(mc[-1], qr[0])
     assert mt[:10] == WORDS[:10]
 

@@ -183,50 +183,17 @@ def test_ngram_max_df_bounds_hot_shingle_fanout(spark):
     assert [(r.id_a, r.id_b, r.jaccard) for r in pairs] == [(9001, 9002, 1.0)]
 
 
-def test_cosine_near_pairs_strategies_match(spark):
-    """The LSH candidate path (no driver collect) must agree with the
-    broadcast-matmul path; recall for true near-dups (cosine >= 0.99) is
-    ~1 by construction of the 8-band signature."""
-    from ocr_wrapper_spark.operators.similarity import cosine_near_pairs
-
-    base = spark.read.parquet(f"{SF}/embeddings.parquet")
-    # deterministic near-dup clones: vec_id+10000 copies of the first 15
-    # vectors with one component nudged (cosine ~0.999)
-    clones = base.filter(F.col("vec_id") < 15).select(
-        (F.col("vec_id") + 10000).alias("vec_id"),
-        F.concat(
-            F.slice("embedding", 1, 63),
-            F.array(F.element_at("embedding", 64) + F.lit(0.01)),
-        ).alias("embedding"),
-        "label",
-    )
-    corpus = base.unionByName(clones)
-    bc = {(r.id_a, r.id_b): r.cosine
-          for r in cosine_near_pairs(corpus, threshold=0.95, strategy="broadcast").collect()}
-    ls = {(r.id_a, r.id_b): r.cosine
-          for r in cosine_near_pairs(corpus, threshold=0.95, strategy="lsh").collect()}
-    assert bc, "fixture should contain near-duplicate embeddings"
-    assert set(ls) <= set(bc)
-    # verified scores identical where both found the pair
-    assert all(abs(bc[k] - ls[k]) < 1e-9 for k in ls)
-    missed_high = {k for k, v in bc.items() if v >= 0.99} - set(ls)
-    assert not missed_high, f"LSH path missed high-confidence near-dups: {missed_high}"
-
-
-def test_cosine_near_pairs_auto_gate(spark):
-    """auto picks lsh above the broadcast limit and broadcast below; a
-    forced broadcast above the limit raises instead of collecting."""
+def test_cosine_near_pairs_raises_over_broadcast_limit(spark, monkeypatch):
+    """A corpus over the broadcast limit raises while the query is built
+    instead of collecting it to the driver."""
     import pytest as _pytest
 
-    from ocr_wrapper_spark.operators.similarity import cosine_near_pairs
+    from ocr_wrapper_spark.operators import similarity
 
     corpus = spark.read.parquet(f"{SF}/embeddings.parquet")
-    small = cosine_near_pairs(corpus, threshold=0.999, strategy="auto", broadcast_limit=10_000)
-    big = cosine_near_pairs(corpus, threshold=0.999, strategy="auto", broadcast_limit=10)
-    assert {tuple(r) for r in small.collect()} >= set()
-    big.collect()  # must run the lsh path without error
+    monkeypatch.setattr(similarity, "BROADCAST_LIMIT", 10)
     with _pytest.raises(ValueError, match="broadcast_limit"):
-        cosine_near_pairs(corpus, strategy="broadcast", broadcast_limit=10)
+        similarity.cosine_near_pairs(corpus)
 
 
 def test_ivf_recall_vs_bruteforce(spark):

@@ -308,7 +308,7 @@ def test_pq_recall_eval_consistent_with_rankings(spark, tmp_path):
     q = e.filter("vec_id % 100 = 0").selectExpr("vec_id AS query_id", "embedding")
     truth = {
         (r.query_id, r.vec_id): r.rank
-        for r in cosine_topk_bruteforce(e, q, k=TOPK, round_digits=4).collect()
+        for r in cosine_topk_bruteforce(e, q, k=TOPK).collect()
     }
     pq = {(r.query_id, r.vec_id) for r in ann_topk_pq(spark, sf_dir).collect()}
     for qid, r in rows.items():

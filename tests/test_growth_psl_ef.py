@@ -304,6 +304,45 @@ def test_growth_short_and_empty_docs_guarded(spark, tmp_path):
 
 # ---------------------------------------------------------------------------
 # per-host Good-Turing novelty
+def test_chao1_exact_below_2_63_and_raises_past_it(spark):
+    """Planted spectrum cells through the Chao1 expression each engine
+    runs: exact where the estimate fits a BIGINT, and an error in both
+    where it does not. At f1 = 2^33, f2 = 1 the estimate is 2^65, which
+    Spark's DECIMAL ``div`` used to wrap to 0 without a word."""
+    import duckdb
+    import pytest
+
+    from ocr_wrapper_spark.fingerprint_queries import _CHAO1_SQL, _chao1_cols
+
+    def spark_chao1(d, f1, f2):
+        df = spark.createDataFrame(
+            [(d, max(f1, 1), f1, f2)], "d_types long, n_occurrences long, f1 long, f2 long"
+        )
+        return df.select(*_chao1_cols()).collect()[0].chao1_types
+
+    def duck_chao1(d, f1, f2):
+        return duckdb.sql(
+            f"SELECT {_CHAO1_SQL} FROM (SELECT {d}::BIGINT AS d_types,"
+            f" {max(f1, 1)}::BIGINT AS n_occurrences, {f1}::BIGINT AS f1, {f2}::BIGINT AS f2)"
+        ).fetchone()[0]
+
+    fits = [
+        (5, 7, 2),  # 49 // 4 with a remainder
+        (0, 2**32 - 1, 1),  # f1^2 // 2 = 2^63 - 2^32, the largest square that fits
+        (0, 2**32, 0),  # f1 (f1 - 1) // 2 = 2^63 - 2^31
+        (3, 0, 0),
+    ]
+    for d, f1, f2 in fits:
+        want = d + (f1 * f1 // (2 * f2) if f2 else f1 * (f1 - 1) // 2)
+        assert spark_chao1(d, f1, f2) == want
+        assert duck_chao1(d, f1, f2) == want
+    for d, f1, f2 in [(0, 2**33, 1), (0, 2**33, 0), (2**32, 2**32 - 1, 1)]:
+        with pytest.raises(Exception):
+            spark_chao1(d, f1, f2)
+        with pytest.raises(Exception):
+            duck_chao1(d, f1, f2)
+
+
 # ---------------------------------------------------------------------------
 
 

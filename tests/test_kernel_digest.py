@@ -165,7 +165,7 @@ def tie_prone_pages(seed: int = 7, n: int = 150) -> list[tuple]:
 
 
 def order_digest(result) -> str:
-    idx, tilt, line_ids, _ = result
+    idx, tilt, line_ids = result
     parts = (np.asarray(idx, dtype=np.int64).tobytes(), repr(float(tilt)).encode(),
              np.asarray(line_ids, dtype=np.int64).tobytes())
     return hashlib.sha256(b"|".join(parts)).hexdigest()

@@ -54,7 +54,7 @@ def test_resize_dims_reference_semantics(spark):
     # mirror utils.py:62-73: cap longest side, keep ratio, int truncation
     rows = [(1, 2048, 1000), (2, 1000, 2048), (3, 800, 600), (4, 1024, 1024)]
     df = spark.createDataFrame(rows, "media_id int, w int, h int")
-    new_w, new_h = mm.resize_dims(F.col("w"), F.col("h"), 1024)
+    new_w, new_h = mm.resize_dims(F.col("w"), F.col("h"))
     got = {r.media_id: (r.nw, r.nh) for r in df.select("media_id", new_w.alias("nw"), new_h.alias("nh")).collect()}
     assert got[1] == (1024, int(1024 * 1000 / 2048))
     assert got[2] == (int(1024 * 1000 / 2048), 1024)

@@ -21,18 +21,16 @@ LOREM = (
 def test_layout_then_order_recovers_sequence_ltr():
     coords_px, w, h = layout.layout_words(LOREM)
     coords = bc.to_normalized(coords_px, w, h)
-    idx, tilt, lines, geom = order.order_boxes(coords, LOREM, w, h)
+    idx, tilt, lines = order.order_boxes(coords, LOREM, w, h)
     assert idx.tolist() == list(range(len(LOREM)))
     assert tilt == pytest.approx(0.0, abs=1e-9)
-    assert geom.writing_direction == "ltr"
 
 
 def test_layout_then_order_recovers_sequence_rtl():
     words = ["كلمة" + str(i) for i in range(30)]
     coords_px, w, h = layout.layout_words(words, rtl=True)
     coords = bc.to_normalized(bc.canonicalize(coords_px, True, validate=False), w, h)
-    idx, _, _, geom = order.order_boxes(coords, words, w, h)
-    assert geom.writing_direction == "rtl"
+    idx, _, _ = order.order_boxes(coords, words, w, h)
     assert idx.tolist() == list(range(len(words)))
 
 
@@ -41,14 +39,13 @@ def test_order_with_tilt_on_grid():
     t = float(grid[13])  # positive tilt
     coords_px, w, h = layout.layout_words(LOREM, tilt_fraction=t)
     coords = bc.to_normalized(coords_px, w, h)
-    idx, tilt, _, geom = order.order_boxes(coords, LOREM, w, h)
+    idx, tilt, _ = order.order_boxes(coords, LOREM, w, h)
     assert idx.tolist() == list(range(len(LOREM)))
-    assert geom.tilt_factor == pytest.approx(t, abs=1e-9)
     assert tilt == pytest.approx(float(np.arctan(t) / order.DEGREE2RADIAN), abs=1e-9)
 
 
 def test_order_empty():
-    idx, tilt, lines, _ = order.order_boxes(bc.empty_boxes(), [], 1000, 1000)
+    idx, tilt, lines = order.order_boxes(bc.empty_boxes(), [], 1000, 1000)
     assert idx.tolist() == []
     assert tilt == 0.0
 

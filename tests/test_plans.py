@@ -144,7 +144,7 @@ def test_source_mix_sampler_is_narrow(spark):
     from ocr_wrapper_spark.operators.sampling import stratified_sample
 
     d = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(stratified_sample(d, {"src0": 2.5}, default_rate=0.5))
+    plan = _plan(stratified_sample(d, {"src0": 2.5}))
     assert "Exchange" not in plan
 
 

@@ -58,7 +58,7 @@ def random_boxes(draw):
 @settings(max_examples=150, deadline=None)
 def test_order_is_permutation_and_tilt_in_grid(case):
     coords, texts = case
-    idx, tilt, line_ids, geom = order.order_boxes(coords, texts, 1224, 1584)
+    idx, tilt, line_ids = order.order_boxes(coords, texts, 1224, 1584)
     assert sorted(idx.tolist()) == list(range(len(texts)))  # a permutation
     assert abs(tilt) <= order.MAX_TILT_ANGLE + 1e-9
     assert len(line_ids) == len(texts)
