@@ -65,8 +65,10 @@ def combine_primary_secondary(
     coords_add = coords_s[keep_s]
     texts_add = [t for t, k in zip(texts_s, keep_s) if k]
 
-    # J4: ordered merge, primary order authoritative; every span carries
-    # the combined confidence
+    # J4: ordered merge, primary order authoritative. Every span carries
+    # the combined confidence, so both lists are constant: they exist only
+    # because merge_span_lists permutes confidences with the spans, which
+    # the aux merge below needs
     return clean.merge_span_lists(
         coords_p, texts_p, [COMBINED_CONFIDENCE] * len(texts_p),
         coords_add, texts_add, [COMBINED_CONFIDENCE] * len(texts_add),

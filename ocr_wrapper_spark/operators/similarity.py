@@ -145,15 +145,16 @@ def cosine_near_pairs(corpus: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >=
     NEAR_PAIR_THRESHOLD): one numpy matmul per Arrow batch against the
     broadcast corpus matrix — exact, O(n) driver memory (dim-64 float64
-    is 0.5 KB/row). The corpus is collected while the query is built, in
-    one job that also enforces the driver-memory guard: a corpus over
-    BROADCAST_LIMIT rows raises."""
-    rows = corpus.select("vec_id", "embedding").limit(BROADCAST_LIMIT + 1).collect()
-    if len(rows) > BROADCAST_LIMIT:
+    is 0.5 KB/row). The corpus is collected while the query is built,
+    after a column-pruned count that enforces the driver-memory guard: a
+    corpus over BROADCAST_LIMIT rows raises."""
+    n = corpus.select("vec_id").count()
+    if n > BROADCAST_LIMIT:
         raise ValueError(
-            f"corpus has more than broadcast_limit {BROADCAST_LIMIT} rows "
+            f"corpus has {n} rows > broadcast_limit {BROADCAST_LIMIT} "
             "(collect+broadcast would exhaust driver memory)"
         )
+    rows = corpus.select("vec_id", "embedding").collect()
     ids = np.asarray([r[0] for r in rows], dtype=np.int64)
     M = np.asarray([r[1] for r in rows], dtype=np.float64)
     Mn = M / np.linalg.norm(M, axis=1, keepdims=True)

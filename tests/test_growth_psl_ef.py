@@ -303,7 +303,10 @@ def test_growth_short_and_empty_docs_guarded(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# per-host Good-Turing novelty
+# Chao1 estimate past 2^63
+# ---------------------------------------------------------------------------
+
+
 def test_chao1_exact_below_2_63_and_raises_past_it(spark):
     """Planted spectrum cells through the Chao1 expression each engine
     runs: exact where the estimate fits a BIGINT, and an error in both
@@ -311,6 +314,7 @@ def test_chao1_exact_below_2_63_and_raises_past_it(spark):
     Spark's DECIMAL ``div`` used to wrap to 0 without a word."""
     import duckdb
     import pytest
+    from pyspark.errors import ArithmeticException
 
     from ocr_wrapper_spark.fingerprint_queries import _CHAO1_SQL, _chao1_cols
 
@@ -337,12 +341,14 @@ def test_chao1_exact_below_2_63_and_raises_past_it(spark):
         assert spark_chao1(d, f1, f2) == want
         assert duck_chao1(d, f1, f2) == want
     for d, f1, f2 in [(0, 2**33, 1), (0, 2**33, 0), (2**32, 2**32 - 1, 1)]:
-        with pytest.raises(Exception):
+        with pytest.raises(ArithmeticException, match="CAST_OVERFLOW"):
             spark_chao1(d, f1, f2)
-        with pytest.raises(Exception):
+        with pytest.raises(duckdb.ConversionException, match="out of range"):
             duck_chao1(d, f1, f2)
 
 
+# ---------------------------------------------------------------------------
+# per-host Good-Turing novelty
 # ---------------------------------------------------------------------------
 
 

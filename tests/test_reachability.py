@@ -20,8 +20,9 @@ the roots make to a top-level package function, plus the registry's
 ``(spark, sf_dir)`` call of each ``@register`` query. A parameter has one
 value when every such call binds it to the same scalar literal, leaves it
 at its default, or forwards a parameter of the calling function that has
-one value itself. Calls with ``*args`` / ``**kwargs`` and functions used
-only as values bind nothing, so the scan errs toward keeping options.
+one value itself. A call with ``*args`` / ``**kwargs`` may set any
+parameter, so it binds each one to a value the scan cannot name; functions
+used only as values bind nothing. The scan errs toward keeping options.
 """
 
 from __future__ import annotations
@@ -218,8 +219,7 @@ class _Scan:
                 work += self._refs(d[0], node)
         return set(self.defs) - reached
 
-
-    def _callee(self, mod: str, func: ast.AST) -> ast.FunctionDef | None:
+    def _callee(self, mod: str, func: ast.AST) -> tuple[tuple[str, str], ast.FunctionDef] | None:
         if isinstance(func, ast.Name):
             found = self._resolve_in(mod, func.id)
         elif isinstance(func, ast.Attribute):
@@ -238,16 +238,19 @@ class _Scan:
         opaque = _OPAQUE
         bindings: dict[tuple[str, str, str], list] = {}
 
-        def bind(key, fn: ast.FunctionDef, args: list, keywords: dict, caller) -> None:
+        def bind(key, fn: ast.FunctionDef, args: list | None, keywords: dict, caller) -> None:
+            """args None: a starred call, which may set any parameter."""
             a = fn.args
             params = a.posonlyargs + a.args + a.kwonlyargs
             positional = a.posonlyargs + a.args
             defaults = dict(zip([p.arg for p in positional][len(positional) - len(a.defaults):], a.defaults))
             defaults.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
-            bound = {p.arg: x for p, x in zip(positional, args)}
+            bound = {p.arg: x for p, x in zip(positional, args or ())}
             bound.update(keywords)
             for p in params:
-                if p.arg in bound:
+                if args is None:
+                    v = opaque
+                elif p.arg in bound:
                     v = bound[p.arg]
                     v = opaque if v is opaque else _value(v, caller)
                 elif p.arg in defaults:
@@ -264,7 +267,7 @@ class _Scan:
                 if not isinstance(call, ast.Call) or not (hit := self._callee(mod, call.func)):
                     continue
                 if any(isinstance(x, ast.Starred) for x in call.args) or any(k.arg is None for k in call.keywords):
-                    args, keywords = [opaque] * 99, {}
+                    args, keywords = None, {}
                 else:
                     args, keywords = call.args, {k.arg: k.value for k in call.keywords}
                 bind(hit[0], hit[1], args, keywords, caller)
