@@ -535,56 +535,42 @@ def vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     training pipeline reads before deciding whether a tokenizer retrain
     must gate the release.
 
-    Scale shape: two keyed term aggregations with map-side combine
-    (each slice read once); the top-K window uses the non-foldable
-    constant-key idiom so Spark's WindowGroupLimit takes a
+    Scale shape: ONE keyed term aggregation with map-side combine
+    counts both slices (term -> (c1, c2), each a conditional count; a
+    term with c1 = 0 is not in v1). The top-K window over the v1 terms
+    (the optimizer prunes its copy of the aggregation to c1) uses the
+    non-foldable constant-key idiom so Spark's WindowGroupLimit takes a
     per-partition top-{VOCAB_DRIFT_K} BEFORE the exchange (the
-    corpus_vocabulary lesson); drift counts are anti-joins between the
-    two vocabulary-bounded count tables; the OOV share division runs
-    128-bit (token totals * 1e6 pass int64 at 10^12 docs). Both count
-    tables persist once for their multiple consumers."""
+    corpus_vocabulary lesson); the vocabulary is broadcast back onto the
+    term table and every output is one conditional aggregate over it;
+    the OOV share division runs 128-bit (token totals * 1e6 pass int64
+    at 10^12 docs). Nothing is persisted."""
     d = _t(spark, sf_dir, "documents").filter(F.col("text") != "")
     t = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-
-    def counts(mod, rem):
-        return (
-            t.filter(F.col("doc_id") % mod != rem)
-            .groupBy("term")
-            .agg(F.count("*").cast("long").alias("c"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-
-    c1 = counts(DIFF_ADD_MOD, DIFF_ADD_REM)
-    c2 = counts(DIFF_DEL_MOD, DIFF_DEL_REM)
-    w = Window.partitionBy(F.col("c") % 1).orderBy(F.col("c").desc(), "term")
+    c = t.groupBy("term").agg(
+        F.count(F.when(F.col("doc_id") % DIFF_ADD_MOD != DIFF_ADD_REM, 1)).alias("c1"),
+        F.count(F.when(F.col("doc_id") % DIFF_DEL_MOD != DIFF_DEL_REM, 1)).alias("c2"),
+    )
+    w = Window.partitionBy(F.col("c1") % 1).orderBy(F.col("c1").desc(), "term")
     vocab = F.broadcast(
-        c1.withColumn("r", F.row_number().over(w))
+        c.filter(F.col("c1") > 0)
+        .withColumn("r", F.row_number().over(w))
         .filter(F.col("r") <= VOCAB_DRIFT_K)
-        .select("term")
+        .select("term", F.lit(True).alias("in_vocab"))
     )
-    n_vocab = vocab.agg(F.count("*").cast("long").alias("n_vocab"))
-    n_v1 = c1.agg(F.count("*").cast("long").alias("n_terms_v1"))
-    n_v2 = c2.agg(F.count("*").cast("long").alias("n_terms_v2"))
-    n_new = (
-        c2.join(c1, "term", "left_anti")
-        .agg(F.count("*").cast("long").alias("n_new_terms"))
-    )
-    n_drop = (
-        c1.join(c2, "term", "left_anti")
-        .agg(F.count("*").cast("long").alias("n_dropped_terms"))
-    )
-    tot = c2.agg(F.sum("c").cast("long").alias("v2_tokens"))
-    oov = (
-        c2.join(vocab, "term", "left_anti")
-        .agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("v2_oov_tokens"))
-    )
+    v1, v2 = F.col("c1") > 0, F.col("c2") > 0
     return (
-        n_vocab.crossJoin(n_v1)
-        .crossJoin(n_v2)
-        .crossJoin(n_new)
-        .crossJoin(n_drop)
-        .crossJoin(tot)
-        .crossJoin(oov)
+        c.join(vocab, "term", "left")
+        .agg(
+            F.count("in_vocab").alias("n_vocab"),
+            F.count(F.when(v1, 1)).alias("n_terms_v1"),
+            F.count(F.when(v2, 1)).alias("n_terms_v2"),
+            F.count(F.when(v2 & ~v1, 1)).alias("n_new_terms"),
+            F.count(F.when(v1 & ~v2, 1)).alias("n_dropped_terms"),
+            F.sum(F.when(v2, F.col("c2"))).alias("v2_tokens"),
+            F.coalesce(F.sum(F.when(v2 & F.col("in_vocab").isNull(), F.col("c2"))), F.lit(0))
+            .alias("v2_oov_tokens"),
+        )
         .selectExpr(
             "n_vocab",
             "n_terms_v1",

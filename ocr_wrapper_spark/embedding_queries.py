@@ -80,7 +80,7 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantized top-k (ADC scan): vectors coded as PQ_M 4-bit
     subspace codes (4 bytes vs 256 — the compression that keeps a
     10^12-row scan memory-bandwidth-feasible), queries scored against
-    the codes via integer lookup tables in one fused mapInPandas pass.
+    the codes via integer lookup tables in the shared Arrow top-k scan.
     Same deterministic seeding idea as ann_topk_ivf's coarse
     quantizer."""
     e = _td(spark, sf_dir, "embeddings")

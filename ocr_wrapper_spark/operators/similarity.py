@@ -4,11 +4,15 @@ Every operator reads the embeddings schema: a corpus of
 (vec_id long, embedding array) rows, queries keyed by query_id, and a
 label column where an operator needs one.
 
-* brute-force cosine top-k — the exact baseline, one numpy matmul per
-  Arrow batch;
-* LSH-bucketed variant (random hyperplane signatures) — the scale path:
-  candidates meet in an equi-join on (plane-signature prefix) buckets,
-  turning the N x Q cross product into bucket-local work.
+* exact and compressed top-k (brute-force cosine, int8 codes, PQ/ADC,
+  label-masked hard negatives) — one shared Arrow scan, ``_scan_topk``:
+  each batch's embedding column becomes one float64 matrix, the
+  operator scores it against the collected query side with one matrix
+  product, and only each query's batch-local top-k leaves the batch;
+  the ``_topk`` window ranks those rows as it would the full matrix;
+* IVF and LSH variants — candidates meet in an equi-join on a cluster
+  or (plane-signature prefix) bucket key and are scored by JVM
+  expressions, turning the N x Q cross product into bucket-local work.
 
 At 100 TB the broadcast side is the query set (small), the corpus stays
 partitioned; Catalyst broadcasts automatically under the threshold and we
@@ -18,10 +22,11 @@ hint it explicitly.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 N_PLANES = 16
 LSH_DIM = 64  # embedding width the random hyperplanes of cosine_topk_lsh span
@@ -42,38 +47,94 @@ def _topk(scored: DataFrame, k: int, score: str) -> DataFrame:
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
+def _matrix(col: pa.ListArray) -> np.ndarray:
+    """A list<float> Arrow column as one (rows, dim) float64 matrix.
+    A null row or rows of unequal length raise, so values are never
+    realigned across rows; float32 -> float64 keeps every value."""
+    if col.null_count:
+        raise ValueError("null embedding row")
+    lengths = np.diff(np.asarray(col.offsets))
+    dim = int(lengths[0]) if len(lengths) else 0
+    if (lengths != dim).any():
+        raise ValueError("embedding rows of unequal length")
+    values = col.flatten().to_numpy(zero_copy_only=False)
+    return values.astype(np.float64).reshape(len(col), dim)
+
+
+def _local_topk(S: np.ndarray, ids: np.ndarray, k: int, drop: np.ndarray):
+    """(row, column) indices of each column's top-k in the (rows, queries)
+    score matrix S under ``_topk``'s window order: score descending, then
+    id ascending. A NaN score (a zero-norm vector's cosine) sorts last:
+    it leaves the scan as NULL, which Spark's descending order ranks
+    after every value. Pairs that ``drop`` marks never rank."""
+    keys = (np.broadcast_to(ids[:, None], S.shape), -S, drop)
+    rows = np.lexsort(keys, axis=0)[:k]
+    cols = np.broadcast_to(np.arange(S.shape[1]), rows.shape)
+    kept = ~drop[rows, cols]
+    return rows[kept], cols[kept]
+
+
+def _scan_topk(corpus: DataFrame, q_cols: list[np.ndarray], score, k: int, schema: str,
+               drop=None) -> DataFrame:
+    """The Arrow scan every matrix-scored top-k operator shares.
+
+    ``corpus`` holds ``embedding``, ``vec_id`` and any columns to pass
+    through; ``score`` maps a batch's (rows, dim) embedding matrix to its
+    (rows, queries) score matrix, and ``drop(batch)``, if given, marks
+    the pairs that may not rank. Each batch emits only its per-query
+    top-k: the global top-k is a subset of the union of the batch-local
+    top-k's under the same order, so the ``_topk`` window over the
+    union ranks exactly as over the full matrix, while at most k rows
+    per (query, batch) reach the JVM. Output columns, named by
+    ``schema``: ``q_cols`` (query_id first) indexed by query, the
+    corpus columns other than embedding indexed by row, then the score."""
+    names = T.StructType.fromDDL(schema).fieldNames()
+    passed = [c for c in corpus.columns if c != "embedding"]
+
+    def scan(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            S = score(_matrix(batch.column("embedding")))
+            ids = batch.column("vec_id").to_numpy()
+            mask = np.zeros(S.shape, dtype=bool) if drop is None else drop(batch)
+            rows, cols = _local_topk(S, ids, k, mask)
+            arrays = [pa.array(c[cols]) for c in q_cols]
+            arrays += [batch.column(c).take(pa.array(rows)) for c in passed]
+            arrays.append(pa.array(S[rows, cols], from_pandas=True))  # NaN -> NULL
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
+
+    return _topk(corpus.mapInArrow(scan, schema=schema), k, names[-1])
+
+
+def _query_side(queries: DataFrame, *cols: str):
+    """The collected query side: query ids (int64), the (queries, dim)
+    float64 embedding matrix, then each of ``cols`` as an array. It is
+    the small side by construction and travels in the task closure."""
+    rows = queries.select("query_id", "embedding", *cols).collect()
+    q_ids = np.asarray([r[0] for r in rows], dtype=np.int64)
+    Q = np.asarray([r[1] for r in rows], dtype=np.float64)
+    return (q_ids, Q, *(np.asarray([r[2 + i] for r in rows]) for i in range(len(cols))))
+
+
+def _unit(V: np.ndarray) -> np.ndarray:
+    return V / np.linalg.norm(V, axis=1, keepdims=True)
+
+
 def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k neighbors per query by cosine similarity; rank computed
-    on the score rounded to 4 digits, the grain the oracles round to. All (query, corpus) scores come from one numpy
-    matmul per Arrow batch (~50x the per-pair JVM expression for dim-64
-    vectors). The query side is collected to the driver (it is the small
-    side by construction) and shipped in the task closure."""
-    q_rows = queries.select("query_id", "embedding").collect()
-    q_ids = [r[0] for r in q_rows]
-    Q = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-
-    def score(batches):
-        for pdf in batches:
-            C = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
-            if C.size == 0:
-                continue
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            S = np.round(Cn @ Qn.T, 4)  # (batch, m)
-            m = len(q_ids)
-            b = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(np.asarray(q_ids, dtype=np.int64), b),
-                    "vec_id": np.tile(pdf["vec_id"].to_numpy(dtype=np.int64), m),
-                    "cosine": S.T.reshape(-1),
-                }
-            )
-
-    scored = corpus.select("vec_id", "embedding").mapInPandas(
-        score, schema="query_id long, vec_id long, cosine double"
+    on the score rounded to 4 digits, the grain the oracles round to. All
+    (query, corpus) scores of a batch come from one numpy matmul (~50x the
+    per-pair JVM expression for dim-64 vectors)."""
+    q_ids, Q = _query_side(queries)
+    Qn = _unit(Q)
+    return _scan_topk(
+        corpus.select("vec_id", "embedding"),
+        [q_ids],
+        lambda M: np.round(_unit(M) @ Qn.T, 4),
+        k,
+        "query_id long, vec_id long, cosine double",
     )
-    return _topk(scored, k, "cosine")
 
 
 ZERO_NORM_EPS = 1e-100  # below this max|v| a vector counts as zero
@@ -101,38 +162,24 @@ def cosine_topk_int8(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataF
     corpus is 4x smaller (int8 SIMD dot on real hardware). Integer dot
     products are order-exact, which is what makes the DuckDB oracle an
     exact mirror rather than a tolerance check."""
-    q_rows = queries.select("query_id", "embedding").collect()
-    q_ids = [r[0] for r in q_rows]
-    Q = _quantize_i8(np.asarray([r[1] for r in q_rows], dtype=np.float64)).astype(np.int64)
+    q_ids, Q = _query_side(queries)
+    Q = _quantize_i8(Q).astype(np.int64)
     qnorm = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
 
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = _quantize_i8(np.asarray(pdf["embedding"].tolist(), dtype=np.float64)).astype(np.int64)
-            cnorm = np.sqrt((C * C).sum(axis=1).astype(np.float64))
-            # integer dot products are order-exact; only the final
-            # divide + round touch floats, so DuckDB reproduces every
-            # score bit-for-bit. The norm-product floor keeps zero-code
-            # vectors at cosine 0 instead of 0/0 NaN (oracle mirrors it).
-            D = (C @ Q.T).astype(np.float64)
-            denom = np.maximum(cnorm[:, None] * qnorm[None, :], ZERO_NORM_EPS)
-            S = np.round(D / denom, 6)
-            m = len(q_ids)
-            b = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(np.asarray(q_ids, dtype=np.int64), b),
-                    "vec_id": np.tile(pdf["vec_id"].to_numpy(dtype=np.int64), m),
-                    "cosine": S.T.reshape(-1),
-                }
-            )
+    def score(M):
+        C = _quantize_i8(M).astype(np.int64)
+        cnorm = np.sqrt((C * C).sum(axis=1).astype(np.float64))
+        # integer dot products are order-exact; only the final divide +
+        # round touch floats, so DuckDB reproduces every score
+        # bit-for-bit. The norm-product floor keeps zero-code vectors at
+        # cosine 0 instead of 0/0 NaN (oracle mirrors it).
+        D = (C @ Q.T).astype(np.float64)
+        return np.round(D / np.maximum(cnorm[:, None] * qnorm[None, :], ZERO_NORM_EPS), 6)
 
-    scored = corpus.select("vec_id", "embedding").mapInPandas(
-        score, schema="query_id long, vec_id long, cosine double"
+    return _scan_topk(
+        corpus.select("vec_id", "embedding"), [q_ids], score, k,
+        "query_id long, vec_id long, cosine double",
     )
-    return _topk(scored, k, "cosine")
 
 
 # Above this corpus size collecting the corpus for the broadcast matmul
@@ -156,8 +203,7 @@ def cosine_near_pairs(corpus: DataFrame) -> DataFrame:
         )
     rows = corpus.select("vec_id", "embedding").collect()
     ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-    M = np.asarray([r[1] for r in rows], dtype=np.float64)
-    Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
+    Mn = _unit(np.asarray([r[1] for r in rows], dtype=np.float64))
     order = np.argsort(ids)
     ids, Mn = ids[order], Mn[order]
 
@@ -167,23 +213,18 @@ def cosine_near_pairs(corpus: DataFrame) -> DataFrame:
 
     def op(batches):
         all_ids, all_m = b_ids.value, b_m.value
-        for pdf in batches:
-            A = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
-            if A.size == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            An = A / np.linalg.norm(A, axis=1, keepdims=True)
-            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            S = np.round(An @ all_m.T, 4)
+            a_ids = batch.column("vec_id").to_numpy()
+            S = np.round(_unit(_matrix(batch.column("embedding"))) @ all_m.T, 4)
             ii, jj = np.nonzero((S >= NEAR_PAIR_THRESHOLD) & (a_ids[:, None] < all_ids[None, :]))
-            yield pd.DataFrame(
-                {
-                    "id_a": a_ids[ii],
-                    "id_b": all_ids[jj],
-                    "cosine": S[ii, jj],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(a_ids[ii]), pa.array(all_ids[jj]), pa.array(S[ii, jj])],
+                names=["id_a", "id_b", "cosine"],
             )
 
-    return corpus.select("vec_id", "embedding").mapInPandas(
+    return corpus.select("vec_id", "embedding").mapInArrow(
         op, schema="id_a long, id_b long, cosine double"
     )
 
@@ -217,19 +258,19 @@ def top_clusters_pandas_udf(Cn: np.ndarray, n_centroids: int, n_top: int):
     Arrow batch) on the packed-code argmax the DuckDB oracle mirrors.
     Shared by ivf_topk_cosine and the SemDeDup cluster assignment."""
     import pandas as pd
-    from pyspark.sql import types as T
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def udf(vecs: pd.Series) -> pd.Series:
+    def udf(vecs):
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
         V = np.asarray(vecs.tolist(), dtype=np.float64)
-        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-        codes = _cluster_code_matrix(Vn, Cn, n_centroids)
+        codes = _cluster_code_matrix(_unit(V), Cn, n_centroids)
         order = np.argsort(-codes, axis=1, kind="stable")[:, :n_top]
         return pd.Series([row.astype("int32").tolist() for row in order])
 
-    return udf
+    # type hints as objects: pandas is not a module global, so the
+    # string hints of this module's annotations would not resolve
+    udf.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
+    return F.pandas_udf(T.ArrayType(T.IntegerType()))(udf)
 
 
 def seed_centroids(corpus: DataFrame, n_centroids: int = N_CENTROIDS) -> np.ndarray:
@@ -253,7 +294,7 @@ def lloyd_refine(corpus: DataFrame, C: np.ndarray, n_iter: int = 1) -> np.ndarra
 
     Each iteration: assign every corpus vector to its best centroid
     (same packed-code argmax the query path uses), accumulate per-cluster
-    (sum, count) partials inside each partition via mapInPandas (<=
+    (sum, count) partials inside each partition via mapInArrow (<=
     n_centroids rows per partition — the shuffle is numPartitions x
     n_centroids rows, never the corpus), element-wise-sum the partials in
     Spark (posexplode -> groupBy(cluster, pos)), and take the mean
@@ -264,35 +305,31 @@ def lloyd_refine(corpus: DataFrame, C: np.ndarray, n_iter: int = 1) -> np.ndarra
     partitioning-deterministic: float32 inputs summed in float64 differ
     across orders by ~1e-15, eight orders below the rounding grain.
     """
-    import pandas as pd
-
     n_centroids, dim = C.shape
     for _ in range(n_iter):
-        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+        Cn = _unit(C)
 
         def partials(batches):
             sums = np.zeros((n_centroids, dim), dtype=np.float64)
             counts = np.zeros(n_centroids, dtype=np.int64)
-            for pdf in batches:
-                if len(pdf) == 0:
+            for batch in batches:
+                if batch.num_rows == 0:
                     continue
-                V = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
-                Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-                codes = _cluster_code_matrix(Vn, Cn, n_centroids)
-                best = np.argmax(codes, axis=1)
+                V = _matrix(batch.column("embedding"))
+                best = np.argmax(_cluster_code_matrix(_unit(V), Cn, n_centroids), axis=1)
                 np.add.at(sums, best, V)
                 np.add.at(counts, best, 1)
             hit = np.nonzero(counts)[0]
             if hit.size:
-                yield pd.DataFrame(
-                    {
-                        "cluster": hit.astype("int32"),
-                        "cnt": counts[hit],
-                        "vsum": [sums[c].tolist() for c in hit],
-                    }
+                vsum = pa.ListArray.from_arrays(
+                    pa.array(np.arange(hit.size + 1, dtype=np.int32) * dim), pa.array(sums[hit].ravel())
+                )
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(hit.astype(np.int32)), pa.array(counts[hit]), vsum],
+                    names=["cluster", "cnt", "vsum"],
                 )
 
-        parts = corpus.select("embedding").mapInPandas(
+        parts = corpus.select("embedding").mapInArrow(
             partials, schema="cluster int, cnt long, vsum array<double>"
         )
         summed = (
@@ -324,13 +361,10 @@ def ivf_topk_cosine(corpus: DataFrame, queries: DataFrame, k: int = 5, lloyd_ite
     ``lloyd_iters`` > 0 refines the seeded centroids with distributed
     k-means iterations (lloyd_refine) before building the lists —
     tighter clusters, better recall per probed list at real scale."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     C = seed_centroids(corpus)
     if lloyd_iters:
         C = lloyd_refine(corpus, C, n_iter=lloyd_iters)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    Cn = _unit(C)
 
     def top_clusters_udf(n_top: int):
         return top_clusters_pandas_udf(Cn, N_CENTROIDS, n_top)
@@ -510,92 +544,44 @@ def pq_query_lut(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
 
 
 def pq_topk_adc(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
-    """PQ top-k via asymmetric distance computation: one fused
-    mapInPandas pass encodes each Arrow batch to 4-bit codes and scores
-    the codes against per-query integer LUTs (a table lookup + int sum
-    per candidate — no float math in the scan). The query side and the
-    K-row codebook travel in the closure; the corpus is read once and
-    never shuffles until the per-query top-k window (which Spark caps
-    per-partition via WindowGroupLimit)."""
+    """PQ top-k via asymmetric distance computation: the shared scan
+    encodes each Arrow batch to 4-bit codes and scores the codes against
+    per-query integer LUTs (a table lookup + int sum per candidate — no
+    float math in the scan). The query side and the K-row codebook
+    travel in the closure; the corpus is read once and never shuffles
+    until the per-query top-k window."""
     C = pq_codebook(corpus)
-    q_rows = queries.select("query_id", "embedding").collect()
-    q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.asarray([r[1] for r in q_rows], dtype=np.float64)
+    q_ids, Q = _query_side(queries)
     lut = pq_query_lut(Q, C)  # (nq, M, K)
     m_idx = np.arange(PQ_M)
 
-    def scan(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
-            codes = pq_encode_batch(V.reshape(len(pdf), PQ_M, -1), C)
-            # gather (nq, b, M) LUT entries and sum subspaces: int64-exact
-            adc = lut[:, np.broadcast_to(m_idx, codes.shape), codes].sum(axis=2)
-            b = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, b),
-                    "vec_id": np.tile(pdf["vec_id"].to_numpy(dtype=np.int64), len(q_ids)),
-                    "adc_micros": adc.reshape(-1),
-                }
-            )
+    def score(M):
+        codes = pq_encode_batch(M.reshape(len(M), PQ_M, -1), C)
+        # gather (nq, b, M) LUT entries and sum subspaces: int64-exact
+        return lut[:, np.broadcast_to(m_idx, codes.shape), codes].sum(axis=2).T
 
-    scored = corpus.select("vec_id", "embedding").mapInPandas(
-        scan, schema="query_id long, vec_id long, adc_micros long"
+    return _scan_topk(
+        corpus.select("vec_id", "embedding"), [q_ids], score, k,
+        "query_id long, vec_id long, adc_micros long",
     )
-    return _topk(scored, k, "adc_micros")
 
 
 def hard_negative_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Contrastive hard-negative mining: per query, the k most
     cosine-similar corpus vectors whose label DIFFERS from the query's —
-    the pairs a contrastive trainer wants. Each Arrow batch emits only
-    its batch-local top-k per query (the global top-k is a subset of the
-    union of batch-local top-k's under the same (cosine desc, id asc)
-    order), so the rank window shuffles k rows per (query, batch), not
-    the full score matrix."""
-    q_rows = queries.select("query_id", "embedding", "label").collect()
-    q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    q_lab = np.asarray([int(r[2]) for r in q_rows], dtype=np.int64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Cv = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
-            Cn = Cv / np.linalg.norm(Cv, axis=1, keepdims=True)
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_lab = pdf["label"].to_numpy(dtype=np.int64)
-            S = np.round(Cn @ Qn.T, 4)  # (b, nq)
-            frames = []
-            for qi in range(len(q_ids)):
-                mask = c_lab != q_lab[qi]
-                if not mask.any():
-                    continue
-                s, ids, labs = S[mask, qi], c_ids[mask], c_lab[mask]
-                order = np.lexsort((ids, -s))[:k]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(order), q_ids[qi]),
-                            "query_label": np.full(len(order), q_lab[qi], dtype=np.int32),
-                            "vec_id": ids[order],
-                            "neg_label": labs[order].astype(np.int32),
-                            "cosine": s[order],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    scored = corpus.select("vec_id", "embedding", "label").mapInPandas(
-        score,
-        schema="query_id long, query_label int, vec_id long, neg_label int, cosine double",
+    the pairs a contrastive trainer wants. The label mask is the shared
+    scan's ``drop`` input: a same-label pair never ranks."""
+    q_ids, Q, q_lab = _query_side(queries, "label")
+    q_lab = q_lab.astype(np.int32)
+    Qn = _unit(Q)
+    return _scan_topk(
+        corpus.select("vec_id", "embedding", "label"),
+        [q_ids, q_lab],
+        lambda M: np.round(_unit(M) @ Qn.T, 4),
+        k,
+        "query_id long, query_label int, vec_id long, neg_label int, cosine double",
+        drop=lambda batch: batch.column("label").to_numpy()[:, None] == q_lab[None, :],
     )
-    return _topk(scored, k, "cosine")
 
 
 # ---------------------------------------------------------------------------

@@ -156,27 +156,121 @@ def test_hard_negatives_exclude_query_label_and_rank_planted(spark, tmp_path):
 
 
 def test_hard_negatives_partial_topk_is_exact_across_partitions(spark, tmp_path):
-    """Batch-local top-k union must contain the global top-k: force many
-    small partitions and compare against a single-partition run."""
-    from ocr_wrapper_spark.operators.similarity import hard_negative_topk
+    """Batch-local top-k union must contain the global top-k, for every
+    operator on the shared scan: force many small partitions and compare
+    against a single-partition run. Eight identical other-label vectors
+    tie at the k boundary, so the tie-break by vec_id has to hold across
+    batches."""
+    from ocr_wrapper_spark.operators import similarity as sim
 
     rng = np.random.default_rng(5)
     n = 60
     V = _unit_rows(rng, n, 64)
+    tied = [20, 22, 23, 25, 26, 28, 29, 31]  # labels 1 and 2; the query's is 0
+    V[tied] = 0.8 * V[0] + 0.6 * _unit_rows(rng, 1, 64)[0]
     labels = [i % 3 for i in range(n)]
     sf_dir = _write_embeddings(tmp_path, range(n), V, labels)
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = e.filter("vec_id = 0").selectExpr("vec_id AS query_id", "embedding", "label")
 
-    wide = {
-        (r.query_id, r.rank): (r.vec_id, r.cosine)
-        for r in hard_negative_topk(e.repartition(16), q, k=5).collect()
-    }
-    narrow = {
-        (r.query_id, r.rank): (r.vec_id, r.cosine)
-        for r in hard_negative_topk(e.coalesce(1), q, k=5).collect()
-    }
-    assert wide == narrow and len(wide) == 5
+    for op, score, first in [
+        (sim.hard_negative_topk, "cosine", tied[:5]),
+        (sim.cosine_topk_bruteforce, "cosine", [0] + tied[:4]),
+        (sim.cosine_topk_int8, "cosine", [0] + tied[:4]),
+        (sim.pq_topk_adc, "adc_micros", None),
+    ]:
+        wide = {
+            (r.query_id, r.rank): (r.vec_id, r[score])
+            for r in op(e.repartition(16), q, k=5).collect()
+        }
+        narrow = {
+            (r.query_id, r.rank): (r.vec_id, r[score])
+            for r in op(e.coalesce(1), q, k=5).collect()
+        }
+        assert wide == narrow and len(wide) == 5, op.__name__
+        if first is not None:
+            assert [wide[(0, rk)][0] for rk in range(1, 6)] == first, op.__name__
+
+
+def test_zero_norm_corpus_vector_ranks_like_the_full_matrix_window(spark, tmp_path):
+    """A zero-norm corpus vector's cosine is NaN, which leaves the scan
+    as NULL and ranks after every value. Each operator's result must
+    equal the _topk window over its full score matrix: a batch-local
+    top-k that ranked the NaN first would spend one of its k rows on it
+    and lose the k-th neighbor."""
+    from ocr_wrapper_spark.operators import similarity as sim
+
+    rng = np.random.default_rng(11)
+    n, k = 40, 5
+    V = _unit_rows(rng, n, 64)
+    V[20] = 0.0  # label 2; past the PQ_K codebook seeds
+    labels = np.asarray([i % 3 for i in range(n)])
+    sf_dir = _write_embeddings(tmp_path, range(n), V, labels)
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").coalesce(1)
+    q = e.filter("vec_id % 10 = 1").selectExpr("vec_id AS query_id", "embedding", "label")
+    q_ids = np.arange(1, n, 10)
+
+    Vf = V.astype(np.float32).astype(np.float64)  # the stored values
+    with np.errstate(invalid="ignore"):
+        Vn = Vf / np.linalg.norm(Vf, axis=1, keepdims=True)
+    cos = np.round(Vn @ Vn[q_ids].T, 4)
+    C8 = sim._quantize_i8(Vf).astype(np.int64)
+    norm8 = np.sqrt((C8 * C8).sum(axis=1).astype(np.float64))
+    cos8 = np.round(
+        (C8 @ C8[q_ids].T) / np.maximum(norm8[:, None] * norm8[q_ids][None, :], sim.ZERO_NORM_EPS), 6
+    )
+    book = sim.pq_codebook(e)
+    codes = sim.pq_encode_batch(Vf.reshape(n, sim.PQ_M, -1), book)
+    lut = sim.pq_query_lut(Vf[q_ids], book)
+    adc = lut[:, np.arange(sim.PQ_M), codes].sum(axis=2).T
+
+    def window(S, score, dtype, same_label_out=False):
+        rows = [
+            (int(q_ids[j]), int(i), None if S[i, j] != S[i, j] else dtype(S[i, j]))
+            for i in range(n)
+            for j in range(len(q_ids))
+            if not (same_label_out and labels[i] == labels[q_ids[j]])
+        ]
+        full = spark.createDataFrame(rows, f"query_id long, vec_id long, {score}")
+        return sim._topk(full, k, score.split()[0])
+
+    def key(df, score):
+        return sorted((r.query_id, r.rank, r.vec_id, r[score]) for r in df.collect())
+
+    for got, want, score in [
+        (sim.cosine_topk_bruteforce(e, q, k=k), window(cos, "cosine double", float), "cosine"),
+        (sim.hard_negative_topk(e, q, k=k), window(cos, "cosine double", float, True), "cosine"),
+        (sim.cosine_topk_int8(e, q, k=k), window(cos8, "cosine double", float), "cosine"),
+        (sim.pq_topk_adc(e, q, k=k), window(adc, "adc_micros long", int), "adc_micros"),
+    ]:
+        assert key(got, score) == key(want, score)
+    # ranked over every corpus row, the planted vector comes last, NULL
+    last = sim.cosine_topk_bruteforce(e, q, k=n).filter(f"rank = {n}").collect()
+    assert {(r.vec_id, r.cosine) for r in last} == {(20, None)}
+
+
+def test_matrix_reader_raises_on_null_and_ragged_rows():
+    """The shared scan's reader turns a list<float> column into one
+    float64 matrix with identical values, also for a sliced column; a
+    null row or rows of unequal length raise instead of being
+    realigned."""
+    import pyarrow as pa
+    import pytest
+
+    from ocr_wrapper_spark.operators.similarity import _matrix
+
+    t = pa.list_(pa.float32())
+    vals = [[0.1, 0.2], [0.3, 0.4], [0.5, 0.6]]
+    M = _matrix(pa.array(vals, type=t))
+    assert M.dtype == np.float64
+    assert (M == np.asarray(vals, dtype=np.float32).astype(np.float64)).all()
+    assert (_matrix(pa.array(vals, type=t).slice(1, 2)) == M[1:]).all()
+    with pytest.raises(ValueError):
+        _matrix(pa.array([[0.1, 0.2], None], type=t))
+    with pytest.raises(ValueError):
+        _matrix(pa.array([[0.1, 0.2], [0.3]], type=t))
+    with pytest.raises(ValueError):  # four values that would reshape to 2 x 2
+        _matrix(pa.array([[0.1, 0.2, 0.3], [0.4]], type=t))
 
 
 # ---------------------------------------------------------------------------

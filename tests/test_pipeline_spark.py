@@ -156,17 +156,22 @@ def test_side_tables_materialize_the_result_once(spark, pages, tmp_path):
     miss."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    # the cached fixture fills on its first action: run it outside the
+    # group, so the count below does not depend on the tests run before
+    pages.count()
     sc.setJobGroup("side_tables", "run_extraction with cache and metrics")
     try:
         result = run_extraction(spark, pages, cache_path=str(tmp_path / "cache"),
                                 metrics_path=str(tmp_path / "metrics"), run_id="once")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    stage_names = [
-        tracker.getStageInfo(s).name
+    stages = [
+        tracker.getStageInfo(s)
         for j in tracker.getJobIdsForGroup("side_tables")
         for s in tracker.getJobInfo(j).stageIds
     ]
+    # the tracker returns None for a stage it no longer (or not yet) holds
+    stage_names = [info.name for info in stages if info is not None]
     # the cache snapshot write, the metrics aggregate and the metrics write
     assert len(tracker.getJobIdsForGroup("side_tables")) == 3
     assert not [n for n in stage_names if n.startswith("localCheckpoint")]
